@@ -490,6 +490,16 @@ class CrawlEngine(
     // thousand-way union plan whose canonicalization alone OOMs the driver)
     var pagesWritten = false
     var restoredPages: Option[DataFrame] = None // resume-injected prior pages
+    // every page delta lands here. Deltas are transient working state (read
+    // back once, column-pruned): no codec — on node-local disk the
+    // compression CPU costs more than the bytes it saves — and no
+    // dictionary encoding, whose page builds cost more than the write
+    def writePageDelta(ds: Dataset[ParsedPage], name: String): Unit = {
+      ds.write.option("compression", "none")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(s"$pagesSink/$name")
+      pagesWritten = true
+    }
     // Small-epoch page-delta buffer: tiny epochs append their parsed pages
     // here and flush to ONE parquet delta per `pageBufCap` rows instead of
     // paying a Spark write job per epoch (a toy crawl of 40 epochs paid 40
@@ -500,11 +510,7 @@ class CrawlEngine(
     var pageBufN = 0
     def flushPageBuf(): Unit = if (pageBuf.nonEmpty) {
       pageBufN += 1
-      spark.createDataset(pageBuf.toIndexedSeq).coalesce(1)
-        .write.option("compression", "none")
-        .option("parquet.enable.dictionary", "false")
-        .parquet(s"$pagesSink/buf_$pageBufN")
-      pagesWritten = true
+      writePageDelta(spark.createDataset(pageBuf.toIndexedSeq).coalesce(1), s"buf_$pageBufN")
       pageBuf.clear()
     }
     val pageCols = Seq(col("url"), col("final_url"), col("host"), col("depth"),
@@ -701,6 +707,15 @@ class CrawlEngine(
       }.collect()
       mergeBloomParts(parts)
     }
+    // the same bloom built on the driver, from keys the driver holds
+    def bloomFromLocal(urlLower: Iterable[String], expected: Long): Unit =
+      if (urlLower.nonEmpty) {
+        val b = BloomFilter.create(math.max(1024L, expected), 0.01)
+        urlLower.foreach(u => b.putBinary(u.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        val bos = new java.io.ByteArrayOutputStream()
+        b.writeTo(bos)
+        blooms :+= bos.toByteArray
+      }
 
     // --- seed establishment (`_crawl_establish` `website.rs:4104-4360`):
     // seeds gated by is_allowed_default only (lists + robots, no budget).
@@ -725,7 +740,8 @@ class CrawlEngine(
     // lives in `frontierLocal`; driver mirrors of the seen/signature
     // membership make the gate job-free. A distributed epoch (candCount
     // over the threshold) materializes the frontier, drops the mirrors
-    // permanently, and every later epoch runs the distributed path.
+    // for the rest of the call, and every later epoch runs the distributed
+    // path; a resumed call picks its path afresh (see `smallFits`).
     // At toy scale (the reference's own test crawls) an epoch otherwise
     // pays ~10 driver round-trips for <=dozens of rows of actual work.
     // ------------------------------------------------------------------
@@ -743,8 +759,15 @@ class CrawlEngine(
         (config.blacklist.isEmpty || !listedLocal(config.blacklist, e.url)) &&
         (!config.respectRobotsTxt ||
           robots.policyFor(e.host).canFetch(config.userAgent, e.url))
+    // The path rule, one for a fresh start, every epoch and a restore: the
+    // frontier stays on the driver while the threshold is on and the rows
+    // at hand (seeds, an epoch's candidates, a restored frontier) fit under
+    // it; the membership mirrors stay while the seen set fits mirrorCap
+    def smallFits(rows: Long): Boolean =
+      config.smallEpochThreshold > 0 && rows <= config.smallEpochThreshold
+    def mirrorsFit(seenRows: Long): Boolean = seenRows <= CrawlEngine.mirrorCap
     var frontier: DataFrame = null
-    if (config.smallEpochThreshold > 0) {
+    if (smallFits(seedEntries.size)) {
       frontierLocal = Some(seedEntries.filter(gateDefaultLocal))
       frontier = spark.emptyDataset[FrontierEntry].toDF() // unused while local
     } else {
@@ -805,40 +828,54 @@ class CrawlEngine(
     resumeFrom.foreach { ck =>
       val e = ck.latestEpoch()
       if (e >= 0) {
-        // restored state is distributed-only: the local-frontier fast path
-        // and its membership mirrors never survive a restart
-        frontierLocal = None
-        dropMirrors()
-        frontier = ck.readTable(e, "frontier").localCheckpoint(true)
-        seenRdd = ck.readTable(e, "seen").rdd
+        val m = ck.readManifest(e)
+        // the manifest's lineage sizes every table, so choosing the path
+        // runs no job; the snapshot is immutable, so the tables are read
+        // lazily
+        val rowsOf = Checkpointer.lineageRows(m)
+        val seenT = ck.readTable(e, "seen")
+        val sigT = ck.readTable(e, "signatures")
+        seenRdd = seenT.rdd
           .map(r => (r.getString(0), r.getString(1)))
           .partitionBy(seenPartitioner)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         seenBase = Some(seenRdd)
-        sigRdd = ck.readTable(e, "signatures").rdd.map(r => (r.getLong(0), true))
+        sigRdd = sigT.rdd.map(r => (r.getLong(0), true))
           .partitionBy(seenPartitioner)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         sigBase = Some(sigRdd)
-        restoredPages = Some(ck.readTable(e, "pages").localCheckpoint(true))
+        seenCount = rowsOf("seen")
+        blooms = Vector.empty
+        // same path rule as a fresh start: a small frontier comes back to
+        // the driver, and with it the mirrors and the bloom when the seen
+        // set fits them
+        if (smallFits(rowsOf("frontier")))
+          frontierLocal = Some(ck.readTable(e, "frontier").as[FrontierEntry].collect().toVector)
+        else {
+          frontierLocal = None
+          frontier = ck.readTable(e, "frontier")
+        }
+        if (frontierLocal.isDefined && mirrorsFit(seenCount)) {
+          val keys = seenT.select(col("url_lower")).as[String].collect()
+          driverSeen = new java.util.HashSet[String](keys.length * 2)
+          keys.foreach(driverSeen.add)
+          driverSigs = new java.util.HashSet[java.lang.Long]()
+          sigT.select(col("sig")).as[Long].collect().foreach(x => driverSigs.add(Long.box(x)))
+          bloomFromLocal(keys, seenCount)
+        } else {
+          dropMirrors()
+          bloomFromSeen(seenRdd.map(_._1), seenCount)
+        }
+        restoredPages = Some(ck.readTable(e, "pages"))
         ck.readTable(e, "host_tokens").collect()
           .foreach(r => hostTokensMap.put(r.getString(0), Long.box(r.getLong(1))))
-        seenCount = seenRdd.count()
-        blooms = Vector.empty
-        bloomFromSeen(seenRdd.map(_._1), seenCount)
-        val m = ck.readManifest(e)
         def longField(k: String): Option[Long] =
           ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong)
         def strField(k: String): Option[String] =
           ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(m).map(_.group(1))
         longField("seq_counter").foreach(seqCounter = _)
         longField("wildcard_remaining").foreach(wildcardRemaining = _)
-        "\"path_budget\":\\{([^}]*)\\}".r.findFirstMatchIn(m).foreach { g =>
-          val body = g.group(1).trim
-          if (body.nonEmpty) pathBudget = body.split(",").map { kv =>
-            val Array(k, v) = kv.split(":")
-            (k.trim.stripPrefix("\"").stripSuffix("\""), v.trim.toLong)
-          }.toMap
-        }
+        pathBudget = Checkpointer.pathBudget(m)
         strField("redirect_host").filter(_.nonEmpty)
           .foreach(rh => scope = scope.copy(redirectHost = rh))
         // chain lineage: a kill during the sitemap chain resumes mid-chain
@@ -990,14 +1027,22 @@ class CrawlEngine(
       }
     }
 
+    // snapshot commit, only on the epochs it is due: building its arguments
+    // (by-name here) reads the pages view, which flushes the page buffer (a
+    // write job), and plans a Dataset per table
+    def commitIfDue(frontierT: => DataFrame, seenT: => DataFrame, sigT: => DataFrame): Unit =
+      checkpoint.filter(_.due(epoch)).foreach(_.commit(epoch, frontierT, seenT, sigT,
+        hostTokensDf().coalesce(1), pages, seqCounter, wildcardRemaining, pathBudget, scope,
+        metrics.toSeq, chainStarted, chainSitemapLower.toSeq.sorted,
+        discoveredSitemaps.values.toSeq))
+
     // ---- full driver-side epoch (see the fast-path comment at the
     // frontierLocal declaration): admission runs through the Sequential
     // module — the exact code the differential oracle runs — fetch goes
     // through the Fetcher seam, parsing through the shared pure
-    // parsePage, pages to the same parquet sink. Two Spark jobs per
-    // epoch (fetch-collect + sink write), zero when nothing is admitted.
+    // parsePage, pages to the same parquet sink through a driver buffer.
+    // No Spark job with a driver-local fetcher, bar the snapshot commits.
     def smallEpoch(all: Vector[FrontierEntry], candCount: Long, epochT0: Long): Unit = {
-      import java.nio.charset.StandardCharsets
       val (readyV, heldV) = all.partition(_.not_before <= epoch)
       // B1 seen gate: driver mirror, else one tiny probe job. (B8 batch
       // dedup is structural — the local frontier is unique by lower(url)
@@ -1054,14 +1099,7 @@ class CrawlEngine(
       val admittedCount = admittedV.size.toLong
       // bloom delta — keeps the broadcast group valid for a later
       // distributed epoch (same 1% FPP sizing rule as the fused builder)
-      if (admittedV.nonEmpty) {
-        val b = BloomFilter.create(math.max(1024L, candCount), 0.01)
-        admittedV.foreach(e =>
-          b.putBinary(UrlOps.lowerUtf8(e.url).getBytes(StandardCharsets.UTF_8)))
-        val bos = new java.io.ByteArrayOutputStream()
-        b.writeTo(bos)
-        blooms :+= bos.toByteArray
-      }
+      bloomFromLocal(admittedV.map(e => UrlOps.lowerUtf8(e.url)), candCount)
       // D4 salt hints for the NEXT epoch — free here, and crucial at the
       // small->distributed handoff: the first big epoch of a hot-host
       // crawl would otherwise fetch 50% of its rows through the default
@@ -1126,7 +1164,7 @@ class CrawlEngine(
         .filterNot(kv => retriedLower.contains(kv._1)).toVector
       if (driverSeen != null) {
         seenDeltaV.foreach(kv => driverSeen.add(kv._1))
-        if (driverSeen.size > CrawlEngine.mirrorCap) dropMirrors()
+        if (!mirrorsFit(driverSeen.size)) dropMirrors()
       }
       seenCount += seenDeltaV.size
       if (seenDeltaV.nonEmpty) {
@@ -1236,9 +1274,10 @@ class CrawlEngine(
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
         uniq.size.toLong, frontierCount, seenCount, budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
-      checkpoint.foreach(_.commit(epoch, frontierDf, seen, signatures, hostTokensDf(), pages,
-        seqCounter, wildcardRemaining, pathBudget, scope, metrics.toSeq,
-        chainStarted, chainSitemapLower.toSeq.sorted, discoveredSitemaps.values.toSeq))
+      // driver-sized tables go to the snapshot as one partition each
+      if (driverSeen != null) commitIfDue(frontierDf.coalesce(1), seen.coalesce(1),
+        signatures.coalesce(1))
+      else commitIfDue(frontierDf.coalesce(1), seen, signatures)
       epoch += 1
       onEpoch.foreach(f => f(epoch - 1))
       done = budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
@@ -1295,7 +1334,7 @@ class CrawlEngine(
         val frontierEmpty = frontierLocal.map(_.isEmpty).getOrElse(frontier.isEmpty)
         if (frontierEmpty || epoch >= config.maxEpochs ||
           shutdownRequested || System.nanoTime() > deadline) done = true
-      } else if (frontierLocal.isDefined && candCount <= config.smallEpochThreshold)
+      } else if (frontierLocal.isDefined && smallFits(candCount))
         timed("epoch_total") {
         smallEpoch(frontierLocal.get, candCount, epochT0)
       } else timed("epoch_total") {
@@ -1593,7 +1632,7 @@ class CrawlEngine(
         // (retry filter, signature dedup, link explode, pages view) is a
         // COLUMN-PRUNED scan of the delta file instead.
         val ep = epoch
-        val parsedPath = s"$pagesSink/epoch=$epoch"
+        val parsedName = s"epoch=$epoch"
         if (epoch == 0L) {
           val fetched = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
           val ph = scope.parentHost
@@ -1606,22 +1645,18 @@ class CrawlEngine(
           if (redirHosts.nonEmpty) scope = scope.copy(redirectHost = UrlOps.host(redirHosts.head))
           val sc = scope
           val lrw = onLinkFind.orNull
-          fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw)))
-            .write.parquet(parsedPath)
+          writePageDelta(
+            fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))),
+            parsedName)
         } else {
           val sc = scope
           val lrw = onLinkFind.orNull
-          // delta files are transient working state (read back once, column-
-          // pruned); skip the codec — on node-local disk the compression CPU
-          // costs more than the bytes it saves
-          timed("fetch_parse")(fetcher.fetch(spark, fetchReady)
-            .mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw)))
-            .write.option("compression", "none")
-            .option("parquet.enable.dictionary", "false")
-            .parquet(parsedPath))
+          timed("fetch_parse")(writePageDelta(fetcher.fetch(spark, fetchReady)
+            .mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))), parsedName))
         }
         val parsed: Dataset[ParsedPage] = timed("parsed_read")(
-          spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedPath).as[ParsedPage])
+          spark.read.schema(CrawlEngine.parsedSchema).parquet(s"$pagesSink/$parsedName")
+            .as[ParsedPage])
         // the fetch job has materialized — collect the ride-along stats
         // (delta count, bloom shards, next epoch's hot-host salt widths)
         val admittedCount =
@@ -1687,10 +1722,6 @@ class CrawlEngine(
           newSeen.join(retryDf.select(lower(col("url")).as("url_lower")),
             Seq("url_lower"), "left_anti")
         else newSeen
-
-        // pages delta already sits in the sink (the pages view reads the
-        // whole directory and re-applies the retried filter)
-        pagesWritten = true
 
         // append the epoch's seen delta CO-PARTITIONED, BEFORE link
         // processing (r6): the link pipeline's seen-filter must observe the
@@ -1843,7 +1874,7 @@ class CrawlEngine(
         var newFrontier = spark.emptyDataset[FrontierEntry].toDF()
         var newLinkCount = 0L
         var uniqCk: Option[DataFrame] = None
-        if (config.smallEpochThreshold > 0 && admittedCount <= config.smallEpochThreshold) {
+        if (smallFits(admittedCount)) {
           // tiny epoch: dedup output is at most admitted×fanout rows —
           // dedup + canonical order + seq assignment complete in ONE
           // driver job plus one tiny probe (identical order to the
@@ -1969,9 +2000,7 @@ class CrawlEngine(
           newLinkCount, frontierCount, seenCount, budgetStopped,
           (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
 
-        checkpoint.foreach(_.commit(epoch, frontier, seen, signatures, hostTokensDf(), pages,
-          seqCounter, wildcardRemaining, pathBudget, scope, metrics.toSeq,
-          chainStarted, chainSitemapLower.toSeq.sorted, discoveredSitemaps.values.toSeq))
+        commitIfDue(frontier, seen, signatures)
 
         epochCache.foreach(_.unpersist(false))
         epochCache = None

@@ -2,9 +2,11 @@ package graft.engine
 
 import graft.corpus.CorpusParams
 import graft.model.CrawlConfig
-import org.apache.spark.sql.SparkSession
+import graft.oracle.OracleCrawler
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Checkpoint/resume: snapshots commit atomically with lineage + metrics;
   * a crawl killed after epoch k and resumed from the snapshot produces the
@@ -176,5 +178,138 @@ class ResumeSpec extends AnyFunSuite {
     assert(sms == gnarly, s"parsed $sms")
     val (off, none) = Checkpointer.chainState("""{"epoch":1,"chain_started":false,"chain_sitemaps":[]}""")
     assert(!off && none.isEmpty)
+  }
+
+  test("manifest path_budget round-trips keys with ':', ',', '}', quotes and backslashes") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // budget keys are accumulated path segments: any character may occur
+    val budget = Map("wikiSpecial:Random" -> 3L, "a,b" -> 1L, "x}y" -> 0L,
+      "q\"uote" -> 7L, "back\\slash" -> 2L, "docs" -> 16L)
+    val ck = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt6").toString, every = 1)
+    val one = spark.range(1).toDF()
+    ck.commit(0, one, one, one, one, one, 5L, 9L, budget,
+      ScopeState("", "h", "https", "", "https://h/", Set.empty, fullResources = false), Nil)
+    val m = ck.readManifest(0)
+    assert(Checkpointer.pathBudget(m) == budget, s"parsed ${Checkpointer.pathBudget(m)}")
+    assert(Checkpointer.lineageRows(m) ==
+      Seq("frontier", "seen", "signatures", "host_tokens", "pages").map(_ -> 1L).toMap)
+    assert(Checkpointer.pathBudget("""{"epoch":1,"path_budget":{}}""").isEmpty)
+  }
+
+  /** Spark jobs per epoch window: the `onEpoch` hook tags the jobs that
+    * follow it with the next epoch (a local property rides each job's start
+    * event); `counts` flushes the listener bus with a marker job first.
+    */
+  private final class EpochJobs extends SparkListener {
+    private val Key = "graft.test.window"
+    private val seen = new java.util.concurrent.ConcurrentHashMap[String, List[String]]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(Key))).foreach { w =>
+        val site = e.stageInfos.lastOption.map(_.name).getOrElse("?")
+        seen.merge(w, List(site), (a, b) => a ++ b)
+      }
+    def window(w: String): Unit = spark.sparkContext.setLocalProperty(Key, w)
+    val hook: Long => Unit = e => window((e + 1).toString)
+    spark.sparkContext.addSparkListener(this)
+    def counts(): Map[String, List[String]] = {
+      window("end")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      val t0 = System.nanoTime()
+      while (!seen.containsKey("end") && System.nanoTime() - t0 < 30L * 1000000000L)
+        Thread.sleep(10)
+      window(null)
+      spark.sparkContext.removeSparkListener(this)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toMap - "end"
+    }
+  }
+
+  test("checkpointed small-path crawl runs no Spark job on non-commit epochs") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val params = CorpusParams(hosts = 2, pagesPerHost = 40)
+    val ck = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt7").toString, every = 5)
+    val jobs = new EpochJobs
+    jobs.window("0")
+    val res = new CrawlEngine(spark, CrawlConfig(maxEpochs = 20, checkpointEvery = 5),
+      new GenerativeFetcher(params), new CorpusRobots(params), expectedUrls = 10000,
+      checkpoint = Some(ck), onEpoch = Some(jobs.hook))
+      .crawl(Seq("https://www.site0.com/"))
+    val perEpoch = jobs.counts()
+    val quiet = res.metrics.filter(m => m.epoch % 5 != 0)
+    assert(quiet.exists(_.fetched > 0), "no non-commit epoch fetched a page")
+    quiet.foreach { m =>
+      val ran = perEpoch.getOrElse(m.epoch.toString, Nil)
+      assert(ran.isEmpty, s"epoch ${m.epoch} (fetched ${m.fetched}) ran Spark jobs: $ran")
+    }
+    assert(ck.latestEpoch() >= 0 && ck.latestEpoch() % 5 == 0)
+  }
+
+  test("resume parity on the polite_crawl shape: small-path, distributed and mirrorless restores") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // robots with Crawl-delay, a per-host cap and a path budget over a
+    // corpus with duplicate content, redirects and errors
+    val params = CorpusParams(seed = 7L, hosts = 10, pagesPerHost = 8, fanout = 4,
+      dupContentEvery = 9, redirectEvery = 11, errorEvery = 13, textWords = 40)
+    val seeds = (0 until params.hosts).map(i => s"https://www.site$i.com/")
+    val every = 3
+    val base = CrawlConfig(respectRobotsTxt = true, externalDomains = Set("*"), normalize = true,
+      maxPerHostPerEpoch = 2, budget = Map("docs" -> 16), checkpointEvery = every, maxEpochs = 30)
+    val robots = new CorpusRobots(params)
+    def keys(df: DataFrame) =
+      df.select("url", "depth", "discovery_seq", "status", "signature", "final_url").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3), r.getLong(4),
+          Option(r.getString(5)).getOrElse(""))).toSet
+    def seenOf(df: DataFrame) = df.select("url_lower").collect().map(_.getString(0)).toSet
+    val oracle = OracleCrawler.crawl(params, base, robots, seeds)
+    val oraclePages = oracle.pages
+      .map(p => (p.url, p.depth, p.seq, p.status, p.signature, Option(p.finalUrl).getOrElse(""))).toSet
+    def engine(cfg: CrawlConfig, ck: Option[Checkpointer], hook: Option[Long => Unit] = None) =
+      new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+        expectedUrls = 10000, checkpoint = ck, onEpoch = hook)
+    // the snapshot's lineage counts what its tables hold
+    def assertLineage(ck: Checkpointer, dir: String): Unit =
+      (0L to ck.latestEpoch() by every.toLong)
+        .filter(e => Files.exists(Paths.get(dir, s"epoch_$e", "manifest.json"))).foreach { e =>
+          Checkpointer.lineageRows(ck.readManifest(e)).foreach { case (t, rows) =>
+            assert(rows == ck.readTable(e, t).count(), s"epoch $e table $t")
+          }
+        }
+
+    for ((label, threshold, cap) <- Seq(("small-path", 4096, -1), ("distributed", 0, -1),
+        ("mirrorless", 4096, 5))) {
+      val cfg = base.copy(smallEpochThreshold = threshold)
+      val full = engine(cfg, None).crawl(seeds)
+      assert(keys(full.pages) == oraclePages, s"$label: uninterrupted crawl != oracle")
+      val dir = Files.createTempDirectory("graft_ckpt8").toString
+      val ck = new Checkpointer(spark, dir, every = every)
+      // stop two epochs past a commit: the resume replays the lost epoch
+      engine(cfg.copy(maxEpochs = 2 * every + 2), Some(ck)).crawl(seeds)
+      assert(ck.latestEpoch() == 2 * every, s"$label: no commit at epoch ${2 * every}")
+      val jobs = new EpochJobs
+      jobs.window("restore")
+      val prevCap = CrawlEngine.mirrorCap
+      val resumed =
+        try {
+          if (cap >= 0) CrawlEngine.mirrorCap = cap
+          engine(cfg, Some(ck), Some(jobs.hook)).crawl(seeds, resumeFrom = Some(ck))
+        } finally CrawlEngine.mirrorCap = prevCap
+      val perEpoch = jobs.counts()
+      assert(resumed.epochs == full.epochs, s"$label: epochs")
+      assert(keys(resumed.pages) == keys(full.pages), s"$label: resumed pages != uninterrupted")
+      assert(keys(resumed.pages) == oraclePages, s"$label: resumed pages != oracle")
+      assert(seenOf(resumed.seen) == seenOf(full.seen), s"$label: resumed seen != uninterrupted")
+      assert(seenOf(resumed.seen) == oracle.seen, s"$label: resumed seen != oracle")
+      // the restore took the intended path: with the mirrors back, the
+      // epochs after the first resumed one run no job unless they commit;
+      // without them every epoch probes the stores
+      val later = resumed.metrics.drop(1).filter(m => m.epoch % every != 0)
+        .map(m => m.epoch -> perEpoch.getOrElse(m.epoch.toString, Nil))
+      assert(later.nonEmpty)
+      if (label == "small-path")
+        later.foreach { case (e, ran) => assert(ran.isEmpty, s"resumed epoch $e ran Spark jobs: $ran") }
+      else
+        later.foreach { case (e, ran) => assert(ran.nonEmpty, s"$label: resumed epoch $e ran no job") }
+      assertLineage(ck, dir)
+    }
   }
 }
