@@ -263,14 +263,13 @@ class CrawlEngine(
     * reference caps its per-domain limiter maps the same way,
     * `rate_limiter.rs` MAX_ENTRIES / `auto_throttle.rs` MAX_ENTRIES).
     */
-  private def lruMap[V](): java.util.LinkedHashMap[String, V] =
+  private def lruMap[V](): scala.collection.mutable.Map[String, V] = {
+    import scala.jdk.CollectionConverters._
     new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
         size() > CrawlEngine.lruHostCap
-    }
-
-  private def topHotHosts(widths: Iterable[(String, Int)]): Map[String, Int] =
-    CrawlEngine.topHotHosts(widths)
+    }.asScala
+  }
 
   /** A8 — `scrape()` = crawl + materialized pages (`website.rs:7326-7378`). */
   def scrape(seedUrls: Seq[String]): Array[graft.model.PageRow] = {
@@ -303,38 +302,15 @@ class CrawlEngine(
 
   def crawl(seedUrls0: Seq[String], resumeFrom: Option[Checkpointer] = None,
       sitemapChain: Boolean = false, sitemapOnly: Boolean = false): CrawlResult = {
-    // A2 — glob seed expansion (`features/glob.rs`, `website.rs:3875-3885`)
-    val seedUrls = graft.url.Glob.expandSeeds(seedUrls0)
-    require(seedUrls.nonEmpty, "need at least one seed")
+    // set-up shared with the oracle: glob seeds, scope, depth distance,
+    // budget, and the seed (or sitemap-only) frontier
+    val start = Sequential.start(config, seedUrls0, sitemapOnly)
+    val depthDistance = start.depthDistance
+    // the driver ledger: seq counter, budget, scope, chain state
+    var ledger = start.ledger
     val deadline =
       if (config.crawlTimeoutMs > 0) System.nanoTime() + config.crawlTimeoutMs * 1000000L
       else Long.MaxValue
-
-    // --- setup (reference `setup_base` + `setup_selectors`) ---
-    val seed0 = UrlOps.parse(seedUrls.head)
-    require(seed0 != null, s"unparseable seed ${seedUrls.head}")
-    val seedHost = seed0.host
-    var scope = ScopeState(
-      subMatcher =
-        if (config.tld) UrlOps.rootDomain(seedHost)
-        else if (config.subdomains) seedHost
-        else "",
-      parentHost = seedHost,
-      parentScheme = seed0.scheme,
-      redirectHost = "",
-      crawlBase = UrlOps.parseCrawlBase(seedUrls.head).serialize,
-      externalDomains = config.externalDomains.map(_.toLowerCase(java.util.Locale.ROOT)),
-      fullResources = config.fullResources)
-
-    val depthDistance = math.max(config.depth, UrlOps.budgetSegments(seedUrls.head).length)
-
-    // budget ledger (driver-held, few keys — checkpointed). Keys are the
-    // reference's accumulated-segment strings (`website.rs:2051-2121`).
-    var wildcardRemaining: Long =
-      config.budget.get("*").map(_.toLong).getOrElse(Long.MaxValue)
-    var pathBudget: Map[String, Long] =
-      (config.budget - "*").map { case (k, v) => (k, v.toLong) }
-    var budgetStopped = false
 
     // --- URL-seen: bloom (fast-negative) + exact table (authoritative).
     // One compact bloom per epoch delta (sized to the delta), broadcast as
@@ -423,34 +399,14 @@ class CrawlEngine(
     // per-epoch page-delta sink (A7): parquet under a crawl-scoped temp dir
     // (a real deployment points this at the output table's location);
     // deleted on JVM exit
-    val pagesSink = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-pages-").toAbsolutePath
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => }
-      }))
-      dir.toString
-    }
+    val pagesSink = CrawlEngine.tempSink("graft-pages-")
     // blocked-row side sink (B11 parity): same per-epoch-delta/one-relation
     // pattern as the page sink — blocked URLs are data-scale on a robots-
     // heavy crawl, so they must never accumulate on the driver. The small
     // path's rows (bounded per epoch by the threshold) buffer driver-side
     // and spill to the sink past a fixed cap; distributed epochs write
     // deltas directly.
-    lazy val blockedSink = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-blocked-").toAbsolutePath
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => }
-      }))
-      dir.toString
-    }
+    lazy val blockedSink = CrawlEngine.tempSink("graft-blocked-")
     var blockedWritten = false
     var blockedDeltaN = 0
     val blockedBuf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
@@ -535,15 +491,12 @@ class CrawlEngine(
     // Round 2 kept this as a DataFrame rolled forward with a
     // localCheckpoint per epoch — a full driver job + broadcast exchange
     // for what is a bounded driver-side ledger.
-    val hostTokensMap = lruMap[java.lang.Long]()
+    val hostTokensMap = lruMap[Long]()
     def hostTokensDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val rows = hostTokensMap.entrySet().asScala.toSeq
-        .map(e => (e.getKey, e.getValue.longValue))
+      val rows = hostTokensMap.toSeq
       if (rows.isEmpty) spark.emptyDataset[(String, Long)].toDF("host", "tokens_milli")
       else spark.createDataset(rows).toDF("host", "tokens_milli")
     }
-    var seqCounter = 0L
     var epoch = 0L
     val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
 
@@ -579,6 +532,14 @@ class CrawlEngine(
     // the partition), so the accumulated map stays tiny at any host
     // cardinality.
     var hotHostWidths: Map[String, Int] = Map.empty
+    def saltWidths(hostCounts: Iterable[(String, Long)], total: Long): Map[String, Int] =
+      if (total <= 0) Map.empty
+      else {
+        val pNow = P
+        CrawlEngine.topHotHosts(hostCounts
+          .map { case (h, c) => (h, math.ceil(c.toDouble / total * 4 * pNow).toInt) }
+          .filter(_._2 > 16))
+      }
     type AdmitStat = (Int, Long, Array[Byte], Array[(String, Long)])
     // partition count of the stats map stage — drainAdmitStats compares the
     // flushed entries against it to DETECT a Fetcher that violated the
@@ -680,13 +641,8 @@ class CrawlEngine(
       }
       mergeBloomParts(uniqParts.iterator.map(_._3).filter(_ != null).toArray)
       val total = uniqParts.iterator.map(_._2).sum
-      val pNow = P
-      hotHostWidths =
-        if (total <= 0) Map.empty
-        else topHotHosts(uniqParts.iterator.flatMap(_._4).toSeq.groupBy(_._1)
-          .map { case (h, cs) => (h, cs.map(_._2).sum) }
-          .map { case (h, c) => (h, math.ceil(c.toDouble / total * 4 * pNow).toInt) }
-          .filter(_._2 > 16))
+      hotHostWidths = saltWidths(uniqParts.iterator.flatMap(_._4).toSeq.groupBy(_._1)
+        .map { case (h, cs) => (h, cs.map(_._2).sum) }, total)
       total
     }
 
@@ -717,48 +673,25 @@ class CrawlEngine(
         blooms :+= bos.toByteArray
       }
 
-    // --- seed establishment (`_crawl_establish` `website.rs:4104-4360`):
-    // seeds gated by is_allowed_default only (lists + robots, no budget).
-    // Case-insensitive dedup keep-first establishes the frontier invariant
-    // "unique by lower(url)" that every later epoch maintains (B8's batch
-    // dedup is thereby structural — no per-epoch window shuffle needed). ---
-    val seedSeen = scala.collection.mutable.Set.empty[String]
-    val canonSeeds = seedUrls.flatMap { s =>
-      val c = UrlOps.convertAbsPath(s, s); if (c == null) None else Some(c)
-    }.filter(u => seedSeen.add(UrlOps.lowerUtf8(u)))
-    val seedEntries = canonSeeds.zipWithIndex.map { case (u, i) =>
-      FrontierEntry(u, UrlOps.host(u), 0, i.toLong, UrlOps.scoreUrl(u, 0), 0, 0L)
-    }.toVector
-    seqCounter = canonSeeds.length.toLong
-
     // ------------------------------------------------------------------
     // Small-epoch fast path state: while every epoch stays under
-    // `smallEpochThreshold` candidates, the WHOLE admission pipeline
-    // (gates, politeness, budget, links, frontier roll) runs driver-side
-    // with the Sequential module — the same code the differential oracle
-    // runs — and only fetch + the page sink touch Spark. The frontier
-    // lives in `frontierLocal`; driver mirrors of the seen/signature
-    // membership make the gate job-free. A distributed epoch (candCount
-    // over the threshold) materializes the frontier, drops the mirrors
-    // for the rest of the call, and every later epoch runs the distributed
-    // path; a resumed call picks its path afresh (see `smallFits`).
-    // At toy scale (the reference's own test crawls) an epoch otherwise
-    // pays ~10 driver round-trips for <=dozens of rows of actual work.
+    // `smallEpochThreshold` candidates, the WHOLE driver-side epoch (gates,
+    // politeness, budget, fetch, parse, links, frontier roll) runs as the
+    // Sequential step — the same code the differential oracle runs — and
+    // only the stores, the page sink and a non-local fetch touch Spark. The
+    // frontier lives in `frontierLocal`; driver mirrors of the
+    // seen/signature membership make the gate job-free. A distributed epoch
+    // (candCount over the threshold) materializes the frontier, drops the
+    // mirrors for the rest of the call, and every later epoch runs the
+    // distributed path; a resumed call picks its path afresh (see
+    // `smallFits`). At toy scale (the reference's own test crawls) an epoch
+    // otherwise pays ~10 driver round-trips for <=dozens of rows of work.
     // ------------------------------------------------------------------
     var frontierLocal: Option[Vector[FrontierEntry]] = None
     var driverSeen: java.util.HashSet[String] = new java.util.HashSet[String]()
     var driverSigs: java.util.HashSet[java.lang.Long] = new java.util.HashSet[java.lang.Long]()
     def dropMirrors(): Unit = { driverSeen = null; driverSigs = null }
-    def listedLocal(patterns: Seq[String], url: String): Boolean =
-      if (config.listsAreRegex) patterns.exists(p => p.r.findFirstIn(url).isDefined)
-      else patterns.contains(url)
-    // is_allowed_default driver-side (lists + robots) — same policy objects
-    // the distributed gate's codegen expressions consult
-    def gateDefaultLocal(e: FrontierEntry): Boolean =
-      (config.whitelist.isEmpty || listedLocal(config.whitelist, e.url)) &&
-        (config.blacklist.isEmpty || !listedLocal(config.blacklist, e.url)) &&
-        (!config.respectRobotsTxt ||
-          robots.policyFor(e.host).canFetch(config.userAgent, e.url))
+    val gate = new Sequential.Gate(config, robots)
     // The path rule, one for a fresh start, every epoch and a restore: the
     // frontier stays on the driver while the threshold is on and the rows
     // at hand (seeds, an epoch's candidates, a restored frontier) fit under
@@ -766,59 +699,21 @@ class CrawlEngine(
     def smallFits(rows: Long): Boolean =
       config.smallEpochThreshold > 0 && rows <= config.smallEpochThreshold
     def mirrorsFit(seenRows: Long): Boolean = seenRows <= CrawlEngine.mirrorCap
+    // seeds are gated by is_allowed_default only (lists + robots, no budget)
+    val seeds = start.frontier.filter(gate.default)
     var frontier: DataFrame = null
-    if (smallFits(seedEntries.size)) {
-      frontierLocal = Some(seedEntries.filter(gateDefaultLocal))
+    if (smallFits(start.frontier.size)) {
+      frontierLocal = Some(seeds)
       frontier = spark.emptyDataset[FrontierEntry].toDF() // unused while local
     } else {
       dropMirrors()
-      frontier = robotsGate(listsGate(
-        spark.createDataset(seedEntries).as[FrontierEntry])).toDF()
+      frontier = spark.createDataset(seeds).toDF()
     }
     def frontierDf: DataFrame = frontierLocal match {
       case Some(v) =>
         if (v.isEmpty) spark.emptyDataset[FrontierEntry].toDF()
         else spark.createDataset(v).toDF()
       case None => frontier
-    }
-
-    // A6 chain state: lowercased canonical URLs of every sitemap DOCUMENT
-    // (seed /sitemap.xml + recursively discovered <sitemapindex> locs) —
-    // drives budget exemption and the chain's expansion rule. Bounded by
-    // sitemap count, never by page count. Persisted in the checkpoint
-    // manifest so a chain-phase kill resumes mid-chain.
-    var chainStarted = false
-    val chainSitemapLower = scala.collection.mutable.Set.empty[String]
-    // page-advertised sitemaps (rel=sitemap spans) found during the main
-    // crawl — injected into the chain alongside the seeds' configured
-    // sitemap URL (lower-key -> first canonical URL, deterministic order)
-    val discoveredSitemaps = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def seedSitemapUrls: Seq[String] = {
-      val smPath =
-        if (config.sitemapUrl.startsWith("/")) config.sitemapUrl else "/" + config.sitemapUrl
-      seedUrls.flatMap { s =>
-        val p = UrlOps.parseCrawlBase(s)
-        if (p == null) None else Some(p.copy(path = smPath).serialize)
-      }.flatMap(u => Option(UrlOps.convertAbsPath(u, u)))
-    }
-
-    if (sitemapOnly) {
-      // A6 — sitemap-ONLY walk (reference `crawl_sitemap()`,
-      // `website.rs:6994-7028`): the link crawl never runs — the chain
-      // starts immediately from each seed's /sitemap.xml; seed pages are
-      // never fetched. Scope/budget/robots setup still derives from the
-      // seeds themselves.
-      chainStarted = true
-      val smSeen = scala.collection.mutable.Set.empty[String]
-      val canonSms = seedSitemapUrls.filter(u => smSeen.add(UrlOps.lowerUtf8(u)))
-      chainSitemapLower ++= canonSms.map(UrlOps.lowerUtf8)
-      val smEntries = canonSms.zipWithIndex.map { case (u, i) =>
-        FrontierEntry(u, UrlOps.host(u), 0, i.toLong, UrlOps.scoreUrl(u, 0), 0, 0L)
-      }.toVector
-      seqCounter = canonSms.length.toLong
-      if (frontierLocal.isDefined) frontierLocal = Some(smEntries.filter(gateDefaultLocal))
-      else frontier = robotsGate(listsGate(
-        spark.createDataset(smEntries).as[FrontierEntry])).toDF()
     }
 
     val canonicalOrder = Seq(col("depth"), col("discovery_seq"), col("host"), col("url"))
@@ -868,31 +763,31 @@ class CrawlEngine(
         }
         restoredPages = Some(ck.readTable(e, "pages"))
         ck.readTable(e, "host_tokens").collect()
-          .foreach(r => hostTokensMap.put(r.getString(0), Long.box(r.getLong(1))))
+          .foreach(r => hostTokensMap(r.getString(0)) = r.getLong(1))
         def longField(k: String): Option[Long] =
           ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong)
         def strField(k: String): Option[String] =
           ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(m).map(_.group(1))
-        longField("seq_counter").foreach(seqCounter = _)
-        longField("wildcard_remaining").foreach(wildcardRemaining = _)
-        pathBudget = Checkpointer.pathBudget(m)
-        strField("redirect_host").filter(_.nonEmpty)
-          .foreach(rh => scope = scope.copy(redirectHost = rh))
         // chain lineage: a kill during the sitemap chain resumes mid-chain
         // (chain rules re-arm from the manifest's sitemap-doc set; parsed
         // as JSON quoted strings — URLs may contain ',' and ']')
         val (ckChainStarted, ckChainSms) = Checkpointer.chainState(m)
-        if (ckChainStarted) {
-          chainStarted = true
-          chainSitemapLower ++= ckChainSms
-        }
-        // pre-chain rel=sitemap discoveries: restore in manifest order
-        // (insertion order) so the chain seeds' injection order — and the
-        // sitemap docs' discovery_seq — match the unkilled run exactly
-        Checkpointer.discoveredSitemaps(m).foreach { u =>
-          val k = UrlOps.lowerUtf8(u)
-          if (!discoveredSitemaps.contains(k)) discoveredSitemaps.put(k, u)
-        }
+        ledger = ledger.copy(
+          seqCounter = longField("seq_counter").getOrElse(ledger.seqCounter),
+          wildcardRemaining = longField("wildcard_remaining").getOrElse(ledger.wildcardRemaining),
+          pathBudget = Checkpointer.pathBudget(m),
+          scope = strField("redirect_host").filter(_.nonEmpty)
+            .fold(ledger.scope)(rh => ledger.scope.copy(redirectHost = rh)),
+          chainStarted = ledger.chainStarted || ckChainStarted,
+          chainSitemaps = if (ckChainStarted) ledger.chainSitemaps ++ ckChainSms else ledger.chainSitemaps,
+          // pre-chain rel=sitemap discoveries: restore in manifest order
+          // (insertion order) so the chain seeds' injection order — and the
+          // sitemap docs' discovery_seq — match the unkilled run exactly
+          discoveredSitemaps = Checkpointer.discoveredSitemaps(m)
+            .foldLeft(ledger.discoveredSitemaps) { (acc, u) =>
+              val k = UrlOps.lowerUtf8(u)
+              if (acc.contains(k)) acc else acc.updated(k, u)
+            })
         epoch = e + 1
       }
     }
@@ -911,22 +806,18 @@ class CrawlEngine(
     val carryover = holdsPossible || config.wildCardBudgeting || (config.budget - "*").nonEmpty
     // reactive per-host politeness state (LRU-capped like the reference's
     // DashMap limiters): 429/Retry-After delay overrides + latency EMAs
-    val throttleOverrideMs = lruMap[java.lang.Long]()
-    val latencyEma = lruMap[java.lang.Double]()
+    val throttleOverrideMs = lruMap[Long]()
+    val latencyEma = lruMap[Double]()
     /** ONE broadcast row per host carrying ALL driver-ledger politeness
       * state (reactive delay override ∨ auto-throttle EMA delay, and the
       * banked token bucket) — a single join in the gate instead of two.
       */
     def politenessStateDf(): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val hosts = (throttleOverrideMs.keySet.asScala ++ latencyEma.keySet.asScala ++
-        hostTokensMap.keySet.asScala).toSet.toSeq
+      val hosts = (throttleOverrideMs.keySet ++ latencyEma.keySet ++ hostTokensMap.keySet).toSeq
       val rows = hosts.map { h =>
         val ov = Sequential.reactiveOverrideMs(config,
-          Option(throttleOverrideMs.get(h)).map(_.longValue).getOrElse(0L),
-          Option(latencyEma.get(h)).map(_.doubleValue))
-        val tokens = Option(hostTokensMap.get(h)).map(_.longValue).getOrElse(1000L)
-        (h, ov, tokens)
+          throttleOverrideMs.getOrElse(h, 0L), latencyEma.get(h))
+        (h, ov, hostTokensMap.getOrElse(h, 1000L))
       }
       if (rows.isEmpty)
         spark.emptyDataset[(String, Long, Long)].toDF("host", "override_ms", "tokens_milli")
@@ -945,13 +836,17 @@ class CrawlEngine(
     var done = frontierCountPrev == 0
     var epochCache: Option[DataFrame] = None // politeness rank cache, per epoch
 
-    // tiny-epoch membership probes against the distributed stores — the
-    // mirror-dropped fallback: ONE job over <= threshold keys
-    def probeSeenPresent(keys: Seq[String]): Set[String] =
-      if (keys.isEmpty) Set.empty
-      else spark.sparkContext.parallelize(keys, 1).map(k => (k, ()))
-        .partitionBy(seenPartitioner)
+    // The store-probe kernels: keyed candidates shuffle to the store's
+    // partitions, where the persisted sorted-array snapshot (binary search)
+    // plus a hash set of the since-snapshot delta answer membership; a
+    // candidate's payload is kept when its key's presence equals
+    // `keepPresent`. Payloads are whatever the caller shuffles (UnsafeRow
+    // copies on the distributed path, the keys themselves for a probe job).
+    def probeSeen[V: scala.reflect.ClassTag](cands: org.apache.spark.rdd.RDD[(String, V)],
+        keepPresent: Boolean): org.apache.spark.rdd.RDD[V] =
+      cands.partitionBy(seenPartitioner)
         .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
+          val keep = keepPresent
           val base: Array[AnyRef] =
             if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]] else new Array[AnyRef](0)
           var delta: java.util.HashSet[String] = null
@@ -959,25 +854,35 @@ class CrawlEngine(
             if (delta == null) delta = new java.util.HashSet[String]()
             delta.add(dit.next()._1)
           }
-          cit.collect { case (k, _)
-            if java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(k)) => k }
-        }.collect().toSet
-    def probeSigsPresent(sigs: Set[Long]): Set[Long] =
-      if (sigs.isEmpty) Set.empty
-      else spark.sparkContext.parallelize(sigs.toSeq, 1).map(k => (k, ()))
-        .partitionBy(seenPartitioner)
+          cit.collect { case (k, v)
+            if (java.util.Arrays.binarySearch(base, k) >= 0 ||
+              (delta != null && delta.contains(k))) == keep => v }
+        }
+    def probeSigs[V: scala.reflect.ClassTag](cands: org.apache.spark.rdd.RDD[(Long, V)],
+        keepPresent: Boolean): org.apache.spark.rdd.RDD[V] =
+      cands.partitionBy(seenPartitioner)
         .zipPartitions(sigProbeRdd(), sigDeltaRdd) { (cit, pit, dit) =>
+          val keep = keepPresent
           val base = if (pit.hasNext) pit.next() else Array.emptyLongArray
           var delta: java.util.HashSet[java.lang.Long] = null
           while (dit.hasNext) {
             if (delta == null) delta = new java.util.HashSet[java.lang.Long]()
             delta.add(Long.box(dit.next()._1))
           }
-          cit.collect { case (k, _)
-            if java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(Long.box(k))) => k }
-        }.collect().toSet
+          cit.collect { case (k, v)
+            if (java.util.Arrays.binarySearch(base, k) >= 0 ||
+              (delta != null && delta.contains(Long.box(k)))) == keep => v }
+        }
+    // tiny-epoch membership against the distributed stores — the
+    // mirror-dropped fallback: ONE job over <= threshold keys
+    def seenPresent(keys: Iterable[String]): Set[String] =
+      if (keys.isEmpty) Set.empty
+      else probeSeen(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, k)),
+        keepPresent = true).collect().toSet
+    def sigsPresent(keys: Iterable[Long]): Set[Long] =
+      if (keys.isEmpty) Set.empty
+      else probeSigs(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, k)),
+        keepPresent = true).collect().toSet
 
     // state hygiene for long crawls: every k epochs fold the
     // co-partitioned delta chains flat (localCheckpoint — distributed,
@@ -1032,234 +937,89 @@ class CrawlEngine(
     // write job), and plans a Dataset per table
     def commitIfDue(frontierT: => DataFrame, seenT: => DataFrame, sigT: => DataFrame): Unit =
       checkpoint.filter(_.due(epoch)).foreach(_.commit(epoch, frontierT, seenT, sigT,
-        hostTokensDf().coalesce(1), pages, seqCounter, wildcardRemaining, pathBudget, scope,
-        metrics.toSeq, chainStarted, chainSitemapLower.toSeq.sorted,
-        discoveredSitemaps.values.toSeq))
+        hostTokensDf().coalesce(1), pages, ledger.seqCounter, ledger.wildcardRemaining,
+        ledger.pathBudget, ledger.scope, metrics.toSeq, ledger.chainStarted,
+        ledger.chainSitemaps.toSeq.sorted, ledger.discoveredSitemaps.values.toSeq))
+
+    // The Sequential step's Spark adapters. Membership answers from the
+    // driver mirrors while they live, else with one probe job against the
+    // store; every add appends a one-partition delta to the co-partitioned
+    // store (and to the mirror, which drops past mirrorCap).
+    val seenStore = new Sequential.Membership[String, String] {
+      def present(keys: Iterable[String]): String => Boolean = {
+        val m = driverSeen
+        if (m != null) m.contains else seenPresent(keys)
+      }
+      def add(entries: Seq[(String, String)]): Unit = {
+        if (driverSeen != null) {
+          entries.foreach(kv => driverSeen.add(kv._1))
+          if (!mirrorsFit(driverSeen.size)) dropMirrors()
+        }
+        seenCount += entries.size
+        if (entries.nonEmpty) {
+          val d = spark.sparkContext.parallelize(entries, 1).partitionBy(seenPartitioner)
+          seenRdd = spark.sparkContext.union(seenRdd, d)
+          seenDeltaRdd = spark.sparkContext.union(seenDeltaRdd, d)
+          seenRddEpochs += 1
+        }
+      }
+    }
+    val sigStore = new Sequential.Membership[Long, Boolean] {
+      def present(keys: Iterable[Long]): Long => Boolean = {
+        val m = driverSigs
+        if (m != null) k => m.contains(Long.box(k)) else sigsPresent(keys)
+      }
+      def add(entries: Seq[(Long, Boolean)]): Unit = {
+        if (driverSigs != null) entries.foreach(kv => driverSigs.add(Long.box(kv._1)))
+        if (entries.nonEmpty) {
+          val d = spark.sparkContext.parallelize(entries, 1).partitionBy(seenPartitioner)
+          sigRdd = spark.sparkContext.union(sigRdd, d)
+          sigDeltaRdd = spark.sparkContext.union(sigDeltaRdd, d)
+          sigRddEpochs += 1
+        }
+      }
+    }
+    // fetch through the seam: driver-local when the fetcher offers it
+    // (identical per-row semantics by the Fetcher contract), else one job
+    val step = new Sequential.Step(config, robots, gate, depthDistance, retry, sitemapChain,
+      onShouldCrawl, onLinkFind, seenStore, sigStore,
+      es => fetcher.fetchLocal(es)
+        .getOrElse(fetcher.fetch(spark, spark.createDataset(es)).collect().toSeq),
+      Sequential.HostState(hostTokensMap, throttleOverrideMs, latencyEma))
 
     // ---- full driver-side epoch (see the fast-path comment at the
-    // frontierLocal declaration): admission runs through the Sequential
-    // module — the exact code the differential oracle runs — fetch goes
-    // through the Fetcher seam, parsing through the shared pure
-    // parsePage, pages to the same parquet sink through a driver buffer.
-    // No Spark job with a driver-local fetcher, bar the snapshot commits.
+    // frontierLocal declaration): the Sequential step, plus the Spark-side
+    // work around it — page and blocked buffers, the bloom delta and salt
+    // hints a later distributed epoch needs, compaction, metrics and the
+    // snapshot. No Spark job with a driver-local fetcher and live mirrors,
+    // bar the snapshot commits.
     def smallEpoch(all: Vector[FrontierEntry], candCount: Long, epochT0: Long): Unit = {
-      val (readyV, heldV) = all.partition(_.not_before <= epoch)
-      // B1 seen gate: driver mirror, else one tiny probe job. (B8 batch
-      // dedup is structural — the local frontier is unique by lower(url)
-      // by construction, like the distributed one.)
-      val unseenV =
-        if (driverSeen != null) readyV.filterNot(e => driverSeen.contains(UrlOps.lowerUtf8(e.url)))
-        else {
-          val present = probeSeenPresent(readyV.map(e => UrlOps.lowerUtf8(e.url)))
-          readyV.filterNot(e => present.contains(UrlOps.lowerUtf8(e.url)))
-        }
-      // B2/B3/B4/B6 stateless gates; robots-blocked candidates counted for
-      // the blocked side output (reference on_robots_blocked) — free here
-      val listsPassV = unseenV.filter(e =>
-        (config.whitelist.isEmpty || listedLocal(config.whitelist, e.url)) &&
-          (config.blacklist.isEmpty || !listedLocal(config.blacklist, e.url)))
-      val (robotsPassV, robotsBlockedV) =
-        if (!config.respectRobotsTxt) (listsPassV, Vector.empty[FrontierEntry])
-        else listsPassV.partition(e => robots.policyFor(e.host).canFetch(config.userAgent, e.url))
-      val robotsBlockedCount = robotsBlockedV.size.toLong
-      if (config.trackBlocked && robotsBlockedV.nonEmpty) {
-        robotsBlockedV.foreach(e => blockedBuf += ((e.url, "robots", epoch.toLong)))
-        if (blockedBuf.size >= CrawlEngine.blockedBufCap) flushBlockedBuf()
-      }
-      val gated0 = robotsPassV.filter { e =>
-        config.depth <= 0 || UrlOps.pathDepth(e.url) <= depthDistance
-      }
-      // B9 politeness (shared walk — identical ledgers to the distributed
-      // politenessStateDf computation)
-      var polAdmitted = gated0
-      var deferredV = Vector.empty[FrontierEntry]
-      if (politenessPossible) {
-        def delayOf(host: String): Long = {
-          val rd = if (config.respectRobotsTxt) robots.politenessDelayMs(host, config.userAgent) else 0L
-          math.max(math.max(config.delayMs, rd),
-            Sequential.reactiveOverrideMs(config,
-              Option(throttleOverrideMs.get(host)).map(_.longValue).getOrElse(0L),
-              Option(latencyEma.get(host)).map(_.doubleValue)))
-        }
-        val (a, d) = Sequential.politenessAdmit(gated0, config, epoch, delayOf,
-          h => Option(hostTokensMap.get(h)).map(_.longValue),
-          (h, t) => hostTokensMap.put(h, Long.box(t)))
-        polAdmitted = a; deferredV = d
-      }
-      // B7 budget (shared walk); chain-phase sitemap docs budget-exempt
-      val (smExemptV, budgetableV) =
-        if (chainStarted && chainSitemapLower.nonEmpty)
-          polAdmitted.partition(e => chainSitemapLower.contains(UrlOps.lowerUtf8(e.url)))
-        else (Vector.empty[FrontierEntry], polAdmitted)
-      val br = Sequential.budgetAdmit(budgetableV, config, wildcardRemaining, pathBudget)
-      wildcardRemaining = br.wildcardRemaining
-      pathBudget = br.pathBudget
-      if (br.budgetStopped) budgetStopped = true
-      val admittedV = br.admitted ++ smExemptV
-      val admittedCount = admittedV.size.toLong
+      val out = step(all, epoch, ledger)
+      ledger = out.ledger
+      val admittedCount = out.admitted.size.toLong
       // bloom delta — keeps the broadcast group valid for a later
       // distributed epoch (same 1% FPP sizing rule as the fused builder)
-      bloomFromLocal(admittedV.map(e => UrlOps.lowerUtf8(e.url)), candCount)
+      bloomFromLocal(out.admitted.map(e => UrlOps.lowerUtf8(e.url)), candCount)
       // D4 salt hints for the NEXT epoch — free here, and crucial at the
       // small->distributed handoff: the first big epoch of a hot-host
       // crawl would otherwise fetch 50% of its rows through the default
       // 16-way spread (the distributed stats ride the fetch scan and so
       // always lag one epoch)
-      hotHostWidths =
-        if (admittedV.isEmpty) Map.empty
-        else {
-          val total = admittedV.size.toDouble
-          val pNow = P
-          topHotHosts(admittedV.groupBy(_.host)
-            .map { case (h, es) => (h, math.ceil(es.size / total * 4 * pNow).toInt) }
-            .filter(_._2 > 16))
-        }
-      // A3 fetch through the seam with D5 emission order (priority
-      // emission, or host round-robin interleave when configured —
-      // reference `UrlFrontier::pop` frontier.rs:78-121); results are
-      // restored to admission order afterwards so the epoch-0 re-anchor
-      // scan is deterministic
-      val fetchOrderedV =
-        if (config.roundRobin)
-          admittedV.groupBy(_.host).values.toVector
-            .flatMap(es => es.sorted(Sequential.hostOrder).zipWithIndex.map(_.swap))
-            .sorted(Ordering.Tuple2(implicitly[Ordering[Int]], Sequential.hostOrder))
-            .map(_._2)
-        else admittedV.sorted(Sequential.hostOrder)
-      val fetched0: Array[FetchResult] =
-        if (admittedV.isEmpty) Array.empty
-        else fetcher.fetchLocal(fetchOrderedV) match {
-          // driver-local fast path (identical per-row semantics by the
-          // Fetcher contract): a tiny epoch skips the fetch job entirely
-          case Some(rs) => rs.toArray
-          case None => fetcher.fetch(spark, spark.createDataset(fetchOrderedV)).collect()
-        }
-      val pos = admittedV.iterator.map(_.url).zipWithIndex.toMap
-      val fetched = fetched0.sortBy(f => pos.getOrElse(f.url, Int.MaxValue))
-      // B9 reactive signals: 429 Retry-After override + bucket drain;
-      // latency EMA for the auto-throttle
-      if (politenessPossible) {
-        fetched.filter(f => f.f_status == 429 && f.f_retry_after_ms > 0)
-          .groupBy(_.host).foreach { case (h, fs) =>
-            throttleOverrideMs.put(h, Long.box(fs.map(_.f_retry_after_ms).max))
-            hostTokensMap.put(h, Long.box(0L))
-          }
-        if (config.autoThrottle) {
-          fetched.filter(_.f_latency_ms > 0).groupBy(_.host).foreach { case (h, fs) =>
-            val avg = fs.map(_.f_latency_ms.toDouble).sum / fs.size
-            val prev = latencyEma.get(h)
-            latencyEma.put(h, Double.box(
-              if (prev == null) avg
-              else prev.doubleValue + config.autoThrottleAlpha * (avg - prev.doubleValue)))
-          }
-        }
-      }
-      // C7 retry ladder; retried URLs leave the seen set
-      val (toRetry, keep) = fetched.partition(f =>
-        retry.isRetryableStatus(f.f_status) && f.attempt < retry.maxAttempts)
-      val retryV = toRetry.map(f => FrontierEntry(f.url, f.host, f.depth, f.discovery_seq,
-        f.priority, f.attempt + 1, epoch + retry.backoffEpochsOf(f.attempt))).toVector
-      val retriedLower = toRetry.iterator.map(f => UrlOps.lowerUtf8(f.url)).toSet
-      val seenDeltaV = admittedV.iterator.map(e => (UrlOps.lowerUtf8(e.url), e.url))
-        .filterNot(kv => retriedLower.contains(kv._1)).toVector
-      if (driverSeen != null) {
-        seenDeltaV.foreach(kv => driverSeen.add(kv._1))
-        if (!mirrorsFit(driverSeen.size)) dropMirrors()
-      }
-      seenCount += seenDeltaV.size
-      if (seenDeltaV.nonEmpty) {
-        val d = spark.sparkContext.parallelize(seenDeltaV, 1).partitionBy(seenPartitioner)
-        seenRdd = spark.sparkContext.union(seenRdd, d)
-        seenDeltaRdd = spark.sparkContext.union(seenDeltaRdd, d)
-        seenRddEpochs += 1
-      }
-      // C6 scope re-anchor on epoch-0 cross-host redirect (canonical-min
-      // winner, shared with the distributed path and the oracle)
-      if (epoch == 0L) {
-        val cands = keep.filter(f =>
-          f.f_status == 200 && UrlOps.host(f.f_final_url) != scope.parentHost)
-        if (cands.nonEmpty) {
-          val w = cands.minBy(f => (f.depth, f.discovery_seq, f.host, f.url))(Sequential.keyOrder)
-          scope = scope.copy(redirectHost = UrlOps.host(w.f_final_url))
-        }
-      }
-      // C1-C4/C8 parse (shared pure function) + A7 page-sink delta
-      val lrw = onLinkFind.orNull
-      val sc = scope
-      val ep = epoch
-      val parsedV = keep.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))
-      if (parsedV.nonEmpty) {
-        // buffered sink delta (one write job per pageBufCap rows, not per
-        // epoch); every pages-view read flushes first
-        pageBuf ++= parsedV
+      hotHostWidths = saltWidths(
+        out.admitted.groupBy(_.host).map { case (h, es) => (h, es.size.toLong) }, admittedCount)
+      // A7 page-sink delta, buffered (one write job per pageBufCap rows, not
+      // per epoch); every pages-view read flushes first
+      if (out.pages.nonEmpty) {
+        pageBuf ++= out.pages
         if (pageBuf.size >= CrawlEngine.pageBufCap) flushPageBuf()
       }
-      // B11 veto gates expansion of ordinary pages; chain-phase sitemap
-      // docs bypass it (the reference parses sitemaps outside the page
-      // veto channel)
-      val afterVeto = onShouldCrawl match {
-        case Some(veto) => parsedV.filter(veto)
-        case None => parsedV
-      }
-      val vetoedCount = (parsedV.length - afterVeto.length).toLong
-      if (config.trackBlocked && vetoedCount > 0) {
-        val veto = onShouldCrawl.get
-        parsedV.filterNot(veto).foreach(p => blockedBuf += ((p.url, "veto", epoch.toLong)))
+      if (config.trackBlocked && (out.robotsBlocked.nonEmpty || out.vetoed.nonEmpty)) {
+        out.robotsBlocked.foreach(e => blockedBuf += ((e.url, "robots", epoch)))
+        out.vetoed.foreach(p => blockedBuf += ((p.url, "veto", epoch)))
         if (blockedBuf.size >= CrawlEngine.blockedBufCap) flushBlockedBuf()
       }
-      if (sitemapChain && !chainStarted)
-        CrawlEngine.accumulateDiscoveredSitemaps(discoveredSitemaps,
-          parsedV.iterator.flatMap(_.sitemap_links).toSeq)
-      var expandingV: Seq[ParsedPage] = Vector.empty
-      if (chainStarted) {
-        val smDocs = parsedV.filter(p =>
-          p.status == 200 && chainSitemapLower.contains(UrlOps.lowerUtf8(p.url)))
-        expandingV = smDocs.map(p => p.copy(links = p.links ++ p.sitemap_links)).toVector
-        smDocs.flatMap(_.sitemap_links).foreach(u => chainSitemapLower += UrlOps.lowerUtf8(u))
-      } else if (config.normalize) {
-        // C5 signature dedup: canonical-first page per NEW signature
-        val ok = afterVeto.filter(p => p.status == 200 && p.signature != 0L)
-        val perSig = ok.groupBy(_.signature).map { case (s, ps) =>
-          s -> ps.minBy(p => (p.depth, p.discovery_seq, p.host, p.url))(Sequential.keyOrder)
-        }
-        val newSigs: Set[Long] =
-          if (driverSigs != null) perSig.keySet.filter(s => !driverSigs.contains(Long.box(s))).toSet
-          else perSig.keySet.toSet -- probeSigsPresent(perSig.keySet.toSet)
-        expandingV = newSigs.toVector.sorted.map(perSig) ++
-          afterVeto.filter(p => p.status == 200 && p.signature == 0L)
-        if (driverSigs != null) newSigs.foreach(s => driverSigs.add(Long.box(s)))
-        if (newSigs.nonEmpty) {
-          val d = spark.sparkContext.parallelize(newSigs.toSeq.map((_, true)), 1)
-            .partitionBy(seenPartitioner)
-          sigRdd = spark.sparkContext.union(sigRdd, d)
-          sigDeltaRdd = spark.sparkContext.union(sigDeltaRdd, d)
-          sigRddEpochs += 1
-        }
-      } else expandingV = afterVeto.filter(_.status == 200).toVector
-      // C2/D1 links: explode, ci-dedup keep canonical-min, seen-filter
-      // (r6: links to already-seen URLs are dropped BEFORE seq assignment —
-      // mirrors the distributed path and the oracle; seq values compact but
-      // canonical order is preserved), global seq
-      val linksRaw = expandingV.flatMap(p =>
-        p.links.zipWithIndex.map { case (u, idx) => (p.depth, p.discovery_seq, idx, u) })
-      val uniq0 = linksRaw.groupBy(t => UrlOps.lowerUtf8(t._4)).values
-        .map(_.min(Sequential.linkOrder)).toVector
-      val uniq = {
-        if (driverSeen != null) uniq0.filterNot(t => driverSeen.contains(UrlOps.lowerUtf8(t._4)))
-        else {
-          val present = probeSeenPresent(uniq0.map(t => UrlOps.lowerUtf8(t._4)))
-          uniq0.filterNot(t => present.contains(UrlOps.lowerUtf8(t._4)))
-        }
-      }.sorted(Sequential.linkOrder)
-      val newFrontierV = uniq.zipWithIndex.map { case ((pd, _, _, u), i) =>
-        FrontierEntry(u, UrlOps.host(u), pd + 1, seqCounter + i,
-          UrlOps.scoreUrl(u, pd + 1), 0, 0L)
-      }
-      seqCounter += uniq.size.toLong
-      // D1 next frontier, case-insensitive dedup keep canonical-min
-      frontierLocal = Some(CrawlEngine.dedupCanonicalMinLocal(
-        heldV ++ deferredV ++ br.leftover ++ retryV ++ newFrontierV))
-      val frontierCount = frontierLocal.get.size.toLong
+      frontierLocal = Some(out.frontier)
+      val frontierCount = out.frontier.size.toLong
       frontierCountPrev = frontierCount
       // store hygiene: with the mirrors gone the per-epoch probe jobs walk
       // the delta chains — compact on the usual cadence. With mirrors live
@@ -1272,15 +1032,16 @@ class CrawlEngine(
         else math.max(32, config.stateCompactionEpochs)
       if (seenRddEpochs >= smallCadence) compactStores()
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
-        uniq.size.toLong, frontierCount, seenCount, budgetStopped,
-        (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
+        out.newLinks, frontierCount, seenCount, ledger.budgetStopped,
+        (System.nanoTime() - epochT0) / 1000000L, out.robotsBlocked.size.toLong,
+        out.vetoed.size.toLong)
       // driver-sized tables go to the snapshot as one partition each
       if (driverSeen != null) commitIfDue(frontierDf.coalesce(1), seen.coalesce(1),
         signatures.coalesce(1))
       else commitIfDue(frontierDf.coalesce(1), seen, signatures)
       epoch += 1
       onEpoch.foreach(f => f(epoch - 1))
-      done = budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
+      done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
         shutdownRequested || System.nanoTime() > deadline
     }
 
@@ -1295,13 +1056,10 @@ class CrawlEngine(
       // mid-crawl URL injection: drain the inbox into the frontier
       // (reference `dequeue`, `website.rs:7528-7562`)
       if (!inbox.isEmpty) {
-        val drained = Iterator.continually(inbox.poll()).takeWhile(_ != null)
-          .flatMap(u => Option(UrlOps.convertAbsPath(u, u))).toVector.distinct
-        if (drained.nonEmpty) {
-          val injectedV = drained.zipWithIndex.map { case (u, i) =>
-            FrontierEntry(u, UrlOps.host(u), 0, seqCounter + i, UrlOps.scoreUrl(u, 0), 0, 0L)
-          }.toVector
-          seqCounter += drained.length
+        val (injectedV, injectedLedger) = Sequential.inject(
+          Iterator.continually(inbox.poll()).takeWhile(_ != null).toVector, ledger)
+        ledger = injectedLedger
+        if (injectedV.nonEmpty) {
           // restore the frontier's unique-by-lower(url) invariant
           frontierLocal match {
             case Some(v) =>
@@ -1369,22 +1127,8 @@ class CrawlEngine(
         // UnsafeRow.copy ships compact row bytes instead.
         val unseen = {
           val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-            org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeen)
-              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy()))
-              .partitionBy(seenPartitioner)
-              .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
-                val base: Array[AnyRef] =
-                  if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]]
-                  else new Array[AnyRef](0)
-                var delta: java.util.HashSet[String] = null
-                while (dit.hasNext) {
-                  if (delta == null) delta = new java.util.HashSet[String]()
-                  delta.add(dit.next()._1)
-                }
-                cit.collect { case (k, r)
-                  if java.util.Arrays.binarySearch(base, k) < 0 &&
-                    (delta == null || !delta.contains(k)) => r }
-              },
+            probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeen)
+              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), keepPresent = false),
             withLower.schema)
           definitelyNew.unionByName(unseenMaybe)
         }
@@ -1488,8 +1232,7 @@ class CrawlEngine(
               count(lit(1)).as("__n"))
             .orderBy(col("__n").desc, col("host")).limit(CrawlEngine.lruHostCap)
             .collect()
-            .foreach(r => hostTokensMap.put(r.getString(0),
-              Long.box(r.getLong(1) - r.getLong(2) * 1000L))))
+            .foreach(r => hostTokensMap(r.getString(0)) = r.getLong(1) - r.getLong(2) * 1000L))
           polAdmitted = adm.select(col("url"), col("host"), col("depth"), col("discovery_seq"),
             col("priority"), col("attempt"), col("not_before"))
         }
@@ -1499,13 +1242,13 @@ class CrawlEngine(
         //    order exactly; see SURVEY D6/B7)
         var admitted = polAdmitted
         var budgetLeftover = spark.emptyDataset[FrontierEntry].toDF()
-        if (config.wildCardBudgeting || pathBudget.nonEmpty) {
+        if (config.wildCardBudgeting || ledger.pathBudget.nonEmpty) {
           // chain phase: the sitemap DOCUMENTS are admitted budgetless
           // (`is_allowed_budgetless`, `website.rs:11716-11722`); their
           // entries consume budget normally
-          val smExempt = chainStarted && chainSitemapLower.nonEmpty
+          val smExempt = ledger.chainStarted && ledger.chainSitemaps.nonEmpty
           val exemptCond =
-            if (smExempt) lower(col("url")).isInCollection(chainSitemapLower.toSeq) else lit(false)
+            if (smExempt) lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq) else lit(false)
           val budgeted = if (smExempt) polAdmitted.filter(!exemptCond) else polAdmitted
           val ranked = withGlobalSeq(budgeted, canonicalOrder, "__grank", 0L).localCheckpoint(true)
           var alive = ranked
@@ -1515,18 +1258,18 @@ class CrawlEngine(
             // stops the whole crawl (`website.rs:7904-7907`), leftovers
             // preserved as extra_links.
             val n = ranked.count()
-            val passCount = math.max(0L, wildcardRemaining - 1L)
+            val passCount = math.max(0L, ledger.wildcardRemaining - 1L)
             if (n > passCount) {
-              budgetStopped = true
+              ledger = ledger.copy(budgetStopped = true)
               // leftover links preserved — reference `extra_links`
               // (`website.rs:8700-8712`)
               budgetLeftover = ranked.filter(col("__grank") >= lit(passCount))
                 .drop("__grank")
             }
             alive = alive.filter(col("__grank") < lit(passCount))
-            wildcardRemaining -= math.min(n, passCount)
+            ledger = ledger.copy(wildcardRemaining = ledger.wildcardRemaining - math.min(n, passCount))
           }
-          if (pathBudget.nonEmpty) {
+          if (ledger.pathBudget.nonEmpty) {
             // per-key admission in accumulated-segment order; outer keys
             // consume before inner ones reject (walk order
             // `website.rs:2085-2115`). No window: round 2 partitioned a
@@ -1536,6 +1279,7 @@ class CrawlEngine(
             // per-partition match counts (partitions are __grank ranges,
             // courtesy of withGlobalSeq's range partitioning) plus one
             // boundary-partition scan — admission is then a pure filter.
+            var pathBudget = ledger.pathBudget
             val keys = pathBudget.keys.toSeq.sortBy(_.length)
             var cur = alive.withColumn("__prefixes", graft.url.urlfns.budget_prefixes(col("url")))
             for (k <- keys) {
@@ -1572,6 +1316,7 @@ class CrawlEngine(
               }
             }
             alive = cur.drop("__prefixes")
+            ledger = ledger.copy(pathBudget = pathBudget)
           }
           admitted =
             if (smExempt) alive.drop("__grank").unionByName(polAdmitted.filter(exemptCond))
@@ -1635,21 +1380,22 @@ class CrawlEngine(
         val parsedName = s"epoch=$epoch"
         if (epoch == 0L) {
           val fetched = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
-          val ph = scope.parentHost
+          val ph = ledger.scope.parentHost
           // canonical-min winner — identical on the distributed path, the
           // fast path, and the oracle (partition order would not be)
           val redirHosts = fetched
             .filter(f => f.f_status == 200 && UrlOps.host(f.f_final_url) != ph)
             .orderBy(col("depth"), col("discovery_seq"), col("host"), col("url"))
             .map(_.f_final_url).take(1)
-          if (redirHosts.nonEmpty) scope = scope.copy(redirectHost = UrlOps.host(redirHosts.head))
-          val sc = scope
+          if (redirHosts.nonEmpty)
+            ledger = ledger.copy(scope = ledger.scope.copy(redirectHost = UrlOps.host(redirHosts.head)))
+          val sc = ledger.scope
           val lrw = onLinkFind.orNull
           writePageDelta(
             fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))),
             parsedName)
         } else {
-          val sc = scope
+          val sc = ledger.scope
           val lrw = onLinkFind.orNull
           timed("fetch_parse")(writePageDelta(fetcher.fetch(spark, fetchReady)
             .mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))), parsedName))
@@ -1693,16 +1439,14 @@ class CrawlEngine(
             .filterNot(r => haveEma.contains(r.getString(0)))
           val drained = signals.filter(_.getLong(1) > 0)
           drained.foreach { r =>
-            throttleOverrideMs.put(r.getString(0), Long.box(r.getLong(1)))
-            hostTokensMap.put(r.getString(0), Long.box(0L)) // bucket drained
+            throttleOverrideMs(r.getString(0)) = r.getLong(1)
+            hostTokensMap(r.getString(0)) = 0L // bucket drained
           }
           if (config.autoThrottle) {
             val alpha = config.autoThrottleAlpha
             emaRows.filter(!_.isNullAt(2)).foreach { r =>
               val h = r.getString(0); val l = r.getDouble(2)
-              val prev = latencyEma.get(h)
-              val next = if (prev == null) l else prev.doubleValue + alpha * (l - prev.doubleValue)
-              latencyEma.put(h, Double.box(next))
+              latencyEma(h) = latencyEma.get(h).fold(l)(prev => prev + alpha * (l - prev))
             }
           }
         }
@@ -1769,7 +1513,7 @@ class CrawlEngine(
               .toDF().select(col("url"), lit("veto").as("reason"), lit(epoch.toLong).as("epoch"))
             sinkBlockedDelta(vetoedRows, "veto")
           } else 0L
-        if (sitemapChain && !chainStarted) {
+        if (sitemapChain && !ledger.chainStarted) {
           // rel=sitemap auto-discovery (one tiny extra job per epoch,
           // only when the caller requested the chain; ads are distinct
           // sitemap DOCS, so the collect is bounded by the cap).
@@ -1783,9 +1527,10 @@ class CrawlEngine(
             .groupBy(lower(col("__u")).as("__k")).agg(min(col("__u")).as("__u"))
             .orderBy(col("__u")).limit(CrawlEngine.maxDiscoveredSitemaps)
             .select(col("__u")).as[String].collect()
-          CrawlEngine.accumulateDiscoveredSitemaps(discoveredSitemaps, ads.toSeq)
+          ledger = ledger.copy(discoveredSitemaps = CrawlEngine.accumulateDiscoveredSitemaps(
+            ledger.discoveredSitemaps, ads.toSeq))
         }
-        if (chainStarted) {
+        if (ledger.chainStarted) {
           // chain phase: ONLY sitemap docs expand — their <loc> entries
           // plus recursive <sitemapindex> locs; entry pages are recorded
           // but never expanded ("does not re-crawl the links of the pages
@@ -1794,12 +1539,12 @@ class CrawlEngine(
           // parses sitemaps outside the page channel — the veto governs
           // page-link expansion only), so expansion derives from `parsed`,
           // not the veto-filtered stream — mirroring the oracle.
-          val isSm = lower(col("url")).isInCollection(chainSitemapLower.toSeq)
+          val isSm = lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq)
           val nested = parsed.toDF().filter(isSm)
             .select(explode(col("sitemap_links")).as("u")).as[String].collect()
           expanding = parsed.toDF().filter(col("status") === 200 && isSm)
             .withColumn("links", concat(col("links"), col("sitemap_links")))
-          chainSitemapLower ++= nested.map(UrlOps.lowerUtf8)
+          ledger = ledger.copy(chainSitemaps = ledger.chainSitemaps ++ nested.map(UrlOps.lowerUtf8))
         } else if (config.normalize) {
           val sigOk = expanding.filter(col("status") === 200 && col("signature") =!= 0L)
           val sigKey = struct(col("depth"), col("discovery_seq"), col("host"), col("url"))
@@ -1812,20 +1557,8 @@ class CrawlEngine(
           // InternalRow probe shuffle (r6) — same rationale as the seen gate
           val newWinners = timed("sig_reroot")(
             org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-              org.apache.spark.sql.GraftSqlBridge.internalRdd(cands)
-                .map(r => (r.getLong(0), r.copy()))
-                .partitionBy(seenPartitioner)
-                .zipPartitions(sigProbeRdd(), sigDeltaRdd) { (cit, pit, dit) =>
-                  val base = if (pit.hasNext) pit.next() else Array.emptyLongArray
-                  var delta: java.util.HashSet[java.lang.Long] = null
-                  while (dit.hasNext) {
-                    if (delta == null) delta = new java.util.HashSet[java.lang.Long]()
-                    delta.add(Long.box(dit.next()._1))
-                  }
-                  cit.collect { case (k, r)
-                    if java.util.Arrays.binarySearch(base, k) < 0 &&
-                      (delta == null || !delta.contains(Long.box(k))) => r }
-                }, candsSchema)
+              probeSigs(org.apache.spark.sql.GraftSqlBridge.internalRdd(cands)
+                .map(r => (r.getLong(0), r.copy())), keepPresent = false), candsSchema)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           sigWinnerCaches :+= newWinners
           val firstPerSig = sigOk.withColumn("__k", sigKey)
@@ -1882,13 +1615,13 @@ class CrawlEngine(
           // barriers that dwarf milliseconds of actual work at this size)
           val rows0 = timed("links_seq")(uniq0.collect())
             .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getString(3)))
-          val present = probeSeenPresent(rows0.map(t => UrlOps.lowerUtf8(t._4)).toSeq)
+          val present = seenPresent(rows0.map(t => UrlOps.lowerUtf8(t._4)))
           val rows = rows0.filterNot(t => present.contains(UrlOps.lowerUtf8(t._4)))
             .sorted(Sequential.linkOrder) // UTF-8 byte order = the distributed path's UTF8String order
           newLinkCount = rows.length
           if (rows.nonEmpty) {
             val entries = rows.zipWithIndex.map { case ((pd, _, _, u), i) =>
-              FrontierEntry(u, UrlOps.host(u), pd + 1, seqCounter + i,
+              FrontierEntry(u, UrlOps.host(u), pd + 1, ledger.seqCounter + i,
                 UrlOps.scoreUrl(u, pd + 1), 0, 0L)
             }
             newFrontier = spark.createDataset(entries.toIndexedSeq).toDF()
@@ -1915,22 +1648,8 @@ class CrawlEngine(
           val maybeSeenLinks = withLu.filter(mightContain)
           val luIdx = withLu.schema.fieldIndex("__lu")
           val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-            org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeenLinks)
-              .map(r => (r.getUTF8String(luIdx).toString, r.copy()))
-              .partitionBy(seenPartitioner)
-              .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
-                val base: Array[AnyRef] =
-                  if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]]
-                  else new Array[AnyRef](0)
-                var delta: java.util.HashSet[String] = null
-                while (dit.hasNext) {
-                  if (delta == null) delta = new java.util.HashSet[String]()
-                  delta.add(dit.next()._1)
-                }
-                cit.collect { case (k, r)
-                  if java.util.Arrays.binarySearch(base, k) < 0 &&
-                    (delta == null || !delta.contains(k)) => r }
-              },
+            probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeenLinks)
+              .map(r => (r.getUTF8String(luIdx).toString, r.copy())), keepPresent = false),
             withLu.schema)
           val survivors = definitelyNew.unionByName(unseenMaybe).drop("__lu")
           val sorted = survivors
@@ -1942,7 +1661,7 @@ class CrawlEngine(
         }.collect().sortBy(_._1).map(_._2))
         newLinkCount = partCounts.sum
         if (newLinkCount > 0) {
-          val offsets = partCounts.scanLeft(seqCounter)(_ + _)
+          val offsets = partCounts.scanLeft(ledger.seqCounter)(_ + _)
           // survivors schema == the deduped link schema (the __lu split
           // column is dropped before the range sort)
           val schema = uniqP.schema.add("__seq", LongType, nullable = false)
@@ -1970,7 +1689,7 @@ class CrawlEngine(
             lit(0L).as("not_before"))
         }
         }
-        seqCounter += newLinkCount
+        ledger = ledger.copy(seqCounter = ledger.seqCounter + newLinkCount)
 
         // 12. next frontier = politeness-deferred ∪ retries ∪ new links,
         //     case-insensitive-deduped (D1) as a map-side-combining hash
@@ -1997,7 +1716,7 @@ class CrawlEngine(
         if (seenRddEpochs >= math.max(2, config.stateCompactionEpochs)) compactStores()
 
         metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
-          newLinkCount, frontierCount, seenCount, budgetStopped,
+          newLinkCount, frontierCount, seenCount, ledger.budgetStopped,
           (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
 
         commitIfDue(frontier, seen, signatures)
@@ -2006,7 +1725,7 @@ class CrawlEngine(
         epochCache = None
         epoch += 1
         onEpoch.foreach(f => f(epoch - 1))
-        done = budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
+        done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
           shutdownRequested || System.nanoTime() > deadline
       }
     }
@@ -2017,22 +1736,14 @@ class CrawlEngine(
     // skips the chain entirely (`is_over_wild_budget`, `website.rs:11654`).
     // Each seed's /sitemap.xml is injected through the inbox (full gate:
     // seen/lists/robots — `is_allowed_budgetless`); chain epochs then run
-    // under the ordinary loop with two rule changes keyed off
-    // `chainSitemapLower`: sitemap docs are budget-exempt, and ONLY sitemap
+    // under the ordinary loop with two rule changes keyed off the ledger's
+    // `chainSitemaps`: sitemap docs are budget-exempt, and ONLY sitemap
     // docs expand (urlset entries + recursive sitemapindex locs).
-    if (sitemapChain && !chainStarted && !budgetStopped && !shutdownRequested &&
+    if (sitemapChain && !ledger.chainStarted && !ledger.budgetStopped && !shutdownRequested &&
         System.nanoTime() < deadline && epoch < config.maxEpochs) {
-      chainStarted = true
-      // seeds' configured sitemap URL + page-advertised discoveries, in
-      // deterministic order; canonicalized, stored lowercased with the
-      // SAME mapping the Spark lower() probes apply (UTF8String.toLowerCase)
-      val sms = {
-        val dedup = scala.collection.mutable.Set.empty[String]
-        (seedSitemapUrls ++ discoveredSitemaps.values)
-          .filter(u => dedup.add(UrlOps.lowerUtf8(u)))
-      }
+      val (sms, chainLedger) = Sequential.startChain(config, start.seedUrls, ledger)
+      ledger = chainLedger
       if (sms.nonEmpty) {
-        chainSitemapLower ++= sms.map(UrlOps.lowerUtf8)
         sms.foreach(inbox.add)
         done = false
       } else crawling = false
@@ -2040,8 +1751,8 @@ class CrawlEngine(
     }
 
     val finalPages = // the sitemap XML itself is parsed, never emitted as a page
-      if (chainSitemapLower.isEmpty) pages
-      else pages.filter(!lower(col("url")).isInCollection(chainSitemapLower.toSeq))
+      if (ledger.chainSitemaps.isEmpty) pages
+      else pages.filter(!lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq))
     CrawlResult(finalPages, seen, frontierDf, metrics.toSeq, epoch, blockedDf)
   }
 }
@@ -2079,13 +1790,12 @@ object CrawlEngine {
     * order.
     */
   private[graft] def accumulateDiscoveredSitemaps(
-      acc: scala.collection.mutable.LinkedHashMap[String, String],
-      epochLinks: Seq[String]): Unit = {
-    epochLinks.distinct.sorted(Sequential.utf8Ordering).foreach { u =>
+      acc: scala.collection.immutable.VectorMap[String, String],
+      epochLinks: Seq[String]): scala.collection.immutable.VectorMap[String, String] =
+    epochLinks.distinct.sorted(Sequential.utf8Ordering).foldLeft(acc) { (m, u) =>
       val k = graft.url.UrlOps.lowerUtf8(u)
-      if (acc.size < maxDiscoveredSitemaps && !acc.contains(k)) acc.put(k, u)
+      if (m.size < maxDiscoveredSitemaps && !m.contains(k)) m.updated(k, u) else m
     }
-  }
 
   /** D4 — deterministic hot-host salt selection: keep the 64 WIDEST hints
     * (width desc, host asc tiebreak). A bare `.take(64)` on the unordered
@@ -2110,6 +1820,21 @@ object CrawlEngine {
     */
   val parsedSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[ParsedPage].schema
+
+  /** A crawl-scoped temp directory for a parquet sink (a real deployment
+    * points the sink at the output table's location), deleted on JVM exit.
+    */
+  private def tempSink(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      try {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      } catch { case _: Throwable => }
+    }))
+    dir.toString
+  }
 
   /** Schema of the blocked side-output table (B11 parity). */
   val blockedSchema: org.apache.spark.sql.types.StructType = {

@@ -1,14 +1,24 @@
 package graft.engine
 
 import graft.model.{CrawlConfig, FrontierEntry}
+import graft.url.{Glob, UrlOps}
+import scala.collection.immutable.VectorMap
+import scala.collection.mutable
 
-/** Driver-side sequential admission — the politeness token-bucket walk and
-  * the budget walk, shared VERBATIM by the sequential differential oracle
-  * ([[graft.oracle.OracleCrawler]]) and the engine's small-epoch fast path:
-  * below `smallEpochThreshold` the engine admits candidates with exactly
-  * this code, so the fast path cannot drift from the oracle by
-  * construction, while the distributed path is pinned to it by the
-  * differential suite.
+/** The driver-side crawl epoch, written once and run twice: the engine's
+  * small-epoch fast path drives [[Step]] with Spark adapters (driver
+  * mirrors or probe jobs for membership, the `Fetcher` seam, LRU host
+  * ledgers), and the sequential oracle ([[graft.oracle.OracleCrawler]])
+  * drives the same [[Step]] in plain memory. Seed, inbox and chain set-up
+  * ([[start]], [[inject]], [[startChain]]) is shared the same way, and the
+  * distributed epoch reads and writes the same [[Ledger]].
+  *
+  * Because both small paths run this code, the small-path-vs-oracle
+  * differentials check only the engine's adapters (mirrors, probe
+  * fallback, page sink, checkpoint). What checks the step itself stays
+  * independent of it: the distributed-path differentials
+  * (`smallEpochThreshold = 0`), the `CrawlPinSpec` VALUES pins, and the
+  * DuckDB oracle.
   *
   * Ordering: every string comparison here uses UTF-8 byte order
   * ([[utf8Ordering]]) — the order Spark's `UTF8String.binaryCompare` gives
@@ -89,8 +99,8 @@ object Sequential {
   /** Reactive per-host delay override: 429 Retry-After throttle ∨ the
     * clamped latency-EMA auto-throttle delay (reference
     * `rate_limiter.rs:121-137` + `auto_throttle.rs`). ONE formula shared by
-    * the engine's distributed ledger broadcast (politenessStateDf), the
-    * small-epoch fast path, and the oracle — they must stay bit-identical.
+    * the engine's distributed ledger broadcast (politenessStateDf) and
+    * [[Step]] — they must stay bit-identical.
     */
   def reactiveOverrideMs(config: CrawlConfig, throttleMs: Long, ema: Option[Double]): Long = {
     val emaDelay =
@@ -114,7 +124,7 @@ object Sequential {
     * @param getTokens  current banked milli-tokens (None = fresh bucket)
     * @param putTokens  write-back of the rolled-forward bucket
     */
-  def politenessAdmit(
+  private def politenessAdmit(
       gated: Vector[FrontierEntry], config: CrawlConfig, epoch: Long,
       delayOf: String => Long,
       getTokens: String => Option[Long],
@@ -149,7 +159,7 @@ object Sequential {
     * `website.rs:8700-8712`); per-key decrement over accumulated path
     * segments, outer keys consuming before inner ones reject.
     */
-  def budgetAdmit(
+  private def budgetAdmit(
       budgetable: Vector[FrontierEntry], config: CrawlConfig,
       wildcardRemaining0: Long, pathBudget0: Map[String, Long]): BudgetResult = {
     import graft.url.UrlOps
@@ -194,5 +204,356 @@ object Sequential {
       }
     }
     BudgetResult(admitted, leftover, wildcardRemaining, pathBudget, budgetStopped)
+  }
+
+  /** The crawl-wide values the driver-side epoch carries from one epoch to
+    * the next (all checkpointed): the discovery_seq counter, the budget
+    * ledger, the crawl scope, and the sitemap chain state.
+    *
+    * @param chainSitemaps      lower(url) of every sitemap DOCUMENT (the
+    *                           seeds' sitemap URL plus recursively found
+    *                           `<sitemapindex>` locs): budget-exempt, and
+    *                           the only pages that expand once the chain
+    *                           has started
+    * @param discoveredSitemaps page-advertised (rel=sitemap) sitemaps found
+    *                           before the chain, lower(url) -> first URL in
+    *                           discovery order
+    */
+  final case class Ledger(
+      seqCounter: Long,
+      wildcardRemaining: Long,
+      pathBudget: Map[String, Long],
+      budgetStopped: Boolean,
+      scope: ScopeState,
+      chainStarted: Boolean,
+      chainSitemaps: Set[String],
+      discoveredSitemaps: VectorMap[String, String])
+
+  /** A membership store: the seen set (lower(url) -> url) or the signature
+    * set (signature -> true).
+    */
+  trait Membership[K, V] {
+    /** A membership test for the keys in `keys` (a store may look up only
+      * those).
+      */
+    def present(keys: Iterable[K]): K => Boolean
+    def add(entries: Seq[(K, V)]): Unit
+  }
+
+  /** Membership over a plain in-memory set of keys. */
+  def inMemory[K, V](set: mutable.Set[K]): Membership[K, V] = new Membership[K, V] {
+    def present(keys: Iterable[K]): K => Boolean = set.contains
+    def add(entries: Seq[(K, V)]): Unit = entries.foreach(kv => set += kv._1)
+  }
+
+  /** Per-host politeness state: banked milli-tokens, the 429 Retry-After
+    * delay override, and the latency EMA.
+    */
+  final case class HostState(
+      tokens: mutable.Map[String, Long] = mutable.Map.empty,
+      throttleMs: mutable.Map[String, Long] = mutable.Map.empty,
+      latencyEma: mutable.Map[String, Double] = mutable.Map.empty)
+
+  /** `is_allowed_default` (lists + robots), with regex lists compiled once
+    * per crawl. Non-regex lists match the EXACT URL (`lib.rs:433-449`);
+    * `listsAreRegex` is an unanchored search (RegexSet::is_match).
+    */
+  final class Gate(config: CrawlConfig, robots: RobotsProvider) {
+    private def matcher(patterns: Seq[String]): String => Boolean =
+      if (config.listsAreRegex) {
+        val rs = patterns.map(_.r)
+        u => rs.exists(_.findFirstIn(u).isDefined)
+      } else patterns.toSet
+    private val white = matcher(config.whitelist)
+    private val black = matcher(config.blacklist)
+    def lists(url: String): Boolean =
+      (config.whitelist.isEmpty || white(url)) && (config.blacklist.isEmpty || !black(url))
+    def robotsAllow(e: FrontierEntry): Boolean =
+      !config.respectRobotsTxt || robots.policyFor(e.host).canFetch(config.userAgent, e.url)
+    def default(e: FrontierEntry): Boolean = lists(e.url) && robotsAllow(e)
+  }
+
+  /** A crawl's set-up (reference `setup_base` + `setup_selectors` +
+    * `_crawl_establish`): the glob-expanded seeds, the initial frontier
+    * (ungated), the depth distance and the initial ledger.
+    */
+  final case class Start(
+      seedUrls: Seq[String], frontier: Vector[FrontierEntry], depthDistance: Int, ledger: Ledger)
+
+  /** Seed establishment. Seeds expand as globs (`features/glob.rs`,
+    * `website.rs:3875-3885`), canonicalize, and dedup case-insensitively
+    * keeping the first, which establishes the frontier invariant "unique by
+    * lower(url)" every later epoch keeps. The scope, the depth distance
+    * (`determine_limits` `website.rs:14076-14089`: max(depth, seed
+    * segments)) and the budget derive from the first seed. In sitemap-only
+    * mode (`crawl_sitemap()`, `website.rs:6994-7028`) the frontier is each
+    * seed's sitemap URL instead, and the chain has started.
+    */
+  def start(config: CrawlConfig, seeds: Seq[String], sitemapOnly: Boolean): Start = {
+    val seedUrls = Glob.expandSeeds(seeds)
+    require(seedUrls.nonEmpty, "need at least one seed")
+    val seed0 = UrlOps.parse(seedUrls.head)
+    require(seed0 != null, s"unparseable seed ${seedUrls.head}")
+    val scope = ScopeState(
+      subMatcher =
+        if (config.tld) UrlOps.rootDomain(seed0.host)
+        else if (config.subdomains) seed0.host
+        else "",
+      parentHost = seed0.host,
+      parentScheme = seed0.scheme,
+      redirectHost = "",
+      crawlBase = UrlOps.parseCrawlBase(seedUrls.head).serialize,
+      externalDomains = config.externalDomains.map(_.toLowerCase(java.util.Locale.ROOT)),
+      fullResources = config.fullResources)
+    val urls = keepFirst(
+      if (sitemapOnly) seedSitemapUrls(config, seedUrls) else seedUrls.flatMap(canonical(_)))
+    val ledger = Ledger(
+      seqCounter = urls.length.toLong,
+      wildcardRemaining = config.budget.get("*").map(_.toLong).getOrElse(Long.MaxValue),
+      pathBudget = (config.budget - "*").map { case (k, v) => (k, v.toLong) },
+      budgetStopped = false,
+      scope = scope,
+      chainStarted = sitemapOnly,
+      chainSitemaps = if (sitemapOnly) urls.map(UrlOps.lowerUtf8).toSet else Set.empty,
+      discoveredSitemaps = VectorMap.empty)
+    Start(seedUrls, roots(urls, 0L),
+      math.max(config.depth, UrlOps.budgetSegments(seedUrls.head).length), ledger)
+  }
+
+  /** Mid-crawl injection (reference `dequeue`, `website.rs:7528-7562`):
+    * canonical, distinct URLs as depth-0 entries stamped from the ledger's
+    * seq counter. The caller merges them into the frontier keeping the
+    * canonical-min entry per lower(url).
+    */
+  def inject(urls: Seq[String], ledger: Ledger): (Vector[FrontierEntry], Ledger) = {
+    val drained = urls.flatMap(canonical(_)).distinct
+    (roots(drained, ledger.seqCounter), ledger.copy(seqCounter = ledger.seqCounter + drained.length))
+  }
+
+  /** A6 chain start (reference `crawl()` runs `crawl_concurrent` then
+    * `sitemap_crawl_chain`, `website.rs:6974-6976`): the seeds' configured
+    * sitemap URL plus the page-advertised discoveries, case-insensitive
+    * keep-first, to be injected through the inbox; the ledger marks them as
+    * sitemap documents.
+    */
+  def startChain(config: CrawlConfig, seedUrls: Seq[String], ledger: Ledger): (Seq[String], Ledger) = {
+    val sms = keepFirst(seedSitemapUrls(config, seedUrls) ++ ledger.discoveredSitemaps.values)
+    (sms, ledger.copy(chainStarted = true,
+      chainSitemaps = ledger.chainSitemaps ++ sms.map(UrlOps.lowerUtf8)))
+  }
+
+  private def canonical(u: String): Option[String] = Option(UrlOps.convertAbsPath(u, u))
+
+  private def keepFirst(urls: Seq[String]): Seq[String] = {
+    val seen = mutable.Set.empty[String]
+    urls.filter(u => seen.add(UrlOps.lowerUtf8(u)))
+  }
+
+  private def seedSitemapUrls(config: CrawlConfig, seedUrls: Seq[String]): Seq[String] = {
+    val smPath =
+      if (config.sitemapUrl.startsWith("/")) config.sitemapUrl else "/" + config.sitemapUrl
+    seedUrls.flatMap(s => Option(UrlOps.parseCrawlBase(s)))
+      .flatMap(p => canonical(p.copy(path = smPath).serialize))
+  }
+
+  private def roots(urls: Seq[String], seq0: Long): Vector[FrontierEntry] =
+    urls.iterator.zipWithIndex.map { case (u, i) =>
+      FrontierEntry(u, UrlOps.host(u), 0, seq0 + i, UrlOps.scoreUrl(u, 0), 0, 0L)
+    }.toVector
+
+  /** What one epoch produced: the parsed pages (fetches not retried), the
+    * admitted entries, the blocked rows (robots-denied candidates,
+    * veto-suppressed pages), the count of new links, the next frontier and
+    * the next ledger.
+    */
+  final case class EpochOut(
+      pages: Vector[ParsedPage],
+      admitted: Vector[FrontierEntry],
+      robotsBlocked: Vector[FrontierEntry],
+      vetoed: Vector[ParsedPage],
+      newLinks: Long,
+      frontier: Vector[FrontierEntry],
+      ledger: Ledger)
+
+  /** One driver-side epoch over a local frontier:
+    *
+    *   seen → lists → robots → depth → politeness → budget → fetch →
+    *   reactive throttle → retry ladder → seen delta → epoch-0 scope
+    *   re-anchor → parse → veto → signature dedup → links → next frontier
+    *
+    * The seams are the seen and signature stores, the fetch (handed the
+    * admitted entries in emission order; results may come back in any
+    * order) and the per-host politeness state.
+    */
+  final class Step(
+      config: CrawlConfig,
+      robots: RobotsProvider,
+      gate: Gate,
+      depthDistance: Int,
+      retry: RetryPolicy,
+      sitemapChain: Boolean,
+      onShouldCrawl: Option[ParsedPage => Boolean],
+      onLinkFind: Option[String => String],
+      seen: Membership[String, String],
+      sigs: Membership[Long, Boolean],
+      fetch: Vector[FrontierEntry] => Seq[FetchResult],
+      hosts: HostState) {
+
+    private val politenessOn = config.delayMs > 0 || config.respectRobotsTxt ||
+      config.maxPerHostPerEpoch != Int.MaxValue
+    private val linkRewrite = onLinkFind.orNull
+
+    // effective per-host delay: config ∨ robots Crawl-delay/Request-rate ∨
+    // reactive override (429 throttle ∨ auto-throttle EMA)
+    private def delayOf(host: String): Long = {
+      val rd = if (config.respectRobotsTxt) robots.politenessDelayMs(host, config.userAgent) else 0L
+      math.max(math.max(config.delayMs, rd), reactiveOverrideMs(config,
+        hosts.throttleMs.getOrElse(host, 0L), hosts.latencyEma.get(host)))
+    }
+
+    def apply(frontier: Vector[FrontierEntry], epoch: Long, ledger0: Ledger): EpochOut = {
+      var ledger = ledger0
+      val (ready, held) = frontier.partition(_.not_before <= epoch)
+      // B1 seen gate (B8 batch dedup is structural: the frontier is unique
+      // by lower(url))
+      val isSeen = seen.present(ready.view.map(e => UrlOps.lowerUtf8(e.url)))
+      val unseen = ready.filterNot(e => isSeen(UrlOps.lowerUtf8(e.url)))
+      // B2/B3/B4/B6 stateless gates; robots-denied candidates are blocked rows
+      val listsPass = unseen.filter(e => gate.lists(e.url))
+      val (robotsPass, robotsBlocked) =
+        if (!config.respectRobotsTxt) (listsPass, Vector.empty[FrontierEntry])
+        else listsPass.partition(gate.robotsAllow)
+      val gated = robotsPass.filter { e =>
+        config.depth <= 0 || UrlOps.pathDepth(e.url) <= depthDistance
+      }
+
+      // B9 politeness, then B7 budget in canonical order; chain-phase
+      // sitemap docs are budget-exempt (`is_allowed_budgetless`)
+      val (polAdmitted, deferred) =
+        if (!politenessOn) (gated, Vector.empty[FrontierEntry])
+        else politenessAdmit(gated, config, epoch, delayOf, hosts.tokens.get,
+          (h, t) => hosts.tokens(h) = t)
+      val (smExempt, budgetable) =
+        if (ledger.chainStarted && ledger.chainSitemaps.nonEmpty)
+          polAdmitted.partition(e => ledger.chainSitemaps.contains(UrlOps.lowerUtf8(e.url)))
+        else (Vector.empty[FrontierEntry], polAdmitted)
+      val br = budgetAdmit(budgetable, config, ledger.wildcardRemaining, ledger.pathBudget)
+      ledger = ledger.copy(wildcardRemaining = br.wildcardRemaining, pathBudget = br.pathBudget,
+        budgetStopped = ledger.budgetStopped || br.budgetStopped)
+      val admitted = br.admitted ++ smExempt
+
+      // A3 fetch with D5 emission order (priority, or the host round-robin
+      // interleave of `UrlFrontier::pop` frontier.rs:78-121); results go
+      // back to admission order so the epoch-0 re-anchor is deterministic
+      val fetched: Seq[FetchResult] =
+        if (admitted.isEmpty) Vector.empty
+        else {
+          val emission =
+            if (config.roundRobin)
+              admitted.groupBy(_.host).values.toVector
+                .flatMap(es => es.sorted(hostOrder).zipWithIndex.map(_.swap))
+                .sorted(Ordering.Tuple2(implicitly[Ordering[Int]], hostOrder))
+                .map(_._2)
+            else admitted.sorted(hostOrder)
+          val pos = admitted.iterator.map(_.url).zipWithIndex.toMap
+          fetch(emission).sortBy(f => pos.getOrElse(f.url, Int.MaxValue))
+        }
+
+      // B9 reactive signals: a 429 Retry-After OVERWRITES the host's delay
+      // (`rate_limiter.rs:121-137`; concurrent 429s in one epoch take the
+      // max) and drains its bucket; latency EMA feeds the auto-throttle
+      if (politenessOn) {
+        fetched.filter(f => f.f_status == 429 && f.f_retry_after_ms > 0)
+          .groupBy(_.host).foreach { case (h, fs) =>
+            hosts.throttleMs(h) = fs.map(_.f_retry_after_ms).max
+            hosts.tokens(h) = 0L
+          }
+        if (config.autoThrottle) {
+          fetched.filter(_.f_latency_ms > 0).groupBy(_.host).foreach { case (h, fs) =>
+            val avg = fs.map(_.f_latency_ms.toDouble).sum / fs.size
+            hosts.latencyEma(h) = hosts.latencyEma.get(h) match {
+              case Some(prev) => prev + config.autoThrottleAlpha * (avg - prev)
+              case None => avg
+            }
+          }
+        }
+      }
+
+      // C7 retry ladder: retryable statuses re-queue with backoff and leave
+      // the seen set; everything else admitted this epoch is now seen
+      val (toRetry, keep) = fetched.partition(f =>
+        retry.isRetryableStatus(f.f_status) && f.attempt < retry.maxAttempts)
+      val retries = toRetry.map(f => FrontierEntry(f.url, f.host, f.depth, f.discovery_seq,
+        f.priority, f.attempt + 1, epoch + retry.backoffEpochsOf(f.attempt))).toVector
+      val retriedLower = toRetry.iterator.map(f => UrlOps.lowerUtf8(f.url)).toSet
+      seen.add(admitted.iterator.map(e => (UrlOps.lowerUtf8(e.url), e.url))
+        .filterNot(kv => retriedLower.contains(kv._1)).toVector)
+
+      // C6 scope re-anchor on an epoch-0 cross-host redirect: the
+      // canonical-min winner, as on the distributed path
+      if (epoch == 0L) {
+        val cands = keep.filter(f =>
+          f.f_status == 200 && UrlOps.host(f.f_final_url) != ledger.scope.parentHost)
+        if (cands.nonEmpty) {
+          val w = cands.minBy(f => (f.depth, f.discovery_seq, f.host, f.url))(keyOrder)
+          ledger = ledger.copy(scope = ledger.scope.copy(redirectHost = UrlOps.host(w.f_final_url)))
+        }
+      }
+
+      // C1-C4/C8 parse; rel=sitemap ads join the chain's seeds
+      val sc = ledger.scope
+      val parsed = keep.iterator.map(f => CrawlEngine.parsePage(f, sc, epoch, linkRewrite)).toVector
+      if (sitemapChain && !ledger.chainStarted)
+        ledger = ledger.copy(discoveredSitemaps = CrawlEngine.accumulateDiscoveredSitemaps(
+          ledger.discoveredSitemaps, parsed.flatMap(_.sitemap_links)))
+      // B11 veto gates expansion of ordinary pages
+      val (afterVeto, vetoed) = onShouldCrawl match {
+        case Some(veto) => parsed.partition(veto)
+        case None => (parsed, Vector.empty[ParsedPage])
+      }
+
+      val expanding: Vector[ParsedPage] =
+        if (ledger.chainStarted) {
+          // chain: only sitemap docs expand (urlset <loc>s + recursive
+          // sitemapindex locs), bypassing the veto and signature dedup
+          // (the reference parses sitemaps outside the page channel)
+          val smDocs = parsed.filter(p =>
+            p.status == 200 && ledger.chainSitemaps.contains(UrlOps.lowerUtf8(p.url)))
+          ledger = ledger.copy(chainSitemaps =
+            ledger.chainSitemaps ++ smDocs.flatMap(_.sitemap_links).map(UrlOps.lowerUtf8))
+          smDocs.map(p => p.copy(links = p.links ++ p.sitemap_links))
+        } else if (config.normalize) {
+          // C5 signature dedup: the canonical-first page per NEW signature
+          // expands (`website.rs:8671-8683`)
+          val perSig = afterVeto.filter(p => p.status == 200 && p.signature != 0L)
+            .groupBy(_.signature).map { case (s, ps) =>
+              s -> ps.minBy(p => (p.depth, p.discovery_seq, p.host, p.url))(keyOrder)
+            }
+          val known = sigs.present(perSig.keys)
+          val newSigs = perSig.keys.filterNot(known).toVector.sorted
+          sigs.add(newSigs.map((_, true)))
+          newSigs.map(perSig) ++ afterVeto.filter(p => p.status == 200 && p.signature == 0L)
+        } else afterVeto.filter(_.status == 200)
+
+      // C2/D1 links: explode, case-insensitive dedup keeping the canonical
+      // min, drop already-seen targets, then assign discovery_seq in link
+      // order (seq values stay dense over new links only)
+      val linksRaw = expanding.flatMap(p =>
+        p.links.iterator.zipWithIndex.map { case (u, idx) => (p.depth, p.discovery_seq, idx, u) })
+      val uniq0 = linksRaw.groupBy(t => UrlOps.lowerUtf8(t._4)).values
+        .map(_.min(linkOrder)).toVector
+      val linkSeen = seen.present(uniq0.view.map(t => UrlOps.lowerUtf8(t._4)))
+      val uniq = uniq0.filterNot(t => linkSeen(UrlOps.lowerUtf8(t._4))).sorted(linkOrder)
+      val seq0 = ledger.seqCounter
+      val newFrontier = uniq.zipWithIndex.map { case ((pd, _, _, u), i) =>
+        FrontierEntry(u, UrlOps.host(u), pd + 1, seq0 + i, UrlOps.scoreUrl(u, pd + 1), 0, 0L)
+      }
+      ledger = ledger.copy(seqCounter = seq0 + uniq.size)
+
+      // D1 next frontier, case-insensitive dedup keeping the canonical min
+      val next = CrawlEngine.dedupCanonicalMinLocal(
+        held ++ deferred ++ br.leftover ++ retries ++ newFrontier)
+      EpochOut(parsed, admitted, robotsBlocked, vetoed, uniq.size.toLong, next, ledger)
+    }
   }
 }

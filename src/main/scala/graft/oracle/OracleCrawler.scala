@@ -1,21 +1,27 @@
 package graft.oracle
 
 import graft.corpus.{CorpusGen, CorpusParams}
-import graft.engine.{CrawlEngine, FetchResult, RobotsProvider, ScopeState}
+import graft.engine.{CrawlEngine, FetchResult, RobotsProvider, Sequential}
 import graft.model.{CrawlConfig, FrontierEntry}
 import graft.url.UrlOps
+import scala.collection.mutable
 
 /** Sequential in-memory reference implementation of the crawl contract —
   * the differential oracle of SURVEY §5: the Spark engine's visited set,
   * page set, and canonical admission order must equal this crawler's on the
   * same (corpus, config, seeds).
   *
-  * It mirrors the reference `is_allowed` chain (`website.rs:1864-1914`)
-  * exactly and replays the SAME epoch semantics as the distributed engine
-  * (politeness → budget in canonical order; discovery_seq assignment
-  * including pre-dedup gaps), sharing only the pure per-URL functions
-  * (UrlOps / Robots / parsePage) so the distributed machinery — anti-joins,
-  * windows, rank assignment, state rolling — is what gets tested.
+  * It is the engine's set-up ([[Sequential.start]], [[Sequential.inject]],
+  * [[Sequential.startChain]]) plus a loop over the engine's driver-side
+  * epoch ([[Sequential.Step]]), run in plain memory: two in-memory sets for
+  * membership, plain per-host maps, and its own inline fetch (the
+  * independent reference for `GenerativeFetcher.fetchOne`). The engine's
+  * small-epoch path runs the same step, so a small-path-vs-oracle
+  * differential checks only the engine's adapters; the step itself is
+  * checked independently by the distributed-path differentials
+  * (`smallEpochThreshold = 0`), which replay it with anti-joins, windows,
+  * rank assignment and state rolling, by the `CrawlPinSpec` VALUES pins and
+  * by the DuckDB oracle.
   */
 object OracleCrawler {
 
@@ -32,11 +38,6 @@ object OracleCrawler {
       // pages at their fetch epoch (engine `CrawlResult.blocked` contract)
       blocked: Vector[(String, String, Long)] = Vector.empty)
 
-  // canonical order (SURVEY D6) in UTF-8 byte order — shared with the
-  // engine's small-epoch fast path (Sequential), matching the distributed
-  // path's UTF8String binary comparisons
-  private val canonical: Ordering[FrontierEntry] = graft.engine.Sequential.canonical
-
   def crawl(params: CorpusParams, config: CrawlConfig, robots: RobotsProvider,
       seedUrls: Seq[String],
       retryPolicy: Option[graft.engine.RetryPolicy] = None,
@@ -44,326 +45,85 @@ object OracleCrawler {
       sitemapOnly: Boolean = false,
       onLinkFind: Option[String => String] = None,
       onShouldCrawl: Option[graft.engine.ParsedPage => Boolean] = None): OracleResult = {
-    val linkRewrite: String => String = onLinkFind.orNull
-    val retry = retryPolicy.getOrElse(new graft.engine.DefaultRetryPolicy(config.retryLimit))
+    val start = Sequential.start(config, seedUrls, sitemapOnly)
+    val gate = new Sequential.Gate(config, robots)
+    val seen = mutable.Set.empty[String]
+    val step = new Sequential.Step(config, robots, gate, start.depthDistance,
+      retryPolicy.getOrElse(new graft.engine.DefaultRetryPolicy(config.retryLimit)),
+      sitemapChain, onShouldCrawl, onLinkFind,
+      Sequential.inMemory(seen), Sequential.inMemory(mutable.Set.empty[Long]),
+      _.map(fetch(params, _)), Sequential.HostState())
 
-    val seed0 = UrlOps.parse(seedUrls.head)
-    var scope = ScopeState(
-      subMatcher =
-        if (config.tld) UrlOps.rootDomain(seed0.host)
-        else if (config.subdomains) seed0.host
-        else "",
-      parentHost = seed0.host,
-      parentScheme = seed0.scheme,
-      redirectHost = "",
-      crawlBase = UrlOps.parseCrawlBase(seedUrls.head).serialize,
-      externalDomains = config.externalDomains.map(UrlOps.lowerUtf8(_)),
-      fullResources = config.fullResources)
-
-    val depthDistance = math.max(config.depth, UrlOps.budgetSegments(seedUrls.head).length)
-    var wildcardRemaining: Long = config.budget.get("*").map(_.toLong).getOrElse(Long.MaxValue)
-    var pathBudget: Map[String, Long] = (config.budget - "*").map { case (k, v) => (k, v.toLong) }
-    var budgetStopped = false
-
-    val seen = scala.collection.mutable.Set.empty[String]
-    val sigs = scala.collection.mutable.Set.empty[Long]
-    val blocked = Vector.newBuilder[(String, String, Long)]
-    val hostTokens = scala.collection.mutable.Map.empty[String, Long]
     val pages = Vector.newBuilder[OraclePage]
-    var seqCounter = 0L
+    val blocked = Vector.newBuilder[(String, String, Long)]
+    var ledger = start.ledger
+    var frontier = start.frontier.filter(gate.default)
     var epoch = 0L
-
-    def listed(patterns: Seq[String], url: String): Boolean =
-      if (config.listsAreRegex) patterns.exists(p => p.r.findFirstIn(url).isDefined)
-      else patterns.contains(url)
-
-    def gateDefault(e: FrontierEntry): Boolean = {
-      val wOk = config.whitelist.isEmpty || listed(config.whitelist, e.url)
-      val bOk = config.blacklist.isEmpty || !listed(config.blacklist, e.url)
-      val rOk = !config.respectRobotsTxt || robots.policyFor(e.host).canFetch(config.userAgent, e.url)
-      wOk && bOk && rOk
-    }
-
-    // reactive politeness state (mirrors the engine's 429-throttle + EMA)
-    val throttleOverrideMs = scala.collection.mutable.Map.empty[String, Long]
-    val latencyEma = scala.collection.mutable.Map.empty[String, Double]
-    def overrideMs(host: String): Long =
-      graft.engine.Sequential.reactiveOverrideMs(config,
-        throttleOverrideMs.getOrElse(host, 0L), latencyEma.get(host))
-
-    // case-insensitive keep-first, mirroring the engine's seed establishment
-    val seedSeen = scala.collection.mutable.Set.empty[String]
-    val canonSeeds = seedUrls.flatMap { s =>
-      Option(UrlOps.convertAbsPath(s, s))
-    }.filter(u => seedSeen.add(UrlOps.lowerUtf8(u)))
-    var frontier: Vector[FrontierEntry] = canonSeeds.zipWithIndex.map { case (u, i) =>
-      FrontierEntry(u, UrlOps.host(u), 0, i.toLong, UrlOps.scoreUrl(u, 0), 0, 0L)
-    }.toVector.filter(gateDefault)
-    seqCounter = canonSeeds.length.toLong
-
     var done = frontier.isEmpty
-    // A6 chain mirror (engine: sitemap chained AFTER the crawl)
-    var chainStarted = false
-    val chainSm = scala.collection.mutable.Set.empty[String]
-    // rel=sitemap auto-discovery mirror — same deterministic accumulation
-    // rule as both engine paths (CrawlEngine.accumulateDiscoveredSitemaps)
-    val discoveredSm = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val smPath =
-      if (config.sitemapUrl.startsWith("/")) config.sitemapUrl else "/" + config.sitemapUrl
-    def seedSitemapUrls: Seq[String] = seedUrls
-      .flatMap(s => Option(UrlOps.parseCrawlBase(s)).map(_.copy(path = smPath).serialize))
-      .flatMap(u => Option(UrlOps.convertAbsPath(u, u)))
-    var pendingInbox = Vector.empty[String]
-    if (sitemapOnly) {
-      // sitemap-ONLY walk mirror (reference `crawl_sitemap()`,
-      // `website.rs:6994-7028`): the chain starts at epoch 0 from each
-      // seed's configured sitemap URL; seed pages are never fetched
-      chainStarted = true
-      val smSeen = scala.collection.mutable.Set.empty[String]
-      val canonSms = seedSitemapUrls.filter(u => smSeen.add(UrlOps.lowerUtf8(u)))
-      chainSm ++= canonSms.map(UrlOps.lowerUtf8(_))
-      frontier = canonSms.zipWithIndex.map { case (u, i) =>
-        FrontierEntry(u, UrlOps.host(u), 0, i.toLong, UrlOps.scoreUrl(u, 0), 0, 0L)
-      }.toVector.filter(gateDefault)
-      seqCounter = canonSms.length.toLong
-      done = frontier.isEmpty
-    }
+    var pendingInbox = Seq.empty[String]
     var crawling = true
     while (crawling) {
-    while (!done) {
-      // inbox-drain mirror: chain injection enters at epoch start
-      if (pendingInbox.nonEmpty) {
-        val drained = pendingInbox.flatMap(u => Option(UrlOps.convertAbsPath(u, u))).distinct
-        pendingInbox = Vector.empty
-        if (drained.nonEmpty) {
-          val injected = drained.zipWithIndex.map { case (u, i) =>
-            FrontierEntry(u, UrlOps.host(u), 0, seqCounter + i, UrlOps.scoreUrl(u, 0), 0, 0L)
+      while (!done) {
+        // inbox drain: chain injection enters at epoch start
+        if (pendingInbox.nonEmpty) {
+          val (injected, l) = Sequential.inject(pendingInbox, ledger)
+          ledger = l
+          pendingInbox = Seq.empty
+          if (injected.nonEmpty)
+            frontier = CrawlEngine.dedupCanonicalMinLocal(frontier ++ injected)
+        }
+        if (!frontier.exists(_.not_before <= epoch)) {
+          epoch += 1
+          done = frontier.isEmpty || epoch >= config.maxEpochs
+        } else {
+          val out = step(frontier, epoch, ledger)
+          out.pages.foreach { p =>
+            pages += OraclePage(p.url, p.final_url, p.host, p.depth, p.discovery_seq,
+              p.epoch, p.status, p.signature, p.links.toSeq)
           }
-          seqCounter += drained.length
-          frontier = (frontier ++ injected).groupBy(e => UrlOps.lowerUtf8(e.url))
-            .values.map(_.min(canonical)).toVector
+          out.robotsBlocked.foreach(e => blocked += ((e.url, "robots", epoch)))
+          out.vetoed.foreach(p => blocked += ((p.url, "veto", epoch)))
+          frontier = out.frontier
+          ledger = out.ledger
+          epoch += 1
+          done = ledger.budgetStopped || frontier.isEmpty || epoch >= config.maxEpochs
         }
       }
-      val (ready, held) = frontier.partition(_.not_before <= epoch)
-      if (ready.isEmpty) {
-        epoch += 1
-        if (frontier.isEmpty || epoch >= config.maxEpochs) done = true
-      } else {
-        // 1. seen filter
-        val unseen = ready.filterNot(e => seen.contains(UrlOps.lowerUtf8(e.url)))
-        // 2. batch dedup, case-insensitive, keep canonical-min
-        val deduped = unseen.groupBy(e => UrlOps.lowerUtf8(e.url))
-          .values.map(_.min(canonical)).toVector
-        // 3. lists + robots + depth (robots split out so denied candidates
-        // feed the blocked side output, engine mirror)
-        val listsPass = deduped.filter(e =>
-          (config.whitelist.isEmpty || listed(config.whitelist, e.url)) &&
-            (config.blacklist.isEmpty || !listed(config.blacklist, e.url)))
-        val (robotsPass, robotsBlockedV) =
-          if (!config.respectRobotsTxt) (listsPass, Vector.empty[FrontierEntry])
-          else listsPass.partition(e =>
-            robots.policyFor(e.host).canFetch(config.userAgent, e.url))
-        robotsBlockedV.foreach(e => blocked += ((e.url, "robots", epoch)))
-        val gated0 = robotsPass.filter { e =>
-          config.depth <= 0 || UrlOps.pathDepth(e.url) <= depthDistance
-        }
-
-        // 4. politeness (token buckets, priority order per host)
-        val politenessOn = config.delayMs > 0 || config.respectRobotsTxt ||
-          config.maxPerHostPerEpoch != Int.MaxValue
-        var polAdmitted = gated0
-        var deferred = Vector.empty[FrontierEntry]
-        if (politenessOn) {
-          def delayOf(host: String): Long = {
-            val rd = if (config.respectRobotsTxt) robots.politenessDelayMs(host, config.userAgent) else 0L
-            math.max(math.max(config.delayMs, rd), overrideMs(host))
-          }
-          val (a, d) = graft.engine.Sequential.politenessAdmit(gated0, config, epoch,
-            delayOf, hostTokens.get, (h, t) => hostTokens(h) = t)
-          polAdmitted = a
-          deferred ++= d
-        }
-
-        // 5. budget in canonical order (sequential reference walk)
-        var admitted = Vector.empty[FrontierEntry]
-        var budgetLeftover = Vector.empty[FrontierEntry]
-        // chain: sitemap docs budget-exempt (engine mirror)
-        val (smExempt, budgetable) =
-          if (chainStarted)
-            polAdmitted.partition(e => chainSm.contains(UrlOps.lowerUtf8(e.url)))
-          else (Vector.empty[FrontierEntry], polAdmitted)
-        // exact reference walk (`website.rs:2085-2115`) — shared code
-        // (Sequential.budgetAdmit) with the engine's small-epoch fast path
-        val br = graft.engine.Sequential.budgetAdmit(budgetable, config,
-          wildcardRemaining, pathBudget)
-        admitted = br.admitted
-        budgetLeftover = br.leftover
-        wildcardRemaining = br.wildcardRemaining
-        pathBudget = br.pathBudget
-        budgetStopped ||= br.budgetStopped
-        admitted = admitted ++ smExempt
-
-        // 6. mark seen; 7. fetch (same generative fetcher semantics)
-        admitted.foreach(e => seen += UrlOps.lowerUtf8(e.url))
-        val fetched = admitted.map { e =>
-          var url = e.url
-          var doc = CorpusGen.docFor(params, url)
-          var hops = 0
-          while (doc != null && doc.status >= 300 && doc.status < 400 && doc.redirect_to != null && hops < 7) {
-            url = doc.redirect_to; doc = CorpusGen.docFor(params, url); hops += 1
-          }
-          val lat = CorpusGen.latencyMsFor(params, e.host)
-          if (doc == null) FetchResult(e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, 404, url, Array.empty, 0L, lat)
-          else if (doc.status >= 300 && doc.status < 400)
-            FetchResult(e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, 310, url, Array.empty, 0L, lat)
-          else FetchResult(e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, doc.status, url, doc.spans,
-            if (doc.status == 429) CorpusGen.retryAfterMsFor(params, url) else 0L, lat,
-            doc.charset, if (doc.status == 200) CorpusGen.etagFor(params, url) else null)
-        }
-
-        // 7b. reactive throttling mirror: 429 Retry-After reduces the host's
-        // rate and drains its bucket; latency EMA feeds the auto-throttle
-        if (politenessOn) {
-          // OVERWRITE (not max-merge) across epochs — the reference's
-          // `throttle` sets `bucket.rate = new_rate` unconditionally
-          // (`rate_limiter.rs:121-137`), and the engine mirrors that with
-          // a put; within one epoch concurrent 429s take the max
-          fetched.filter(f => f.f_status == 429 && f.f_retry_after_ms > 0)
-            .groupBy(_.host).foreach { case (h, fs) =>
-              throttleOverrideMs(h) = fs.map(_.f_retry_after_ms).max
-              hostTokens(h) = 0L
-            }
-          if (config.autoThrottle) {
-            fetched.filter(_.f_latency_ms > 0).groupBy(_.host).foreach { case (h, fs) =>
-              val avg = fs.map(_.f_latency_ms.toDouble).sum / fs.size
-              latencyEma(h) = latencyEma.get(h) match {
-                case Some(prev) => prev + config.autoThrottleAlpha * (avg - prev)
-                case None => avg
-              }
-            }
-          }
-        }
-
-        // 8. retries (remove from seen, re-queue with backoff; pluggable)
-        val (toRetry, keep) = fetched.partition(f =>
-          retry.isRetryableStatus(f.f_status) && f.attempt < retry.maxAttempts)
-        val retryEntries = toRetry.map { f =>
-          seen -= UrlOps.lowerUtf8(f.url)
-          FrontierEntry(f.url, f.host, f.depth, f.discovery_seq, f.priority, f.attempt + 1,
-            epoch + retry.backoffEpochsOf(f.attempt))
-        }
-
-        // 9a. scope re-anchor on epoch-0 cross-host redirect — canonical-min
-        // winner, mirroring BOTH engine paths exactly (a `find` over the
-        // admitted order is hash-order-dependent once politenessAdmit's
-        // per-host groupBy reorders the walk)
-        if (epoch == 0L) {
-          val reCands = keep.filter(f =>
-            f.f_status == 200 && UrlOps.host(f.f_final_url) != scope.parentHost)
-          if (reCands.nonEmpty) {
-            val w = reCands.minBy(f => (f.depth, f.discovery_seq, f.host, f.url))(
-              graft.engine.Sequential.keyOrder)
-            scope = scope.copy(redirectHost = UrlOps.host(w.f_final_url))
-          }
-        }
-
-        // 9b. parse (same pure function as the engine)
-        val parsed = keep.map(f => CrawlEngine.parsePage(f, scope, epoch, linkRewrite))
-        parsed.foreach { p =>
-          pages += OraclePage(p.url, p.final_url, p.host, p.depth, p.discovery_seq,
-            p.epoch, p.status, p.signature, p.links.toSeq)
-        }
-        if (sitemapChain && !chainStarted)
-          CrawlEngine.accumulateDiscoveredSitemaps(discoveredSm,
-            parsed.iterator.flatMap(_.sitemap_links).toSeq)
-
-        // 9c. B11 veto gates expansion of ordinary pages (chain-phase
-        // sitemap docs bypass it, engine mirror); suppressed pages feed
-        // the blocked side output at their fetch epoch
-        val afterVeto = onShouldCrawl match {
-          case Some(veto) =>
-            parsed.filterNot(veto).foreach(p => blocked += ((p.url, "veto", epoch)))
-            parsed.filter(veto)
-          case None => parsed
-        }
-
-        // 10. signature dedup: canonical-first page per NEW signature expands
-        val expanding =
-          if (chainStarted) {
-            // chain: only sitemap docs expand (urlset <loc>s + recursive
-            // sitemapindex locs); entry pages never expand; signature
-            // dedup bypassed for the sitemap XML (engine mirror)
-            val smDocs = parsed.filter(p =>
-              p.status == 200 && chainSm.contains(UrlOps.lowerUtf8(p.url)))
-            val out = smDocs.map(p => p.copy(links = p.links ++ p.sitemap_links))
-            smDocs.flatMap(_.sitemap_links)
-              .foreach(u => chainSm += UrlOps.lowerUtf8(u))
-            out
-          } else if (config.normalize) {
-            val ok = afterVeto.filter(p => p.status == 200 && p.signature != 0L)
-            val newSigPages = ok.filter(p => !sigs.contains(p.signature))
-            val firstPerSig = newSigPages.groupBy(_.signature).values
-              .map(_.minBy(p => (p.depth, p.discovery_seq, p.host, p.url))(graft.engine.Sequential.keyOrder))
-              .toVector
-            firstPerSig.foreach(p => sigs += p.signature)
-            firstPerSig ++ afterVeto.filter(p => p.status == 200 && p.signature == 0L)
-          } else afterVeto.filter(_.status == 200)
-
-        // 11. explode links, dedup by lower(url) keep min (p_depth,p_seq,pos,url),
-        //     drop ALREADY-SEEN targets (r6: the engine seen-filters links
-        //     BEFORE seq assignment so the canonical sort/seq machinery and
-        //     the frontier only carry genuinely-new URLs; at steady-state
-        //     fanout most link targets are already seen and previously rode
-        //     the widest shuffle just to be discarded by the next epoch's
-        //     gate), then assign discovery_seq
-        val linksRaw = expanding.flatMap { p =>
-          p.links.zipWithIndex.map { case (u, pos) => (p.depth, p.discovery_seq, pos, u) }
-        }
-        val uniq = linksRaw.groupBy(t => UrlOps.lowerUtf8(t._4)).values
-          .map(_.min(graft.engine.Sequential.linkOrder)).toVector
-          .filterNot(t => seen.contains(UrlOps.lowerUtf8(t._4)))
-          .sorted(graft.engine.Sequential.linkOrder)
-        val newFrontier = uniq.zipWithIndex.map { case ((pd, _, _, u), i) =>
-          FrontierEntry(u, UrlOps.host(u), pd + 1, seqCounter + i,
-            UrlOps.scoreUrl(u, pd + 1), 0, 0L)
-        }
-        // discovery_seq counts unique UNSEEN links (dense; seq values are
-        // compacted vs the pre-r6 numbering but every pairwise canonical
-        // ORDER relation — and therefore every admission decision and page
-        // row — is unchanged: new seqs remain >= every previously assigned
-        // seq and relative order among survivors is preserved)
-        seqCounter += uniq.size.toLong
-
-        // 12. next frontier, case-insensitive dedup keep canonical-min
-        val all = held ++ deferred ++ budgetLeftover ++ retryEntries ++ newFrontier
-        frontier = all.groupBy(e => UrlOps.lowerUtf8(e.url)).values
-          .map(_.min(canonical)).toVector
-
-        epoch += 1
-        done = budgetStopped || frontier.isEmpty || epoch >= config.maxEpochs
-      }
-    }
-
-    // chain transition (engine mirror): sitemap walk AFTER the crawl,
-    // skipped when the wildcard budget is already exhausted
-    if (sitemapChain && !chainStarted && !budgetStopped && epoch < config.maxEpochs) {
-      chainStarted = true
-      val sms = {
-        val dedup = scala.collection.mutable.Set.empty[String]
-        (seedSitemapUrls ++ discoveredSm.values).filter(u => dedup.add(UrlOps.lowerUtf8(u)))
-      }
-      if (sms.nonEmpty) {
-        chainSm ++= sms.map(UrlOps.lowerUtf8(_))
-        pendingInbox ++= sms
-        done = false
+      // chain transition: the sitemap walk runs AFTER the crawl, skipped
+      // when the wildcard budget is already exhausted
+      if (sitemapChain && !ledger.chainStarted && !ledger.budgetStopped &&
+          epoch < config.maxEpochs) {
+        val (sms, l) = Sequential.startChain(config, start.seedUrls, ledger)
+        ledger = l
+        if (sms.nonEmpty) {
+          pendingInbox = sms
+          done = false
+        } else crawling = false
       } else crawling = false
-    } else crawling = false
     }
 
     OracleResult(
       pages.result() // the sitemap XML itself is parsed, never emitted as a page
-        .filterNot(p => chainSm.contains(UrlOps.lowerUtf8(p.url)))
-        .sortBy(p => (p.depth, p.seq, p.host, p.url))(graft.engine.Sequential.keyOrder),
+        .filterNot(p => ledger.chainSitemaps.contains(UrlOps.lowerUtf8(p.url)))
+        .sortBy(p => (p.depth, p.seq, p.host, p.url))(Sequential.keyOrder),
       seen.toSet, frontier, epoch, blocked.result())
+  }
+
+  // the generative corpus fetch, written out independently of
+  // GenerativeFetcher: redirects followed up to 7 hops, 310 past the limit
+  private def fetch(params: CorpusParams, e: FrontierEntry): FetchResult = {
+    var url = e.url
+    var doc = CorpusGen.docFor(params, url)
+    var hops = 0
+    while (doc != null && doc.status >= 300 && doc.status < 400 && doc.redirect_to != null && hops < 7) {
+      url = doc.redirect_to; doc = CorpusGen.docFor(params, url); hops += 1
+    }
+    val lat = CorpusGen.latencyMsFor(params, e.host)
+    if (doc == null) FetchResult(e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, 404, url, Array.empty, 0L, lat)
+    else if (doc.status >= 300 && doc.status < 400)
+      FetchResult(e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, 310, url, Array.empty, 0L, lat)
+    else FetchResult(e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, doc.status, url, doc.spans,
+      if (doc.status == 429) CorpusGen.retryAfterMsFor(params, url) else 0L, lat,
+      doc.charset, if (doc.status == 200) CorpusGen.etagFor(params, url) else null)
   }
 }

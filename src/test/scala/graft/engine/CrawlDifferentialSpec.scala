@@ -31,6 +31,26 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     (er, or)
   }
 
+  /** The engine on the default small path and, as one more input, on the
+    * distributed path (threshold 0): the small path runs the oracle's own
+    * Sequential step, so only the distributed run checks the step
+    * independently. Each run must equal the oracle, whose result is
+    * returned with the engine results.
+    */
+  private def runBothPaths(params: CorpusParams, config: CrawlConfig, seeds: Seq[String],
+      robots: Option[RobotsProvider] = None): (Seq[CrawlResult], OracleCrawler.OracleResult) = {
+    spark.sparkContext.setLogLevel("ERROR")
+    val rb = robots.getOrElse(new CorpusRobots(params))
+    val or = OracleCrawler.crawl(params, config, rb, seeds)
+    val ers = for (threshold <- Seq(4096, 0)) yield {
+      val er = new CrawlEngine(spark, config.copy(smallEpochThreshold = threshold),
+        new GenerativeFetcher(params), rb, expectedUrls = 100000L).crawl(seeds)
+      withClue(s"smallEpochThreshold=$threshold: ")(assertParity(er, or))
+      er
+    }
+    (ers, or)
+  }
+
   private def assertParity(er: CrawlResult, or: OracleCrawler.OracleResult): Unit = {
     import org.apache.spark.sql.functions._
     val ePages = er.pages
@@ -65,10 +85,17 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     assertParity(er, or)
   }
 
+  test("glob seeds expand alike in engine and oracle (glob.rs, website.rs:3875-3885)") {
+    val params = CorpusParams(hosts = 2, pagesPerHost = 30)
+    val (_, or) = runBothPaths(params, CrawlConfig(maxEpochs = 30),
+      Seq("https://www.site{0,1}.com/"))
+    assert(Set("www.site0.com", "www.site1.com").subsetOf(or.pages.map(_.host).toSet),
+      s"both expanded seeds must be crawled: ${or.pages.map(_.host).distinct}")
+  }
+
   test("case-variant URLs fetched exactly once (test_link_duplicates shape)") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 40)
-    val (er, or) = run(params, CrawlConfig(maxEpochs = 30), Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, CrawlConfig(maxEpochs = 30), Seq("https://www.site0.com/"))
     // uniqueness: no two pages share a lowercased URL
     val urls = or.pages.map(_.url.toLowerCase)
     assert(urls.distinct.size == urls.size)
@@ -76,8 +103,7 @@ class CrawlDifferentialSpec extends AnyFunSuite {
 
   test("signature dedup suppresses duplicate-content expansion") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 50, dupContentEvery = 2)
-    val (er, or) = run(params, CrawlConfig(maxEpochs = 30), Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, CrawlConfig(maxEpochs = 30), Seq("https://www.site0.com/"))
     // with dup pairs, some signatures repeat across fetched pages
     val sigCounts = or.pages.filter(_.status == 200).groupBy(_.signature)
     assert(sigCounts.exists(_._2.size > 1), "corpus should contain duplicate signatures")
@@ -86,8 +112,7 @@ class CrawlDifferentialSpec extends AnyFunSuite {
   test("budget {*, en, fr} caps admissions and stops crawl (test_crawl_budget shape)") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 80)
     val cfg = CrawlConfig(budget = Map("*" -> 15, "en" -> 5, "fr" -> 2), maxEpochs = 30)
-    val (er, or) = run(params, cfg, Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, cfg, Seq("https://www.site0.com/"))
     assert(or.pages.size <= 15, s"wildcard budget must cap pages, got ${or.pages.size}")
     val enPages = or.pages.count(p => graft.url.UrlOps.budgetSegments(p.url).headOption.contains("en"))
     assert(enPages <= 5, s"en budget exceeded: $enPages")
@@ -96,8 +121,7 @@ class CrawlDifferentialSpec extends AnyFunSuite {
   test("depth limit: no URL beyond path depth (depth example shape)") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 80)
     val cfg = CrawlConfig(depth = 2, maxEpochs = 30)
-    val (er, or) = run(params, cfg, Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, cfg, Seq("https://www.site0.com/"))
     assert(or.pages.forall(p => graft.url.UrlOps.pathDepth(p.url) <= 2))
     assert(or.pages.nonEmpty)
   }
@@ -106,15 +130,13 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     // host 1 ⇒ robots Disallow /legal/; host 3 ⇒ robots 403 (disallow_all)
     val params = CorpusParams(hosts = 4, pagesPerHost = 60)
     val cfg = CrawlConfig(respectRobotsTxt = true, maxEpochs = 40)
-    val (er1, or1) = run(params, cfg, Seq("https://www.site1.com/"))
-    assertParity(er1, or1)
+    val (_, or1) = runBothPaths(params, cfg, Seq("https://www.site1.com/"))
     // robots rule "/legal/" prefix-blocks paths STARTING with it (mid-path
     // occurrences like /en/legal/... are not covered by the rule)
     assert(!or1.pages.exists(p => graft.url.UrlOps.urlPath(p.url).startsWith("/legal/")),
       "robots-disallowed path crawled")
     assert(or1.pages.nonEmpty)
-    val (er3, or3) = run(params, cfg, Seq("https://www.site3.com/"))
-    assertParity(er3, or3)
+    val (_, or3) = runBothPaths(params, cfg, Seq("https://www.site3.com/"))
     assert(or3.pages.isEmpty, "403-robots host must be fully blocked")
   }
 
@@ -122,47 +144,41 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     val params = CorpusParams(hosts = 2, pagesPerHost = 40)
     val blocked = "https://www.site0.com/p1.html"
     val cfg = CrawlConfig(blacklist = Seq(blocked), maxEpochs = 30)
-    val (er, or) = run(params, cfg, Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, cfg, Seq("https://www.site0.com/"))
     assert(!or.pages.exists(_.url == blocked))
   }
 
   test("subdomains scope: sibling subdomain crawled when enabled, not otherwise") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 40)
     val cfgOff = CrawlConfig(maxEpochs = 30)
-    val (erOff, orOff) = run(params, cfgOff, Seq("https://www.site0.com/"))
-    assertParity(erOff, orOff)
+    val (_, orOff) = runBothPaths(params, cfgOff, Seq("https://www.site0.com/"))
     assert(!orOff.pages.exists(_.host.startsWith("sub.")), "sub crawled without subdomains")
     val cfgOn = CrawlConfig(subdomains = true, maxEpochs = 30)
-    val (erOn, orOn) = run(params, cfgOn, Seq("https://www.site0.com/"))
-    assertParity(erOn, orOn)
+    val (_, orOn) = runBothPaths(params, cfgOn, Seq("https://www.site0.com/"))
     assert(orOn.pages.exists(_.host.startsWith("sub.")), "subdomain not crawled with subdomains=true")
   }
 
   test("politeness: per-host quota defers, totals unchanged vs no-politeness") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 30)
     val fast = run(params, CrawlConfig(maxEpochs = 60), Seq("https://www.site0.com/"))
-    val slow = run(params, CrawlConfig(delayMs = 200, tickMs = 1000, maxEpochs = 200),
+    val (_, slow) = runBothPaths(params, CrawlConfig(delayMs = 200, tickMs = 1000, maxEpochs = 200),
       Seq("https://www.site0.com/"))
-    assertParity(slow._1, slow._2)
     // politeness changes pacing, not the final visited set
-    assert(slow._2.seen == fast._2.seen)
-    assert(slow._2.epochs > fast._2.epochs, "politeness should take more epochs")
+    assert(slow.seen == fast._2.seen)
+    assert(slow.epochs > fast._2.epochs, "politeness should take more epochs")
   }
 
   test("retry ladder: 5xx re-queued with backoff then recorded") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 40, errorEvery = 9)
     val cfg = CrawlConfig(retryLimit = 2, maxEpochs = 100)
-    val (er, or) = run(params, cfg, Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, cfg, Seq("https://www.site0.com/"))
     // corpus 500s stay 500 → after retries they appear as final error pages
     assert(or.pages.exists(_.status == 500), "expected final 500 pages after retry cap")
   }
 
   test("redirects followed to final URL (3xx never recorded as page status)") {
     val params = CorpusParams(hosts = 2, pagesPerHost = 40, redirectEvery = 5)
-    val (er, or) = run(params, CrawlConfig(maxEpochs = 40), Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, CrawlConfig(maxEpochs = 40), Seq("https://www.site0.com/"))
     assert(or.pages.exists(p => p.finalUrl != p.url), "expected followed redirects")
     assert(!or.pages.exists(p => p.status >= 300 && p.status < 310))
   }
@@ -192,9 +208,9 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     val params = CorpusParams(hosts = 1, pagesPerHost = 12, rateLimitEvery = 3,
       retryAfterMs = 2000L, retryAfterVaries = true)
     val cfg = CrawlConfig(delayMs = 100, tickMs = 1000, retryLimit = 1, maxEpochs = 150)
-    val (er, or) = run(params, cfg, Seq("https://www.site0.com/"))
-    assertParity(er, or)
-    assert(er.epochs == or.epochs, s"pacing diverged: engine ${er.epochs} vs oracle ${or.epochs}")
+    val (ers, or) = runBothPaths(params, cfg, Seq("https://www.site0.com/"))
+    ers.foreach(er => assert(er.epochs == or.epochs,
+      s"pacing diverged: engine ${er.epochs} vs oracle ${or.epochs}"))
     assert(or.pages.exists(_.status == 429), "expected final 429 pages after retry cap")
   }
 
@@ -262,12 +278,7 @@ class CrawlDifferentialSpec extends AnyFunSuite {
       "www.site0.com" -> (200, "User-agent: *\nRequest-rate: 1/2\n"),
       "sub.site0.com" -> (200, "User-agent: *\nRequest-rate: 1/2\n")))
     val cfg = CrawlConfig(respectRobotsTxt = true, tickMs = 1000, maxEpochs = 120)
-    spark.sparkContext.setLogLevel("ERROR")
-    val engine = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
-      expectedUrls = 10000)
-    val er = engine.crawl(Seq("https://www.site0.com/"))
-    val or = OracleCrawler.crawl(params, cfg, robots, Seq("https://www.site0.com/"))
-    assertParity(er, or)
+    val (_, or) = runBothPaths(params, cfg, Seq("https://www.site0.com/"), Some(robots))
     // 1 req / 2s at tick 1s = 0.5 tokens/epoch => ~2 epochs per page: the
     // crawl must take at least ~1.5x epochs vs pages fetched
     assert(or.epochs.toDouble >= or.pages.size * 1.5,
@@ -302,8 +313,10 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     // with a budget smaller than the crawl's natural page count, the chain
     // contributes nothing and the page set equals the plain budgeted crawl
     val bCfg = CrawlConfig(budget = Map("*" -> 8), maxEpochs = 60)
-    val (erB, orB) = (engineRun(bCfg), oracleRun(bCfg))
-    assertParity(erB, orB)
+    val orB = oracleRun(bCfg)
+    for (threshold <- Seq(4096, 0))
+      withClue(s"smallEpochThreshold=$threshold: ")(
+        assertParity(engineRun(bCfg.copy(smallEpochThreshold = threshold)), orB))
     val plainB = OracleCrawler.crawl(params, bCfg, robots, Seq("https://www.site0.com/"))
     assert(orB.pages.map(_.url).toSet == plainB.pages.map(_.url).toSet,
       "budget-exhausted crawl must skip the sitemap chain (is_over_wild_budget)")
