@@ -412,10 +412,12 @@ class CrawlEngine(
     val blockedBuf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     def sinkBlockedDelta(df: DataFrame, tag: String): Long = {
       blockedDeltaN += 1
-      val dir = s"$blockedSink/delta_${blockedDeltaN}_$tag"
-      df.write.mode("overwrite").parquet(dir)
+      // the count rides the write as an observed metric: no read-back job
+      val rows = org.apache.spark.sql.Observation(s"blocked_$blockedDeltaN")
+      df.observe(rows, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$blockedSink/delta_${blockedDeltaN}_$tag")
       blockedWritten = true
-      spark.read.schema(CrawlEngine.blockedSchema).parquet(dir).count()
+      rows.get("rows").asInstanceOf[Long]
     }
     def flushBlockedBuf(): Unit = if (blockedBuf.nonEmpty) {
       import spark.implicits._
@@ -432,56 +434,95 @@ class CrawlEngine(
       else spark.read.schema(CrawlEngine.blockedSchema)
         .option("recursiveFileLookup", "true").parquet(blockedSink)
     }
-    val emptySeen = spark.emptyDataset[(String, String)].toDF("url_lower", "url")
-    val emptySigs = spark.emptyDataset[Long].toDF("sig")
-    val emptyPages = spark.emptyDataset[PageRow].toDF()
-    val seenSchema = emptySeen.schema
+    // a driver-held table: its plan is a LocalRelation, which a snapshot
+    // commit writes on the driver with no Spark job
+    def localFrame(rows: Iterable[Row], schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.toSeq.asJava, schema)
+    }
+    val seenSchema = Checkpointer.schemas("seen")
     def seen: DataFrame =
       spark.createDataFrame(seenRdd.map(kv => Row(kv._1, kv._2)), seenSchema)
-    val sigSchema = emptySigs.schema
+    val sigSchema = Checkpointer.schemas("signatures")
     def signatures: DataFrame =
       spark.createDataFrame(sigRdd.map(kv => Row(kv._1)), sigSchema)
-    // The pages view is ONE relation over the sink directory (never a
-    // per-epoch union: a thousand-epoch crawl would otherwise build a
-    // thousand-way union plan whose canonicalization alone OOMs the driver)
-    var pagesWritten = false
-    var restoredPages: Option[DataFrame] = None // resume-injected prior pages
+    def emptyPages: DataFrame = localFrame(Nil, Checkpointer.schemas("pages"))
+    // Page deltas land in the sink under one generation directory per
+    // snapshot: `g<n>` holds the deltas written since the last commit (read
+    // as ONE relation — never a per-epoch union: a thousand-epoch crawl
+    // would otherwise build a thousand-way union plan whose canonicalization
+    // alone OOMs the driver). A commit writes only these and the buffer into
+    // the snapshot's pages delta; the view then reads the committed chain
+    // in their place, and later deltas go to the next generation.
+    var sinkGen = 0
+    var genWritten = false
+    def genDir: String = s"$pagesSink/g$sinkGen"
+    // the committed part of the pages view: a snapshot chain (the last
+    // commit, or the restored snapshot of this checkpoint directory), and
+    // pages restored from another directory that the next commit must carry
+    var committedPages: Option[(Checkpointer, Long)] = None
+    var carriedPages: Option[DataFrame] = None
     // every page delta lands here. Deltas are transient working state (read
     // back once, column-pruned): no codec — on node-local disk the
     // compression CPU costs more than the bytes it saves — and no
     // dictionary encoding, whose page builds cost more than the write
-    def writePageDelta(ds: Dataset[ParsedPage], name: String): Unit = {
+    def writePageDelta(ds: Dataset[ParsedPage], name: String): String = {
+      val dir = s"$genDir/$name"
       ds.write.option("compression", "none")
         .option("parquet.enable.dictionary", "false")
-        .parquet(s"$pagesSink/$name")
-      pagesWritten = true
+        .parquet(dir)
+      genWritten = true
+      dir
     }
     // Small-epoch page-delta buffer: tiny epochs append their parsed pages
-    // here and flush to ONE parquet delta per `pageBufCap` rows instead of
+    // here and flush to ONE parquet delta per `pageBufCap` rows or
+    // `pageBufBytes` of span strings, whichever comes first, instead of
     // paying a Spark write job per epoch (a toy crawl of 40 epochs paid 40
-    // jobs for a few hundred rows total). Every reader of the sink flushes
-    // first (`def pages`), so the view is always complete; `epoch` rides in
-    // the rows, so multi-epoch deltas are exact. Bounded by the cap.
+    // jobs for a few hundred rows total). A snapshot commit writes the
+    // buffer straight into its pages delta; `epoch` rides in the rows, so
+    // multi-epoch deltas are exact.
     val pageBuf = scala.collection.mutable.ArrayBuffer.empty[ParsedPage]
     var pageBufN = 0
+    var pageBufSpanBytes = 0L
     def flushPageBuf(): Unit = if (pageBuf.nonEmpty) {
       pageBufN += 1
       writePageDelta(spark.createDataset(pageBuf.toIndexedSeq).coalesce(1), s"buf_$pageBufN")
       pageBuf.clear()
+      pageBufSpanBytes = 0L
     }
     val pageCols = Seq(col("url"), col("final_url"), col("host"), col("depth"),
       col("discovery_seq"), col("epoch"), col("status"), col("signature"),
       col("title"), col("description"), col("og_image"), col("charset"),
       col("etag"), col("spans"))
+    // this generation's sink deltas as pages: retried attempts dropped
+    def genPages: Option[DataFrame] = if (!genWritten) None else {
+      val retriedCol = retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts
+      Some(spark.read.schema(CrawlEngine.parsedSchema)
+        .option("recursiveFileLookup", "true").parquet(genDir)
+        .filter(!retriedCol).select(pageCols: _*))
+    }
+    // the pages view: committed chain ∪ carried pages ∪ this generation's
+    // deltas (the buffer flushed into them first)
     def pages: DataFrame = {
       flushPageBuf()
-      val retriedCol = retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts
-      val fresh =
-        if (!pagesWritten) emptyPages
-        else spark.read.schema(CrawlEngine.parsedSchema)
-          .option("recursiveFileLookup", "true").parquet(pagesSink)
-          .filter(!retriedCol).select(pageCols: _*)
-      restoredPages.map(_.unionByName(fresh)).getOrElse(fresh)
+      (committedPages.map { case (ck, e) => ck.readTable(e, "pages") }.toSeq ++
+        carriedPages ++ genPages).reduceOption(_.unionByName(_)).getOrElse(emptyPages)
+    }
+    // what the next snapshot's pages delta holds: the pages since the last
+    // commit. The buffer alone stays a driver-held table (no job); sink
+    // deltas or carried pages make it one Spark write
+    def pagesDelta: DataFrame = {
+      val buffered =
+        if (pageBuf.isEmpty) None
+        else Some(localFrame(pageBuf
+          .filterNot(p => retry.isRetryableStatus(p.status) && p.attempt < retry.maxAttempts)
+          .map(p => Row(p.url, p.final_url, p.host, p.depth, p.discovery_seq, p.epoch,
+            p.status, p.signature, p.title, p.description, p.og_image, p.charset, p.etag,
+            if (p.spans == null) null
+            else p.spans.toSeq.map(sp => Row(sp.kind, sp.text, sp.media_ref, sp.offset)))),
+          Checkpointer.schemas("pages")))
+      (carriedPages.toSeq ++ genPages ++ buffered).reduceOption(_.unionByName(_))
+        .getOrElse(emptyPages)
     }
     var seenCount = 0L
     // per-host token buckets, driver-held in an access-ordered LRU map
@@ -492,11 +533,8 @@ class CrawlEngine(
     // localCheckpoint per epoch — a full driver job + broadcast exchange
     // for what is a bounded driver-side ledger.
     val hostTokensMap = lruMap[Long]()
-    def hostTokensDf(): DataFrame = {
-      val rows = hostTokensMap.toSeq
-      if (rows.isEmpty) spark.emptyDataset[(String, Long)].toDF("host", "tokens_milli")
-      else spark.createDataset(rows).toDF("host", "tokens_milli")
-    }
+    def hostTokensDf(): DataFrame =
+      localFrame(hostTokensMap.map { case (h, t) => Row(h, t) }, Checkpointer.schemas("host_tokens"))
     var epoch = 0L
     val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
 
@@ -688,7 +726,9 @@ class CrawlEngine(
     // otherwise pays ~10 driver round-trips for <=dozens of rows of work.
     // ------------------------------------------------------------------
     var frontierLocal: Option[Vector[FrontierEntry]] = None
-    var driverSeen: java.util.HashSet[String] = new java.util.HashSet[String]()
+    // seen mirror: url_lower -> url, the seen table's rows, so a snapshot
+    // writes the table from it
+    var driverSeen: java.util.HashMap[String, String] = new java.util.HashMap[String, String]()
     var driverSigs: java.util.HashSet[java.lang.Long] = new java.util.HashSet[java.lang.Long]()
     def dropMirrors(): Unit = { driverSeen = null; driverSigs = null }
     val gate = new Sequential.Gate(config, robots)
@@ -710,9 +750,8 @@ class CrawlEngine(
       frontier = spark.createDataset(seeds).toDF()
     }
     def frontierDf: DataFrame = frontierLocal match {
-      case Some(v) =>
-        if (v.isEmpty) spark.emptyDataset[FrontierEntry].toDF()
-        else spark.createDataset(v).toDF()
+      case Some(v) => localFrame(v.map(e => Row(e.url, e.host, e.depth, e.discovery_seq,
+        e.priority, e.attempt, e.not_before)), Checkpointer.schemas("frontier"))
       case None => frontier
     }
 
@@ -720,63 +759,74 @@ class CrawlEngine(
 
     // --- resume: restore all loop state from the latest committed snapshot
     // (north rule: resumable from checkpoint with per-partition lineage) ---
+    // a fresh crawl starts a new snapshot chain; a restore below continues
+    // the restored one
+    checkpoint.foreach(_.startChain(-1))
     resumeFrom.foreach { ck =>
       val e = ck.latestEpoch()
       if (e >= 0) {
         val m = ck.readManifest(e)
         // the manifest's lineage sizes every table, so choosing the path
-        // runs no job; the snapshot is immutable, so the tables are read
-        // lazily
+        // runs no job; the snapshot is immutable, so the stores are read
+        // lazily, and the tables kept on the driver are read there
         val rowsOf = Checkpointer.lineageRows(m)
-        val seenT = ck.readTable(e, "seen")
-        val sigT = ck.readTable(e, "signatures")
-        seenRdd = seenT.rdd
-          .map(r => (r.getString(0), r.getString(1)))
-          .partitionBy(seenPartitioner)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        seenBase = Some(seenRdd)
-        sigRdd = sigT.rdd.map(r => (r.getLong(0), true))
-          .partitionBy(seenPartitioner)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sigBase = Some(sigRdd)
         seenCount = rowsOf("seen")
         blooms = Vector.empty
         // same path rule as a fresh start: a small frontier comes back to
         // the driver, and with it the mirrors and the bloom when the seen
         // set fits them
         if (smallFits(rowsOf("frontier")))
-          frontierLocal = Some(ck.readTable(e, "frontier").as[FrontierEntry].collect().toVector)
+          frontierLocal = Some(ck.readLocal(e, "frontier").map(r => FrontierEntry(r.getString(0),
+            r.getString(1), r.getInt(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getLong(6))))
         else {
           frontierLocal = None
           frontier = ck.readTable(e, "frontier")
         }
+        // the co-partitioned stores: from the rows the driver reads for the
+        // mirrors, else lazily from the snapshot
+        def restoreStores(seenKv: org.apache.spark.rdd.RDD[(String, String)],
+            sigKv: org.apache.spark.rdd.RDD[(Long, Boolean)]): Unit = {
+          seenRdd = seenKv.partitionBy(seenPartitioner)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          seenBase = Some(seenRdd)
+          sigRdd = sigKv.partitionBy(seenPartitioner)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          sigBase = Some(sigRdd)
+        }
         if (frontierLocal.isDefined && mirrorsFit(seenCount)) {
-          val keys = seenT.select(col("url_lower")).as[String].collect()
-          driverSeen = new java.util.HashSet[String](keys.length * 2)
-          keys.foreach(driverSeen.add)
+          val seenKv = ck.readLocal(e, "seen").map(r => (r.getString(0), r.getString(1)))
+          val sigs = ck.readLocal(e, "signatures").map(_.getLong(0))
+          driverSeen = new java.util.HashMap[String, String](seenKv.size * 2)
+          seenKv.foreach(kv => driverSeen.put(kv._1, kv._2))
           driverSigs = new java.util.HashSet[java.lang.Long]()
-          sigT.select(col("sig")).as[Long].collect().foreach(x => driverSigs.add(Long.box(x)))
-          bloomFromLocal(keys, seenCount)
+          sigs.foreach(x => driverSigs.add(Long.box(x)))
+          restoreStores(spark.sparkContext.parallelize(seenKv),
+            spark.sparkContext.parallelize(sigs.map((_, true))))
+          bloomFromLocal(seenKv.map(_._1), seenCount)
         } else {
           dropMirrors()
+          restoreStores(
+            ck.readTable(e, "seen").rdd.map(r => (r.getString(0), r.getString(1))),
+            ck.readTable(e, "signatures").rdd.map(r => (r.getLong(0), true)))
           bloomFromSeen(seenRdd.map(_._1), seenCount)
         }
-        restoredPages = Some(ck.readTable(e, "pages"))
-        ck.readTable(e, "host_tokens").collect()
-          .foreach(r => hostTokensMap(r.getString(0)) = r.getLong(1))
-        def longField(k: String): Option[Long] =
-          ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong)
-        def strField(k: String): Option[String] =
-          ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(m).map(_.group(1))
+        // the restored pages chain: continued when this crawl commits to the
+        // same directory, else carried into its first commit
+        if (checkpoint.exists(_.root == ck.root)) {
+          committedPages = Some((ck, e))
+          checkpoint.foreach(_.startChain(e))
+        } else carriedPages = Some(ck.readTable(e, "pages"))
+        ck.readLocal(e, "host_tokens").foreach(r => hostTokensMap(r.getString(0)) = r.getLong(1))
         // chain lineage: a kill during the sitemap chain resumes mid-chain
         // (chain rules re-arm from the manifest's sitemap-doc set; parsed
         // as JSON quoted strings — URLs may contain ',' and ']')
         val (ckChainStarted, ckChainSms) = Checkpointer.chainState(m)
         ledger = ledger.copy(
-          seqCounter = longField("seq_counter").getOrElse(ledger.seqCounter),
-          wildcardRemaining = longField("wildcard_remaining").getOrElse(ledger.wildcardRemaining),
+          seqCounter = Checkpointer.longField(m, "seq_counter").getOrElse(ledger.seqCounter),
+          wildcardRemaining =
+            Checkpointer.longField(m, "wildcard_remaining").getOrElse(ledger.wildcardRemaining),
           pathBudget = Checkpointer.pathBudget(m),
-          scope = strField("redirect_host").filter(_.nonEmpty)
+          scope = Checkpointer.strField(m, "redirect_host").filter(_.nonEmpty)
             .fold(ledger.scope)(rh => ledger.scope.copy(redirectHost = rh)),
           chainStarted = ledger.chainStarted || ckChainStarted,
           chainSitemaps = if (ckChainStarted) ledger.chainSitemaps ++ ckChainSms else ledger.chainSitemaps,
@@ -932,14 +982,21 @@ class CrawlEngine(
       }
     }
 
-    // snapshot commit, only on the epochs it is due: building its arguments
-    // (by-name here) reads the pages view, which flushes the page buffer (a
-    // write job), and plans a Dataset per table
+    // snapshot commit, only on the epochs it is due. The pages go in as the
+    // delta since the last commit; afterwards the view reads them from the
+    // committed chain, and later sink deltas start a new generation
     def commitIfDue(frontierT: => DataFrame, seenT: => DataFrame, sigT: => DataFrame): Unit =
-      checkpoint.filter(_.due(epoch)).foreach(_.commit(epoch, frontierT, seenT, sigT,
-        hostTokensDf().coalesce(1), pages, ledger.seqCounter, ledger.wildcardRemaining,
-        ledger.pathBudget, ledger.scope, metrics.toSeq, ledger.chainStarted,
-        ledger.chainSitemaps.toSeq.sorted, ledger.discoveredSitemaps.values.toSeq))
+      checkpoint.filter(_.due(epoch)).foreach { ck =>
+        ck.commit(epoch, frontierT, seenT, sigT, hostTokensDf(), pagesDelta, ledger.seqCounter,
+          ledger.wildcardRemaining, ledger.pathBudget, ledger.scope, metrics.toSeq,
+          ledger.chainStarted, ledger.chainSitemaps.toSeq.sorted,
+          ledger.discoveredSitemaps.values.toSeq)
+        committedPages = Some((ck, epoch))
+        carriedPages = None
+        if (genWritten) { sinkGen += 1; genWritten = false }
+        pageBuf.clear()
+        pageBufSpanBytes = 0L
+      }
 
     // The Sequential step's Spark adapters. Membership answers from the
     // driver mirrors while they live, else with one probe job against the
@@ -948,11 +1005,11 @@ class CrawlEngine(
     val seenStore = new Sequential.Membership[String, String] {
       def present(keys: Iterable[String]): String => Boolean = {
         val m = driverSeen
-        if (m != null) m.contains else seenPresent(keys)
+        if (m != null) m.containsKey else seenPresent(keys)
       }
       def add(entries: Seq[(String, String)]): Unit = {
         if (driverSeen != null) {
-          entries.foreach(kv => driverSeen.add(kv._1))
+          entries.foreach(kv => driverSeen.put(kv._1, kv._2))
           if (!mirrorsFit(driverSeen.size)) dropMirrors()
         }
         seenCount += entries.size
@@ -1007,11 +1064,17 @@ class CrawlEngine(
       // always lag one epoch)
       hotHostWidths = saltWidths(
         out.admitted.groupBy(_.host).map { case (h, es) => (h, es.size.toLong) }, admittedCount)
-      // A7 page-sink delta, buffered (one write job per pageBufCap rows, not
-      // per epoch); every pages-view read flushes first
+      // A7 page-sink delta, buffered (one write job per pageBufCap rows or
+      // pageBufBytes of span strings, not per epoch); a commit takes the
+      // buffer into its pages delta, a pages-view read flushes it first
       if (out.pages.nonEmpty) {
         pageBuf ++= out.pages
-        if (pageBuf.size >= CrawlEngine.pageBufCap) flushPageBuf()
+        out.pages.foreach(p => if (p.spans != null) p.spans.foreach { sp =>
+          if (sp.text != null) pageBufSpanBytes += 2L * sp.text.length
+          if (sp.media_ref != null) pageBufSpanBytes += 2L * sp.media_ref.length
+        })
+        if (pageBuf.size >= CrawlEngine.pageBufCap || pageBufSpanBytes >= CrawlEngine.pageBufBytes)
+          flushPageBuf()
       }
       if (config.trackBlocked && (out.robotsBlocked.nonEmpty || out.vetoed.nonEmpty)) {
         out.robotsBlocked.foreach(e => blockedBuf += ((e.url, "robots", epoch)))
@@ -1035,10 +1098,14 @@ class CrawlEngine(
         out.newLinks, frontierCount, seenCount, ledger.budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, out.robotsBlocked.size.toLong,
         out.vetoed.size.toLong)
-      // driver-sized tables go to the snapshot as one partition each
-      if (driverSeen != null) commitIfDue(frontierDf.coalesce(1), seen.coalesce(1),
-        signatures.coalesce(1))
-      else commitIfDue(frontierDf.coalesce(1), seen, signatures)
+      // the driver holds the frontier and, while the mirrors live, the seen
+      // and signature tables too: the snapshot writes them with no job
+      if (driverSeen != null) {
+        import scala.jdk.CollectionConverters._
+        commitIfDue(frontierDf,
+          localFrame(driverSeen.entrySet.asScala.map(kv => Row(kv.getKey, kv.getValue)), seenSchema),
+          localFrame(driverSigs.asScala.map(x => Row(x.longValue)), sigSchema))
+      } else commitIfDue(frontierDf, seen, signatures)
       epoch += 1
       onEpoch.foreach(f => f(epoch - 1))
       done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
@@ -1378,7 +1445,7 @@ class CrawlEngine(
         // COLUMN-PRUNED scan of the delta file instead.
         val ep = epoch
         val parsedName = s"epoch=$epoch"
-        if (epoch == 0L) {
+        val parsedDir = if (epoch == 0L) {
           val fetched = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
           val ph = ledger.scope.parentHost
           // canonical-min winner — identical on the distributed path, the
@@ -1401,7 +1468,7 @@ class CrawlEngine(
             .mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))), parsedName))
         }
         val parsed: Dataset[ParsedPage] = timed("parsed_read")(
-          spark.read.schema(CrawlEngine.parsedSchema).parquet(s"$pagesSink/$parsedName")
+          spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedDir)
             .as[ParsedPage])
         // the fetch job has materialized — collect the ride-along stats
         // (delta count, bloom shards, next epoch's hot-host salt widths)
@@ -1851,10 +1918,16 @@ object CrawlEngine {
 
   /** Small-path parsed pages buffer driver-side up to this many rows before
     * flushing one parquet delta — tiny epochs stop paying a write job each
-    * (r6). Rows are full ParsedPages (spans included), so the cap bounds
-    * driver memory; any pages-view read flushes first.
+    * (r6); any pages-view read flushes first.
     */
   private[engine] val pageBufCap = 16384
+
+  /** ... and up to this many bytes of span strings (text and link/media
+    * refs, counted as UTF-16 heap bytes): pages with large bodies flush
+    * long before the row cap, so the buffer's driver memory is bounded in
+    * bytes, not only in rows.
+    */
+  private[engine] val pageBufBytes = 16L << 20
 
   /** Case-insensitive frontier dedup keeping the canonical-min row
     * (depth, discovery_seq, host, url) — a map-side-combining hash

@@ -46,4 +46,19 @@ object GraftSqlBridge {
       rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** The rows of a driver-held table: `df`'s plan is a `LocalRelation`,
+    * alone or under a `Repartition`. None for any other plan.
+    */
+  def localRows(df: DataFrame): Option[Seq[catalyst.InternalRow]] = {
+    import catalyst.plans.logical.{LocalRelation, Repartition}
+    df.queryExecution.analyzed match {
+      case l: LocalRelation => Some(l.data)
+      case Repartition(_, _, l: LocalRelation) => Some(l.data)
+      case _ => None
+    }
+  }
+
+  /** `schema` with every field nullable, as Spark writes files. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -7,6 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume: snapshots commit atomically with lineage + metrics;
   * a crawl killed after epoch k and resumed from the snapshot produces the
@@ -227,21 +228,27 @@ class ResumeSpec extends AnyFunSuite {
   test("checkpointed small-path crawl runs no Spark job on non-commit epochs") {
     spark.sparkContext.setLogLevel("ERROR")
     val params = CorpusParams(hosts = 2, pagesPerHost = 40)
-    val ck = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt7").toString, every = 5)
+    // every 2nd epoch commits: the crawl holds several commits with quiet
+    // epochs between them
+    val ck = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt7").toString, every = 2)
     val jobs = new EpochJobs
     jobs.window("0")
-    val res = new CrawlEngine(spark, CrawlConfig(maxEpochs = 20, checkpointEvery = 5),
+    val res = new CrawlEngine(spark, CrawlConfig(maxEpochs = 20, checkpointEvery = 2),
       new GenerativeFetcher(params), new CorpusRobots(params), expectedUrls = 10000,
       checkpoint = Some(ck), onEpoch = Some(jobs.hook))
       .crawl(Seq("https://www.site0.com/"))
     val perEpoch = jobs.counts()
-    val quiet = res.metrics.filter(m => m.epoch % 5 != 0)
+    val quiet = res.metrics.filter(m => m.epoch % 2 != 0)
     assert(quiet.exists(_.fetched > 0), "no non-commit epoch fetched a page")
-    quiet.foreach { m =>
+    // commit epochs too: the snapshot tables are driver-held, so the commit
+    // writes them on the driver
+    assert(res.metrics.count(m => m.epoch % 2 == 0 && m.fetched > 0) >= 2,
+      "fewer than two commit epochs fetched pages")
+    res.metrics.foreach { m =>
       val ran = perEpoch.getOrElse(m.epoch.toString, Nil)
       assert(ran.isEmpty, s"epoch ${m.epoch} (fetched ${m.fetched}) ran Spark jobs: $ran")
     }
-    assert(ck.latestEpoch() >= 0 && ck.latestEpoch() % 5 == 0)
+    assert(ck.latestEpoch() >= 2 && ck.latestEpoch() % 2 == 0)
   }
 
   test("resume parity on the polite_crawl shape: small-path, distributed and mirrorless restores") {
@@ -305,11 +312,182 @@ class ResumeSpec extends AnyFunSuite {
       val later = resumed.metrics.drop(1).filter(m => m.epoch % every != 0)
         .map(m => m.epoch -> perEpoch.getOrElse(m.epoch.toString, Nil))
       assert(later.nonEmpty)
-      if (label == "small-path")
-        later.foreach { case (e, ran) => assert(ran.isEmpty, s"resumed epoch $e ran Spark jobs: $ran") }
-      else
+      if (label == "small-path") {
+        // the restore reads its tables on the driver, and commits write
+        // driver-held tables: the restore window (restore plus the first
+        // resumed epoch) and every later epoch, commits included, run no job
+        val restore = perEpoch.getOrElse("restore", Nil)
+        assert(restore.isEmpty, s"small-path restore ran Spark jobs: $restore")
+        assert(resumed.metrics.drop(1).exists(_.epoch % every == 0), "no resumed commit")
+        resumed.metrics.drop(1).foreach { m =>
+          val ran = perEpoch.getOrElse(m.epoch.toString, Nil)
+          assert(ran.isEmpty, s"resumed epoch ${m.epoch} ran Spark jobs: $ran")
+        }
+      } else
         later.foreach { case (e, ran) => assert(ran.nonEmpty, s"$label: resumed epoch $e ran no job") }
       assertLineage(ck, dir)
     }
+  }
+
+  test("pages snapshots form a chain of deltas; a resume from every snapshot matches") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // a per-host cap spreads the crawl over enough epochs for >= 3 commits
+    val params = CorpusParams(seed = 5L, hosts = 3, pagesPerHost = 10, fanout = 3,
+      dupContentEvery = 7, errorEvery = 11)
+    val seeds = (0 until params.hosts).map(i => s"https://www.site$i.com/")
+    val every = 2
+    val base = CrawlConfig(externalDomains = Set("*"), normalize = true, maxPerHostPerEpoch = 2,
+      checkpointEvery = every, maxEpochs = 40)
+    val robots = new CorpusRobots(params)
+    type Key = (String, Int, Long, Int, Long, String)
+    def withEpoch(df: DataFrame): Set[(Key, Long)] =
+      df.select("url", "depth", "discovery_seq", "status", "signature", "final_url", "epoch")
+        .collect().map(r => ((r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3), r.getLong(4),
+          Option(r.getString(5)).getOrElse("")), r.getLong(6))).toSet
+    def keys(df: DataFrame): Set[Key] = withEpoch(df).map(_._1)
+    val oraclePages = OracleCrawler.crawl(params, base, robots, seeds).pages
+      .map(p => (p.url, p.depth, p.seq, p.status, p.signature, Option(p.finalUrl).getOrElse(""))).toSet
+    def engine(cfg: CrawlConfig, ck: Option[Checkpointer]) =
+      new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+        expectedUrls = 10000, checkpoint = ck)
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      val s = Files.walk(from)
+      try s.iterator().asScala.foreach { p =>
+        val t = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      } finally s.close()
+    }
+    for (threshold <- Seq(4096, 0)) {
+      val cfg = base.copy(smallEpochThreshold = threshold)
+      val full = engine(cfg, None).crawl(seeds)
+      val fullPages = withEpoch(full.pages)
+      assert(keys(full.pages) == oraclePages, s"threshold $threshold: uninterrupted != oracle")
+      val dir = Files.createTempDirectory("graft_ckpt9")
+      val ck = new Checkpointer(spark, dir.toString, every = every)
+      val checkpointed = engine(cfg, Some(ck)).crawl(seeds)
+      assert(keys(checkpointed.pages) == oraclePages, s"threshold $threshold: checkpointed != oracle")
+      val snaps = (0L to ck.latestEpoch() by every.toLong)
+        .filter(e => Files.exists(dir.resolve(s"epoch_$e").resolve("manifest.json")))
+      assert(snaps.size >= 3 && snaps.head == 0L, s"threshold $threshold: snapshots $snaps")
+      snaps.zipWithIndex.foreach { case (e, i) =>
+        val m = ck.readManifest(e)
+        val parent = if (i == 0) -1L else snaps(i - 1)
+        assert(Checkpointer.longField(m, "parent").contains(parent), s"epoch $e parent")
+        assert(Checkpointer.pagesChain(m, e) == snaps.take(i + 1), s"epoch $e chain")
+        // the snapshot's own directory holds only the pages since its parent
+        val delta = withEpoch(spark.read.parquet(dir.resolve(s"epoch_$e").resolve("pages").toString))
+        assert(delta == fullPages.filter { case (_, pe) => pe > parent && pe <= e },
+          s"threshold $threshold: epoch $e pages delta")
+        assert(withEpoch(ck.readTable(e, "pages")) == fullPages.filter(_._2 <= e),
+          s"threshold $threshold: epoch $e pages chain != uninterrupted through $e")
+        Checkpointer.lineageRows(m).foreach { case (t, rows) =>
+          assert(rows == ck.readTable(e, t).count(), s"epoch $e table $t lineage")
+        }
+      }
+      // resume from each snapshot: a copy of the directory cut back to it;
+      // snapshots of the distributed path also resume on the small path
+      def cutAt(e: Long): java.nio.file.Path = {
+        val cut = Files.createTempDirectory("graft_ckpt10")
+        copyTree(dir, cut)
+        snaps.filter(_ > e).foreach { k =>
+          val s = Files.walk(cut.resolve(s"epoch_$k"))
+          try s.iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p)) finally s.close()
+        }
+        cut
+      }
+      for (e <- snaps; resumeThreshold <- Seq(threshold, 4096).distinct) {
+        val cut = cutAt(e)
+        val ckCut = new Checkpointer(spark, cut.toString, every = every)
+        assert(ckCut.latestEpoch() == e)
+        val label = s"threshold $threshold, resumed at $resumeThreshold from epoch $e"
+        val resumed = engine(cfg.copy(smallEpochThreshold = resumeThreshold), Some(ckCut))
+          .crawl(seeds, resumeFrom = Some(ckCut))
+        assert(keys(resumed.pages) == keys(full.pages), s"$label: pages != uninterrupted")
+        assert(keys(resumed.pages) == oraclePages, s"$label: pages != oracle")
+        assert(resumed.seen.select("url_lower").collect().map(_.getString(0)).toSet ==
+          full.seen.select("url_lower").collect().map(_.getString(0)).toSet, s"$label: seen")
+        // the resumed crawl's first commit follows the restored snapshot
+        val next = e + every
+        if (Files.exists(cut.resolve(s"epoch_$next").resolve("manifest.json")))
+          assert(Checkpointer.longField(ckCut.readManifest(next), "parent").contains(e),
+            s"$label: parent of the first resumed commit")
+      }
+      // a resume that commits to another directory starts a new chain there,
+      // whose first delta carries the restored pages
+      val other = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt12").toString,
+        every = every)
+      new CrawlEngine(spark, cfg.copy(maxEpochs = (snaps(1) + every + 1).toInt),
+        new GenerativeFetcher(params), robots, expectedUrls = 10000, checkpoint = Some(other))
+        .crawl(seeds, resumeFrom = Some(new Checkpointer(spark, cutAt(snaps(1)).toString, every = every)))
+      val otherLast = other.latestEpoch()
+      assert(otherLast == snaps(1) + every, s"threshold $threshold: other directory's snapshot")
+      assert(Checkpointer.longField(other.readManifest(otherLast), "parent").contains(-1L))
+      assert(withEpoch(other.readTable(otherLast, "pages")) == fullPages.filter(_._2 <= otherLast),
+        s"threshold $threshold: carried pages chain")
+    }
+  }
+
+  test("manifest fields round-trip through the Checkpointer readers; driver tables read back") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val dir = Files.createTempDirectory("graft_ckpt11").toString
+    val ck = new Checkpointer(spark, dir, every = 1)
+    import spark.implicits._
+    val frontier = Seq(graft.model.FrontierEntry("https://h/a\"b", "h", 1, 7L, 3, 0, 2L),
+      graft.model.FrontierEntry("https://h/c", "h", 2, 8L, 1, 1, 0L)).toDS().toDF()
+    val seen = Seq(("https://h/a\"b", "https://h/a\"b"), ("https://h/c", "https://h/C")).toDF("url_lower", "url")
+    val sigs = spark.range(3).selectExpr("id as sig") // not driver-held: Spark writes it
+    val tokens = Seq(("h", 1500L)).toDF("host", "tokens_milli")
+    val pages = spark.emptyDataset[graft.model.PageRow].toDF()
+    val scope = ScopeState("", "h", "https", "r\"e\\dir.host", "https://h/", Set.empty,
+      fullResources = false)
+    ck.commit(0, frontier, seen, sigs, tokens, pages, 42L, -1L, Map.empty, scope, Nil)
+    ck.commit(1, frontier, seen, sigs, tokens, pages, 43L, 5L, Map.empty, scope, Nil)
+    val m0 = ck.readManifest(0)
+    val m1 = ck.readManifest(1)
+    assert(Checkpointer.longField(m0, "seq_counter").contains(42L))
+    assert(Checkpointer.longField(m0, "wildcard_remaining").contains(-1L))
+    assert(Checkpointer.longField(m1, "seq_counter").contains(43L))
+    assert(Checkpointer.strField(m0, "redirect_host").contains("r\"e\\dir.host"))
+    assert(Checkpointer.strField(m0, "crawl_base").contains("https://h/"))
+    assert(Checkpointer.strField(m0, "no_such_key").isEmpty)
+    assert(Checkpointer.longField(m0, "parent").contains(-1L))
+    assert(Checkpointer.longField(m1, "parent").contains(0L))
+    assert(Checkpointer.pagesChain(m1, 1) == Seq(0L, 1L))
+    // driver-written and Spark-written tables read back alike, on the
+    // driver and through Spark
+    assert(ck.readLocal(0, "frontier").map(r => r.getString(0) -> r.getLong(3)) ==
+      Vector("https://h/a\"b" -> 7L, "https://h/c" -> 8L))
+    assert(ck.readLocal(0, "seen").map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set(("https://h/a\"b", "https://h/a\"b"), ("https://h/c", "https://h/C")))
+    assert(ck.readLocal(0, "signatures").map(_.getLong(0)).toSet == Set(0L, 1L, 2L))
+    assert(ck.readLocal(1, "host_tokens").map(r => (r.getString(0), r.getLong(1))) == Vector(("h", 1500L)))
+    assert(ck.readTable(0, "frontier").as[graft.model.FrontierEntry].collect().toSet ==
+      frontier.as[graft.model.FrontierEntry].collect().toSet)
+    assert(Files.exists(Paths.get(dir, "epoch_0", "frontier", "part-00000.parquet")))
+  }
+
+  test("the small-path page buffer flushes by span bytes before its row cap") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // pages of ~100 KB of span text: the byte cap is reached after a few
+    // hundred pages, far below the 16,384-row cap
+    val params = CorpusParams(hosts = 2, pagesPerHost = 150, textWords = 3000)
+    val cfg = CrawlConfig(maxEpochs = 40)
+    val seeds = Seq("https://www.site0.com/", "https://www.site1.com/")
+    val jobs = new EpochJobs
+    jobs.window("0")
+    val res = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), new CorpusRobots(params),
+      expectedUrls = 10000, onEpoch = Some(jobs.hook)).crawl(seeds)
+    val perEpoch = jobs.counts()
+    val fetched = res.metrics.map(_.fetched).sum
+    assert(fetched < CrawlEngine.pageBufCap, s"$fetched pages reach the row cap")
+    // with no checkpoint and the mirrors live, a small-path epoch runs a
+    // job only to flush the buffer
+    val flushed = res.metrics.filter(m => perEpoch.getOrElse(m.epoch.toString, Nil).nonEmpty)
+    assert(flushed.nonEmpty, s"no epoch flushed the buffer ($fetched pages)")
+    val oracle = OracleCrawler.crawl(params, cfg, new CorpusRobots(params), seeds)
+    val got = res.pages.select("url", "depth", "discovery_seq", "status", "signature").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3), r.getLong(4)))
+    assert(got.length == oracle.pages.size)
+    assert(got.toSet == oracle.pages.map(p => (p.url, p.depth, p.seq, p.status, p.signature)).toSet)
   }
 }
