@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Crawl scope — the reference's `RelativeSelectors` tuple
@@ -146,12 +148,19 @@ class CrawlEngine(
     spark.sparkContext.defaultParallelism)
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[CrawlEngine])
   private val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!trace) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[trace] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
+  /** Runs `f` as phase `label` of `epoch`: every Spark job it starts carries
+    * the description `e<epoch>/<label>` (a local property, so AQE's stage
+    * jobs inherit it), and the old description comes back afterwards.
+    */
+  private def phase[T](epoch: Long, label: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"e$epoch/$label")
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      sc.setJobDescription(prev)
+      if (trace) println(f"[trace] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
   }
 
@@ -172,9 +181,9 @@ class CrawlEngine(
     // re-encoded every row; count + JoinedRow stamp touch zero row bytes,
     // and the two jobs share the sort shuffle via the stable RDD instance
     val sortedRdd = org.apache.spark.sql.GraftSqlBridge.internalRdd(sorted)
-    val counts = timed("grank_count")(sortedRdd.mapPartitionsWithIndex { (i, it) =>
+    val counts = sortedRdd.mapPartitionsWithIndex { (i, it) =>
       var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single((i, n))
-    }.collect().sortBy(_._1).map(_._2))
+    }.collect().sortBy(_._1).map(_._2)
     val offsets = counts.scanLeft(offset)(_ + _)
     val withSeq = sortedRdd.mapPartitionsWithIndex { (i, it) =>
       var k = offsets(i)
@@ -392,7 +401,8 @@ class CrawlEngine(
       sigProbe = null
       sigDeltaRdd = spark.sparkContext.emptyRDD[(Long, Boolean)].partitionBy(seenPartitioner)
     }
-    var sigWinnerCaches = Vector.empty[DataFrame]
+    // persisted signature deltas (released at compaction)
+    var sigDeltaCaches = Vector.empty[org.apache.spark.rdd.RDD[(Long, Boolean)]]
     // persisted admitted sets backing the lazy seen deltas (released at
     // compaction)
     var admittedCaches = Vector.empty[Dataset[FrontierEntry]]
@@ -427,18 +437,18 @@ class CrawlEngine(
       blockedWritten = true
       blockedBuf.clear()
     }
-    def blockedDf: DataFrame = {
-      flushBlockedBuf()
-      if (!blockedWritten)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], CrawlEngine.blockedSchema)
-      else spark.read.schema(CrawlEngine.blockedSchema)
-        .option("recursiveFileLookup", "true").parquet(blockedSink)
-    }
     // a driver-held table: its plan is a LocalRelation, which a snapshot
     // commit writes on the driver with no Spark job
     def localFrame(rows: Iterable[Row], schema: org.apache.spark.sql.types.StructType): DataFrame = {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.toSeq.asJava, schema)
+    }
+    // the sink's deltas ∪ the buffer as a driver-held table: no job
+    def blockedDf: DataFrame = {
+      val buffered = localFrame(blockedBuf.map { case (u, r, e) => Row(u, r, e) }, CrawlEngine.blockedSchema)
+      if (!blockedWritten) buffered
+      else spark.read.schema(CrawlEngine.blockedSchema)
+        .option("recursiveFileLookup", "true").parquet(blockedSink).unionByName(buffered)
     }
     val seenSchema = Checkpointer.schemas("seen")
     def seen: DataFrame =
@@ -501,29 +511,28 @@ class CrawlEngine(
         .option("recursiveFileLookup", "true").parquet(genDir)
         .filter(!retriedCol).select(pageCols: _*))
     }
+    // the buffer as pages, a driver-held table: retried attempts dropped
+    def bufferedPages: Option[DataFrame] =
+      if (pageBuf.isEmpty) None
+      else Some(localFrame(pageBuf
+        .filterNot(p => retry.isRetryableStatus(p.status) && p.attempt < retry.maxAttempts)
+        .map(p => Row(p.url, p.final_url, p.host, p.depth, p.discovery_seq, p.epoch,
+          p.status, p.signature, p.title, p.description, p.og_image, p.charset, p.etag,
+          if (p.spans == null) null
+          else p.spans.toSeq.map(sp => Row(sp.kind, sp.text, sp.media_ref, sp.offset)))),
+        Checkpointer.schemas("pages")))
     // the pages view: committed chain ∪ carried pages ∪ this generation's
-    // deltas (the buffer flushed into them first)
-    def pages: DataFrame = {
-      flushPageBuf()
+    // deltas ∪ the buffer. Reading it runs no job: the buffer is flushed
+    // only on its caps
+    def pages: DataFrame =
       (committedPages.map { case (ck, e) => ck.readTable(e, "pages") }.toSeq ++
-        carriedPages ++ genPages).reduceOption(_.unionByName(_)).getOrElse(emptyPages)
-    }
+        carriedPages ++ genPages ++ bufferedPages).reduceOption(_.unionByName(_)).getOrElse(emptyPages)
     // what the next snapshot's pages delta holds: the pages since the last
     // commit. The buffer alone stays a driver-held table (no job); sink
     // deltas or carried pages make it one Spark write
-    def pagesDelta: DataFrame = {
-      val buffered =
-        if (pageBuf.isEmpty) None
-        else Some(localFrame(pageBuf
-          .filterNot(p => retry.isRetryableStatus(p.status) && p.attempt < retry.maxAttempts)
-          .map(p => Row(p.url, p.final_url, p.host, p.depth, p.discovery_seq, p.epoch,
-            p.status, p.signature, p.title, p.description, p.og_image, p.charset, p.etag,
-            if (p.spans == null) null
-            else p.spans.toSeq.map(sp => Row(sp.kind, sp.text, sp.media_ref, sp.offset)))),
-          Checkpointer.schemas("pages")))
-      (carriedPages.toSeq ++ genPages ++ buffered).reduceOption(_.unionByName(_))
+    def pagesDelta: DataFrame =
+      (carriedPages.toSeq ++ genPages ++ bufferedPages).reduceOption(_.unionByName(_))
         .getOrElse(emptyPages)
-    }
     var seenCount = 0L
     // per-host token buckets, driver-held in an access-ordered LRU map
     // capped at 100k hosts — the reference holds its per-domain limiter
@@ -536,6 +545,8 @@ class CrawlEngine(
     def hostTokensDf(): DataFrame =
       localFrame(hostTokensMap.map { case (h, t) => Row(h, t) }, Checkpointer.schemas("host_tokens"))
     var epoch = 0L
+    // a phase of the current epoch
+    def timed[T](label: String)(f: => T): T = phase(epoch, label)(f)
     val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
 
     def mergeBloomParts(parts: Array[Array[Byte]]): Unit = {
@@ -741,19 +752,18 @@ class CrawlEngine(
     def mirrorsFit(seenRows: Long): Boolean = seenRows <= CrawlEngine.mirrorCap
     // seeds are gated by is_allowed_default only (lists + robots, no budget)
     val seeds = start.frontier.filter(gate.default)
-    var frontier: DataFrame = null
-    if (smallFits(start.frontier.size)) {
-      frontierLocal = Some(seeds)
-      frontier = spark.emptyDataset[FrontierEntry].toDF() // unused while local
-    } else {
-      dropMirrors()
-      frontier = spark.createDataset(seeds).toDF()
-    }
-    def frontierDf: DataFrame = frontierLocal match {
-      case Some(v) => localFrame(v.map(e => Row(e.url, e.host, e.depth, e.discovery_seq,
+    def frontierFrame(v: Seq[FrontierEntry]): DataFrame =
+      localFrame(v.map(e => Row(e.url, e.host, e.depth, e.discovery_seq,
         e.priority, e.attempt, e.not_before)), Checkpointer.schemas("frontier"))
-      case None => frontier
+    var frontier: DataFrame = frontierFrame(Nil) // unused while local
+    if (smallFits(start.frontier.size)) frontierLocal = Some(seeds)
+    else {
+      dropMirrors()
+      frontier = frontierFrame(seeds)
     }
+    def frontierDf: DataFrame = frontierLocal.fold(frontier)(frontierFrame)
+    // a distributed frontier read from a snapshot: sized by a histogram job
+    var restoredFrontier = false
 
     val canonicalOrder = Seq(col("depth"), col("discovery_seq"), col("host"), col("url"))
 
@@ -781,6 +791,7 @@ class CrawlEngine(
         else {
           frontierLocal = None
           frontier = ck.readTable(e, "frontier")
+          restoredFrontier = true
         }
         // the co-partitioned stores: from the rows the driver reads for the
         // mirrors, else lazily from the snapshot
@@ -877,25 +888,29 @@ class CrawlEngine(
     // SAME job that counts it: per-epoch readiness (`candCount`) then needs
     // NO job at all — a politeness-paced crawl's empty ticks (hosts banking
     // fractional tokens) advance logical time for free
-    var readyHist: Map[Long, Long] = Map.empty
-    def histOf(df: DataFrame): Map[Long, Long] =
+    def histOf(df: DataFrame): Map[Long, Long] = timed("frontier_hist")(
       df.groupBy(col("not_before")).agg(count(lit(1)).as("n")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-    if (frontierLocal.isEmpty) readyHist = histOf(frontier)
+        .map(r => (r.getLong(0), r.getLong(1))).toMap)
+    def histLocal(v: Vector[FrontierEntry]): Map[Long, Long] =
+      v.groupBy(_.not_before).map { case (nb, es) => (nb, es.size.toLong) }
+    var readyHist: Map[Long, Long] =
+      if (frontierLocal.nonEmpty) Map.empty
+      else if (restoredFrontier) histOf(frontier) else histLocal(seeds)
     var frontierCountPrev = frontierLocal.map(_.size.toLong).getOrElse(readyHist.values.sum)
     var done = frontierCountPrev == 0
     var epochCache: Option[DataFrame] = None // politeness rank cache, per epoch
 
     // The store-probe kernels: keyed candidates shuffle to the store's
-    // partitions, where the persisted sorted-array snapshot (binary search)
-    // plus a hash set of the since-snapshot delta answer membership; a
-    // candidate's payload is kept when its key's presence equals
-    // `keepPresent`. Payloads are whatever the caller shuffles (UnsafeRow
-    // copies on the distributed path, the keys themselves for a probe job).
+    // partitions (no shuffle when they are partitioned so already, as a
+    // combine through `seenPartitioner` leaves them), where the persisted
+    // sorted-array snapshot (binary search) plus a hash set of the
+    // since-snapshot delta answer membership; a candidate is kept when its
+    // key's presence equals `keepPresent`. The result keeps the store's
+    // partitioning. Payloads are whatever the caller shuffles.
     def probeSeen[V: scala.reflect.ClassTag](cands: org.apache.spark.rdd.RDD[(String, V)],
-        keepPresent: Boolean): org.apache.spark.rdd.RDD[V] =
+        keepPresent: Boolean): org.apache.spark.rdd.RDD[(String, V)] =
       cands.partitionBy(seenPartitioner)
-        .zipPartitions(seenProbeRdd(), seenDeltaRdd) { (cit, pit, dit) =>
+        .zipPartitions(seenProbeRdd(), seenDeltaRdd, preservesPartitioning = true) { (cit, pit, dit) =>
           val keep = keepPresent
           val base: Array[AnyRef] =
             if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]] else new Array[AnyRef](0)
@@ -904,14 +919,14 @@ class CrawlEngine(
             if (delta == null) delta = new java.util.HashSet[String]()
             delta.add(dit.next()._1)
           }
-          cit.collect { case (k, v)
-            if (java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(k))) == keep => v }
+          cit.filter { case (k, _) =>
+            (java.util.Arrays.binarySearch(base, k) >= 0 ||
+              (delta != null && delta.contains(k))) == keep }
         }
     def probeSigs[V: scala.reflect.ClassTag](cands: org.apache.spark.rdd.RDD[(Long, V)],
-        keepPresent: Boolean): org.apache.spark.rdd.RDD[V] =
+        keepPresent: Boolean): org.apache.spark.rdd.RDD[(Long, V)] =
       cands.partitionBy(seenPartitioner)
-        .zipPartitions(sigProbeRdd(), sigDeltaRdd) { (cit, pit, dit) =>
+        .zipPartitions(sigProbeRdd(), sigDeltaRdd, preservesPartitioning = true) { (cit, pit, dit) =>
           val keep = keepPresent
           val base = if (pit.hasNext) pit.next() else Array.emptyLongArray
           var delta: java.util.HashSet[java.lang.Long] = null
@@ -919,20 +934,43 @@ class CrawlEngine(
             if (delta == null) delta = new java.util.HashSet[java.lang.Long]()
             delta.add(Long.box(dit.next()._1))
           }
-          cit.collect { case (k, v)
-            if (java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(Long.box(k)))) == keep => v }
+          cit.filter { case (k, _) =>
+            (java.util.Arrays.binarySearch(base, k) >= 0 ||
+              (delta != null && delta.contains(Long.box(k)))) == keep }
         }
     // tiny-epoch membership against the distributed stores — the
     // mirror-dropped fallback: ONE job over <= threshold keys
     def seenPresent(keys: Iterable[String]): Set[String] =
       if (keys.isEmpty) Set.empty
-      else probeSeen(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, k)),
-        keepPresent = true).collect().toSet
+      else probeSeen(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, ())),
+        keepPresent = true).keys.collect().toSet
     def sigsPresent(keys: Iterable[Long]): Set[Long] =
       if (keys.isEmpty) Set.empty
-      else probeSigs(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, k)),
-        keepPresent = true).collect().toSet
+      else probeSigs(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, ())),
+        keepPresent = true).keys.collect().toSet
+
+    // discovery_seq for new links past the threshold: range-partitioned in
+    // link order (the partitioner's sample job), each range counted over the
+    // sorted ranges, persisted (one job), and the offsets stamped in place;
+    // the frontier's checkpoint reads the ranges back
+    var rangeCache: Option[org.apache.spark.rdd.RDD[CrawlEngine.LinkRef]] = None
+    def rangeSeq(links: org.apache.spark.rdd.RDD[CrawlEngine.LinkRef], offset: Long): DataFrame = {
+      val keyed = links.map(t => (t, ()))
+      val ord = Sequential.linkOrder
+      val sorted = new org.apache.spark.rdd.ShuffledRDD[CrawlEngine.LinkRef, Unit, Unit](keyed,
+          new org.apache.spark.RangePartitioner(math.max(1, math.min(P, 200)), keyed)(ord,
+            implicitly[scala.reflect.ClassTag[CrawlEngine.LinkRef]]))
+        .setKeyOrdering(ord).keys
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      rangeCache = Some(sorted)
+      val offsets = sorted.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+        .scanLeft(offset)(_ + _)
+      org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
+        sorted.mapPartitionsWithIndex { (i, it) =>
+          var k = offsets(i) - 1
+          it.map { case (pd, _, _, u) => k += 1; CrawlEngine.frontierRow(u, pd + 1, k) }
+        }, Checkpointer.schemas("frontier"))
+    }
 
     // state hygiene for long crawls: every k epochs fold the
     // co-partitioned delta chains flat (localCheckpoint — distributed,
@@ -977,8 +1015,8 @@ class CrawlEngine(
           sigRddEpochs = 0
         }
         resetSigProbe()
-        sigWinnerCaches.foreach(d => try d.unpersist(false) catch { case _: Throwable => })
-        sigWinnerCaches = Vector.empty
+        sigDeltaCaches.foreach(d => try d.unpersist(false) catch { case _: Throwable => })
+        sigDeltaCaches = Vector.empty
       }
     }
 
@@ -1133,9 +1171,8 @@ class CrawlEngine(
               frontierLocal = Some(CrawlEngine.dedupCanonicalMinLocal(v ++ injectedV))
               frontierCountPrev = frontierLocal.get.size.toLong
             case None =>
-              frontier = CrawlEngine.dedupCanonicalMin(
-                frontier.unionByName(spark.createDataset(injectedV).toDF()))
-                .localCheckpoint(true)
+              frontier = timed("inject")(CrawlEngine.dedupCanonicalMin(
+                frontier.unionByName(frontierFrame(injectedV))).localCheckpoint(true))
               readyHist = histOf(frontier)
               frontierCountPrev = readyHist.values.sum
           }
@@ -1164,14 +1201,15 @@ class CrawlEngine(
         smallEpoch(frontierLocal.get, candCount, epochT0)
       } else timed("epoch_total") {
         if (frontierLocal.isDefined) {
-          // candidate volume outgrew the fast path: materialize the
-          // frontier and fall through to the distributed pipeline — the
-          // driver mirrors go stale from here on, permanently
-          frontier = spark.createDataset(frontierLocal.get).toDF().localCheckpoint(true)
+          // candidate volume outgrew the fast path: the frontier the driver
+          // holds becomes a driver-held table (no job) and the epoch falls
+          // through to the distributed pipeline — the driver mirrors go
+          // stale from here on, permanently
+          frontier = frontierDf
+          readyHist = histLocal(frontierLocal.get)
+          frontierCountPrev = frontierLocal.get.size.toLong
           frontierLocal = None
           dropMirrors()
-          readyHist = histOf(frontier)
-          frontierCountPrev = readyHist.values.sum
         }
         val ready = if (holdsPossible) frontier.filter(col("not_before") <= lit(epoch)) else frontier
         val deferredHold = if (holdsPossible) frontier.filter(col("not_before") > lit(epoch))
@@ -1195,7 +1233,7 @@ class CrawlEngine(
         val unseen = {
           val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
             probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeen)
-              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), keepPresent = false),
+              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), keepPresent = false).values,
             withLower.schema)
           definitelyNew.unionByName(unseenMaybe)
         }
@@ -1317,14 +1355,15 @@ class CrawlEngine(
           val exemptCond =
             if (smExempt) lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq) else lit(false)
           val budgeted = if (smExempt) polAdmitted.filter(!exemptCond) else polAdmitted
-          val ranked = withGlobalSeq(budgeted, canonicalOrder, "__grank", 0L).localCheckpoint(true)
+          val ranked = timed("grank_count")(
+            withGlobalSeq(budgeted, canonicalOrder, "__grank", 0L).localCheckpoint(true))
           var alive = ranked
           if (config.wildCardBudgeting) {
             // wildcard passes links while budget > 1, then EXCEEDS at ==1
             // (`abs_diff(0)==1` check `website.rs:2060-2070`) — exhaustion
             // stops the whole crawl (`website.rs:7904-7907`), leftovers
             // preserved as extra_links.
-            val n = ranked.count()
+            val n = timed("budget")(ranked.count())
             val passCount = math.max(0L, ledger.wildcardRemaining - 1L)
             if (n > passCount) {
               ledger = ledger.copy(budgetStopped = true)
@@ -1355,11 +1394,11 @@ class CrawlEngine(
               // InternalRow scans: two primitive columns, no Row bridge
               val flags = org.apache.spark.sql.GraftSqlBridge
                 .internalRdd(matches.select(col("__m"), col("__grank")))
-              val perPart = flags.mapPartitionsWithIndex { (i, it) =>
+              val perPart = timed("budget")(flags.mapPartitionsWithIndex { (i, it) =>
                 var n = 0L
                 it.foreach(r => if (r.getBoolean(0)) n += 1)
                 Iterator.single((i, n))
-              }.collect().sortBy(_._1).map(_._2)
+              }.collect().sortBy(_._1).map(_._2))
               val total = perPart.sum
               if (total <= rem) {
                 pathBudget = pathBudget.updated(k, rem - total)
@@ -1368,7 +1407,7 @@ class CrawlEngine(
                 val cums = perPart.scanLeft(0L)(_ + _) // cums(p) = matches before partition p
                 val pStar = cums.indexWhere(_ > rem) - 1 // partition holding the first rejected match
                 val allowance = rem - cums(pStar)
-                val cutoff = flags.mapPartitionsWithIndex { (i, it) =>
+                val cutoff = timed("budget")(flags.mapPartitionsWithIndex { (i, it) =>
                   if (i != pStar) Iterator.empty
                   else {
                     var seen = 0L
@@ -1377,7 +1416,7 @@ class CrawlEngine(
                       else { seen += 1; if (seen == allowance + 1) Some(r.getLong(1)) else None }
                     }
                   }
-                }.collect().head // one job; take(1) would probe partitions incrementally
+                }.collect().head) // one job; take(1) would probe partitions incrementally
                 pathBudget = pathBudget.updated(k, 0L)
                 cur = matches.filter(!col("__m") || col("__grank") < lit(cutoff)).drop("__m")
               }
@@ -1445,7 +1484,7 @@ class CrawlEngine(
         // COLUMN-PRUNED scan of the delta file instead.
         val ep = epoch
         val parsedName = s"epoch=$epoch"
-        val parsedDir = if (epoch == 0L) {
+        val parsedDir = if (epoch == 0L) timed("fetch_parse") {
           val fetched = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
           val ph = ledger.scope.parentHost
           // canonical-min winner — identical on the distributed path, the
@@ -1479,7 +1518,7 @@ class CrawlEngine(
         // (reference `DomainRateLimiter::throttle` rate_limiter.rs:121-137 —
         // delay := Retry-After, bucket drained); latency EMA feeds the
         // auto-throttle (auto_throttle.rs: delay ≈ ema/target_concurrency)
-        if (politenessOn) {
+        if (politenessOn) timed("throttle") {
           // ONE per-host aggregate feeds both reactive signals. Collected
           // rows are BOUNDED (round-3 verdict #8): with auto-throttle off,
           // only hosts that actually returned a 429 reach the driver; with
@@ -1542,7 +1581,7 @@ class CrawlEngine(
         // partitioner-aware (no data movement of the base).
         val deltaRdd = if (retry.maxAttempts > 0) {
           val seenDeltaCk = timed("seen_ckpt")(seenDelta.localCheckpoint(true))
-          seenCount += seenDeltaCk.count()
+          seenCount += timed("seen_ckpt")(seenDeltaCk.count())
           // every consumer of the admitted cache (bloom, fetch, seen delta)
           // has materialized — release it NOW (leaving one cached plan per
           // epoch alive OOMs the driver on multi-hundred-epoch crawls)
@@ -1559,18 +1598,16 @@ class CrawlEngine(
         seenDeltaRdd = spark.sparkContext.union(seenDeltaRdd, seenDeltaPart)
         seenRddEpochs += 1
 
-        // 10. C5 signature dedup: only the canonical-first page per NEW
-        //     signature expands links; seen signatures expand nothing
-        //     (`website.rs:8671-8683`). Winners are computed as a SKINNY
-        //     hash-aggregate (map-side partial) — full page rows (spans,
-        //     links) never shuffle for signature dedup; the winner set
-        //     semi-joins back (AQE picks broadcast when small).
+        // 10. which pages expand their links: vetoed pages never (B11);
+        //     in the chain phase only sitemap docs; else, with C5 signature
+        //     dedup, only the canonical-first page per NEW signature
+        //     (`website.rs:8671-8683`) and every page without a signature
         var expanding = (onShouldCrawl match {
           case Some(veto) => parsed.filter(veto) // B11: vetoed pages don't expand
           case None => parsed
         }).toDF()
         val vetoedCount =
-          if (config.trackBlocked && onShouldCrawl.isDefined) {
+          if (config.trackBlocked && onShouldCrawl.isDefined) timed("blocked") {
             // rows over NON-retried pages only, matching the fast path
             // (a retried page re-parses on its retry epoch); written as a
             // parquet delta, counted from the delta
@@ -1580,7 +1617,7 @@ class CrawlEngine(
               .toDF().select(col("url"), lit("veto").as("reason"), lit(epoch.toLong).as("epoch"))
             sinkBlockedDelta(vetoedRows, "veto")
           } else 0L
-        if (sitemapChain && !ledger.chainStarted) {
+        if (sitemapChain && !ledger.chainStarted) timed("sitemaps") {
           // rel=sitemap auto-discovery (one tiny extra job per epoch,
           // only when the caller requested the chain; ads are distinct
           // sitemap DOCS, so the collect is bounded by the cap).
@@ -1597,7 +1634,8 @@ class CrawlEngine(
           ledger = ledger.copy(discoveredSitemaps = CrawlEngine.accumulateDiscoveredSitemaps(
             ledger.discoveredSitemaps, ads.toSeq))
         }
-        if (ledger.chainStarted) {
+        val dedupSigs = !ledger.chainStarted && config.normalize
+        if (ledger.chainStarted) timed("sitemaps") {
           // chain phase: ONLY sitemap docs expand — their <loc> entries
           // plus recursive <sitemapindex> locs; entry pages are recorded
           // but never expanded ("does not re-crawl the links of the pages
@@ -1609,153 +1647,70 @@ class CrawlEngine(
           val isSm = lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq)
           val nested = parsed.toDF().filter(isSm)
             .select(explode(col("sitemap_links")).as("u")).as[String].collect()
-          expanding = parsed.toDF().filter(col("status") === 200 && isSm)
+          expanding = parsed.toDF().filter(isSm)
             .withColumn("links", concat(col("links"), col("sitemap_links")))
           ledger = ledger.copy(chainSitemaps = ledger.chainSitemaps ++ nested.map(UrlOps.lowerUtf8))
-        } else if (config.normalize) {
-          val sigOk = expanding.filter(col("status") === 200 && col("signature") =!= 0L)
-          val sigKey = struct(col("depth"), col("discovery_seq"), col("host"), col("url"))
-          val cands = sigOk.select(col("signature"), sigKey.as("__k"))
-            .groupBy(col("signature")).agg(min(col("__k")).as("__k"))
-          // probe the co-partitioned signature store: only the epoch's
-          // candidate signatures shuffle; the store is scanned in place
-          // (round 2 broadcast the candidate set AND its hits)
-          val candsSchema = cands.schema
-          // InternalRow probe shuffle (r6) — same rationale as the seen gate
-          val newWinners = timed("sig_reroot")(
-            org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-              probeSigs(org.apache.spark.sql.GraftSqlBridge.internalRdd(cands)
-                .map(r => (r.getLong(0), r.copy())), keepPresent = false), candsSchema)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          sigWinnerCaches :+= newWinners
-          val firstPerSig = sigOk.withColumn("__k", sigKey)
-            .join(newWinners, Seq("signature", "__k"), "left_semi").drop("__k")
-          // delta append: lazy over the persisted winners, partitioner-aware;
-          // ONE shuffled instance feeds both the store and the probe delta
-          val sigDeltaPart = newWinners.rdd.map(r => (r.getLong(0), true))
-            .partitionBy(seenPartitioner)
-          sigRdd = spark.sparkContext.union(sigRdd, sigDeltaPart)
-          sigDeltaRdd = spark.sparkContext.union(sigDeltaRdd, sigDeltaPart)
-          sigRddEpochs += 1
-          expanding = firstPerSig.unionByName(
-            expanding.filter(col("status") === 200 && col("signature") === 0L))
-        } else {
-          expanding = expanding.filter(col("status") === 200)
         }
+        // (signature or 0, depth, discovery_seq, host, url, links) of every
+        // fetched page that may expand. A scan of the page delta, no job
+        val pageRows = org.apache.spark.sql.GraftSqlBridge.internalRdd(expanding
+          .filter(col("status") === 200)
+          .select(if (dedupSigs) col("signature") else lit(0L), col("depth"),
+            col("discovery_seq"), col("host"), col("url"), col("links")))
 
-        // 11. explode links; case-insensitive dedup as a map-side-combining
-        //     hash aggregate keyed by lower(url) keeping the canonical-min
-        //     (p_depth, p_seq, pos, url) — replaces round 1's window over
-        //     every raw link row (full shuffle, no combine). Then (r6)
-        //     SEEN-FILTER the deduped set — bloom fast-negative split, exact
-        //     co-partitioned probe for the residue — BEFORE the range sort:
-        //     at steady-state fanout most link targets are already seen, so
-        //     the canonical sort/seq machinery, the frontier checkpoint, and
-        //     the next epoch's gate previously all carried rows whose only
-        //     fate was to be discarded by that gate (round-5 verdict #1: the
-        //     links phase was the N->4N scale-killer at 1.04x). The epoch's
-        //     own seen delta was appended above and drainAdmitStats already
-        //     merged this epoch's bloom shards, so the filter sees exactly
-        //     the seen set the next epoch's gate would. Then assign
-        //     deterministic discovery_seq by global sort over the SURVIVORS
-        //     (seq values compact vs pre-r6 but every pairwise canonical
-        //     order relation is preserved — admission decisions and page
-        //     rows are unchanged; oracle + small path mirror this).
-        val linksRaw = timed("links_plan")(expanding
-          .select(col("depth").as("p_depth"), col("discovery_seq").as("p_seq"),
-            posexplode(col("links")).as(Seq("pos", "url"))))
-        val uniq0 = linksRaw
-          .groupBy(lower(col("url")).as("__lu"))
-          .agg(min(struct(col("p_depth"), col("p_seq"), col("pos"), col("url"))).as("__m"))
-          .select(col("__m.p_depth").as("p_depth"), col("__m.p_seq").as("p_seq"),
-            col("__m.pos").as("pos"), col("__m.url").as("url"))
-        val sortCols = Seq(col("p_depth"), col("p_seq"), col("pos"), col("url"))
-        val parts = math.max(1, math.min(P, 200))
-        var newFrontier = spark.emptyDataset[FrontierEntry].toDF()
-        var newLinkCount = 0L
-        var uniqCk: Option[DataFrame] = None
-        if (smallFits(admittedCount)) {
-          // tiny epoch: dedup output is at most admitted×fanout rows —
-          // dedup + canonical order + seq assignment complete in ONE
-          // driver job plus one tiny probe (identical order to the
-          // distributed path; the two-pass range machinery costs ~4 driver
-          // barriers that dwarf milliseconds of actual work at this size)
-          val rows0 = timed("links_seq")(uniq0.collect())
-            .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getString(3)))
-          val present = seenPresent(rows0.map(t => UrlOps.lowerUtf8(t._4)))
-          val rows = rows0.filterNot(t => present.contains(UrlOps.lowerUtf8(t._4)))
-            .sorted(Sequential.linkOrder) // UTF-8 byte order = the distributed path's UTF8String order
-          newLinkCount = rows.length
-          if (rows.nonEmpty) {
-            val entries = rows.zipWithIndex.map { case ((pd, _, _, u), i) =>
+        // 11. the epoch's new links, in ONE job over two exchanges, each on
+        //     the stores' own partitioning (`seenPartitioner`), so each
+        //     store probe runs in the reduce task of its exchange (the
+        //     reference does this as one pass over one hash set,
+        //     `links_visited.extend_links`):
+        //     - signatures: pages keyed by signature, map-side combined to
+        //       the canonical-min page (depth, discovery_seq, host, url),
+        //       probed against the signature store; the winners of new
+        //       signatures carry their links on;
+        //     - links: exploded, keyed by lower(url), map-side combined to
+        //       the canonical-min (p_depth, p_seq, pos, url) — url in UTF-8
+        //       byte order, `Sequential.linkOrder` — and probed against the
+        //       seen store, whose delta already holds this epoch's
+        //       admissions, so the survivors are exactly the links the next
+        //       epoch's gate would pass.
+        //     The survivors then get discovery_seq in link order: on the
+        //     driver when they fit the threshold, else range-sorted.
+        val (expandingRows, sigDeltaPart) = if (!dedupSigs) (pageRows, None) else {
+          val winners = probeSigs(pageRows.filter(_.getLong(0) != 0L)
+            .map(r => (r.getLong(0), r.copy()))
+            .reduceByKey(seenPartitioner, CrawlEngine.minPage _), keepPresent = false)
+          // the store's delta: the winners' signatures, persisted (a later
+          // read must not recompute it against the grown store), written
+          // by the links job from the signature exchange it already holds
+          val delta = winners.mapPartitions(_.map(kv => (kv._1, true)), preservesPartitioning = true)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          sigDeltaCaches :+= delta
+          sigRdd = spark.sparkContext.union(sigRdd, delta)
+          sigDeltaRdd = spark.sparkContext.union(sigDeltaRdd, delta)
+          sigRddEpochs += 1
+          (pageRows.filter(_.getLong(0) == 0L).union(winners.values), Some(delta))
+        }
+        val survivors = probeSeen(expandingRows.flatMap(CrawlEngine.linkRefs)
+          .reduceByKey(seenPartitioner, CrawlEngine.minLink _), keepPresent = false).values
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val newLinkCount = timed("links") {
+          val counts = sigDeltaPart.fold(survivors.mapPartitions(it => Iterator.single(it.size.toLong))) {
+            // both sides have the store's partition count
+            _.zipPartitions(survivors) { (d, it) => d.foreach(_ => ()); Iterator.single(it.size.toLong) }
+          }
+          counts.collect().sum
+        }
+        // the new links as frontier rows: a driver-held table when they fit
+        // the threshold (no driver collect past it), else distributed
+        val (newFrontier, newFrontierHeld) =
+          if (newLinkCount == 0) (frontierFrame(Nil), true)
+          else if (smallFits(newLinkCount)) {
+            val rows = timed("links_seq")(survivors.collect()).sorted(Sequential.linkOrder)
+            (frontierFrame(rows.iterator.zipWithIndex.map { case ((pd, _, _, u), i) =>
               FrontierEntry(u, UrlOps.host(u), pd + 1, ledger.seqCounter + i,
                 UrlOps.scoreUrl(u, pd + 1), 0, 0L)
-            }
-            newFrontier = spark.createDataset(entries.toIndexedSeq).toDF()
-          }
-        } else {
-        // persist the deduped link set BEFORE the seen split + range
-        // exchange: both the bloom split's two consumers and the range
-        // partitioner's sampling job would otherwise recompute the whole
-        // explode+aggregate upstream (the epoch's widest pipeline); the
-        // deduped set is ~fanout× smaller
-        val uniqP = uniq0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        uniqCk = Some(uniqP)
-        // InternalRow end-to-end (round-3 verdict #2, extended by the r6
-        // seen split): `Dataset.rdd` would deserialize every link row to a
-        // GenericRow (two String allocs) and Java-serialize the object
-        // graph through the probe shuffle — `toRdd` + UnsafeRow.copy ships
-        // compact row bytes, and the count/seq jobs reuse the same stable
-        // RDD instance (shuffle files reused).
-        val sortedRdd = timed("links_tordd") {
-          val withLu = uniqP.withColumn("__lu", lower(col("url")))
-          val linkBloom = new BloomGroup(spark.sparkContext.broadcast(blooms))
-          val mightContain = enginefns.bloom_might_contain(col("__lu"), linkBloom)
-          val definitelyNew = withLu.filter(!mightContain)
-          val maybeSeenLinks = withLu.filter(mightContain)
-          val luIdx = withLu.schema.fieldIndex("__lu")
-          val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-            probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeenLinks)
-              .map(r => (r.getUTF8String(luIdx).toString, r.copy())), keepPresent = false),
-            withLu.schema)
-          val survivors = definitelyNew.unionByName(unseenMaybe).drop("__lu")
-          val sorted = survivors
-            .repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
-          org.apache.spark.sql.GraftSqlBridge.internalRdd(sorted) // stable instance: shuffle reused by the frontier job
-        }
-        val partCounts = timed("links_seq")(sortedRdd.mapPartitionsWithIndex { (i, it) =>
-          var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single((i, n))
-        }.collect().sortBy(_._1).map(_._2))
-        newLinkCount = partCounts.sum
-        if (newLinkCount > 0) {
-          val offsets = partCounts.scanLeft(ledger.seqCounter)(_ + _)
-          // survivors schema == the deduped link schema (the __lu split
-          // column is dropped before the range sort)
-          val schema = uniqP.schema.add("__seq", LongType, nullable = false)
-          val withSeq = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-            var k = offsets(i)
-            val seqCell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-            val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-            // rows are consumed one-at-a-time by the downstream codegen
-            // projection, so reusing the Joined/seq cells is safe
-            it.map { r =>
-              seqCell.update(0, k); k += 1
-              joined(r, seqCell): org.apache.spark.sql.catalyst.InternalRow
-            }
-          }
-          val seqd = org.apache.spark.sql.GraftSqlBridge
-            .internalCreateDataFrame(spark, withSeq, schema)
-          import graft.url.urlfns._
-          newFrontier = seqd.select(
-            col("url"),
-            url_host(col("url")).as("host"),
-            (col("p_depth") + 1).as("depth"),
-            col("__seq").as("discovery_seq"),
-            score_url(col("url"), col("p_depth") + 1).as("priority"),
-            lit(0).as("attempt"),
-            lit(0L).as("not_before"))
-        }
-        }
+            }.toSeq), true)
+          } else (timed("links_seq")(rangeSeq(survivors, ledger.seqCounter)), false)
         ledger = ledger.copy(seqCounter = ledger.seqCounter + newLinkCount)
 
         // 12. next frontier = politeness-deferred ∪ retries ∪ new links,
@@ -1766,7 +1721,8 @@ class CrawlEngine(
         //     exchange). New links are already seen-filtered (r6), so the
         //     next epoch's gate probes only carryover entries and bloom
         //     false positives. Without carryover streams the new-link set
-        //     IS the next frontier (already unique) — no dedup, no count job.
+        //     IS the next frontier (already unique): no dedup, no count job,
+        //     and no job at all when the driver holds it.
         frontier =
           if (carryover) {
             val nextFrontierAll = deferredHold.unionByName(deferred)
@@ -1774,8 +1730,11 @@ class CrawlEngine(
               .unionByName(retryDf).unionByName(newFrontier)
             timed("frontier_ckpt")(CrawlEngine.dedupCanonicalMin(nextFrontierAll)
               .localCheckpoint(true))
-          } else timed("frontier_ckpt")(newFrontier.localCheckpoint(true))
-        uniqCk.foreach(_.unpersist(false)) // frontier materialized — release the link cache
+          } else if (newFrontierHeld) newFrontier
+          else timed("frontier_ckpt")(newFrontier.localCheckpoint(true))
+        survivors.unpersist(false) // frontier materialized — release the link caches
+        rangeCache.foreach(_.unpersist(false))
+        rangeCache = None
         readyHist = if (carryover) histOf(frontier) else Map(0L -> newLinkCount)
         val frontierCount = readyHist.values.sum
         frontierCountPrev = frontierCount
@@ -1786,7 +1745,7 @@ class CrawlEngine(
           newLinkCount, frontierCount, seenCount, ledger.budgetStopped,
           (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
 
-        commitIfDue(frontier, seen, signatures)
+        timed("commit")(commitIfDue(frontier, seen, signatures))
 
         epochCache.foreach(_.unpersist(false))
         epochCache = None
@@ -1881,6 +1840,48 @@ object CrawlEngine {
   def dedupCanonicalMinLocal(frontier: Vector[graft.model.FrontierEntry]): Vector[graft.model.FrontierEntry] =
     frontier.groupBy(e => graft.url.UrlOps.lowerUtf8(e.url)).values
       .map(_.min(Sequential.canonical)).toVector
+
+  /** One link occurrence: (p_depth, p_seq, pos, url) — its page's depth
+    * and discovery_seq and its position in the page's links.
+    */
+  type LinkRef = (Int, Long, Int, String)
+
+  /** The link occurrences of one expanding page row (signature, depth,
+    * discovery_seq, host, url, links), keyed by lower(url) with Spark's
+    * `lower()` mapping.
+    */
+  private[engine] def linkRefs(r: InternalRow): Iterator[(String, LinkRef)] =
+    if (r.isNullAt(5)) Iterator.empty
+    else {
+      val links = r.getArray(5)
+      val pd = r.getInt(1)
+      val ps = r.getLong(2)
+      Iterator.range(0, links.numElements()).filterNot(links.isNullAt).map { i =>
+        val u = links.getUTF8String(i)
+        (u.toLowerCase.toString, (pd, ps, i, u.toString))
+      }
+    }
+
+  /** Canonical-min link occurrence, url in UTF-8 byte order. */
+  private[engine] def minLink(a: LinkRef, b: LinkRef): LinkRef =
+    if (Sequential.linkOrder.lteq(a, b)) a else b
+
+  /** Canonical-min page row (depth, discovery_seq, host, url), strings in
+    * UTF-8 byte order: the first page of a signature.
+    */
+  private[engine] def minPage(a: InternalRow, b: InternalRow): InternalRow = {
+    var c = Integer.compare(a.getInt(1), b.getInt(1))
+    if (c == 0) c = java.lang.Long.compare(a.getLong(2), b.getLong(2))
+    if (c == 0) c = a.getUTF8String(3).compareTo(b.getUTF8String(3))
+    if (c == 0) c = a.getUTF8String(4).compareTo(b.getUTF8String(4))
+    if (c <= 0) a else b
+  }
+
+  /** A new link's frontier row, in the `frontier` table's columns. */
+  private[engine] def frontierRow(url: String, depth: Int, seq: Long): InternalRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      UTF8String.fromString(url), UTF8String.fromString(UrlOps.host(url)), depth, seq,
+      UrlOps.scoreUrl(url, depth), 0, 0L))
 
   /** Static ParsedPage schema — handed to every delta read so no per-epoch
     * footer-inference job runs.

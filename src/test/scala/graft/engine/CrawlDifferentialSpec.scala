@@ -503,4 +503,89 @@ class CrawlDifferentialSpec extends AnyFunSuite {
       new CorpusRobots(params), Seq("https://www.site0.com/"))
     assert(or.seen == plain.seen)
   }
+
+  private def frontierKeys(es: Iterable[graft.model.FrontierEntry]) =
+    es.map(e => (e.url, e.host, e.depth, e.discovery_seq, e.priority, e.attempt, e.not_before)).toSet
+  private def frontierKeys(er: CrawlResult): Set[(String, String, Int, Long, Int, Int, Long)] = {
+    import spark.implicits._
+    frontierKeys(er.frontierRemainder.as[graft.model.FrontierEntry].collect())
+  }
+
+  test("a wide-shaped distributed epoch runs at most six labelled jobs, and none follows it") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // the wide_crawl shape at a quarter of its hosts: signature dedup on,
+    // no politeness, and a last epoch above the threshold whose links are
+    // all seen already
+    val params = CorpusParams(hosts = 4, pagesPerHost = 400, fanout = 48, textWords = 40)
+    val cfg = CrawlConfig(maxEpochs = 30, externalDomains = Set("*"), smallEpochThreshold = 1000)
+    val seeds = (0 until params.hosts).map(i => s"https://www.site$i.com/")
+    val robots = new CorpusRobots(params)
+    val jobs = new EpochJobs(spark)
+    jobs.window("0")
+    val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+      expectedUrls = 100000L, onEpoch = Some(jobs.hook)).crawl(seeds)
+    val perEpoch = jobs.jobs()
+    val distributed = er.metrics.dropWhile(_.candidates <= cfg.smallEpochThreshold)
+    assert(distributed.nonEmpty && distributed.last.epoch == er.epochs - 1,
+      s"the last epoch ran on the small path: ${er.metrics.map(_.candidates)}")
+    distributed.foreach { m =>
+      val ran = perEpoch.getOrElse(m.epoch.toString, Nil)
+      assert(ran.size <= 6, s"distributed epoch ${m.epoch} ran ${ran.size} jobs: $ran")
+      ran.foreach { case (site, desc) =>
+        assert(desc.startsWith(s"e${m.epoch}/"), s"epoch ${m.epoch}: job at $site is labelled '$desc'")
+      }
+    }
+    val end = perEpoch.getOrElse(er.epochs.toString, Nil)
+    assert(end.isEmpty, s"the call ran Spark jobs after its last epoch: $end")
+    val or = OracleCrawler.crawl(params, cfg, robots, seeds)
+    assertParity(er, or)
+    assert(frontierKeys(er) == frontierKeys(or.frontierRemainder))
+  }
+
+  test("distributed survivors take both seq branches: driver-held and range-sorted (mid threshold)") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // threshold 50: from the first epoch above it every epoch is
+    // distributed; the new links of some fit the threshold (sequenced on
+    // the driver), of others not (range-sorted)
+    val params = CorpusParams(hosts = 3, pagesPerHost = 300, fanout = 8, dupContentEvery = 5)
+    val cfg = CrawlConfig(maxEpochs = 30, smallEpochThreshold = 50)
+    val seeds = Seq("https://www.site0.com/", "https://www.site1.com/")
+    val robots = new CorpusRobots(params)
+    // case variants: a link to page p(10k) becomes page p(10k+1) with an
+    // upper-case scheme, so two spellings of one URL come from different
+    // parent pages
+    val rewrite: String => String = { u =>
+      val m = "^https://([^/]+)/.*p([0-9]*0)\\.html$".r
+      u match {
+        case m(host, n) => s"HTTPS://$host" + CorpusGen.pagePath(n.toLong + 1)
+        case _ => u
+      }
+    }
+    val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+      expectedUrls = 100000L, onLinkFind = Some(rewrite)).crawl(seeds)
+    val or = OracleCrawler.crawl(params, cfg, robots, seeds, onLinkFind = Some(rewrite))
+    assertParity(er, or)
+    assert(frontierKeys(er) == frontierKeys(or.frontierRemainder))
+    val distributed = er.metrics.dropWhile(_.candidates <= cfg.smallEpochThreshold)
+    assert(distributed.exists(m => m.new_links > 0 && m.new_links <= cfg.smallEpochThreshold),
+      s"no distributed epoch sequenced its links on the driver: ${er.metrics.map(m => (m.candidates, m.new_links))}")
+    assert(distributed.exists(_.new_links > cfg.smallEpochThreshold),
+      s"no distributed epoch range-sorted its links: ${distributed.map(_.new_links)}")
+    // the link dedup sees case variants of one URL from pages in different
+    // signature partitions (so different map partitions of the link
+    // exchange), and links to pages admitted in the same epoch
+    val sigPart = new org.apache.spark.HashPartitioner(16)
+    val inputs = distributed.map { m =>
+      val fetched = or.pages.filter(p => p.epoch == m.epoch && p.status == 200)
+      val byKey = fetched.flatMap(p => p.links.map(l => (graft.url.UrlOps.lowerUtf8(l), (l, p.signature))))
+        .groupBy(_._1)
+      val variants = byKey.values.exists { occ =>
+        occ.map(_._2._1).distinct.size > 1 && occ.map(o => sigPart.getPartition(o._2._2)).distinct.size > 1
+      }
+      val admitted = fetched.map(p => graft.url.UrlOps.lowerUtf8(p.url)).toSet
+      (variants, byKey.keys.exists(admitted.contains))
+    }
+    assert(inputs.exists(_._1), "no distributed epoch saw case variants across partitions")
+    assert(inputs.exists(_._2), "no distributed epoch linked to a page admitted in it")
+  }
 }

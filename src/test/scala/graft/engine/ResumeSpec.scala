@@ -3,7 +3,6 @@ package graft.engine
 import graft.corpus.CorpusParams
 import graft.model.CrawlConfig
 import graft.oracle.OracleCrawler
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -197,41 +196,13 @@ class ResumeSpec extends AnyFunSuite {
     assert(Checkpointer.pathBudget("""{"epoch":1,"path_budget":{}}""").isEmpty)
   }
 
-  /** Spark jobs per epoch window: the `onEpoch` hook tags the jobs that
-    * follow it with the next epoch (a local property rides each job's start
-    * event); `counts` flushes the listener bus with a marker job first.
-    */
-  private final class EpochJobs extends SparkListener {
-    private val Key = "graft.test.window"
-    private val seen = new java.util.concurrent.ConcurrentHashMap[String, List[String]]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(Key))).foreach { w =>
-        val site = e.stageInfos.lastOption.map(_.name).getOrElse("?")
-        seen.merge(w, List(site), (a, b) => a ++ b)
-      }
-    def window(w: String): Unit = spark.sparkContext.setLocalProperty(Key, w)
-    val hook: Long => Unit = e => window((e + 1).toString)
-    spark.sparkContext.addSparkListener(this)
-    def counts(): Map[String, List[String]] = {
-      window("end")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val t0 = System.nanoTime()
-      while (!seen.containsKey("end") && System.nanoTime() - t0 < 30L * 1000000000L)
-        Thread.sleep(10)
-      window(null)
-      spark.sparkContext.removeSparkListener(this)
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toMap - "end"
-    }
-  }
-
   test("checkpointed small-path crawl runs no Spark job on non-commit epochs") {
     spark.sparkContext.setLogLevel("ERROR")
     val params = CorpusParams(hosts = 2, pagesPerHost = 40)
     // every 2nd epoch commits: the crawl holds several commits with quiet
     // epochs between them
     val ck = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt7").toString, every = 2)
-    val jobs = new EpochJobs
+    val jobs = new EpochJobs(spark)
     jobs.window("0")
     val res = new CrawlEngine(spark, CrawlConfig(maxEpochs = 20, checkpointEvery = 2),
       new GenerativeFetcher(params), new CorpusRobots(params), expectedUrls = 10000,
@@ -249,6 +220,18 @@ class ResumeSpec extends AnyFunSuite {
       assert(ran.isEmpty, s"epoch ${m.epoch} (fetched ${m.fetched}) ran Spark jobs: $ran")
     }
     assert(ck.latestEpoch() >= 2 && ck.latestEpoch() % 2 == 0)
+    // nor does the rest of the call: the pages buffered since the last
+    // commit are served as a driver-held table, not flushed by a write
+    val end = perEpoch.getOrElse(res.epochs.toString, Nil)
+    assert(end.isEmpty, s"the call ran Spark jobs after its last epoch: $end")
+    val got = res.pages.select("url", "depth", "discovery_seq", "status", "signature").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3), r.getLong(4)))
+    assert(got.length > ck.readTable(ck.latestEpoch(), "pages").count(),
+      "no page was buffered after the last commit")
+    val oracle = OracleCrawler.crawl(params, CrawlConfig(maxEpochs = 20, checkpointEvery = 2),
+      new CorpusRobots(params), Seq("https://www.site0.com/"))
+    assert(got.length == oracle.pages.size)
+    assert(got.toSet == oracle.pages.map(p => (p.url, p.depth, p.seq, p.status, p.signature)).toSet)
   }
 
   test("resume parity on the polite_crawl shape: small-path, distributed and mirrorless restores") {
@@ -292,7 +275,7 @@ class ResumeSpec extends AnyFunSuite {
       // stop two epochs past a commit: the resume replays the lost epoch
       engine(cfg.copy(maxEpochs = 2 * every + 2), Some(ck)).crawl(seeds)
       assert(ck.latestEpoch() == 2 * every, s"$label: no commit at epoch ${2 * every}")
-      val jobs = new EpochJobs
+      val jobs = new EpochJobs(spark)
       jobs.window("restore")
       val prevCap = CrawlEngine.mirrorCap
       val resumed =
@@ -323,6 +306,8 @@ class ResumeSpec extends AnyFunSuite {
           val ran = perEpoch.getOrElse(m.epoch.toString, Nil)
           assert(ran.isEmpty, s"resumed epoch ${m.epoch} ran Spark jobs: $ran")
         }
+        val end = perEpoch.getOrElse(resumed.epochs.toString, Nil)
+        assert(end.isEmpty, s"the resumed call ran Spark jobs after its last epoch: $end")
       } else
         later.foreach { case (e, ran) => assert(ran.nonEmpty, s"$label: resumed epoch $e ran no job") }
       assertLineage(ck, dir)
@@ -473,7 +458,7 @@ class ResumeSpec extends AnyFunSuite {
     val params = CorpusParams(hosts = 2, pagesPerHost = 150, textWords = 3000)
     val cfg = CrawlConfig(maxEpochs = 40)
     val seeds = Seq("https://www.site0.com/", "https://www.site1.com/")
-    val jobs = new EpochJobs
+    val jobs = new EpochJobs(spark)
     jobs.window("0")
     val res = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), new CorpusRobots(params),
       expectedUrls = 10000, onEpoch = Some(jobs.hook)).crawl(seeds)
