@@ -2,13 +2,14 @@ package graft.engine
 
 import graft.model._
 import graft.url.UrlOps
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
+import scala.reflect.ClassTag
 
 /** Crawl scope — the reference's `RelativeSelectors` tuple
   * (`spider/src/lib.rs:452-458`): `(sub_matcher, [parent_host, scheme],
@@ -61,8 +62,6 @@ trait RetryPolicy extends Serializable {
   * `website.rs:8388-8392`).
   */
 final class DefaultRetryPolicy(limit: Int) extends RetryPolicy {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions._
   override def maxAttempts: Int = limit
   override def isRetryable(s: Column): Column =
     (s >= 500 && s =!= 501 && s =!= 505 && s =!= 511) || s === 429 || s === 408
@@ -74,6 +73,11 @@ final class DefaultRetryPolicy(limit: Int) extends RetryPolicy {
     math.min(math.pow(2.0, attempt + 1).toLong, 60L)
 }
 
+/** A crawl call's tables. `seen` reads the seen store's chain lazily, so
+  * that chain (and the persisted sets behind it) stays cached for the
+  * result's lifetime; every other cache of the call is released before
+  * `crawl` returns.
+  */
 final case class CrawlResult(
     pages: DataFrame,
     seen: DataFrame,
@@ -176,15 +180,10 @@ class CrawlEngine(
     val parts = math.max(1, math.min(P, 200))
     val sorted = df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
     val schema = sorted.schema.add(outName, LongType, nullable = false)
-    // InternalRow end-to-end (same rationale as the link-seq path): the old
-    // Dataset.rdd + zipWithIndex + createDataFrame bridge deserialized and
-    // re-encoded every row; count + JoinedRow stamp touch zero row bytes,
+    // InternalRow end-to-end: count + JoinedRow stamp touch zero row bytes,
     // and the two jobs share the sort shuffle via the stable RDD instance
     val sortedRdd = org.apache.spark.sql.GraftSqlBridge.internalRdd(sorted)
-    val counts = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single((i, n))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(offset)(_ + _)
+    val offsets = CrawlEngine.offsets(sortedRdd, offset)
     val withSeq = sortedRdd.mapPartitionsWithIndex { (i, it) =>
       var k = offsets(i)
       val cell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
@@ -201,8 +200,7 @@ class CrawlEngine(
   // Gate terms (SURVEY §2.B)
   // ---------------------------------------------------------------------
 
-  /** B2/B3 — whitelist/blacklist as codegen'd column predicates (round 1
-    * used a typed lambda that deserialized every row). Non-regex semantics:
+  /** B2/B3 — whitelist/blacklist as codegen'd column predicates. Non-regex semantics:
     * EXACT string match (`lib.rs:433-449` — `Vec<CompactString>::contains`);
     * `listsAreRegex` switches to the reference's `regex` feature build
     * (RegexSet::is_match — unanchored search, `lib.rs:433-440`).
@@ -281,10 +279,8 @@ class CrawlEngine(
   }
 
   /** A8 — `scrape()` = crawl + materialized pages (`website.rs:7326-7378`). */
-  def scrape(seedUrls: Seq[String]): Array[graft.model.PageRow] = {
-    import spark.implicits._
+  def scrape(seedUrls: Seq[String]): Array[graft.model.PageRow] =
     crawl(seedUrls).pages.as[graft.model.PageRow].collect()
-  }
 
   /** A6 — crawl with the sitemap CHAINED AFTER it (reference `crawl()` =
     * `crawl_concurrent` then `sitemap_crawl_chain`, `website.rs:6974-6976`;
@@ -309,792 +305,293 @@ class CrawlEngine(
   def crawlSitemap(seedUrls: Seq[String]): CrawlResult =
     crawl(seedUrls, sitemapOnly = true)
 
+  // fast paths, all statically known from config:
+  //  - holdsPossible: politeness/retries may set not_before holds — only
+  //    then does the ready split + count need a job
+  //  - carryover: any stream besides new links can re-enter the frontier
+  //    (holds, politeness deferrals, budget leftovers, retries) — only
+  //    then does the end-of-epoch union need a dedup window; otherwise the
+  //    next frontier IS the (already unique) new-link set
+  private val politenessPossible = config.delayMs > 0 || config.respectRobotsTxt ||
+    config.maxPerHostPerEpoch != Int.MaxValue
+  private val holdsPossible = politenessPossible || retry.maxAttempts > 0
+  private val carryover = holdsPossible || config.wildCardBudgeting || (config.budget - "*").nonEmpty
+  private val canonicalOrder = Seq(col("depth"), col("discovery_seq"), col("host"), col("url"))
+
+  /** The path rule, one for a fresh start, every epoch and a restore: the
+    * frontier stays on the driver while the threshold is on and the rows at
+    * hand (seeds, an epoch's candidates, a restored frontier) fit under it.
+    */
+  private def smallFits(rows: Long): Boolean =
+    config.smallEpochThreshold > 0 && rows <= config.smallEpochThreshold
+
+  private def noRows: DataFrame = spark.emptyDataset[FrontierEntry].toDF()
+
+  private def frontierFrame(v: Seq[FrontierEntry]): DataFrame =
+    CrawlEngine.localFrame(spark, v.map(e => Row(e.url, e.host, e.depth, e.discovery_seq,
+      e.priority, e.attempt, e.not_before)), Checkpointer.schemas("frontier"))
+
   def crawl(seedUrls0: Seq[String], resumeFrom: Option[Checkpointer] = None,
       sitemapChain: Boolean = false, sitemapOnly: Boolean = false): CrawlResult = {
     // set-up shared with the oracle: glob seeds, scope, depth distance,
     // budget, and the seed (or sitemap-only) frontier
     val start = Sequential.start(config, seedUrls0, sitemapOnly)
-    val depthDistance = start.depthDistance
+    val run = new Run(start, sitemapChain)
+    // a fresh crawl starts a new snapshot chain; a restore continues the
+    // restored one
+    checkpoint.foreach(_.startChain(-1))
+    resumeFrom.foreach(run.restore)
+
+    var crawling = true
+    while (crawling) {
+      while (!run.done) {
+        // D9 pause (reference `handle_process` value 1, `website.rs:1839-1846`):
+        // wall-clock wait between epochs; logical time frozen
+        while (pauseRequested && !shutdownRequested && System.nanoTime() < run.deadline)
+          Thread.sleep(20)
+        // mid-crawl URL injection: drain the inbox into the frontier
+        // (reference `dequeue`, `website.rs:7528-7562`)
+        if (!inbox.isEmpty) run.inject(Iterator.continually(inbox.poll()).takeWhile(_ != null).toVector)
+        val epochT0 = System.nanoTime()
+        val candCount = run.readyCount
+        if (candCount == 0) run.idle()
+        else if (run.frontierLocal.isDefined && smallFits(candCount))
+          phase(run.epoch, "epoch_total")(run.smallEpoch(candCount, epochT0))
+        else phase(run.epoch, "epoch_total")(run.distributedEpoch(candCount, epochT0))
+      }
+      // --- A6: sitemap CHAINED AFTER the crawl (reference `crawl()` runs
+      // `crawl_concurrent` then `sitemap_crawl_chain`, `website.rs:6974-6976`)
+      // — under a budget the crawl spends first and an exhausted wildcard
+      // skips the chain entirely (`is_over_wild_budget`, `website.rs:11654`).
+      // Each seed's /sitemap.xml is injected through the inbox (full gate:
+      // seen/lists/robots — `is_allowed_budgetless`); chain epochs then run
+      // under the ordinary loop with two rule changes keyed off the ledger's
+      // `chainSitemaps`: sitemap docs are budget-exempt, and ONLY sitemap
+      // docs expand (urlset entries + recursive sitemapindex locs).
+      if (sitemapChain && !run.ledger.chainStarted && !run.ledger.budgetStopped &&
+          !shutdownRequested && System.nanoTime() < run.deadline && run.epoch < config.maxEpochs) {
+        val (sms, chainLedger) = Sequential.startChain(config, start.seedUrls, run.ledger)
+        run.ledger = chainLedger
+        if (sms.nonEmpty) {
+          sms.foreach(inbox.add)
+          run.done = false
+        } else crawling = false
+      } else crawling = false
+    }
+    run.result()
+  }
+
+  /** One crawl call: its driver state — the ledger, the frontier, the two
+    * stores, the sinks and the per-host ledgers — and the epoch stages that
+    * move it. Holds the SparkSession through the engine: task closures
+    * capture local vals only.
+    */
+  private final class Run(start: Sequential.Start, sitemapChain: Boolean) {
     // the driver ledger: seq counter, budget, scope, chain state
-    var ledger = start.ledger
-    val deadline =
+    var ledger: Sequential.Ledger = start.ledger
+    val deadline: Long =
       if (config.crawlTimeoutMs > 0) System.nanoTime() + config.crawlTimeoutMs * 1000000L
       else Long.MaxValue
 
-    // --- URL-seen: bloom (fast-negative) + exact table (authoritative).
-    // One compact bloom per epoch delta (sized to the delta), broadcast as
-    // a group — never one giant filter (SURVEY §7 risk note). Held as
-    // serialized bytes; executors deserialize lazily via BloomGroup. ---
-    var blooms = Vector.empty[Array[Byte]]
-    // B1 authoritative URL-seen store — the north rule's PARTITIONED
-    // membership check: (url_lower, url) pairs hash-partitioned ONCE and
-    // probed by shuffling only the epoch's maybe-seen candidates to the
-    // matching partitions, where a per-partition exact hash set answers
-    // membership (exact ⊃ the north star's per-partition cuckoo filter —
-    // same contract, authoritative). The seen side is NEVER re-shuffled
-    // and NEVER broadcast (round 2 broadcast the maybe-seen set AND its
-    // hits — both epoch-sized, a driver round-trip pair per epoch that a
-    // 10^10 frontier cannot afford). Deltas append co-partitioned through
-    // a partitioner-aware union; every k epochs the chain is
-    // localCheckpoint-compacted — distributed, lineage-flat, no driver
-    // funnel. Partition count sizes each partition's set to executor
-    // memory at the target scale.
-    val seenPartitioner = new org.apache.spark.HashPartitioner(math.max(P, 16))
-    var seenRdd: org.apache.spark.rdd.RDD[(String, String)] =
-      spark.sparkContext.emptyRDD[(String, String)].partitionBy(seenPartitioner)
-    var seenRddEpochs = 0 // deltas since last compaction
-    var seenBase: Option[org.apache.spark.rdd.RDD[(String, String)]] = None
-    // C5 signature store — same co-partitioned shape as the seen store:
-    // 64-bit signatures hash-partitioned once, probed by shuffling only
-    // the epoch's candidate signatures, deltas unioned partitioner-aware
-    var sigRdd: org.apache.spark.rdd.RDD[(Long, Boolean)] =
-      spark.sparkContext.emptyRDD[(Long, Boolean)].partitionBy(seenPartitioner)
-    var sigRddEpochs = 0
-    var sigBase: Option[org.apache.spark.rdd.RDD[(Long, Boolean)]] = None
-    // O(residue) membership probes (round-3 verdict #1): per-partition
-    // SORTED key arrays built from the store ONCE (lazily, then again per
-    // compaction) and persisted — each epoch's gate probes (cached array ∪
-    // small since-compaction delta set) instead of rebuilding a hash set
-    // from the ENTIRE store every epoch (O(|seen|)/epoch at 10^10 URLs).
-    // Sorted array + binary search over a HashSet: same contract, ~2-4x
-    // less resident memory. The probe is a SNAPSHOT of the store at build
-    // time; `seenDeltaRdd`/`sigDeltaRdd` carry every key appended since —
-    // a key present in both sides answers identically, so build timing
-    // can lag appends without a correctness window.
-    var seenProbe: org.apache.spark.rdd.RDD[Array[String]] = null
-    var seenDeltaRdd: org.apache.spark.rdd.RDD[(String, String)] =
-      spark.sparkContext.emptyRDD[(String, String)].partitionBy(seenPartitioner)
-    def seenProbeRdd(): org.apache.spark.rdd.RDD[Array[String]] = {
-      if (seenProbe == null)
-        seenProbe = seenRdd.mapPartitions({ it =>
-          val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) buf += it.next()._1
-          val arr = buf.toArray
-          java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]])
-          Iterator.single(arr)
-        }, preservesPartitioning = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      seenProbe
-    }
-    def resetSeenProbe(): Unit = {
-      if (seenProbe != null) { try seenProbe.unpersist(false) catch { case _: Throwable => } }
-      seenProbe = null
-      seenDeltaRdd = spark.sparkContext.emptyRDD[(String, String)].partitionBy(seenPartitioner)
-    }
-    var sigProbe: org.apache.spark.rdd.RDD[Array[Long]] = null
-    var sigDeltaRdd: org.apache.spark.rdd.RDD[(Long, Boolean)] =
-      spark.sparkContext.emptyRDD[(Long, Boolean)].partitionBy(seenPartitioner)
-    def sigProbeRdd(): org.apache.spark.rdd.RDD[Array[Long]] = {
-      if (sigProbe == null)
-        sigProbe = sigRdd.mapPartitions({ it =>
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (it.hasNext) buf += it.next()._1
-          val arr = buf.toArray
-          java.util.Arrays.sort(arr)
-          Iterator.single(arr)
-        }, preservesPartitioning = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sigProbe
-    }
-    def resetSigProbe(): Unit = {
-      if (sigProbe != null) { try sigProbe.unpersist(false) catch { case _: Throwable => } }
-      sigProbe = null
-      sigDeltaRdd = spark.sparkContext.emptyRDD[(Long, Boolean)].partitionBy(seenPartitioner)
-    }
-    // persisted signature deltas (released at compaction)
-    var sigDeltaCaches = Vector.empty[org.apache.spark.rdd.RDD[(Long, Boolean)]]
-    // persisted admitted sets backing the lazy seen deltas (released at
-    // compaction)
-    var admittedCaches = Vector.empty[Dataset[FrontierEntry]]
-    // per-epoch page-delta sink (A7): parquet under a crawl-scoped temp dir
-    // (a real deployment points this at the output table's location);
-    // deleted on JVM exit
-    val pagesSink = CrawlEngine.tempSink("graft-pages-")
-    // blocked-row side sink (B11 parity): same per-epoch-delta/one-relation
-    // pattern as the page sink — blocked URLs are data-scale on a robots-
-    // heavy crawl, so they must never accumulate on the driver. The small
-    // path's rows (bounded per epoch by the threshold) buffer driver-side
-    // and spill to the sink past a fixed cap; distributed epochs write
-    // deltas directly.
-    lazy val blockedSink = CrawlEngine.tempSink("graft-blocked-")
-    var blockedWritten = false
-    var blockedDeltaN = 0
-    val blockedBuf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    def sinkBlockedDelta(df: DataFrame, tag: String): Long = {
-      blockedDeltaN += 1
-      // the count rides the write as an observed metric: no read-back job
-      val rows = org.apache.spark.sql.Observation(s"blocked_$blockedDeltaN")
-      df.observe(rows, count(lit(1)).as("rows"))
-        .write.mode("overwrite").parquet(s"$blockedSink/delta_${blockedDeltaN}_$tag")
-      blockedWritten = true
-      rows.get("rows").asInstanceOf[Long]
-    }
-    def flushBlockedBuf(): Unit = if (blockedBuf.nonEmpty) {
-      import spark.implicits._
-      blockedDeltaN += 1
-      blockedBuf.toSeq.toDF("url", "reason", "epoch")
-        .coalesce(1).write.mode("overwrite").parquet(s"$blockedSink/delta_${blockedDeltaN}_buf")
-      blockedWritten = true
-      blockedBuf.clear()
-    }
-    // a driver-held table: its plan is a LocalRelation, which a snapshot
-    // commit writes on the driver with no Spark job
-    def localFrame(rows: Iterable[Row], schema: org.apache.spark.sql.types.StructType): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.toSeq.asJava, schema)
-    }
-    // the sink's deltas ∪ the buffer as a driver-held table: no job
-    def blockedDf: DataFrame = {
-      val buffered = localFrame(blockedBuf.map { case (u, r, e) => Row(u, r, e) }, CrawlEngine.blockedSchema)
-      if (!blockedWritten) buffered
-      else spark.read.schema(CrawlEngine.blockedSchema)
-        .option("recursiveFileLookup", "true").parquet(blockedSink).unionByName(buffered)
-    }
-    val seenSchema = Checkpointer.schemas("seen")
-    def seen: DataFrame =
-      spark.createDataFrame(seenRdd.map(kv => Row(kv._1, kv._2)), seenSchema)
-    val sigSchema = Checkpointer.schemas("signatures")
-    def signatures: DataFrame =
-      spark.createDataFrame(sigRdd.map(kv => Row(kv._1)), sigSchema)
-    def emptyPages: DataFrame = localFrame(Nil, Checkpointer.schemas("pages"))
-    // Page deltas land in the sink under one generation directory per
-    // snapshot: `g<n>` holds the deltas written since the last commit (read
-    // as ONE relation — never a per-epoch union: a thousand-epoch crawl
-    // would otherwise build a thousand-way union plan whose canonicalization
-    // alone OOMs the driver). A commit writes only these and the buffer into
-    // the snapshot's pages delta; the view then reads the committed chain
-    // in their place, and later deltas go to the next generation.
-    var sinkGen = 0
-    var genWritten = false
-    def genDir: String = s"$pagesSink/g$sinkGen"
-    // the committed part of the pages view: a snapshot chain (the last
-    // commit, or the restored snapshot of this checkpoint directory), and
-    // pages restored from another directory that the next commit must carry
-    var committedPages: Option[(Checkpointer, Long)] = None
-    var carriedPages: Option[DataFrame] = None
-    // every page delta lands here. Deltas are transient working state (read
-    // back once, column-pruned): no codec — on node-local disk the
-    // compression CPU costs more than the bytes it saves — and no
-    // dictionary encoding, whose page builds cost more than the write
-    def writePageDelta(ds: Dataset[ParsedPage], name: String): String = {
-      val dir = s"$genDir/$name"
-      ds.write.option("compression", "none")
-        .option("parquet.enable.dictionary", "false")
-        .parquet(dir)
-      genWritten = true
-      dir
-    }
-    // Small-epoch page-delta buffer: tiny epochs append their parsed pages
-    // here and flush to ONE parquet delta per `pageBufCap` rows or
-    // `pageBufBytes` of span strings, whichever comes first, instead of
-    // paying a Spark write job per epoch (a toy crawl of 40 epochs paid 40
-    // jobs for a few hundred rows total). A snapshot commit writes the
-    // buffer straight into its pages delta; `epoch` rides in the rows, so
-    // multi-epoch deltas are exact.
-    val pageBuf = scala.collection.mutable.ArrayBuffer.empty[ParsedPage]
-    var pageBufN = 0
-    var pageBufSpanBytes = 0L
-    def flushPageBuf(): Unit = if (pageBuf.nonEmpty) {
-      pageBufN += 1
-      writePageDelta(spark.createDataset(pageBuf.toIndexedSeq).coalesce(1), s"buf_$pageBufN")
-      pageBuf.clear()
-      pageBufSpanBytes = 0L
-    }
-    val pageCols = Seq(col("url"), col("final_url"), col("host"), col("depth"),
-      col("discovery_seq"), col("epoch"), col("status"), col("signature"),
-      col("title"), col("description"), col("og_image"), col("charset"),
-      col("etag"), col("spans"))
-    // this generation's sink deltas as pages: retried attempts dropped
-    def genPages: Option[DataFrame] = if (!genWritten) None else {
-      val retriedCol = retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts
-      Some(spark.read.schema(CrawlEngine.parsedSchema)
-        .option("recursiveFileLookup", "true").parquet(genDir)
-        .filter(!retriedCol).select(pageCols: _*))
-    }
-    // the buffer as pages, a driver-held table: retried attempts dropped
-    def bufferedPages: Option[DataFrame] =
-      if (pageBuf.isEmpty) None
-      else Some(localFrame(pageBuf
-        .filterNot(p => retry.isRetryableStatus(p.status) && p.attempt < retry.maxAttempts)
-        .map(p => Row(p.url, p.final_url, p.host, p.depth, p.discovery_seq, p.epoch,
-          p.status, p.signature, p.title, p.description, p.og_image, p.charset, p.etag,
-          if (p.spans == null) null
-          else p.spans.toSeq.map(sp => Row(sp.kind, sp.text, sp.media_ref, sp.offset)))),
-        Checkpointer.schemas("pages")))
-    // the pages view: committed chain ∪ carried pages ∪ this generation's
-    // deltas ∪ the buffer. Reading it runs no job: the buffer is flushed
-    // only on its caps
-    def pages: DataFrame =
-      (committedPages.map { case (ck, e) => ck.readTable(e, "pages") }.toSeq ++
-        carriedPages ++ genPages ++ bufferedPages).reduceOption(_.unionByName(_)).getOrElse(emptyPages)
-    // what the next snapshot's pages delta holds: the pages since the last
-    // commit. The buffer alone stays a driver-held table (no job); sink
-    // deltas or carried pages make it one Spark write
-    def pagesDelta: DataFrame =
-      (carriedPages.toSeq ++ genPages ++ bufferedPages).reduceOption(_.unionByName(_))
-        .getOrElse(emptyPages)
-    var seenCount = 0L
+    // the two co-partitioned stores: one partitioner, so a combine through
+    // it feeds either store's probe with no further shuffle
+    private val partitioner = new org.apache.spark.HashPartitioner(math.max(P, 16))
+    private val sigs = new KeyStore[Long, Boolean](spark, partitioner,
+      Checkpointer.schemas("signatures"), kv => Row(kv._1))
+    private val seen = new KeyStore[String, String](spark, partitioner,
+      Checkpointer.schemas("seen"), kv => Row(kv._1, kv._2), follower = Some(sigs))
+    private val pages = new PageSink(spark, retry)
+    private val blocked = new BlockedSink(spark)
+
     // per-host token buckets, driver-held in an access-ordered LRU map
     // capped at 100k hosts — the reference holds its per-domain limiter
     // buckets exactly this way (`rate_limiter.rs` MAX_ENTRIES); an evicted
     // host re-creates a fresh full bucket, like an evicted DashMap entry.
-    // Round 2 kept this as a DataFrame rolled forward with a
-    // localCheckpoint per epoch — a full driver job + broadcast exchange
-    // for what is a bounded driver-side ledger.
-    val hostTokensMap = lruMap[Long]()
-    def hostTokensDf(): DataFrame =
-      localFrame(hostTokensMap.map { case (h, t) => Row(h, t) }, Checkpointer.schemas("host_tokens"))
+    // The reactive politeness state (429/Retry-After delay overrides,
+    // latency EMAs) is LRU-capped the same way.
+    private val hostTokens = lruMap[Long]()
+    private val throttleOverrideMs = lruMap[Long]()
+    private val latencyEma = lruMap[Double]()
+
     var epoch = 0L
-    // a phase of the current epoch
-    def timed[T](label: String)(f: => T): T = phase(epoch, label)(f)
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
+    private val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
+    // D4 salt widths for the next epoch's fetch exchange (see withAdmitStats)
+    private var hotHostWidths: Map[String, Int] = Map.empty
+    // caches one distributed epoch holds until its next frontier is taken
+    private var epochCaches = List.empty[() => Unit]
 
-    def mergeBloomParts(parts: Array[Array[Byte]]): Unit = {
-      if (parts.isEmpty) return
-      val merged = BloomFilter.readFrom(new java.io.ByteArrayInputStream(parts.head))
-      parts.tail.foreach { bytes =>
-        merged.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      merged.writeTo(bos)
-      blooms :+= bos.toByteArray
-    }
-
-    // Fused admit statistics: the fetch exchange's OWN map-side scan feeds
-    // a per-task (count, bloom shard, locally-hot hosts) accumulator entry
-    // — rounds 1-3 paid a DEDICATED job here (one extra full scan of the
-    // admitted set per epoch, which also forced the columnar cache build
-    // ahead of fetch; verdict r3 flagged it as a negative-scaling phase).
-    // Tasks may re-execute (fetcher-side re-evaluation, speculation, AQE):
-    // entries carry their partition id and the driver keeps ONE per
-    // partition; bloom inserts are idempotent set-unions anyway. Bloom
-    // sizing uses the candidate-count upper bound (>= admitted count) so
-    // shards stay merge-compatible without a pre-count; keys are
-    // UTF8String lowercase — bit-identical to the Spark `lower()` the
-    // probe side applies, read zero-copy off the UnsafeRow.
-    // D4 skew: a host holding share s of the epoch's admitted rows gets a
-    // salt width ~4sP (min 16 preserves cold-host affinity for connection
-    // reuse at the fetch seam). Since the stats now ride the fetch scan,
-    // the widths steer the NEXT epoch's salting — hot hosts persist
-    // across steady-state epochs (the skew bench pins this holds).
-    // Hosts are emitted from a partition only when locally hot (>= 1/8 of
-    // the partition), so the accumulated map stays tiny at any host
-    // cardinality.
-    var hotHostWidths: Map[String, Int] = Map.empty
-    def saltWidths(hostCounts: Iterable[(String, Long)], total: Long): Map[String, Int] =
-      if (total <= 0) Map.empty
-      else {
-        val pNow = P
-        CrawlEngine.topHotHosts(hostCounts
-          .map { case (h, c) => (h, math.ceil(c.toDouble / total * 4 * pNow).toInt) }
-          .filter(_._2 > 16))
-      }
-    type AdmitStat = (Int, Long, Array[Byte], Array[(String, Long)])
-    // partition count of the stats map stage — drainAdmitStats compares the
-    // flushed entries against it to DETECT a Fetcher that violated the
-    // full-consumption contract (see the Fetcher trait doc): a missing
-    // shard would let already-seen URLs pass the bloom as definitely-new
-    // and bypass the exact probe, so detection falls back to a dedicated
-    // rebuild scan of the persisted admitted set.
-    var admitStatsParts = 0
-    def withAdmitStats(df: DataFrame, expectedUpper: Long,
-        acc: org.apache.spark.util.CollectionAccumulator[AdmitStat]): DataFrame = {
-      val size = math.max(1024L, expectedUpper)
-      val urlIdx = df.schema.fieldIndex("url")
-      val hostIdx = df.schema.fieldIndex("host")
-      // same lazy toRdd the mapInternal below wraps — no extra planning
-      admitStatsParts =
-        org.apache.spark.sql.GraftSqlBridge.internalRdd(df).getNumPartitions
-      org.apache.spark.sql.GraftSqlBridge.mapInternal(df, df.schema) { (_, it) =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        // rebind captures as lambda-body locals: Spark's ClosureCleaner
-        // zeroes captured fields it only sees referenced from the nested
-        // anonymous class (a captured `size` arrives as 0 without this)
-        val sz = size; val ui = urlIdx; val hi = hostIdx; val a = acc
-        new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-          private var bloom: BloomFilter = null
-          private val hostCounts = new java.util.HashMap[String, Long]()
-          private var n = 0L
-          private var flushed = false
-          override def hasNext: Boolean = {
-            val h = it.hasNext
-            if (!h && !flushed) {
-              flushed = true
-              // empty partitions flush too (null shard): the drain counts
-              // flushed pids against the stage's partition count to detect
-              // partial consumption, so every EXHAUSTED partition must
-              // report — a partition abandoned mid-iteration never gets
-              // here, which is exactly the signal
-              val shard: Array[Byte] = if (n == 0) null else {
-                val bos = new java.io.ByteArrayOutputStream()
-                bloom.writeTo(bos)
-                bos.toByteArray
-              }
-              import scala.jdk.CollectionConverters._
-              val hot = hostCounts.asScala
-                .filter { case (_, c) => c * 8 >= n && c >= 32 }.toArray
-              a.add((pid, n, shard, hot))
-            }
-            h
-          }
-          override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-            val r = it.next()
-            if (bloom == null) bloom = BloomFilter.create(sz, 0.01)
-            bloom.putBinary(r.getUTF8String(ui).toLowerCase.getBytes)
-            hostCounts.merge(r.getUTF8String(hi).toString, 1L, (x, y) => x + y)
-            n += 1
-            r
-          }
-        }
-      }
-    }
-    def drainAdmitStats(
-        acc: org.apache.spark.util.CollectionAccumulator[AdmitStat],
-        admittedDs: Dataset[FrontierEntry], expectedUpper: Long): Long = {
-      import scala.jdk.CollectionConverters._
-      val seenPids = new java.util.HashSet[Int]()
-      var uniqParts = acc.value.asScala.filter(e => seenPids.add(e._1)).toVector
-      if (uniqParts.size < admitStatsParts) {
-        // Fetcher contract violation (the fetch never fully executed the
-        // admitted scan — sampled, limited, or served from a detached
-        // plan): the ride-along stats are incomplete, and a missing bloom
-        // shard would silently re-admit already-seen URLs next epoch.
-        // Self-heal with a dedicated rebuild scan of the PERSISTED
-        // admitted set (one extra job, only on violating epochs) and use
-        // its shards/counts exclusively.
-        log.warn(s"epoch $epoch: admit stats incomplete " +
-          s"(${uniqParts.size}/$admitStatsParts partitions reported) — " +
-          "the Fetcher did not fully consume the admitted set; rebuilding " +
-          "bloom/count/salt stats with a dedicated scan")
-        val size = math.max(1024L, expectedUpper)
-        uniqParts = admittedDs.mapPartitions { it =>
-          val bloom = BloomFilter.create(size, 0.01)
-          val hostCounts = new java.util.HashMap[String, Long]()
-          var n = 0L
-          it.foreach { e =>
-            bloom.putBinary(org.apache.spark.unsafe.types.UTF8String
-              .fromString(e.url).toLowerCase.getBytes)
-            hostCounts.merge(e.host, 1L, (x, y) => x + y)
-            n += 1
-          }
-          if (n == 0) Iterator.empty
-          else {
-            val bos = new java.io.ByteArrayOutputStream()
-            bloom.writeTo(bos)
-            val hot = hostCounts.asScala
-              .filter { case (_, c) => c * 8 >= n && c >= 32 }.toArray
-            Iterator.single((org.apache.spark.TaskContext.getPartitionId(),
-              n, bos.toByteArray, hot))
-          }
-        }(org.apache.spark.sql.Encoders.kryo[AdmitStat]).collect().toVector
-      }
-      mergeBloomParts(uniqParts.iterator.map(_._3).filter(_ != null).toArray)
-      val total = uniqParts.iterator.map(_._2).sum
-      hotHostWidths = saltWidths(uniqParts.iterator.flatMap(_._4).toSeq.groupBy(_._1)
-        .map { case (h, cs) => (h, cs.map(_._2).sum) }, total)
-      total
-    }
-
-    // resume/compaction path: rebuild one bloom from the seen store (a
-    // distributed scan — each partition builds its shard, driver ORs them)
-    def bloomFromSeen(urlLower: org.apache.spark.rdd.RDD[String], expected: Long): Unit = {
-      if (expected <= 0) return
-      val size = math.max(1024L, expected)
-      val parts = urlLower.mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val b = BloomFilter.create(size, 0.01)
-          it.foreach(u => b.putBinary(org.apache.spark.unsafe.types.UTF8String.fromString(u).getBytes))
-          val bos = new java.io.ByteArrayOutputStream()
-          b.writeTo(bos)
-          Iterator.single(bos.toByteArray)
-        }
-      }.collect()
-      mergeBloomParts(parts)
-    }
-    // the same bloom built on the driver, from keys the driver holds
-    def bloomFromLocal(urlLower: Iterable[String], expected: Long): Unit =
-      if (urlLower.nonEmpty) {
-        val b = BloomFilter.create(math.max(1024L, expected), 0.01)
-        urlLower.foreach(u => b.putBinary(u.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        val bos = new java.io.ByteArrayOutputStream()
-        b.writeTo(bos)
-        blooms :+= bos.toByteArray
-      }
-
-    // ------------------------------------------------------------------
-    // Small-epoch fast path state: while every epoch stays under
-    // `smallEpochThreshold` candidates, the WHOLE driver-side epoch (gates,
-    // politeness, budget, fetch, parse, links, frontier roll) runs as the
-    // Sequential step — the same code the differential oracle runs — and
-    // only the stores, the page sink and a non-local fetch touch Spark. The
-    // frontier lives in `frontierLocal`; driver mirrors of the
-    // seen/signature membership make the gate job-free. A distributed epoch
-    // (candCount over the threshold) materializes the frontier, drops the
-    // mirrors for the rest of the call, and every later epoch runs the
-    // distributed path; a resumed call picks its path afresh (see
-    // `smallFits`). At toy scale (the reference's own test crawls) an epoch
-    // otherwise pays ~10 driver round-trips for <=dozens of rows of work.
-    // ------------------------------------------------------------------
+    // Small-epoch fast path: while every epoch stays under
+    // `smallEpochThreshold` candidates, the WHOLE epoch runs as the
+    // Sequential step — the code the differential oracle runs — on the
+    // frontier the driver holds (`frontierLocal`), with the stores' mirrors
+    // for a job-free gate; only the stores, the sinks and a non-local fetch
+    // touch Spark. The first distributed epoch drops the mirrors for the
+    // rest of the call; a resumed call picks its path afresh (`smallFits`).
     var frontierLocal: Option[Vector[FrontierEntry]] = None
-    // seen mirror: url_lower -> url, the seen table's rows, so a snapshot
-    // writes the table from it
-    var driverSeen: java.util.HashMap[String, String] = new java.util.HashMap[String, String]()
-    var driverSigs: java.util.HashSet[java.lang.Long] = new java.util.HashSet[java.lang.Long]()
-    def dropMirrors(): Unit = { driverSeen = null; driverSigs = null }
-    val gate = new Sequential.Gate(config, robots)
-    // The path rule, one for a fresh start, every epoch and a restore: the
-    // frontier stays on the driver while the threshold is on and the rows
-    // at hand (seeds, an epoch's candidates, a restored frontier) fit under
-    // it; the membership mirrors stay while the seen set fits mirrorCap
-    def smallFits(rows: Long): Boolean =
-      config.smallEpochThreshold > 0 && rows <= config.smallEpochThreshold
-    def mirrorsFit(seenRows: Long): Boolean = seenRows <= CrawlEngine.mirrorCap
+    private val gate = new Sequential.Gate(config, robots)
     // seeds are gated by is_allowed_default only (lists + robots, no budget)
-    val seeds = start.frontier.filter(gate.default)
-    def frontierFrame(v: Seq[FrontierEntry]): DataFrame =
-      localFrame(v.map(e => Row(e.url, e.host, e.depth, e.discovery_seq,
-        e.priority, e.attempt, e.not_before)), Checkpointer.schemas("frontier"))
-    var frontier: DataFrame = frontierFrame(Nil) // unused while local
+    private val seeds = start.frontier.filter(gate.default)
+    private var frontier: DataFrame = frontierFrame(Nil) // unused while local
     if (smallFits(start.frontier.size)) frontierLocal = Some(seeds)
     else {
-      dropMirrors()
+      seen.dropMirror()
       frontier = frontierFrame(seeds)
     }
-    def frontierDf: DataFrame = frontierLocal.fold(frontier)(frontierFrame)
-    // a distributed frontier read from a snapshot: sized by a histogram job
-    var restoredFrontier = false
-
-    val canonicalOrder = Seq(col("depth"), col("discovery_seq"), col("host"), col("url"))
-
-    // --- resume: restore all loop state from the latest committed snapshot
-    // (north rule: resumable from checkpoint with per-partition lineage) ---
-    // a fresh crawl starts a new snapshot chain; a restore below continues
-    // the restored one
-    checkpoint.foreach(_.startChain(-1))
-    resumeFrom.foreach { ck =>
-      val e = ck.latestEpoch()
-      if (e >= 0) {
-        val m = ck.readManifest(e)
-        // the manifest's lineage sizes every table, so choosing the path
-        // runs no job; the snapshot is immutable, so the stores are read
-        // lazily, and the tables kept on the driver are read there
-        val rowsOf = Checkpointer.lineageRows(m)
-        seenCount = rowsOf("seen")
-        blooms = Vector.empty
-        // same path rule as a fresh start: a small frontier comes back to
-        // the driver, and with it the mirrors and the bloom when the seen
-        // set fits them
-        if (smallFits(rowsOf("frontier")))
-          frontierLocal = Some(ck.readLocal(e, "frontier").map(r => FrontierEntry(r.getString(0),
-            r.getString(1), r.getInt(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getLong(6))))
-        else {
-          frontierLocal = None
-          frontier = ck.readTable(e, "frontier")
-          restoredFrontier = true
-        }
-        // the co-partitioned stores: from the rows the driver reads for the
-        // mirrors, else lazily from the snapshot
-        def restoreStores(seenKv: org.apache.spark.rdd.RDD[(String, String)],
-            sigKv: org.apache.spark.rdd.RDD[(Long, Boolean)]): Unit = {
-          seenRdd = seenKv.partitionBy(seenPartitioner)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          seenBase = Some(seenRdd)
-          sigRdd = sigKv.partitionBy(seenPartitioner)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          sigBase = Some(sigRdd)
-        }
-        if (frontierLocal.isDefined && mirrorsFit(seenCount)) {
-          val seenKv = ck.readLocal(e, "seen").map(r => (r.getString(0), r.getString(1)))
-          val sigs = ck.readLocal(e, "signatures").map(_.getLong(0))
-          driverSeen = new java.util.HashMap[String, String](seenKv.size * 2)
-          seenKv.foreach(kv => driverSeen.put(kv._1, kv._2))
-          driverSigs = new java.util.HashSet[java.lang.Long]()
-          sigs.foreach(x => driverSigs.add(Long.box(x)))
-          restoreStores(spark.sparkContext.parallelize(seenKv),
-            spark.sparkContext.parallelize(sigs.map((_, true))))
-          bloomFromLocal(seenKv.map(_._1), seenCount)
-        } else {
-          dropMirrors()
-          restoreStores(
-            ck.readTable(e, "seen").rdd.map(r => (r.getString(0), r.getString(1))),
-            ck.readTable(e, "signatures").rdd.map(r => (r.getLong(0), true)))
-          bloomFromSeen(seenRdd.map(_._1), seenCount)
-        }
-        // the restored pages chain: continued when this crawl commits to the
-        // same directory, else carried into its first commit
-        if (checkpoint.exists(_.root == ck.root)) {
-          committedPages = Some((ck, e))
-          checkpoint.foreach(_.startChain(e))
-        } else carriedPages = Some(ck.readTable(e, "pages"))
-        ck.readLocal(e, "host_tokens").foreach(r => hostTokensMap(r.getString(0)) = r.getLong(1))
-        // chain lineage: a kill during the sitemap chain resumes mid-chain
-        // (chain rules re-arm from the manifest's sitemap-doc set; parsed
-        // as JSON quoted strings — URLs may contain ',' and ']')
-        val (ckChainStarted, ckChainSms) = Checkpointer.chainState(m)
-        ledger = ledger.copy(
-          seqCounter = Checkpointer.longField(m, "seq_counter").getOrElse(ledger.seqCounter),
-          wildcardRemaining =
-            Checkpointer.longField(m, "wildcard_remaining").getOrElse(ledger.wildcardRemaining),
-          pathBudget = Checkpointer.pathBudget(m),
-          scope = Checkpointer.strField(m, "redirect_host").filter(_.nonEmpty)
-            .fold(ledger.scope)(rh => ledger.scope.copy(redirectHost = rh)),
-          chainStarted = ledger.chainStarted || ckChainStarted,
-          chainSitemaps = if (ckChainStarted) ledger.chainSitemaps ++ ckChainSms else ledger.chainSitemaps,
-          // pre-chain rel=sitemap discoveries: restore in manifest order
-          // (insertion order) so the chain seeds' injection order — and the
-          // sitemap docs' discovery_seq — match the unkilled run exactly
-          discoveredSitemaps = Checkpointer.discoveredSitemaps(m)
-            .foldLeft(ledger.discoveredSitemaps) { (acc, u) =>
-              val k = UrlOps.lowerUtf8(u)
-              if (acc.contains(k)) acc else acc.updated(k, u)
-            })
-        epoch = e + 1
-      }
-    }
-
-    // --- epoch loop ---
-    // fast paths, all statically known from config:
-    //  - holdsPossible: politeness/retries may set not_before holds — only
-    //    then does the ready split + count need a job
-    //  - carryover: any stream besides new links can re-enter the frontier
-    //    (holds, politeness deferrals, budget leftovers, retries) — only
-    //    then does the end-of-epoch union need a dedup window; otherwise the
-    //    next frontier IS the (already unique) new-link set
-    val politenessPossible = config.delayMs > 0 || config.respectRobotsTxt ||
-      config.maxPerHostPerEpoch != Int.MaxValue
-    val holdsPossible = politenessPossible || retry.maxAttempts > 0
-    val carryover = holdsPossible || config.wildCardBudgeting || (config.budget - "*").nonEmpty
-    // reactive per-host politeness state (LRU-capped like the reference's
-    // DashMap limiters): 429/Retry-After delay overrides + latency EMAs
-    val throttleOverrideMs = lruMap[Long]()
-    val latencyEma = lruMap[Double]()
-    /** ONE broadcast row per host carrying ALL driver-ledger politeness
-      * state (reactive delay override ∨ auto-throttle EMA delay, and the
-      * banked token bucket) — a single join in the gate instead of two.
-      */
-    def politenessStateDf(): DataFrame = {
-      val hosts = (throttleOverrideMs.keySet ++ latencyEma.keySet ++ hostTokensMap.keySet).toSeq
-      val rows = hosts.map { h =>
-        val ov = Sequential.reactiveOverrideMs(config,
-          throttleOverrideMs.getOrElse(h, 0L), latencyEma.get(h))
-        (h, ov, hostTokensMap.getOrElse(h, 1000L))
-      }
-      if (rows.isEmpty)
-        spark.emptyDataset[(String, Long, Long)].toDF("host", "override_ms", "tokens_milli")
-      else spark.createDataset(rows).toDF("host", "override_ms", "tokens_milli")
-    }
-    // driver-side not_before histogram of the frontier, refreshed by the
-    // SAME job that counts it: per-epoch readiness (`candCount`) then needs
-    // NO job at all — a politeness-paced crawl's empty ticks (hosts banking
+    private def frontierDf: DataFrame = frontierLocal.fold(frontier)(frontierFrame)
+    // driver-side not_before histogram of a distributed frontier, refreshed
+    // by the SAME job that counts it: per-epoch readiness then needs NO job
+    // at all — a politeness-paced crawl's empty ticks (hosts banking
     // fractional tokens) advance logical time for free
-    def histOf(df: DataFrame): Map[Long, Long] = timed("frontier_hist")(
+    private var readyHist: Map[Long, Long] =
+      if (frontierLocal.nonEmpty) Map.empty else CrawlEngine.histLocal(seeds)
+    var done: Boolean = frontierLocal.map(_.size.toLong).getOrElse(readyHist.values.sum) == 0
+
+    // fetch through the seam: driver-local when the fetcher offers it
+    // (identical per-row semantics by the Fetcher contract), else one job
+    private val step = new Sequential.Step(config, robots, gate, start.depthDistance, retry, sitemapChain,
+      onShouldCrawl, onLinkFind, seen, sigs,
+      es => fetcher.fetchLocal(es)
+        .getOrElse(fetcher.fetch(spark, spark.createDataset(es)).collect().toSeq),
+      Sequential.HostState(hostTokens, throttleOverrideMs, latencyEma))
+
+    // a phase of the current epoch
+    private def timed[T](label: String)(f: => T): T = phase(epoch, label)(f)
+
+    /** Candidates whose politeness/retry holdoff has passed. */
+    def readyCount: Long = frontierLocal match {
+      case Some(v) => if (holdsPossible) v.count(_.not_before <= epoch).toLong else v.size.toLong
+      case None =>
+        if (holdsPossible) readyHist.iterator.filter(_._1 <= epoch).map(_._2).sum
+        else readyHist.values.sum
+    }
+
+    private def histOf(df: DataFrame): Map[Long, Long] = timed("frontier_hist")(
       df.groupBy(col("not_before")).agg(count(lit(1)).as("n")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap)
-    def histLocal(v: Vector[FrontierEntry]): Map[Long, Long] =
-      v.groupBy(_.not_before).map { case (nb, es) => (nb, es.size.toLong) }
-    var readyHist: Map[Long, Long] =
-      if (frontierLocal.nonEmpty) Map.empty
-      else if (restoredFrontier) histOf(frontier) else histLocal(seeds)
-    var frontierCountPrev = frontierLocal.map(_.size.toLong).getOrElse(readyHist.values.sum)
-    var done = frontierCountPrev == 0
-    var epochCache: Option[DataFrame] = None // politeness rank cache, per epoch
 
-    // The store-probe kernels: keyed candidates shuffle to the store's
-    // partitions (no shuffle when they are partitioned so already, as a
-    // combine through `seenPartitioner` leaves them), where the persisted
-    // sorted-array snapshot (binary search) plus a hash set of the
-    // since-snapshot delta answer membership; a candidate is kept when its
-    // key's presence equals `keepPresent`. The result keeps the store's
-    // partitioning. Payloads are whatever the caller shuffles.
-    def probeSeen[V: scala.reflect.ClassTag](cands: org.apache.spark.rdd.RDD[(String, V)],
-        keepPresent: Boolean): org.apache.spark.rdd.RDD[(String, V)] =
-      cands.partitionBy(seenPartitioner)
-        .zipPartitions(seenProbeRdd(), seenDeltaRdd, preservesPartitioning = true) { (cit, pit, dit) =>
-          val keep = keepPresent
-          val base: Array[AnyRef] =
-            if (pit.hasNext) pit.next().asInstanceOf[Array[AnyRef]] else new Array[AnyRef](0)
-          var delta: java.util.HashSet[String] = null
-          while (dit.hasNext) {
-            if (delta == null) delta = new java.util.HashSet[String]()
-            delta.add(dit.next()._1)
-          }
-          cit.filter { case (k, _) =>
-            (java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(k))) == keep }
-        }
-    def probeSigs[V: scala.reflect.ClassTag](cands: org.apache.spark.rdd.RDD[(Long, V)],
-        keepPresent: Boolean): org.apache.spark.rdd.RDD[(Long, V)] =
-      cands.partitionBy(seenPartitioner)
-        .zipPartitions(sigProbeRdd(), sigDeltaRdd, preservesPartitioning = true) { (cit, pit, dit) =>
-          val keep = keepPresent
-          val base = if (pit.hasNext) pit.next() else Array.emptyLongArray
-          var delta: java.util.HashSet[java.lang.Long] = null
-          while (dit.hasNext) {
-            if (delta == null) delta = new java.util.HashSet[java.lang.Long]()
-            delta.add(Long.box(dit.next()._1))
-          }
-          cit.filter { case (k, _) =>
-            (java.util.Arrays.binarySearch(base, k) >= 0 ||
-              (delta != null && delta.contains(Long.box(k)))) == keep }
-        }
-    // tiny-epoch membership against the distributed stores — the
-    // mirror-dropped fallback: ONE job over <= threshold keys
-    def seenPresent(keys: Iterable[String]): Set[String] =
-      if (keys.isEmpty) Set.empty
-      else probeSeen(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, ())),
-        keepPresent = true).keys.collect().toSet
-    def sigsPresent(keys: Iterable[Long]): Set[Long] =
-      if (keys.isEmpty) Set.empty
-      else probeSigs(spark.sparkContext.parallelize(keys.toSeq, 1).map(k => (k, ())),
-        keepPresent = true).keys.collect().toSet
-
-    // discovery_seq for new links past the threshold: range-partitioned in
-    // link order (the partitioner's sample job), each range counted over the
-    // sorted ranges, persisted (one job), and the offsets stamped in place;
-    // the frontier's checkpoint reads the ranges back
-    var rangeCache: Option[org.apache.spark.rdd.RDD[CrawlEngine.LinkRef]] = None
-    def rangeSeq(links: org.apache.spark.rdd.RDD[CrawlEngine.LinkRef], offset: Long): DataFrame = {
-      val keyed = links.map(t => (t, ()))
-      val ord = Sequential.linkOrder
-      val sorted = new org.apache.spark.rdd.ShuffledRDD[CrawlEngine.LinkRef, Unit, Unit](keyed,
-          new org.apache.spark.RangePartitioner(math.max(1, math.min(P, 200)), keyed)(ord,
-            implicitly[scala.reflect.ClassTag[CrawlEngine.LinkRef]]))
-        .setKeyOrdering(ord).keys
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rangeCache = Some(sorted)
-      val offsets = sorted.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
-        .scanLeft(offset)(_ + _)
-      org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-        sorted.mapPartitionsWithIndex { (i, it) =>
-          var k = offsets(i) - 1
-          it.map { case (pd, _, _, u) => k += 1; CrawlEngine.frontierRow(u, pd + 1, k) }
-        }, Checkpointer.schemas("frontier"))
+    private def endEpoch(frontierCount: => Long): Unit = {
+      epoch += 1
+      onEpoch.foreach(f => f(epoch - 1))
+      done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
+        shutdownRequested || System.nanoTime() > deadline
     }
 
-    // state hygiene for long crawls: every k epochs fold the
-    // co-partitioned delta chains flat (localCheckpoint — distributed,
-    // partitioner preserved, no driver funnel), refresh the probe
-    // snapshots, and rebuild the bloom group only when its generation
-    // count exceeds the documented FP bound — per-epoch gate cost stays
-    // flat over thousands of epochs while compaction itself is O(delta)
-    // for most windows
-    def compactStores(): Unit = {
-      timed("seen_compact") {
-        val c = seenRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.localCheckpoint()
-        c.count()
-        seenBase.foreach(b => try b.unpersist(false) catch { case _: Throwable => })
-        seenBase = Some(c)
-        seenRdd = c
-        seenRddEpochs = 0
+    /** Nothing ready this tick — advance logical time only. */
+    def idle(): Unit = endEpoch(if (frontierLocal.map(_.isEmpty).getOrElse(frontier.isEmpty)) 0 else 1)
+
+    /** Resume: restores all loop state from the latest committed snapshot
+      * (north rule: resumable from checkpoint with per-partition lineage).
+      * The manifest's lineage sizes every table, so choosing the path runs
+      * no job; the snapshot is immutable, so the stores are read lazily, and
+      * the tables kept on the driver are read there.
+      */
+    def restore(ck: Checkpointer): Unit = {
+      val e = ck.latestEpoch()
+      if (e < 0) return
+      val m = ck.readManifest(e)
+      val rowsOf = Checkpointer.lineageRows(m)
+      // same path rule as a fresh start: a small frontier comes back to the
+      // driver, and with it the mirrors and the bloom when the seen set fits
+      // them
+      if (smallFits(rowsOf("frontier")))
+        frontierLocal = Some(ck.readLocal(e, "frontier").map(r => FrontierEntry(r.getString(0),
+          r.getString(1), r.getInt(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getLong(6))))
+      else {
+        frontierLocal = None
+        frontier = ck.readTable(e, "frontier")
       }
-      // probe snapshot refresh: next gate lazily rebuilds the sorted
-      // per-partition arrays from the compacted store; the delta chain
-      // resets to empty (its keys are in the compacted store now)
-      resetSeenProbe()
-      // generation blooms (round-3 verdict #5): the per-epoch delta
-      // blooms keep serving — the full O(|seen|) rebuild runs only when
-      // the generation count exceeds bloomMaxGenerations (group FP
-      // estimate 1-(1-0.01)^k; a false positive costs one exact-probe
-      // shuffle row, never correctness)
-      if (blooms.size > config.bloomMaxGenerations) {
-        blooms = Vector.empty
-        bloomFromSeen(seenRdd.map(_._1), math.max(1L, seenCount))
-      }
-      admittedCaches.foreach(d => try d.unpersist(false) catch { case _: Throwable => })
-      admittedCaches = Vector.empty
-      if (sigRddEpochs > 0) {
-        timed("sig_compact") {
-          val c = sigRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          c.localCheckpoint()
-          c.count()
-          sigBase.foreach(b => try b.unpersist(false) catch { case _: Throwable => })
-          sigBase = Some(c)
-          sigRdd = c
-          sigRddEpochs = 0
-        }
-        resetSigProbe()
-        sigDeltaCaches.foreach(d => try d.unpersist(false) catch { case _: Throwable => })
-        sigDeltaCaches = Vector.empty
+      val local = frontierLocal.isDefined && rowsOf("seen") <= CrawlEngine.mirrorCap
+      def restoreStore[K: ClassTag, V: ClassTag](store: KeyStore[K, V], name: String)(f: Row => (K, V)) =
+        store.restore(rowsOf.getOrElse(name, 0L), if (local) Some(ck.readLocal(e, name).map(f)) else None,
+          ck.readTable(e, name).rdd.map(f))
+      restoreStore(seen, "seen")(r => (r.getString(0), r.getString(1)))
+      restoreStore(sigs, "signatures")(r => (r.getLong(0), true))
+      seen.rebuildBloom()
+      // the restored pages chain: continued when this crawl commits to the
+      // same directory, else carried into its first commit
+      if (checkpoint.exists(_.root == ck.root)) {
+        pages.committed = Some((ck, e))
+        checkpoint.foreach(_.startChain(e))
+      } else pages.carried = Some(ck.readTable(e, "pages"))
+      ck.readLocal(e, "host_tokens").foreach(r => hostTokens(r.getString(0)) = r.getLong(1))
+      // chain lineage: a kill during the sitemap chain resumes mid-chain
+      // (chain rules re-arm from the manifest's sitemap-doc set; parsed
+      // as JSON quoted strings — URLs may contain ',' and ']')
+      val (ckChainStarted, ckChainSms) = Checkpointer.chainState(m)
+      ledger = ledger.copy(
+        seqCounter = Checkpointer.longField(m, "seq_counter").getOrElse(ledger.seqCounter),
+        wildcardRemaining =
+          Checkpointer.longField(m, "wildcard_remaining").getOrElse(ledger.wildcardRemaining),
+        pathBudget = Checkpointer.pathBudget(m),
+        scope = Checkpointer.strField(m, "redirect_host").filter(_.nonEmpty)
+          .fold(ledger.scope)(rh => ledger.scope.copy(redirectHost = rh)),
+        chainStarted = ledger.chainStarted || ckChainStarted,
+        chainSitemaps = if (ckChainStarted) ledger.chainSitemaps ++ ckChainSms else ledger.chainSitemaps,
+        // pre-chain rel=sitemap discoveries: restore in manifest order
+        // (insertion order) so the chain seeds' injection order — and the
+        // sitemap docs' discovery_seq — match the unkilled run exactly
+        discoveredSitemaps = Checkpointer.discoveredSitemaps(m)
+          .foldLeft(ledger.discoveredSitemaps) { (acc, u) =>
+            val k = UrlOps.lowerUtf8(u)
+            if (acc.contains(k)) acc else acc.updated(k, u)
+          })
+      epoch = e + 1
+      // a distributed frontier read from a snapshot is sized by a histogram job
+      readyHist = if (frontierLocal.nonEmpty) Map.empty else histOf(frontier)
+      done = frontierLocal.map(_.size.toLong).getOrElse(readyHist.values.sum) == 0
+    }
+
+    /** Injected URLs join the frontier, keeping its unique-by-lower(url)
+      * invariant.
+      */
+    def inject(urls: Vector[String]): Unit = {
+      val (injectedV, injectedLedger) = Sequential.inject(urls, ledger)
+      ledger = injectedLedger
+      if (injectedV.nonEmpty) frontierLocal match {
+        case Some(v) => frontierLocal = Some(CrawlEngine.dedupCanonicalMinLocal(v ++ injectedV))
+        case None =>
+          val prev = frontier
+          frontier = timed("inject")(CrawlEngine.dedupCanonicalMin(
+            frontier.unionByName(frontierFrame(injectedV))).localCheckpoint(true))
+          CrawlEngine.releaseCheckpoint(prev)
+          readyHist = histOf(frontier)
       }
     }
 
     // snapshot commit, only on the epochs it is due. The pages go in as the
     // delta since the last commit; afterwards the view reads them from the
     // committed chain, and later sink deltas start a new generation
-    def commitIfDue(frontierT: => DataFrame, seenT: => DataFrame, sigT: => DataFrame): Unit =
-      checkpoint.filter(_.due(epoch)).foreach { ck =>
-        ck.commit(epoch, frontierT, seenT, sigT, hostTokensDf(), pagesDelta, ledger.seqCounter,
-          ledger.wildcardRemaining, ledger.pathBudget, ledger.scope, metrics.toSeq,
-          ledger.chainStarted, ledger.chainSitemaps.toSeq.sorted,
-          ledger.discoveredSitemaps.values.toSeq)
-        committedPages = Some((ck, epoch))
-        carriedPages = None
-        if (genWritten) { sinkGen += 1; genWritten = false }
-        pageBuf.clear()
-        pageBufSpanBytes = 0L
-      }
-
-    // The Sequential step's Spark adapters. Membership answers from the
-    // driver mirrors while they live, else with one probe job against the
-    // store; every add appends a one-partition delta to the co-partitioned
-    // store (and to the mirror, which drops past mirrorCap).
-    val seenStore = new Sequential.Membership[String, String] {
-      def present(keys: Iterable[String]): String => Boolean = {
-        val m = driverSeen
-        if (m != null) m.containsKey else seenPresent(keys)
-      }
-      def add(entries: Seq[(String, String)]): Unit = {
-        if (driverSeen != null) {
-          entries.foreach(kv => driverSeen.put(kv._1, kv._2))
-          if (!mirrorsFit(driverSeen.size)) dropMirrors()
-        }
-        seenCount += entries.size
-        if (entries.nonEmpty) {
-          val d = spark.sparkContext.parallelize(entries, 1).partitionBy(seenPartitioner)
-          seenRdd = spark.sparkContext.union(seenRdd, d)
-          seenDeltaRdd = spark.sparkContext.union(seenDeltaRdd, d)
-          seenRddEpochs += 1
-        }
-      }
+    private def commitIfDue(): Unit = checkpoint.filter(_.due(epoch)).foreach { ck =>
+      ck.commit(epoch, frontierDf, seen.table, sigs.table, CrawlEngine.localFrame(spark,
+          hostTokens.map { case (h, t) => Row(h, t) }, Checkpointer.schemas("host_tokens")),
+        pages.delta, ledger.seqCounter, ledger.wildcardRemaining, ledger.pathBudget, ledger.scope,
+        metrics.toSeq, ledger.chainStarted, ledger.chainSitemaps.toSeq.sorted,
+        ledger.discoveredSitemaps.values.toSeq)
+      pages.committedTo(ck, epoch)
     }
-    val sigStore = new Sequential.Membership[Long, Boolean] {
-      def present(keys: Iterable[Long]): Long => Boolean = {
-        val m = driverSigs
-        if (m != null) k => m.contains(Long.box(k)) else sigsPresent(keys)
-      }
-      def add(entries: Seq[(Long, Boolean)]): Unit = {
-        if (driverSigs != null) entries.foreach(kv => driverSigs.add(Long.box(kv._1)))
-        if (entries.nonEmpty) {
-          val d = spark.sparkContext.parallelize(entries, 1).partitionBy(seenPartitioner)
-          sigRdd = spark.sparkContext.union(sigRdd, d)
-          sigDeltaRdd = spark.sparkContext.union(sigDeltaRdd, d)
-          sigRddEpochs += 1
-        }
-      }
-    }
-    // fetch through the seam: driver-local when the fetcher offers it
-    // (identical per-row semantics by the Fetcher contract), else one job
-    val step = new Sequential.Step(config, robots, gate, depthDistance, retry, sitemapChain,
-      onShouldCrawl, onLinkFind, seenStore, sigStore,
-      es => fetcher.fetchLocal(es)
-        .getOrElse(fetcher.fetch(spark, spark.createDataset(es)).collect().toSeq),
-      Sequential.HostState(hostTokensMap, throttleOverrideMs, latencyEma))
 
-    // ---- full driver-side epoch (see the fast-path comment at the
-    // frontierLocal declaration): the Sequential step, plus the Spark-side
-    // work around it — page and blocked buffers, the bloom delta and salt
-    // hints a later distributed epoch needs, compaction, metrics and the
-    // snapshot. No Spark job with a driver-local fetcher and live mirrors,
-    // bar the snapshot commits.
-    def smallEpoch(all: Vector[FrontierEntry], candCount: Long, epochT0: Long): Unit = {
-      val out = step(all, epoch, ledger)
+    private def compactStores(): Unit = {
+      timed("seen_compact")(seen.compact())
+      if (sigs.appends > 0) timed("sig_compact")(sigs.compact())
+    }
+
+    private def saltWidths(hostCounts: Iterable[(String, Long)], total: Long): Map[String, Int] =
+      if (total <= 0) Map.empty
+      else CrawlEngine.topHotHosts(hostCounts
+        .map { case (h, c) => (h, math.ceil(c.toDouble / total * 4 * P).toInt) }.filter(_._2 > 16))
+
+    /** The full driver-side epoch: the Sequential step, plus the buffers,
+      * the bloom delta and salt hints a later distributed epoch needs,
+      * compaction, metrics and the snapshot. No Spark job with a
+      * driver-local fetcher and live mirrors, bar the snapshot commits.
+      */
+    def smallEpoch(candCount: Long, epochT0: Long): Unit = {
+      val out = step(frontierLocal.get, epoch, ledger)
       ledger = out.ledger
       val admittedCount = out.admitted.size.toLong
       // bloom delta — keeps the broadcast group valid for a later
       // distributed epoch (same 1% FPP sizing rule as the fused builder)
-      bloomFromLocal(out.admitted.map(e => UrlOps.lowerUtf8(e.url)), candCount)
+      seen.bloomFromLocal(out.admitted.map(e => UrlOps.lowerUtf8(e.url)), candCount)
       // D4 salt hints for the NEXT epoch — free here, and crucial at the
       // small->distributed handoff: the first big epoch of a hot-host
       // crawl would otherwise fetch 50% of its rows through the default
@@ -1102,26 +599,14 @@ class CrawlEngine(
       // always lag one epoch)
       hotHostWidths = saltWidths(
         out.admitted.groupBy(_.host).map { case (h, es) => (h, es.size.toLong) }, admittedCount)
-      // A7 page-sink delta, buffered (one write job per pageBufCap rows or
-      // pageBufBytes of span strings, not per epoch); a commit takes the
-      // buffer into its pages delta, a pages-view read flushes it first
-      if (out.pages.nonEmpty) {
-        pageBuf ++= out.pages
-        out.pages.foreach(p => if (p.spans != null) p.spans.foreach { sp =>
-          if (sp.text != null) pageBufSpanBytes += 2L * sp.text.length
-          if (sp.media_ref != null) pageBufSpanBytes += 2L * sp.media_ref.length
-        })
-        if (pageBuf.size >= CrawlEngine.pageBufCap || pageBufSpanBytes >= CrawlEngine.pageBufBytes)
-          flushPageBuf()
-      }
-      if (config.trackBlocked && (out.robotsBlocked.nonEmpty || out.vetoed.nonEmpty)) {
-        out.robotsBlocked.foreach(e => blockedBuf += ((e.url, "robots", epoch)))
-        out.vetoed.foreach(p => blockedBuf += ((p.url, "veto", epoch)))
-        if (blockedBuf.size >= CrawlEngine.blockedBufCap) flushBlockedBuf()
-      }
+      // A7 page-sink delta, buffered; a commit takes the buffer into its
+      // pages delta
+      pages.put(out.pages)
+      if (config.trackBlocked)
+        blocked.put(out.robotsBlocked.map(e => BlockedRow(e.url, "robots", epoch)) ++
+          out.vetoed.map(p => BlockedRow(p.url, "veto", epoch)))
       frontierLocal = Some(out.frontier)
       val frontierCount = out.frontier.size.toLong
-      frontierCountPrev = frontierCount
       // store hygiene: with the mirrors gone the per-epoch probe jobs walk
       // the delta chains — compact on the usual cadence. With mirrors live
       // the chains stay lazy, but lineage and bloom generations still grow
@@ -1129,657 +614,663 @@ class CrawlEngine(
       // couple of tiny jobs every ~2x32 epochs — bounded lineage without
       // re-paying the per-epoch fixed costs this path exists to avoid)
       val smallCadence =
-        if (driverSeen == null) math.max(2, config.stateCompactionEpochs)
+        if (!seen.mirrored) math.max(2, config.stateCompactionEpochs)
         else math.max(32, config.stateCompactionEpochs)
-      if (seenRddEpochs >= smallCadence) compactStores()
+      if (seen.appends >= smallCadence) compactStores()
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
-        out.newLinks, frontierCount, seenCount, ledger.budgetStopped,
+        out.newLinks, frontierCount, seen.count, ledger.budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, out.robotsBlocked.size.toLong,
         out.vetoed.size.toLong)
       // the driver holds the frontier and, while the mirrors live, the seen
       // and signature tables too: the snapshot writes them with no job
-      if (driverSeen != null) {
-        import scala.jdk.CollectionConverters._
-        commitIfDue(frontierDf,
-          localFrame(driverSeen.entrySet.asScala.map(kv => Row(kv.getKey, kv.getValue)), seenSchema),
-          localFrame(driverSigs.asScala.map(x => Row(x.longValue)), sigSchema))
-      } else commitIfDue(frontierDf, seen, signatures)
-      epoch += 1
-      onEpoch.foreach(f => f(epoch - 1))
-      done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
-        shutdownRequested || System.nanoTime() > deadline
+      commitIfDue()
+      endEpoch(frontierCount)
     }
 
-    var crawling = true
-    while (crawling) {
-    while (!done) {
-      // D9 pause (reference `handle_process` value 1, `website.rs:1839-1846`):
-      // wall-clock wait between epochs; logical time frozen
-      while (pauseRequested && !shutdownRequested && System.nanoTime() < deadline)
-        Thread.sleep(20)
+    /** The distributed epoch: hand-off → gate → politeness → budget → fetch
+      * → seen append → links → roll → compaction and commit.
+      */
+    def distributedEpoch(candCount: Long, epochT0: Long): Unit = {
+      if (frontierLocal.isDefined) handOff()
+      val ready = if (holdsPossible) frontier.filter(col("not_before") <= lit(epoch)) else frontier
+      val deferredHold = if (holdsPossible) frontier.filter(col("not_before") > lit(epoch)) else noRows
+      val (gated, robotsBlockedCount) = gateStage(ready)
+      val (polAdmitted, deferred) = if (politenessPossible) politeness(gated) else (gated, noRows)
+      val (admitted, budgetLeftover) = budget(polAdmitted)
+      val (admittedDs, parsed, admittedCount) = fetch(admitted, candCount)
+      // 8. C7 retry ladder (pluggable RetryPolicy; default = the
+      //    reference's 5xx/429/408 + capped exponential backoff ladder,
+      //    `website.rs:8388-8392`): retryable statuses re-queue with
+      //    backoff and are REMOVED from seen (`website.rs:8663-8666`)
+      val isRetried = retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts
+      val retryDf = parsed.toDF().filter(isRetried)
+        .select(col("url"), col("host"), col("depth"), col("discovery_seq"),
+          col("priority"), (col("attempt") + 1).as("attempt"),
+          (lit(epoch) + retry.backoffEpochs(col("attempt"))).as("not_before"))
+      appendSeen(admittedDs, admittedCount, retryDf)
+      val (expanding, vetoedCount) = expandingPages(parsed)
+      val (newLinkCount, newFrontier, newFrontierHeld) = links(expanding)
+      val frontierCount = roll(deferredHold.unionByName(deferred).unionByName(budgetLeftover)
+        .unionByName(retryDf), newFrontier, newFrontierHeld, newLinkCount)
+      if (seen.appends >= math.max(2, config.stateCompactionEpochs)) compactStores()
+      metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
+        newLinkCount, frontierCount, seen.count, ledger.budgetStopped,
+        (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
+      timed("commit")(commitIfDue())
+      endEpoch(frontierCount)
+    }
 
-      // mid-crawl URL injection: drain the inbox into the frontier
-      // (reference `dequeue`, `website.rs:7528-7562`)
-      if (!inbox.isEmpty) {
-        val (injectedV, injectedLedger) = Sequential.inject(
-          Iterator.continually(inbox.poll()).takeWhile(_ != null).toVector, ledger)
-        ledger = injectedLedger
-        if (injectedV.nonEmpty) {
-          // restore the frontier's unique-by-lower(url) invariant
-          frontierLocal match {
-            case Some(v) =>
-              frontierLocal = Some(CrawlEngine.dedupCanonicalMinLocal(v ++ injectedV))
-              frontierCountPrev = frontierLocal.get.size.toLong
-            case None =>
-              frontier = timed("inject")(CrawlEngine.dedupCanonicalMin(
-                frontier.unionByName(frontierFrame(injectedV))).localCheckpoint(true))
-              readyHist = histOf(frontier)
-              frontierCountPrev = readyHist.values.sum
-          }
-        }
+    /** Hand-off: the frontier the driver holds becomes a driver-held table
+      * (no job); the mirrors drop for the rest of the call.
+      */
+    private def handOff(): Unit = {
+      frontier = frontierDf
+      readyHist = CrawlEngine.histLocal(frontierLocal.get)
+      frontierLocal = None
+      seen.dropMirror()
+    }
+
+    /** Gate: the bloom, the seen probe, lists/robots/depth; returns the
+      * gated candidates and the robots-blocked count.
+      */
+    private def gateStage(ready: DataFrame): (DataFrame, Long) = {
+      // 1. B1 visited: bloom fast-negative (codegen expression over the
+      //    broadcast filter group — no UDF on the hot path); the
+      //    maybe-seen residue shuffles to the seen store's partitions
+      //    where a per-partition exact set answers membership. The seen
+      //    side is scanned in place — never re-shuffled, never broadcast.
+      val withLower = ready.withColumn("url_lower", lower(col("url")))
+      val bloomGroup = timed("bloom_bcast")(new BloomGroup(spark.sparkContext.broadcast(seen.blooms)))
+      val mightContain = enginefns.bloom_might_contain(col("url_lower"), bloomGroup)
+      val lowerIdx = withLower.schema.fieldIndex("url_lower")
+      // co-partitioned exact probe, InternalRow through the shuffle:
+      // UnsafeRow.copy ships compact row bytes
+      val unseenMaybe = GraftSqlBridge.internalCreateDataFrame(spark,
+        seen.probe(GraftSqlBridge.internalRdd(withLower.filter(mightContain))
+          .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), keepPresent = false).values,
+        withLower.schema)
+      val unseen = withLower.filter(!mightContain).unionByName(unseenMaybe)
+      // 2. B8 batch dedup (case-insensitive keep canonical-min, the
+      //    frontier HashSet semantics `website.rs:7810`) is STRUCTURAL:
+      //    the frontier is unique by lower(url) by construction (seeds
+      //    ci-deduped, link agg keyed by lower(url), carryover union
+      //    window), so no per-epoch dedup window runs here.
+      // 3. stateless gates: lists, robots, depth. The robots-blocked side
+      // output (reference on_robots_blocked) is opt-in here: the blocked
+      // complement re-executes the lazy gate prefix once more, writing
+      // its rows as a parquet delta (never a driver collect — blocked
+      // URLs are data-scale on a robots-heavy crawl), counted on the write
+      val listsPass = listsGate(unseen.drop("url_lower").as[FrontierEntry])
+      val robotsBlockedCount =
+        if (config.trackBlocked && config.respectRobotsTxt)
+          blocked.writeCounted(listsPass
+            .filter(!enginefns.robots_can_fetch(col("host"), col("url"), robots, config.userAgent))
+            .select(col("url"), lit("robots").as("reason"), lit(epoch).as("epoch")), "robots")
+        else 0L
+      (depthGate(robotsGate(listsPass), start.depthDistance).toDF(), robotsBlockedCount)
+    }
+
+    /** 4. B9 politeness FIRST: per-host token-bucket quota, highest
+      * priority first (D5 top-k per host); non-admitted stay in the
+      * frontier. (The reference sleeps AFTER gating; a distributed deferral
+      * must re-gate, so politeness runs before the stateful budget to avoid
+      * double-charging deferred candidates.) Returns the admitted and the
+      * deferred candidates.
+      */
+    private def politeness(gated: DataFrame): (DataFrame, DataFrame) = {
+      // per-host effective delay (all codegen'd, no UDF):
+      //   static config delay
+      //   ∨ robots Crawl-delay ∨ Request-rate (expression; B9 + missing #4)
+      //   ∨ reactive override (429 Retry-After throttle ∨ auto-throttle
+      //     EMA; reference rate_limiter.rs:121-153 + auto_throttle.rs)
+      val delayCol =
+        if (!config.respectRobotsTxt) lit(config.delayMs)
+        else greatest(lit(config.delayMs), enginefns.robots_delay_ms(col("host"), robots, config.userAgent))
+      // ONE broadcast row per host carrying ALL driver-ledger politeness
+      // state (reactive delay override ∨ auto-throttle EMA delay, and the
+      // banked token bucket) — a single join instead of two
+      val state = (throttleOverrideMs.keySet ++ latencyEma.keySet ++ hostTokens.keySet).toSeq.map { h =>
+        (h, Sequential.reactiveOverrideMs(config, throttleOverrideMs.getOrElse(h, 0L), latencyEma.get(h)),
+          hostTokens.getOrElse(h, 1000L))
       }
+      val tick = config.tickMs
+      val withDelay = gated
+        .join(broadcast(spark.createDataset(state).toDF("host", "override_ms", "tokens_milli")),
+          Seq("host"), "left")
+        .withColumn("__delay", greatest(delayCol, coalesce(col("override_ms"), lit(0L))))
+        .drop("override_ms")
+      // floor division: the sequential mirror banks INTEGRAL
+      // milli-tokens (Long division); Spark `/` is double division and
+      // would bank fractional permits that drift from the oracle at
+      // non-divisible delays (e.g. 333.33/epoch vs 333)
+      val avail = withDelay.withColumn("__permits",
+          when(col("__delay") === 0, lit(Long.MaxValue / 4))
+            .otherwise(floor(lit(tick) * 1000L / col("__delay"))))
+        .withColumn("__avail",
+          least(coalesce(col("tokens_milli"), lit(1000L)) + col("__permits"),
+            greatest(lit(2000L), col("__permits") * 2)))
+        // floor to integral admission (Spark `/` is double division;
+        // the sequential mirror uses Long division — they must agree
+        // for hosts whose effective delay exceeds tickMs, i.e. quota<1)
+        .withColumn("__quota",
+          least(floor(col("__avail") / lit(1000L)), lit(config.maxPerHostPerEpoch.toLong)))
+      val hw = Window.partitionBy(col("host"))
+        .orderBy(col("priority").desc, col("depth"), col("discovery_seq"), col("url"))
+      // cache the ranked gate+politeness output: hostTokens, admitted,
+      // and deferred all derive from it — without the cache the whole
+      // gate DAG (bloom + seen joins + windows) recomputes 3-4x/epoch
+      val rankedH = avail.withColumn("__hrn", row_number().over(hw))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      epochCaches ::= (() => rankedH.unpersist(false))
+      val adm = rankedH.filter(col("__hrn") <= col("__quota"))
+      val deferred = rankedH.filter(col("__hrn") > col("__quota"))
+        .select(col("url"), col("host"), col("depth"), col("discovery_seq"),
+          col("priority"), col("attempt"), lit(epoch + 1).as("not_before"))
+      // roll the per-host buckets forward: EVERY host present this epoch
+      // banks `__avail − used·1000` (the bucket accrues even when it
+      // admits nothing — a host at delay > tickMs earns a fractional
+      // token per epoch and must bank it to admit on a later epoch). ONE
+      // aggregate collect updates the driver ledger (this also populates
+      // the rankedH cache for every later consumer this epoch), BOUNDED at
+      // the ledger's LRU capacity by per-epoch traffic.
+      // KNOWN RESIDUAL past the cap: a host already
+      // resident in the LRU ledger that falls outside the top-traffic
+      // cap this epoch keeps its stale (un-debited) balance instead of
+      // being evicted-and-refreshed; with > lruHostCap (100k) distinct
+      // hosts in ONE epoch it can over-admit by its stale tokens on a
+      // later epoch. The reference's capped DashMap limiters drop
+      // per-host state past their MAX_ENTRIES the same way; bounded
+      // politeness error, never correctness of the page set.
+      timed("tokens_roll")(rankedH.groupBy(col("host")).agg(
+          max(col("__avail")).as("__a"),
+          sum(when(col("__hrn") <= col("__quota"), 1L).otherwise(0L)).as("__used"),
+          count(lit(1)).as("__n"))
+        .orderBy(col("__n").desc, col("host")).limit(CrawlEngine.lruHostCap)
+        .collect()
+        .foreach(r => hostTokens(r.getString(0)) = r.getLong(1) - r.getLong(2) * 1000L))
+      (adm.select(col("url"), col("host"), col("depth"), col("discovery_seq"),
+        col("priority"), col("attempt"), col("not_before")), deferred)
+    }
 
-      // 0. candidates whose politeness/retry holdoff has passed
-      val epochT0 = System.nanoTime()
-      val candCount = frontierLocal match {
-        case Some(v) =>
-          if (holdsPossible) v.count(_.not_before <= epoch).toLong else v.size.toLong
-        case None =>
-          if (holdsPossible) readyHist.iterator.filter(_._1 <= epoch).map(_._2).sum
-          else frontierCountPrev
+    /** 5. B7 budget admission in canonical order (deterministic — the
+      * reference decrements counters sequentially; we replay that order
+      * exactly; see SURVEY D6/B7). Returns the admitted candidates and the
+      * leftovers a wildcard stop preserves.
+      */
+    private def budget(polAdmitted: DataFrame): (DataFrame, DataFrame) = {
+      var budgetLeftover = noRows
+      if (!config.wildCardBudgeting && ledger.pathBudget.isEmpty) return (polAdmitted, budgetLeftover)
+      // chain phase: the sitemap DOCUMENTS are admitted budgetless
+      // (`is_allowed_budgetless`, `website.rs:11716-11722`); their
+      // entries consume budget normally
+      val smExempt = ledger.chainStarted && ledger.chainSitemaps.nonEmpty
+      val exemptCond =
+        if (smExempt) lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq) else lit(false)
+      val budgeted = if (smExempt) polAdmitted.filter(!exemptCond) else polAdmitted
+      val ranked = timed("grank_count")(
+        withGlobalSeq(budgeted, canonicalOrder, "__grank", 0L).localCheckpoint(true))
+      epochCaches ::= (() => CrawlEngine.releaseCheckpoint(ranked))
+      var alive = ranked
+      if (config.wildCardBudgeting) {
+        // wildcard passes links while budget > 1, then EXCEEDS at ==1
+        // (`abs_diff(0)==1` check `website.rs:2060-2070`) — exhaustion
+        // stops the whole crawl (`website.rs:7904-7907`), leftovers
+        // preserved as extra_links.
+        val n = timed("budget")(ranked.count())
+        val passCount = math.max(0L, ledger.wildcardRemaining - 1L)
+        if (n > passCount) {
+          ledger = ledger.copy(budgetStopped = true)
+          // leftover links preserved — reference `extra_links`
+          // (`website.rs:8700-8712`)
+          budgetLeftover = ranked.filter(col("__grank") >= lit(passCount))
+            .drop("__grank")
+        }
+        alive = alive.filter(col("__grank") < lit(passCount))
+        ledger = ledger.copy(wildcardRemaining = ledger.wildcardRemaining - math.min(n, passCount))
       }
-
-      if (candCount == 0) {
-        // nothing ready this tick — advance logical time only
-        epoch += 1
-        onEpoch.foreach(f => f(epoch - 1))
-        val frontierEmpty = frontierLocal.map(_.isEmpty).getOrElse(frontier.isEmpty)
-        if (frontierEmpty || epoch >= config.maxEpochs ||
-          shutdownRequested || System.nanoTime() > deadline) done = true
-      } else if (frontierLocal.isDefined && smallFits(candCount))
-        timed("epoch_total") {
-        smallEpoch(frontierLocal.get, candCount, epochT0)
-      } else timed("epoch_total") {
-        if (frontierLocal.isDefined) {
-          // candidate volume outgrew the fast path: the frontier the driver
-          // holds becomes a driver-held table (no job) and the epoch falls
-          // through to the distributed pipeline — the driver mirrors go
-          // stale from here on, permanently
-          frontier = frontierDf
-          readyHist = histLocal(frontierLocal.get)
-          frontierCountPrev = frontierLocal.get.size.toLong
-          frontierLocal = None
-          dropMirrors()
-        }
-        val ready = if (holdsPossible) frontier.filter(col("not_before") <= lit(epoch)) else frontier
-        val deferredHold = if (holdsPossible) frontier.filter(col("not_before") > lit(epoch))
-          else spark.emptyDataset[FrontierEntry].toDF()
-        // 1. B1 visited: bloom fast-negative (codegen expression over the
-        //    broadcast filter group — no UDF on the hot path); the
-        //    maybe-seen residue shuffles to the seen store's partitions
-        //    where a per-partition exact set answers membership. The seen
-        //    side is scanned in place — never re-shuffled, never broadcast.
-        val withLower = ready.withColumn("url_lower", lower(col("url")))
-        val bloomGroup = timed("bloom_bcast")(new BloomGroup(spark.sparkContext.broadcast(blooms)))
-        val mightContain = enginefns.bloom_might_contain(col("url_lower"), bloomGroup)
-        val definitelyNew = withLower.filter(!mightContain)
-        val maybeSeen = withLower.filter(mightContain)
-        val lowerIdx = withLower.schema.fieldIndex("url_lower")
-        // co-partitioned exact probe (the round-4 A/B retired the round-2
-        // broadcast gate: co-partition won at BOTH parallelism levels).
-        // InternalRow through the probe shuffle (r6): `Dataset.rdd` built a
-        // GenericRow per candidate and Java-serialized the object graph;
-        // UnsafeRow.copy ships compact row bytes instead.
-        val unseen = {
-          val unseenMaybe = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark,
-            probeSeen(org.apache.spark.sql.GraftSqlBridge.internalRdd(maybeSeen)
-              .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), keepPresent = false).values,
-            withLower.schema)
-          definitelyNew.unionByName(unseenMaybe)
-        }
-
-        // 2. B8 batch dedup (case-insensitive keep canonical-min, the
-        //    frontier HashSet semantics `website.rs:7810`) is STRUCTURAL:
-        //    the frontier is unique by lower(url) by construction (seeds
-        //    ci-deduped, link agg keyed by lower(url), carryover union
-        //    window), so the per-epoch dedup window round 1 ran here is a
-        //    no-op shuffle — removed.
-
-        // 3. stateless gates: lists, robots, depth. The robots-blocked side
-        // output (reference on_robots_blocked) is opt-in here: the blocked
-        // complement re-executes the lazy gate prefix once more, writing
-        // its rows as a parquet delta (never a driver collect — blocked
-        // URLs are data-scale on a robots-heavy crawl); the metric count
-        // reads back the delta's footers
-        val listsPass = listsGate(unseen.drop("url_lower").as[FrontierEntry])
-        val robotsPass = robotsGate(listsPass)
-        val robotsBlockedCount =
-          if (config.trackBlocked && config.respectRobotsTxt) {
-            val blockedRows = listsPass
-              .filter(!enginefns.robots_can_fetch(col("host"), col("url"), robots, config.userAgent))
-              .select(col("url"), lit("robots").as("reason"), lit(epoch.toLong).as("epoch"))
-            sinkBlockedDelta(blockedRows, "robots")
-          } else 0L
-        val gated0 = depthGate(robotsPass, depthDistance).toDF()
-
-        // 4. B9 politeness FIRST: per-host token-bucket quota, highest
-        //    priority first (D5 top-k per host); non-admitted stay in the
-        //    frontier. (The reference sleeps AFTER gating; a distributed
-        //    deferral must re-gate, so politeness runs before the stateful
-        //    budget to avoid double-charging deferred candidates.)
-        val politenessOn = politenessPossible
-        var polAdmitted = gated0
-        var deferred = spark.emptyDataset[FrontierEntry].toDF()
-        if (politenessOn) {
-          // per-host effective delay (all codegen'd, no UDF):
-          //   static config delay
-          //   ∨ robots Crawl-delay ∨ Request-rate (expression; B9 + missing #4)
-          //   ∨ reactive override (429 Retry-After throttle ∨ auto-throttle
-          //     EMA; reference rate_limiter.rs:121-153 + auto_throttle.rs)
-          var delayCol: org.apache.spark.sql.Column = lit(config.delayMs)
-          if (config.respectRobotsTxt)
-            delayCol = greatest(delayCol,
-              enginefns.robots_delay_ms(col("host"), robots, config.userAgent))
-          val tick = config.tickMs
-          val withDelay = polAdmitted
-            .join(broadcast(politenessStateDf()), Seq("host"), "left")
-            .withColumn("__delay", greatest(delayCol, coalesce(col("override_ms"), lit(0L))))
-            .drop("override_ms")
-          // floor division: the sequential mirror banks INTEGRAL
-          // milli-tokens (Long division); Spark `/` is double division and
-          // would bank fractional permits that drift from the oracle at
-          // non-divisible delays (e.g. 333.33/epoch vs 333)
-          val avail = withDelay.withColumn("__permits",
-              when(col("__delay") === 0, lit(Long.MaxValue / 4))
-                .otherwise(floor(lit(tick) * 1000L / col("__delay"))))
-            .withColumn("__avail",
-              least(coalesce(col("tokens_milli"), lit(1000L)) + col("__permits"),
-                greatest(lit(2000L), col("__permits") * 2)))
-            // floor to integral admission (Spark `/` is double division;
-            // the sequential mirror uses Long division — they must agree
-            // for hosts whose effective delay exceeds tickMs, i.e. quota<1)
-            .withColumn("__quota",
-              least(floor(col("__avail") / lit(1000L)), lit(config.maxPerHostPerEpoch.toLong)))
-          val hw = Window.partitionBy(col("host"))
-            .orderBy(col("priority").desc, col("depth"), col("discovery_seq"), col("url"))
-          // cache the ranked gate+politeness output: hostTokens, admitted,
-          // and deferred all derive from it — without the cache the whole
-          // gate DAG (bloom + seen joins + windows) recomputes 3-4x/epoch
-          val rankedH = avail.withColumn("__hrn", row_number().over(hw))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          epochCache = Some(rankedH)
-          val adm = rankedH.filter(col("__hrn") <= col("__quota"))
-          deferred = rankedH.filter(col("__hrn") > col("__quota"))
-            .select(col("url"), col("host"), col("depth"), col("discovery_seq"),
-              col("priority"), col("attempt"), lit(epoch + 1).as("not_before"))
-          // roll the per-host buckets forward: EVERY host present this epoch
-          // banks `__avail − used·1000` (the bucket accrues even when it
-          // admits nothing — a host at delay > tickMs earns a fractional
-          // token per epoch and must bank it to admit on a later epoch;
-          // round 2 persisted only admitting or quota==0 hosts, starving
-          // sub-1-token-per-epoch hosts forever). ONE aggregate collect
-          // updates the driver ledger (this also populates the rankedH
-          // cache for every later consumer this epoch), BOUNDED at the
-          // ledger's LRU capacity by per-epoch traffic (round-4 verdict
-          // #2: the unbounded roll shipped one row per host per epoch —
-          // millions of rows/epoch on a wide politeness-on crawl).
-          // KNOWN RESIDUAL past the cap (r5 advice): a host already
-          // resident in the LRU ledger that falls outside the top-traffic
-          // cap this epoch keeps its stale (un-debited) balance instead of
-          // being evicted-and-refreshed; with > lruHostCap (100k) distinct
-          // hosts in ONE epoch it can over-admit by its stale tokens on a
-          // later epoch. The reference's capped DashMap limiters drop
-          // per-host state past their MAX_ENTRIES the same way; bounded
-          // politeness error, never correctness of the page set.
-          timed("tokens_roll")(rankedH.groupBy(col("host")).agg(
-              max(col("__avail")).as("__a"),
-              sum(when(col("__hrn") <= col("__quota"), 1L).otherwise(0L)).as("__used"),
-              count(lit(1)).as("__n"))
-            .orderBy(col("__n").desc, col("host")).limit(CrawlEngine.lruHostCap)
-            .collect()
-            .foreach(r => hostTokensMap(r.getString(0)) = r.getLong(1) - r.getLong(2) * 1000L))
-          polAdmitted = adm.select(col("url"), col("host"), col("depth"), col("discovery_seq"),
-            col("priority"), col("attempt"), col("not_before"))
-        }
-
-        // 5. B7 budget admission in canonical order (deterministic — the
-        //    reference decrements counters sequentially; we replay that
-        //    order exactly; see SURVEY D6/B7)
-        var admitted = polAdmitted
-        var budgetLeftover = spark.emptyDataset[FrontierEntry].toDF()
-        if (config.wildCardBudgeting || ledger.pathBudget.nonEmpty) {
-          // chain phase: the sitemap DOCUMENTS are admitted budgetless
-          // (`is_allowed_budgetless`, `website.rs:11716-11722`); their
-          // entries consume budget normally
-          val smExempt = ledger.chainStarted && ledger.chainSitemaps.nonEmpty
-          val exemptCond =
-            if (smExempt) lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq) else lit(false)
-          val budgeted = if (smExempt) polAdmitted.filter(!exemptCond) else polAdmitted
-          val ranked = timed("grank_count")(
-            withGlobalSeq(budgeted, canonicalOrder, "__grank", 0L).localCheckpoint(true))
-          var alive = ranked
-          if (config.wildCardBudgeting) {
-            // wildcard passes links while budget > 1, then EXCEEDS at ==1
-            // (`abs_diff(0)==1` check `website.rs:2060-2070`) — exhaustion
-            // stops the whole crawl (`website.rs:7904-7907`), leftovers
-            // preserved as extra_links.
-            val n = timed("budget")(ranked.count())
-            val passCount = math.max(0L, ledger.wildcardRemaining - 1L)
-            if (n > passCount) {
-              ledger = ledger.copy(budgetStopped = true)
-              // leftover links preserved — reference `extra_links`
-              // (`website.rs:8700-8712`)
-              budgetLeftover = ranked.filter(col("__grank") >= lit(passCount))
-                .drop("__grank")
-            }
-            alive = alive.filter(col("__grank") < lit(passCount))
-            ledger = ledger.copy(wildcardRemaining = ledger.wildcardRemaining - math.min(n, passCount))
-          }
-          if (ledger.pathBudget.nonEmpty) {
-            // per-key admission in accumulated-segment order; outer keys
-            // consume before inner ones reject (walk order
-            // `website.rs:2085-2115`). No window: round 2 partitioned a
-            // row_number window on a BOOLEAN match flag, funnelling every
-            // matching candidate in the epoch through one task. Instead the
-            // rem-th match's global cutoff rank is derived from
-            // per-partition match counts (partitions are __grank ranges,
-            // courtesy of withGlobalSeq's range partitioning) plus one
-            // boundary-partition scan — admission is then a pure filter.
-            var pathBudget = ledger.pathBudget
-            val keys = pathBudget.keys.toSeq.sortBy(_.length)
-            var cur = alive.withColumn("__prefixes", graft.url.urlfns.budget_prefixes(col("url")))
-            for (k <- keys) {
-              val rem = pathBudget(k)
-              val matches = cur.withColumn("__m", array_contains(col("__prefixes"), k))
-              // InternalRow scans: two primitive columns, no Row bridge
-              val flags = org.apache.spark.sql.GraftSqlBridge
-                .internalRdd(matches.select(col("__m"), col("__grank")))
-              val perPart = timed("budget")(flags.mapPartitionsWithIndex { (i, it) =>
-                var n = 0L
-                it.foreach(r => if (r.getBoolean(0)) n += 1)
-                Iterator.single((i, n))
-              }.collect().sortBy(_._1).map(_._2))
-              val total = perPart.sum
-              if (total <= rem) {
-                pathBudget = pathBudget.updated(k, rem - total)
-                cur = matches.drop("__m")
-              } else {
-                val cums = perPart.scanLeft(0L)(_ + _) // cums(p) = matches before partition p
-                val pStar = cums.indexWhere(_ > rem) - 1 // partition holding the first rejected match
-                val allowance = rem - cums(pStar)
-                val cutoff = timed("budget")(flags.mapPartitionsWithIndex { (i, it) =>
-                  if (i != pStar) Iterator.empty
-                  else {
-                    var seen = 0L
-                    it.flatMap { r =>
-                      if (!r.getBoolean(0)) None
-                      else { seen += 1; if (seen == allowance + 1) Some(r.getLong(1)) else None }
-                    }
-                  }
-                }.collect().head) // one job; take(1) would probe partitions incrementally
-                pathBudget = pathBudget.updated(k, 0L)
-                cur = matches.filter(!col("__m") || col("__grank") < lit(cutoff)).drop("__m")
+      if (ledger.pathBudget.nonEmpty) {
+        // per-key admission in accumulated-segment order; outer keys
+        // consume before inner ones reject (walk order
+        // `website.rs:2085-2115`). No row_number window over a match flag
+        // (it funnels every match through one task): the rem-th match's
+        // global cutoff rank is derived from
+        // per-partition match counts (partitions are __grank ranges,
+        // courtesy of withGlobalSeq's range partitioning) plus one
+        // boundary-partition scan — admission is then a pure filter.
+        var pathBudget = ledger.pathBudget
+        val keys = pathBudget.keys.toSeq.sortBy(_.length)
+        var cur = alive.withColumn("__prefixes", graft.url.urlfns.budget_prefixes(col("url")))
+        for (k <- keys) {
+          val rem = pathBudget(k)
+          val matches = cur.withColumn("__m", array_contains(col("__prefixes"), k))
+          // InternalRow scans: two primitive columns, no Row bridge
+          val flags = GraftSqlBridge.internalRdd(matches.select(col("__m"), col("__grank")))
+          val perPart = timed("budget")(flags.mapPartitionsWithIndex { (i, it) =>
+            var n = 0L
+            it.foreach(r => if (r.getBoolean(0)) n += 1)
+            Iterator.single((i, n))
+          }.collect().sortBy(_._1).map(_._2))
+          val total = perPart.sum
+          if (total <= rem) {
+            pathBudget = pathBudget.updated(k, rem - total)
+            cur = matches.drop("__m")
+          } else {
+            val cums = perPart.scanLeft(0L)(_ + _) // cums(p) = matches before partition p
+            val pStar = cums.indexWhere(_ > rem) - 1 // partition holding the first rejected match
+            val allowance = rem - cums(pStar)
+            val cutoff = timed("budget")(flags.mapPartitionsWithIndex { (i, it) =>
+              if (i != pStar) Iterator.empty
+              else {
+                var hits = 0L
+                it.flatMap { r =>
+                  if (!r.getBoolean(0)) None
+                  else { hits += 1; if (hits == allowance + 1) Some(r.getLong(1)) else None }
+                }
               }
-            }
-            alive = cur.drop("__prefixes")
-            ledger = ledger.copy(pathBudget = pathBudget)
-          }
-          admitted =
-            if (smExempt) alive.drop("__grank").unionByName(polAdmitted.filter(exemptCond))
-            else alive.drop("__grank")
-        }
-
-        // 6. mark admitted as seen (insert at admission, `insert_link`
-        //    `website.rs:1718-1749`). The persisted admitted set doubles as
-        //    the seen-delta backing store; the bloom/count/hot-host stats
-        //    ride the fetch job's own scan (withAdmitStats) — no dedicated
-        //    job at all.
-        val admittedDs = admitted.as[FrontierEntry]
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val admitAcc = spark.sparkContext
-          .collectionAccumulator[AdmitStat]("graft.admitStats")
-        val newSeen = admittedDs.select(lower(col("url")).as("url_lower"), col("url"))
-
-        // 7+9. fetch + parse — priority-queue emission (repartition by host,
-        //    secondary sort desc priority/depth/seq/url, north rule D5) then
-        //    one-pass span parse, PIPELINED in a single stage and
-        //    materialized once. (Epoch 0 splits the stage because the C6
-        //    scope re-anchor must read the seed fetch result before link
-        //    extraction — `modify_selectors` `page.rs:4736-4747`.)
-        // host-hash partitioning WITH salt (north rule D4): a hot host that
-        // dominates the frontier would otherwise pin one task; the salt
-        // width scales with the host's admitted share this epoch (see
-        // admitCountAndBloom) — cold hosts keep a 16-way spread (affinity),
-        // hot hosts fan out toward 4P.
-        // Politeness quotas were already enforced upstream, so fetch order
-        // within a salt shard is pure priority emission — unless
-        // `roundRobin` (D5, reference `UrlFrontier::pop` frontier.rs:78-121):
-        // then hosts interleave (every host's k-th URL precedes any host's
-        // (k+1)-th within a shard).
-        val fetchReady = timed("fetch_plan") {
-          val base =
-            if (config.roundRobin) {
-              val rrW = Window.partitionBy(col("host"))
-                .orderBy(col("priority").desc, col("depth"), col("discovery_seq"), col("url"))
-              admittedDs.withColumn("__rr", row_number().over(rrW))
-            } else admittedDs.toDF().withColumn("__rr", lit(0))
-          val saltWidth: org.apache.spark.sql.Column =
-            if (hotHostWidths.isEmpty) lit(16L)
-            else hotHostWidths.foldLeft(`when`(lit(false), lit(16L))) {
-              case (acc, (h, w)) => acc.when(col("host") === lit(h), lit(w.toLong))
-            }.otherwise(lit(16L))
-          withAdmitStats(base, candCount, admitAcc)
-            .repartition(math.max(1, P), col("host"), pmod(xxhash64(col("url")), saltWidth))
-            .sortWithinPartitions(col("__rr"), col("priority").desc, col("depth"),
-              col("discovery_seq"), col("url"))
-            .drop("__rr")
-            .as[FrontierEntry]
-        }
-        // Pages SINK to parquet per epoch (A7, north rule: parsed documents
-        // land in tables, never in executor memory). Round 1 localCheckpointed
-        // every full ParsedPage (spans + links, multiple KB each) through the
-        // block manager — at 10^6 pages/epoch that is gigabytes of live heap
-        // objects and the single biggest stall. Every downstream consumer
-        // (retry filter, signature dedup, link explode, pages view) is a
-        // COLUMN-PRUNED scan of the delta file instead.
-        val ep = epoch
-        val parsedName = s"epoch=$epoch"
-        val parsedDir = if (epoch == 0L) timed("fetch_parse") {
-          val fetched = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
-          val ph = ledger.scope.parentHost
-          // canonical-min winner — identical on the distributed path, the
-          // fast path, and the oracle (partition order would not be)
-          val redirHosts = fetched
-            .filter(f => f.f_status == 200 && UrlOps.host(f.f_final_url) != ph)
-            .orderBy(col("depth"), col("discovery_seq"), col("host"), col("url"))
-            .map(_.f_final_url).take(1)
-          if (redirHosts.nonEmpty)
-            ledger = ledger.copy(scope = ledger.scope.copy(redirectHost = UrlOps.host(redirHosts.head)))
-          val sc = ledger.scope
-          val lrw = onLinkFind.orNull
-          writePageDelta(
-            fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))),
-            parsedName)
-        } else {
-          val sc = ledger.scope
-          val lrw = onLinkFind.orNull
-          timed("fetch_parse")(writePageDelta(fetcher.fetch(spark, fetchReady)
-            .mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, sc, ep, lrw))), parsedName))
-        }
-        val parsed: Dataset[ParsedPage] = timed("parsed_read")(
-          spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedDir)
-            .as[ParsedPage])
-        // the fetch job has materialized — collect the ride-along stats
-        // (delta count, bloom shards, next epoch's hot-host salt widths)
-        val admittedCount =
-          timed("admit_drain")(drainAdmitStats(admitAcc, admittedDs, candCount))
-
-        // reactive throttling (B9): 429 Retry-After reduces the host's rate
-        // (reference `DomainRateLimiter::throttle` rate_limiter.rs:121-137 —
-        // delay := Retry-After, bucket drained); latency EMA feeds the
-        // auto-throttle (auto_throttle.rs: delay ≈ ema/target_concurrency)
-        if (politenessOn) timed("throttle") {
-          // ONE per-host aggregate feeds both reactive signals. Collected
-          // rows are BOUNDED (round-3 verdict #8): with auto-throttle off,
-          // only hosts that actually returned a 429 reach the driver; with
-          // it on, the collect caps at the ledger's LRU capacity by
-          // per-epoch traffic (hosts beyond it would be evicted anyway)
-          def sigAgg(base: DataFrame) = base.groupBy(col("host")).agg(
-            max(when(col("status") === 429, col("retry_after_ms")).otherwise(lit(0L))).as("__ra"),
-            avg(when(col("latency_ms") > 0, col("latency_ms").cast("double"))).as("__l"),
-            count(lit(1)).as("__n"))
-          val throttled = parsed.toDF().filter(col("status") === 429 && col("retry_after_ms") > 0)
-          // EMA rows capped by top traffic; 429 overrides NEVER capped (a
-          // throttling host must be honored regardless of rank). A host
-          // past the cap contributes ONLY its Retry-After override: its
-          // available aggregate averages latency over 429 rows alone,
-          // which diverges from the all-rows average in-cap hosts and the
-          // oracle use — so beyond-cap hosts skip the EMA update entirely
-          // (round-4 advice) rather than feed it a biased sample.
-          val emaRows: Array[Row] =
-            if (!config.autoThrottle) Array.empty
-            else sigAgg(parsed.toDF())
-              .orderBy(col("__n").desc, col("host")).limit(CrawlEngine.lruHostCap).collect()
-          val haveEma = emaRows.iterator.map(_.getString(0)).toSet
-          val signals = emaRows ++ sigAgg(throttled).collect()
-            .filterNot(r => haveEma.contains(r.getString(0)))
-          val drained = signals.filter(_.getLong(1) > 0)
-          drained.foreach { r =>
-            throttleOverrideMs(r.getString(0)) = r.getLong(1)
-            hostTokensMap(r.getString(0)) = 0L // bucket drained
-          }
-          if (config.autoThrottle) {
-            val alpha = config.autoThrottleAlpha
-            emaRows.filter(!_.isNullAt(2)).foreach { r =>
-              val h = r.getString(0); val l = r.getDouble(2)
-              latencyEma(h) = latencyEma.get(h).fold(l)(prev => prev + alpha * (l - prev))
-            }
+            }.collect().head) // one job; take(1) would probe partitions incrementally
+            pathBudget = pathBudget.updated(k, 0L)
+            cur = matches.filter(!col("__m") || col("__grank") < lit(cutoff)).drop("__m")
           }
         }
+        alive = cur.drop("__prefixes")
+        ledger = ledger.copy(pathBudget = pathBudget)
+      }
+      val admitted =
+        if (smExempt) alive.drop("__grank").unionByName(polAdmitted.filter(exemptCond))
+        else alive.drop("__grank")
+      (admitted, budgetLeftover)
+    }
 
-        // 8. C7 retry ladder (pluggable RetryPolicy; default = the
-        //    reference's 5xx/429/408 + capped exponential backoff ladder,
-        //    `website.rs:8388-8392`): retryable statuses re-queue with
-        //    backoff and are REMOVED from seen (`website.rs:8663-8666`)
-        val isRetried = retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts
-        val retryDf = parsed.toDF().filter(isRetried)
-          .select(col("url"), col("host"), col("depth"), col("discovery_seq"),
-            col("priority"), (col("attempt") + 1).as("attempt"),
-            (lit(epoch) + retry.backoffEpochs(col("attempt"))).as("not_before"))
-        // with retries disabled, nothing is ever removed from seen — skip
-        // the anti-join and the extra count (delta size == admitted count)
-        val seenDelta = if (retry.maxAttempts > 0)
-          newSeen.join(retryDf.select(lower(col("url")).as("url_lower")),
-            Seq("url_lower"), "left_anti")
-        else newSeen
+    /** Fetch: the admitted set persisted, fetched and parsed into a page
+      * delta; the ride-along admit stats drained; the throttle fed.
+      */
+    private def fetch(admitted: DataFrame,
+        candCount: Long): (Dataset[FrontierEntry], Dataset[ParsedPage], Long) = {
+      // 6. mark admitted as seen (insert at admission, `insert_link`
+      //    `website.rs:1718-1749`). The persisted admitted set doubles as
+      //    the seen-delta backing store; the bloom/count/hot-host stats
+      //    ride the fetch job's own scan (withAdmitStats) — no dedicated
+      //    job at all.
+      val admittedDs = admitted.as[FrontierEntry]
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val admitAcc = spark.sparkContext.collectionAccumulator[CrawlEngine.AdmitStat]("graft.admitStats")
+      // 7+9. fetch + parse — priority-queue emission (repartition by host,
+      //    secondary sort desc priority/depth/seq/url, north rule D5) then
+      //    one-pass span parse, PIPELINED in a single stage and
+      //    materialized once. (Epoch 0 splits the stage because the C6
+      //    scope re-anchor must read the seed fetch result before link
+      //    extraction — `modify_selectors` `page.rs:4736-4747`.)
+      // host-hash partitioning WITH salt (north rule D4): a hot host that
+      // dominates the frontier would otherwise pin one task; the salt
+      // width scales with the host's admitted share (see withAdmitStats) —
+      // cold hosts keep a 16-way spread (affinity), hot hosts fan out
+      // toward 4P.
+      // Politeness quotas were already enforced upstream, so fetch order
+      // within a salt shard is pure priority emission — unless
+      // `roundRobin` (D5, reference `UrlFrontier::pop` frontier.rs:78-121):
+      // then hosts interleave (every host's k-th URL precedes any host's
+      // (k+1)-th within a shard).
+      val (fetchReady, statsParts) = timed("fetch_plan") {
+        val base =
+          if (config.roundRobin) {
+            val rrW = Window.partitionBy(col("host"))
+              .orderBy(col("priority").desc, col("depth"), col("discovery_seq"), col("url"))
+            admittedDs.withColumn("__rr", row_number().over(rrW))
+          } else admittedDs.toDF().withColumn("__rr", lit(0))
+        val saltWidth: org.apache.spark.sql.Column =
+          if (hotHostWidths.isEmpty) lit(16L)
+          else hotHostWidths.foldLeft(`when`(lit(false), lit(16L))) {
+            case (acc, (h, w)) => acc.when(col("host") === lit(h), lit(w.toLong))
+          }.otherwise(lit(16L))
+        val (withStats, parts) = withAdmitStats(base, candCount, admitAcc)
+        (withStats
+          .repartition(math.max(1, P), col("host"), pmod(xxhash64(col("url")), saltWidth))
+          .sortWithinPartitions(col("__rr"), col("priority").desc, col("depth"),
+            col("discovery_seq"), col("url"))
+          .drop("__rr")
+          .as[FrontierEntry], parts)
+      }
+      // Pages SINK to parquet per epoch (A7, north rule: parsed documents
+      // land in tables, never in executor memory): every downstream
+      // consumer (retry filter, signature dedup, link explode, pages view)
+      // is a COLUMN-PRUNED scan of the delta file.
+      val ep = epoch
+      val lrw = onLinkFind.orNull
+      val parsedDir = timed("fetch_parse") {
+        val fetched =
+          if (epoch != 0L) fetcher.fetch(spark, fetchReady)
+          else {
+            val seedPages = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
+            epochCaches ::= (() => CrawlEngine.releaseCheckpoint(seedPages.toDF()))
+            val ph = ledger.scope.parentHost
+            // canonical-min winner — identical on the distributed path, the
+            // fast path, and the oracle (partition order would not be)
+            val redirHosts = seedPages
+              .filter(f => f.f_status == 200 && UrlOps.host(f.f_final_url) != ph)
+              .orderBy(col("depth"), col("discovery_seq"), col("host"), col("url"))
+              .map(_.f_final_url).take(1)
+            if (redirHosts.nonEmpty)
+              ledger = ledger.copy(scope = ledger.scope.copy(redirectHost = UrlOps.host(redirHosts.head)))
+            seedPages
+          }
+        val scope = ledger.scope
+        pages.write(fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, scope, ep, lrw)))
+          .toDF(), s"epoch=$epoch")
+      }
+      val parsed: Dataset[ParsedPage] = timed("parsed_read")(
+        spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedDir).as[ParsedPage])
+      // the fetch job has materialized — collect the ride-along stats
+      // (delta count, bloom shards, next epoch's hot-host salt widths)
+      val admittedCount =
+        timed("admit_drain")(drainAdmitStats(admitAcc, statsParts, admittedDs, candCount))
+      if (politenessPossible) timed("throttle")(throttle(parsed))
+      (admittedDs, parsed, admittedCount)
+    }
 
-        // append the epoch's seen delta CO-PARTITIONED, BEFORE link
-        // processing (r6): the link pipeline's seen-filter must observe the
-        // COMPLETE seen set including this epoch's admissions (minus
-        // retried), exactly like the next epoch's gate would. Map side runs
-        // once (shuffle files reused by every later probe), union is
-        // partitioner-aware (no data movement of the base).
-        val deltaRdd = if (retry.maxAttempts > 0) {
-          val seenDeltaCk = timed("seen_ckpt")(seenDelta.localCheckpoint(true))
-          seenCount += timed("seen_ckpt")(seenDeltaCk.count())
+    // Fused admit statistics: the fetch exchange's OWN map-side scan feeds
+    // a per-task (count, bloom shard, locally-hot hosts) accumulator entry
+    // — no dedicated scan of the admitted set. Tasks may re-execute
+    // (speculation, AQE): entries carry their partition id and the driver
+    // keeps ONE per partition. Bloom sizing uses the candidate-count upper
+    // bound so shards stay merge-compatible without a pre-count; keys are
+    // UTF8String lowercase — bit-identical to the probe side's `lower()`.
+    // D4 skew: a host holding share s of the epoch's admitted rows gets a
+    // salt width ~4sP for the NEXT epoch (min 16 keeps cold-host affinity);
+    // hosts are reported only when locally hot (>= 1/8 of the partition),
+    // so the map stays tiny at any host cardinality. Also returns the
+    // stage's partition count, against which drainAdmitStats DETECTS a
+    // Fetcher that broke the full-consumption contract (Fetcher trait doc).
+    private def withAdmitStats(df: DataFrame, expectedUpper: Long,
+        acc: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat]): (DataFrame, Int) = {
+      val size = math.max(1024L, expectedUpper)
+      val urlIdx = df.schema.fieldIndex("url")
+      val hostIdx = df.schema.fieldIndex("host")
+      // same lazy toRdd the mapInternal below wraps — no extra planning
+      val parts = GraftSqlBridge.internalRdd(df).getNumPartitions
+      (GraftSqlBridge.mapInternal(df, df.schema) { (_, it) =>
+        CrawlEngine.admitStats(it, size, urlIdx, hostIdx, acc)
+      }, parts)
+    }
+
+    private def drainAdmitStats(acc: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat],
+        statsParts: Int, admittedDs: Dataset[FrontierEntry], expectedUpper: Long): Long = {
+      import scala.jdk.CollectionConverters._
+      def uniq(a: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat]) = {
+        val pids = new java.util.HashSet[Int]()
+        a.value.asScala.filter(e => pids.add(e._1)).toVector
+      }
+      var uniqParts = uniq(acc)
+      if (uniqParts.size < statsParts) {
+        // Fetcher contract violation (the fetch never fully executed the
+        // admitted scan — sampled, limited, or served from a detached
+        // plan): the ride-along stats are incomplete, and a missing bloom
+        // shard would silently re-admit already-seen URLs next epoch.
+        // Self-heal with a dedicated scan of the PERSISTED admitted set
+        // (one extra job, only on violating epochs) and use its
+        // shards/counts exclusively.
+        log.warn(s"epoch $epoch: admit stats incomplete (${uniqParts.size}/$statsParts partitions " +
+          "reported) — the Fetcher did not fully consume the admitted set; rebuilding " +
+          "bloom/count/salt stats with a dedicated scan")
+        val rebuilt = spark.sparkContext.collectionAccumulator[CrawlEngine.AdmitStat]("graft.admitStats")
+        GraftSqlBridge.internalRdd(withAdmitStats(admittedDs.toDF(), expectedUpper, rebuilt)._1).count()
+        uniqParts = uniq(rebuilt)
+      }
+      seen.addBloom(uniqParts.iterator.map(_._3).filter(_ != null).toVector)
+      val total = uniqParts.iterator.map(_._2).sum
+      hotHostWidths = saltWidths(uniqParts.iterator.flatMap(_._4).toSeq.groupBy(_._1)
+        .map { case (h, cs) => (h, cs.map(_._2).sum) }, total)
+      total
+    }
+
+    /** Reactive throttling (B9): 429 Retry-After reduces the host's rate
+      * (reference `DomainRateLimiter::throttle` rate_limiter.rs:121-137 —
+      * delay := Retry-After, bucket drained); latency EMA feeds the
+      * auto-throttle (auto_throttle.rs: delay ≈ ema/target_concurrency).
+      */
+    private def throttle(parsed: Dataset[ParsedPage]): Unit = {
+      // ONE per-host aggregate feeds both reactive signals. Collected
+      // rows are BOUNDED: with auto-throttle off,
+      // only hosts that actually returned a 429 reach the driver; with
+      // it on, the collect caps at the ledger's LRU capacity by
+      // per-epoch traffic (hosts beyond it would be evicted anyway)
+      def sigAgg(base: DataFrame) = base.groupBy(col("host")).agg(
+        max(when(col("status") === 429, col("retry_after_ms")).otherwise(lit(0L))).as("__ra"),
+        avg(when(col("latency_ms") > 0, col("latency_ms").cast("double"))).as("__l"),
+        count(lit(1)).as("__n"))
+      val throttled = parsed.toDF().filter(col("status") === 429 && col("retry_after_ms") > 0)
+      // EMA rows capped by top traffic; 429 overrides NEVER capped (a
+      // throttling host must be honored regardless of rank). A host
+      // past the cap contributes ONLY its Retry-After override: its
+      // available aggregate averages latency over 429 rows alone,
+      // which diverges from the all-rows average in-cap hosts and the
+      // oracle use — so beyond-cap hosts skip the EMA update entirely
+      // rather than feed it a biased sample.
+      val emaRows: Array[Row] =
+        if (!config.autoThrottle) Array.empty
+        else sigAgg(parsed.toDF())
+          .orderBy(col("__n").desc, col("host")).limit(CrawlEngine.lruHostCap).collect()
+      val haveEma = emaRows.iterator.map(_.getString(0)).toSet
+      val signals = emaRows ++ sigAgg(throttled).collect()
+        .filterNot(r => haveEma.contains(r.getString(0)))
+      signals.filter(_.getLong(1) > 0).foreach { r =>
+        throttleOverrideMs(r.getString(0)) = r.getLong(1)
+        hostTokens(r.getString(0)) = 0L // bucket drained
+      }
+      if (config.autoThrottle) {
+        val alpha = config.autoThrottleAlpha
+        emaRows.filter(!_.isNullAt(2)).foreach { r =>
+          val h = r.getString(0); val l = r.getDouble(2)
+          latencyEma(h) = latencyEma.get(h).fold(l)(prev => prev + alpha * (l - prev))
+        }
+      }
+    }
+
+    /** Seen append: the epoch's seen delta goes in CO-PARTITIONED, BEFORE
+      * link processing: the link pipeline's seen-filter must observe
+      * the COMPLETE seen set including this epoch's admissions (minus
+      * retried), exactly like the next epoch's gate would. Map side runs
+      * once (shuffle files reused by every later probe), union is
+      * partitioner-aware (no data movement of the base).
+      */
+    private def appendSeen(admittedDs: Dataset[FrontierEntry], admittedCount: Long,
+        retryDf: DataFrame): Unit = {
+      val newSeen = admittedDs.select(lower(col("url")).as("url_lower"), col("url"))
+      val (delta, release) = (
+        if (retry.maxAttempts > 0) {
+          val seenDeltaCk = timed("seen_ckpt")(newSeen.join(
+            retryDf.select(lower(col("url")).as("url_lower")), Seq("url_lower"), "left_anti")
+            .localCheckpoint(true))
+          seen.count += timed("seen_ckpt")(seenDeltaCk.count())
           // every consumer of the admitted cache (bloom, fetch, seen delta)
           // has materialized — release it NOW (leaving one cached plan per
           // epoch alive OOMs the driver on multi-hundred-epoch crawls)
           admittedDs.unpersist(false)
-          seenDeltaCk.rdd.map(r => (r.getString(0), r.getString(1)))
+          (seenDeltaCk.rdd, () => CrawlEngine.releaseCheckpoint(seenDeltaCk))
         } else {
+          // with retries disabled, nothing is ever removed from seen: a
           // lazy delta over the persisted admitted set — zero extra jobs
-          seenCount += admittedCount
-          admittedCaches :+= admittedDs
-          timed("seen_reroot")(seenDelta.rdd).map(r => (r.getString(0), r.getString(1)))
-        }
-        val seenDeltaPart = deltaRdd.partitionBy(seenPartitioner)
-        seenRdd = spark.sparkContext.union(seenRdd, seenDeltaPart)
-        seenDeltaRdd = spark.sparkContext.union(seenDeltaRdd, seenDeltaPart)
-        seenRddEpochs += 1
+          seen.count += admittedCount
+          (timed("seen_reroot")(newSeen.rdd), () => admittedDs.unpersist(false))
+        }): (org.apache.spark.rdd.RDD[Row], () => Unit)
+      seen.append(delta.map(r => (r.getString(0), r.getString(1))), Some(release))
+    }
 
-        // 10. which pages expand their links: vetoed pages never (B11);
-        //     in the chain phase only sitemap docs; else, with C5 signature
-        //     dedup, only the canonical-first page per NEW signature
-        //     (`website.rs:8671-8683`) and every page without a signature
-        var expanding = (onShouldCrawl match {
-          case Some(veto) => parsed.filter(veto) // B11: vetoed pages don't expand
-          case None => parsed
-        }).toDF()
-        val vetoedCount =
-          if (config.trackBlocked && onShouldCrawl.isDefined) timed("blocked") {
-            // rows over NON-retried pages only, matching the fast path
-            // (a retried page re-parses on its retry epoch); written as a
-            // parquet delta, counted from the delta
-            val live = !(retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts)
-            val veto = onShouldCrawl.get
-            val vetoedRows = parsed.filter(live).filter(p => !veto(p))
-              .toDF().select(col("url"), lit("veto").as("reason"), lit(epoch.toLong).as("epoch"))
-            sinkBlockedDelta(vetoedRows, "veto")
-          } else 0L
-        if (sitemapChain && !ledger.chainStarted) timed("sitemaps") {
-          // rel=sitemap auto-discovery (one tiny extra job per epoch,
-          // only when the caller requested the chain; ads are distinct
-          // sitemap DOCS, so the collect is bounded by the cap).
-          // Case-insensitive keep-first (min = UTF-8-first variant per
-          // lowercase key) BEFORE the cap, so the truncation applies the
-          // same rule as accumulateDiscoveredSitemaps and the small path —
-          // a >cap advertised set with case-duplicate URLs previously
-          // could truncate to a different set than the oracle (r5 advice).
-          val ads = parsed.toDF()
-            .select(explode(col("sitemap_links")).as("__u"))
-            .groupBy(lower(col("__u")).as("__k")).agg(min(col("__u")).as("__u"))
-            .orderBy(col("__u")).limit(CrawlEngine.maxDiscoveredSitemaps)
-            .select(col("__u")).as[String].collect()
-          ledger = ledger.copy(discoveredSitemaps = CrawlEngine.accumulateDiscoveredSitemaps(
-            ledger.discoveredSitemaps, ads.toSeq))
-        }
-        val dedupSigs = !ledger.chainStarted && config.normalize
-        if (ledger.chainStarted) timed("sitemaps") {
-          // chain phase: ONLY sitemap docs expand — their <loc> entries
-          // plus recursive <sitemapindex> locs; entry pages are recorded
-          // but never expanded ("does not re-crawl the links of the pages
-          // found on the sitemap", `website.rs:11601`). The sitemap XML
-          // bypasses BOTH signature dedup AND the B11 veto (the reference
-          // parses sitemaps outside the page channel — the veto governs
-          // page-link expansion only), so expansion derives from `parsed`,
-          // not the veto-filtered stream — mirroring the oracle.
-          val isSm = lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq)
-          val nested = parsed.toDF().filter(isSm)
-            .select(explode(col("sitemap_links")).as("u")).as[String].collect()
-          expanding = parsed.toDF().filter(isSm)
-            .withColumn("links", concat(col("links"), col("sitemap_links")))
-          ledger = ledger.copy(chainSitemaps = ledger.chainSitemaps ++ nested.map(UrlOps.lowerUtf8))
-        }
-        // (signature or 0, depth, discovery_seq, host, url, links) of every
-        // fetched page that may expand. A scan of the page delta, no job
-        val pageRows = org.apache.spark.sql.GraftSqlBridge.internalRdd(expanding
-          .filter(col("status") === 200)
-          .select(if (dedupSigs) col("signature") else lit(0L), col("depth"),
-            col("discovery_seq"), col("host"), col("url"), col("links")))
-
-        // 11. the epoch's new links, in ONE job over two exchanges, each on
-        //     the stores' own partitioning (`seenPartitioner`), so each
-        //     store probe runs in the reduce task of its exchange (the
-        //     reference does this as one pass over one hash set,
-        //     `links_visited.extend_links`):
-        //     - signatures: pages keyed by signature, map-side combined to
-        //       the canonical-min page (depth, discovery_seq, host, url),
-        //       probed against the signature store; the winners of new
-        //       signatures carry their links on;
-        //     - links: exploded, keyed by lower(url), map-side combined to
-        //       the canonical-min (p_depth, p_seq, pos, url) — url in UTF-8
-        //       byte order, `Sequential.linkOrder` — and probed against the
-        //       seen store, whose delta already holds this epoch's
-        //       admissions, so the survivors are exactly the links the next
-        //       epoch's gate would pass.
-        //     The survivors then get discovery_seq in link order: on the
-        //     driver when they fit the threshold, else range-sorted.
-        val (expandingRows, sigDeltaPart) = if (!dedupSigs) (pageRows, None) else {
-          val winners = probeSigs(pageRows.filter(_.getLong(0) != 0L)
-            .map(r => (r.getLong(0), r.copy()))
-            .reduceByKey(seenPartitioner, CrawlEngine.minPage _), keepPresent = false)
-          // the store's delta: the winners' signatures, persisted (a later
-          // read must not recompute it against the grown store), written
-          // by the links job from the signature exchange it already holds
-          val delta = winners.mapPartitions(_.map(kv => (kv._1, true)), preservesPartitioning = true)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          sigDeltaCaches :+= delta
-          sigRdd = spark.sparkContext.union(sigRdd, delta)
-          sigDeltaRdd = spark.sparkContext.union(sigDeltaRdd, delta)
-          sigRddEpochs += 1
-          (pageRows.filter(_.getLong(0) == 0L).union(winners.values), Some(delta))
-        }
-        val survivors = probeSeen(expandingRows.flatMap(CrawlEngine.linkRefs)
-          .reduceByKey(seenPartitioner, CrawlEngine.minLink _), keepPresent = false).values
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val newLinkCount = timed("links") {
-          val counts = sigDeltaPart.fold(survivors.mapPartitions(it => Iterator.single(it.size.toLong))) {
-            // both sides have the store's partition count
-            _.zipPartitions(survivors) { (d, it) => d.foreach(_ => ()); Iterator.single(it.size.toLong) }
-          }
-          counts.collect().sum
-        }
-        // the new links as frontier rows: a driver-held table when they fit
-        // the threshold (no driver collect past it), else distributed
-        val (newFrontier, newFrontierHeld) =
-          if (newLinkCount == 0) (frontierFrame(Nil), true)
-          else if (smallFits(newLinkCount)) {
-            val rows = timed("links_seq")(survivors.collect()).sorted(Sequential.linkOrder)
-            (frontierFrame(rows.iterator.zipWithIndex.map { case ((pd, _, _, u), i) =>
-              FrontierEntry(u, UrlOps.host(u), pd + 1, ledger.seqCounter + i,
-                UrlOps.scoreUrl(u, pd + 1), 0, 0L)
-            }.toSeq), true)
-          } else (timed("links_seq")(rangeSeq(survivors, ledger.seqCounter)), false)
-        ledger = ledger.copy(seqCounter = ledger.seqCounter + newLinkCount)
-
-        // 12. next frontier = politeness-deferred ∪ retries ∪ new links,
-        //     case-insensitive-deduped (D1) as a map-side-combining hash
-        //     aggregate keeping the canonical-min row (struct-min over the
-        //     canonical-order-prefixed struct — a window would shuffle and
-        //     sort every row; the aggregate combines duplicates before the
-        //     exchange). New links are already seen-filtered (r6), so the
-        //     next epoch's gate probes only carryover entries and bloom
-        //     false positives. Without carryover streams the new-link set
-        //     IS the next frontier (already unique): no dedup, no count job,
-        //     and no job at all when the driver holds it.
-        frontier =
-          if (carryover) {
-            val nextFrontierAll = deferredHold.unionByName(deferred)
-              .unionByName(budgetLeftover)
-              .unionByName(retryDf).unionByName(newFrontier)
-            timed("frontier_ckpt")(CrawlEngine.dedupCanonicalMin(nextFrontierAll)
-              .localCheckpoint(true))
-          } else if (newFrontierHeld) newFrontier
-          else timed("frontier_ckpt")(newFrontier.localCheckpoint(true))
-        survivors.unpersist(false) // frontier materialized — release the link caches
-        rangeCache.foreach(_.unpersist(false))
-        rangeCache = None
-        readyHist = if (carryover) histOf(frontier) else Map(0L -> newLinkCount)
-        val frontierCount = readyHist.values.sum
-        frontierCountPrev = frontierCount
-
-        if (seenRddEpochs >= math.max(2, config.stateCompactionEpochs)) compactStores()
-
-        metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
-          newLinkCount, frontierCount, seenCount, ledger.budgetStopped,
-          (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
-
-        timed("commit")(commitIfDue(frontier, seen, signatures))
-
-        epochCache.foreach(_.unpersist(false))
-        epochCache = None
-        epoch += 1
-        onEpoch.foreach(f => f(epoch - 1))
-        done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
-          shutdownRequested || System.nanoTime() > deadline
+    /** 10. Which pages expand their links: vetoed pages never (B11); in the
+      * chain phase only sitemap docs; else, with C5 signature dedup, only
+      * the canonical-first page per NEW signature (`website.rs:8671-8683`,
+      * in [[links]]) and every page without a signature.
+      */
+    private def expandingPages(parsed: Dataset[ParsedPage]): (DataFrame, Long) = {
+      var expanding = onShouldCrawl.fold(parsed)(veto => parsed.filter(veto)).toDF() // B11
+      val vetoedCount =
+        if (config.trackBlocked && onShouldCrawl.isDefined) timed("blocked") {
+          // rows over NON-retried pages only, matching the fast path
+          // (a retried page re-parses on its retry epoch); written as a
+          // parquet delta, counted from the delta
+          val live = !(retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts)
+          val veto = onShouldCrawl.get
+          blocked.writeCounted(parsed.filter(live).filter(p => !veto(p))
+            .toDF().select(col("url"), lit("veto").as("reason"), lit(epoch).as("epoch")), "veto")
+        } else 0L
+      if (sitemapChain && !ledger.chainStarted) timed("sitemaps") {
+        // rel=sitemap auto-discovery (one tiny extra job per epoch,
+        // only when the caller requested the chain; ads are distinct
+        // sitemap DOCS, so the collect is bounded by the cap).
+        // Case-insensitive keep-first (min = UTF-8-first variant per
+        // lowercase key) BEFORE the cap, so the truncation applies the
+        // same rule as accumulateDiscoveredSitemaps and the small path.
+        val ads = parsed.toDF()
+          .select(explode(col("sitemap_links")).as("__u"))
+          .groupBy(lower(col("__u")).as("__k")).agg(min(col("__u")).as("__u"))
+          .orderBy(col("__u")).limit(CrawlEngine.maxDiscoveredSitemaps)
+          .select(col("__u")).as[String].collect()
+        ledger = ledger.copy(discoveredSitemaps = CrawlEngine.accumulateDiscoveredSitemaps(
+          ledger.discoveredSitemaps, ads.toSeq))
       }
+      if (ledger.chainStarted) timed("sitemaps") {
+        // chain phase: ONLY sitemap docs expand — their <loc> entries
+        // plus recursive <sitemapindex> locs; entry pages are recorded
+        // but never expanded ("does not re-crawl the links of the pages
+        // found on the sitemap", `website.rs:11601`). The sitemap XML
+        // bypasses BOTH signature dedup AND the B11 veto (the reference
+        // parses sitemaps outside the page channel — the veto governs
+        // page-link expansion only), so expansion derives from `parsed`,
+        // not the veto-filtered stream — mirroring the oracle.
+        val isSm = lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq)
+        val nested = parsed.toDF().filter(isSm)
+          .select(explode(col("sitemap_links")).as("u")).as[String].collect()
+        expanding = parsed.toDF().filter(isSm)
+          .withColumn("links", concat(col("links"), col("sitemap_links")))
+        ledger = ledger.copy(chainSitemaps = ledger.chainSitemaps ++ nested.map(UrlOps.lowerUtf8))
+      }
+      (expanding, vetoedCount)
     }
 
-    // --- A6: sitemap CHAINED AFTER the crawl (reference `crawl()` runs
-    // `crawl_concurrent` then `sitemap_crawl_chain`, `website.rs:6974-6976`)
-    // — under a budget the crawl spends first and an exhausted wildcard
-    // skips the chain entirely (`is_over_wild_budget`, `website.rs:11654`).
-    // Each seed's /sitemap.xml is injected through the inbox (full gate:
-    // seen/lists/robots — `is_allowed_budgetless`); chain epochs then run
-    // under the ordinary loop with two rule changes keyed off the ledger's
-    // `chainSitemaps`: sitemap docs are budget-exempt, and ONLY sitemap
-    // docs expand (urlset entries + recursive sitemapindex locs).
-    if (sitemapChain && !ledger.chainStarted && !ledger.budgetStopped && !shutdownRequested &&
-        System.nanoTime() < deadline && epoch < config.maxEpochs) {
-      val (sms, chainLedger) = Sequential.startChain(config, start.seedUrls, ledger)
-      ledger = chainLedger
-      if (sms.nonEmpty) {
-        sms.foreach(inbox.add)
-        done = false
-      } else crawling = false
-    } else crawling = false
+    /** 11. The epoch's new links, in ONE job over two exchanges, each on the
+      * stores' own partitioning, so each store probe runs in the reduce
+      * task of its exchange (the reference does this as one pass over one
+      * hash set, `links_visited.extend_links`):
+      *   - signatures: pages keyed by signature, map-side combined to the
+      *     canonical-min page (depth, discovery_seq, host, url), probed
+      *     against the signature store; the winners of new signatures
+      *     carry their links on;
+      *   - links: exploded, keyed by lower(url), map-side combined to the
+      *     canonical-min (p_depth, p_seq, pos, url) — url in UTF-8 byte
+      *     order, `Sequential.linkOrder` — and probed against the seen
+      *     store, whose delta already holds this epoch's admissions, so the
+      *     survivors are exactly the links the next epoch's gate would
+      *     pass.
+      * The survivors then get discovery_seq in link order: on the driver
+      * (a driver-held frontier table) when they fit the threshold, else
+      * range-sorted.
+      */
+    private def links(expanding: DataFrame): (Long, DataFrame, Boolean) = {
+      val dedupSigs = !ledger.chainStarted && config.normalize
+      // (signature or 0, depth, discovery_seq, host, url, links) of every
+      // fetched page that may expand. A scan of the page delta, no job
+      val pageRows = GraftSqlBridge.internalRdd(expanding
+        .filter(col("status") === 200)
+        .select(if (dedupSigs) col("signature") else lit(0L), col("depth"),
+          col("discovery_seq"), col("host"), col("url"), col("links")))
+      val (expandingRows, sigDelta) = if (!dedupSigs) (pageRows, None) else {
+        val winners = sigs.probe(pageRows.filter(_.getLong(0) != 0L)
+          .map(r => (r.getLong(0), r.copy()))
+          .reduceByKey(partitioner, CrawlEngine.minPage _), keepPresent = false)
+        // the store's delta: the winners' signatures, persisted (a later
+        // read must not recompute it against the grown store), written
+        // by the links job from the signature exchange it already holds
+        val delta = winners.mapPartitions(_.map(kv => (kv._1, true)), preservesPartitioning = true)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sigs.append(delta, Some(() => delta.unpersist(false)))
+        (pageRows.filter(_.getLong(0) == 0L).union(winners.values), Some(delta))
+      }
+      val survivors = seen.probe(expandingRows.flatMap(CrawlEngine.linkRefs)
+        .reduceByKey(partitioner, CrawlEngine.minLink _), keepPresent = false).values
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      epochCaches ::= (() => survivors.unpersist(false))
+      val newLinkCount = timed("links") {
+        val counts = sigDelta.fold(survivors.mapPartitions(it => Iterator.single(it.size.toLong))) {
+          // both sides have the store's partition count
+          _.zipPartitions(survivors) { (d, it) => d.foreach(_ => ()); Iterator.single(it.size.toLong) }
+        }
+        counts.collect().sum
+      }
+      // the new links as frontier rows: a driver-held table when they fit
+      // the threshold (no driver collect past it), else distributed
+      val (newFrontier, held) =
+        if (newLinkCount == 0) (frontierFrame(Nil), true)
+        else if (smallFits(newLinkCount)) {
+          val rows = timed("links_seq")(survivors.collect()).sorted(Sequential.linkOrder)
+          (frontierFrame(rows.iterator.zipWithIndex.map { case ((pd, _, _, u), i) =>
+            FrontierEntry(u, UrlOps.host(u), pd + 1, ledger.seqCounter + i,
+              UrlOps.scoreUrl(u, pd + 1), 0, 0L)
+          }.toSeq), true)
+        } else (timed("links_seq")(rangeSeq(survivors, ledger.seqCounter)), false)
+      ledger = ledger.copy(seqCounter = ledger.seqCounter + newLinkCount)
+      (newLinkCount, newFrontier, held)
     }
 
-    val finalPages = // the sitemap XML itself is parsed, never emitted as a page
-      if (ledger.chainSitemaps.isEmpty) pages
-      else pages.filter(!lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq))
-    CrawlResult(finalPages, seen, frontierDf, metrics.toSeq, epoch, blockedDf)
+    // discovery_seq for new links past the threshold: range-partitioned in
+    // link order (the partitioner's sample job), each range counted over the
+    // sorted ranges, persisted (one job), and the offsets stamped in place;
+    // the frontier's checkpoint reads the ranges back
+    private def rangeSeq(links: org.apache.spark.rdd.RDD[CrawlEngine.LinkRef], offset: Long): DataFrame = {
+      val keyed = links.map(t => (t, ()))
+      val ord = Sequential.linkOrder
+      val sorted = new org.apache.spark.rdd.ShuffledRDD[CrawlEngine.LinkRef, Unit, Unit](keyed,
+          new org.apache.spark.RangePartitioner(math.max(1, math.min(P, 200)), keyed)(ord,
+            implicitly[scala.reflect.ClassTag[CrawlEngine.LinkRef]]))
+        .setKeyOrdering(ord).keys
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      epochCaches ::= (() => sorted.unpersist(false))
+      val offsets = CrawlEngine.offsets(sorted, offset)
+      GraftSqlBridge.internalCreateDataFrame(spark,
+        sorted.mapPartitionsWithIndex { (i, it) =>
+          var k = offsets(i) - 1
+          it.map { case (pd, _, _, u) => k += 1; CrawlEngine.frontierRow(u, pd + 1, k) }
+        }, Checkpointer.schemas("frontier"))
+    }
+
+    /** 12. Roll: next frontier = politeness-deferred ∪ retries ∪ new links,
+      * case-insensitive-deduped (D1) as a map-side-combining hash aggregate
+      * keeping the canonical-min row (struct-min over the
+      * canonical-order-prefixed struct — a window would shuffle and sort
+      * every row; the aggregate combines duplicates before the exchange).
+      * New links are already seen-filtered, so the next epoch's gate
+      * probes only carryover entries and bloom false positives. Without
+      * carryover streams the new-link set IS the next frontier (already
+      * unique): no dedup, no count job, and no job at all when the driver
+      * holds it. Returns the frontier's size.
+      */
+    private def roll(carried: DataFrame, newFrontier: DataFrame, newFrontierHeld: Boolean,
+        newLinkCount: Long): Long = {
+      val prev = frontier
+      frontier =
+        if (carryover)
+          timed("frontier_ckpt")(CrawlEngine.dedupCanonicalMin(carried.unionByName(newFrontier))
+            .localCheckpoint(true))
+        else if (newFrontierHeld) newFrontier
+        else timed("frontier_ckpt")(newFrontier.localCheckpoint(true))
+      // the frontier has materialized: nothing reads this epoch's caches
+      CrawlEngine.releaseCheckpoint(prev)
+      epochCaches.foreach(_())
+      epochCaches = Nil
+      readyHist = if (carryover) histOf(frontier) else Map(0L -> newLinkCount)
+      readyHist.values.sum
+    }
+
+    /** The call's result. The seen table reads the store's chain lazily,
+      * so the chain stays; the caches no result table reads are released.
+      */
+    def result(): CrawlResult = {
+      sigs.release(all = true)
+      seen.release(all = false)
+      val all = pages.pages
+      val finalPages = // the sitemap XML itself is parsed, never emitted as a page
+        if (ledger.chainSitemaps.isEmpty) all
+        else all.filter(!lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq))
+      CrawlResult(finalPages, seen.rows, frontierDf, metrics.toSeq, epoch, blocked.table)
+    }
   }
 }
 
@@ -1791,6 +1282,16 @@ object CrawlEngine {
     * at toy scale.
     */
   @volatile private[engine] var mirrorCap: Int = 1 << 20
+
+  /** Generation blooms: per-epoch delta blooms keep serving across
+    * compactions; the full O(|seen|) bloom rebuild runs only when the
+    * generation count exceeds this bound. Each generation is sized for its
+    * epoch at 1% FPP, so the group false-positive estimate just before a
+    * rebuild is ~1-(1-0.01)^k (~28% at 32) — a false positive only sends
+    * the URL to the exact probe (extra residue shuffle, never a correctness
+    * miss), so compaction stays O(delta) for k-1 of every k rebuild windows.
+    */
+  private[engine] val bloomMaxGenerations = 32
 
   /** Capacity of every driver-side per-host ledger (token buckets, 429
     * overrides, latency EMAs) AND the cap on each ledger's per-epoch
@@ -1889,10 +1390,78 @@ object CrawlEngine {
   val parsedSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[ParsedPage].schema
 
+  /** A driver-held table: its plan is a LocalRelation, which a snapshot
+    * commit writes on the driver with no Spark job.
+    */
+  private[engine] def localFrame(spark: SparkSession, rows: Iterable[Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toSeq.asJava, schema)
+  }
+
+  /** Each partition's first sequence number, counting from `start` (one
+    * job).
+    */
+  private[engine] def offsets(rdd: org.apache.spark.rdd.RDD[_], start: Long): Array[Long] =
+    rdd.mapPartitions(it => Iterator.single(it.size.toLong)).collect().scanLeft(start)(_ + _)
+
+  private[engine] def histLocal(v: Vector[FrontierEntry]): Map[Long, Long] =
+    v.groupBy(_.not_before).map { case (nb, es) => (nb, es.size.toLong) }
+
+  /** Releases the RDD a `localCheckpoint`ed table reads, if it is one. */
+  private[engine] def releaseCheckpoint(df: DataFrame): Unit =
+    org.apache.spark.sql.GraftSqlBridge.checkpointRdd(df)
+      .foreach(r => try r.unpersist(false) catch { case _: Throwable => })
+
+  /** (partition, rows, bloom shard or null, locally-hot hosts) of one
+    * partition of an epoch's admitted set.
+    */
+  private[engine] type AdmitStat = (Int, Long, Array[Byte], Array[(String, Long)])
+
+  private def hotHosts(hostCounts: java.util.HashMap[String, Long], n: Long): Array[(String, Long)] = {
+    import scala.jdk.CollectionConverters._
+    hostCounts.asScala.filter { case (_, c) => c * 8 >= n && c >= 32 }.toArray
+  }
+
+  /** The fetch scan's ride-along admit stats over InternalRows: rows pass
+    * through, and an exhausted partition adds its [[AdmitStat]] to `acc`.
+    */
+  private[engine] def admitStats(it: Iterator[InternalRow], bloomSize: Long, urlIdx: Int, hostIdx: Int,
+      acc: org.apache.spark.util.CollectionAccumulator[AdmitStat]): Iterator[InternalRow] = {
+    val pid = org.apache.spark.TaskContext.getPartitionId()
+    new Iterator[InternalRow] {
+      private var bloom: BloomFilter = null
+      private val hostCounts = new java.util.HashMap[String, Long]()
+      private var n = 0L
+      private var flushed = false
+      override def hasNext: Boolean = {
+        val h = it.hasNext
+        if (!h && !flushed) {
+          flushed = true
+          // empty partitions flush too (null shard): the drain counts
+          // flushed pids against the stage's partition count to detect
+          // partial consumption, so every EXHAUSTED partition must
+          // report — a partition abandoned mid-iteration never gets
+          // here, which is exactly the signal
+          acc.add((pid, n, if (n == 0) null else KeyStore.bloomBytes(bloom), hotHosts(hostCounts, n)))
+        }
+        h
+      }
+      override def next(): InternalRow = {
+        val r = it.next()
+        if (bloom == null) bloom = BloomFilter.create(bloomSize, 0.01)
+        bloom.putBinary(r.getUTF8String(urlIdx).toLowerCase.getBytes)
+        hostCounts.merge(r.getUTF8String(hostIdx).toString, 1L, (x, y) => x + y)
+        n += 1
+        r
+      }
+    }
+  }
+
   /** A crawl-scoped temp directory for a parquet sink (a real deployment
     * points the sink at the output table's location), deleted on JVM exit.
     */
-  private def tempSink(prefix: String): String = {
+  private[engine] def tempSink(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       try {
@@ -1918,8 +1487,7 @@ object CrawlEngine {
   private[engine] val blockedBufCap = 65536
 
   /** Small-path parsed pages buffer driver-side up to this many rows before
-    * flushing one parquet delta — tiny epochs stop paying a write job each
-    * (r6); any pages-view read flushes first.
+    * flushing one parquet delta: tiny epochs pay no write job each.
     */
   private[engine] val pageBufCap = 16384
 

@@ -99,7 +99,7 @@ object Sequential {
   /** Reactive per-host delay override: 429 Retry-After throttle ∨ the
     * clamped latency-EMA auto-throttle delay (reference
     * `rate_limiter.rs:121-137` + `auto_throttle.rs`). ONE formula shared by
-    * the engine's distributed ledger broadcast (politenessStateDf) and
+    * the engine's distributed politeness stage (its per-host state join) and
     * [[Step]] — they must stay bit-identical.
     */
   def reactiveOverrideMs(config: CrawlConfig, throttleMs: Long, ema: Option[Double]): Long = {
@@ -114,8 +114,8 @@ object Sequential {
   }
 
   /** B9 — per-host token-bucket politeness admission, highest priority
-    * first (mirrors the engine's distributed rank + integral banking at
-    * `CrawlEngine.scala` step 4; reference `rate_limiter.rs:75-186`).
+    * first (mirrors the engine's distributed rank + integral banking in
+    * `CrawlEngine`'s politeness stage; reference `rate_limiter.rs:75-186`).
     * EVERY host present banks `avail − used·1000` — a host earning a
     * fractional token per epoch accrues it and admits on a later epoch.
     *

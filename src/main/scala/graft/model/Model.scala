@@ -143,15 +143,6 @@ final case class CrawlConfig(
     // probe structures, keeping per-epoch gate cost flat over thousands
     // of epochs
     stateCompactionEpochs: Int = 16,
-    // generation blooms: per-epoch delta blooms keep serving across
-    // compactions; the full O(|seen|) bloom rebuild runs only when the
-    // generation count exceeds this bound. Each generation is sized for
-    // its epoch at 1% FPP, so the group false-positive estimate just
-    // before a rebuild is ~1-(1-0.01)^k (~28% at the default 32) — a
-    // false positive only sends the URL to the exact probe (extra
-    // residue shuffle, never a correctness miss), so compaction stays
-    // O(delta) for k-1 of every k rebuild windows.
-    bloomMaxGenerations: Int = 32,
     // epochs admitting at most this many URLs assign link sequence numbers
     // driver-side in one job instead of the distributed two-pass (identical
     // canonical order; the two-pass costs ~4 driver barriers that dwarf the
@@ -173,14 +164,6 @@ final case class CrawlConfig(
   /** Effective wildcard budgeting flag (`determine_limits` `website.rs:14068-14075`). */
   def wildCardBudgeting: Boolean = budget.contains("*")
 }
-
-/** Per-host politeness state carried across epochs (reference per-domain
-  * token bucket `rate_limiter.rs:75-186` + robots Crawl-delay
-  * `website.rs:2524-2528`), in logical-time form so tests are
-  * wall-clock-free: `tokens_milli` accumulates `tick_ms / delay_ms` permits
-  * per epoch (stored x1000 to stay integral).
-  */
-final case class HostState(host: String, delay_ms: Long, tokens_milli: Long)
 
 /** Per-epoch crawl metrics (north rule: checkpoints carry lineage + metrics). */
 final case class EpochMetrics(

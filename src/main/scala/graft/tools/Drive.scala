@@ -62,457 +62,7 @@ object Drive {
         s"(${esc(u)},${esc(r)},CAST($e AS BIGINT))" }.mkString("|"))
       return
     }
-    if (args.headOption.contains("throttledrive")) {
-      // engine run of the crawl_throttle scenario — rows must equal the
-      // THROTTLE_ROWS pins (per-page epoch = pacing parity)
-      val spark = session(4)
-      val rows = graft.queries.Queries.crawlThrottle(spark, "")
-        .orderBy("url").collect()
-      def esc(s: String) = "'" + s.replace("'", "''") + "'"
-      println("ENGINE_THROTTLE_ROWS " + rows.map(r =>
-        s"(${esc(r.getString(0))},${r.getInt(1)},${r.getInt(2)},CAST(${r.getLong(3)} AS BIGINT))")
-        .mkString("|"))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("hashdrive")) {
-      // new md5-hash expressions (MinHashSig/SimHash60/Hash60) under
-      // CODEGEN_ONLY over a parquet scan — fails loudly if doGenCode breaks
-      import graft.functions.{hashfns, TextFunctions}
-      import org.apache.spark.sql.functions._
-      val spark = session(4)
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .withColumn("sh", TextFunctions.wordShingles(col("text"), 3))
-        .filter(size(col("sh")) > 0)
-      val out = docs.select(col("doc_id"),
-        hashfns.minhash_sig(col("sh"), 16).as("sig"),
-        hashfns.simhash60(col("sh")).as("sim"),
-        hashfns.hash60(col("text")).as("h60"))
-      out.explain("formatted")
-      val rows = out.collect()
-      println(s"HASHDRIVE rows=${rows.length} firstSig=${rows.head.getSeq[Long](1).take(3)} " +
-        s"sim=${rows.head.getLong(2)} h60=${rows.head.getLong(3)}")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("cosinedrive")) {
-      // r6: CosineSim codegen expression under CODEGEN_ONLY over a parquet
-      // scan — must equal the interpreted higher-order chain it replaced,
-      // bit for bit, on real embedding pairs
-      import graft.functions.Similarity
-      import org.apache.spark.sql.functions._
-      val spark = session(4)
-      val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      val pairs = e.select(col("vec_id").as("ia"), col("embedding").as("va"))
-        .join(e.select(col("vec_id").as("ib"), col("embedding").as("vb")),
-          col("ia") < col("ib") && pmod(col("ia") + col("ib"), lit(23)) === 0)
-      def oldCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-        val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-        val na = sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-        val nb = sqrt(aggregate(b, lit(0.0), (acc, v) => acc + v * v))
-        dot / (na * nb)
-      }
-      val out = pairs.select(col("ia"), col("ib"),
-        Similarity.cosine(col("va"), col("vb")).as("n"), oldCosine(col("va"), col("vb")).as("o"))
-      out.select(col("ia"), col("ib"), col("n")).explain("formatted")
-      val total = out.count()
-      val diverging = out.filter(col("n") =!= col("o")).count()
-      println(s"COSINEDRIVE pairs=$total diverging=$diverging")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("fetchplan")) {
-      // r6: shape of the per-epoch fetch+parse pipeline — is the
-      // FetchResult serialize/deserialize between the Fetcher seam and
-      // parsePage eliminated (EliminateSerialization), and what surrounds
-      // the parquet write?
-      import graft.corpus.CorpusParams
-      import graft.engine.{CrawlEngine, GenerativeFetcher, ScopeState}
-      import org.apache.spark.sql.functions._
-      val spark = session(4)
-      import spark.implicits._
-      val p = CorpusParams(hosts = 16, pagesPerHost = 1000, fanout = 48, textWords = 150)
-      val entries = spark.range(0, 10000).map { i =>
-        val h = (i % 16).toInt
-        val u = graft.corpus.CorpusGen.pageUrl(p, h, sub = false, i / 16)
-        graft.model.FrontierEntry(u, s"www.site$h.com", 1, i, 0, 0, 0L)
-      }
-      val scope = ScopeState("", "www.site0.com", "https", "",
-        "https://www.site0.com/", Set("*"), fullResources = false)
-      val fetched = new GenerativeFetcher(p).fetch(spark, entries)
-        .mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, scope, 1L)))
-      fetched.explain("formatted")
-      val t0 = System.nanoTime()
-      fetched.write.mode("overwrite").option("compression", "none")
-        .parquet("/dev/shm/graft-fetchplan")
-      println(f"FETCHPLAN wrote in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("dedupprof")) {
-      // per-stage profile of the sketch dedup queries at sf0.1
-      import graft.functions.TextFunctions
-      import org.apache.spark.sql.functions._
-      val spark = session(32)
-      val sf = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      def timed[T](l: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"DEDUPPROF $l ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-      }
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-      timed("warmup")(docs.count())
-      val sh = docs.select(col("doc_id"), TextFunctions.wordShingles(col("text"), 3).as("sh"))
-      timed("shingles_only")(sh.count())
-      timed("shingle_rows")(println("  total shingles = " +
-        sh.select(explode(col("sh"))).count()))
-      timed("minhash_full")(println("  minhash pairs = " +
-        graft.queries.Queries.dMinhashPairs(spark, sf).count()))
-      timed("simhash_full")(println("  simhash pairs = " +
-        graft.queries.Queries.dSimhashPairs(spark, sf).count()))
-      timed("ngram_full")(println("  ngram pairs = " +
-        graft.queries.Queries.dNgramJaccard(spark, sf).count()))
-      timed("embed_full")(println("  embed pairs = " +
-        graft.queries.Queries.dEmbeddingNearDups(spark, sf).count()))
-      // candidate volumes
-      val base = sh.filter(size(col("sh")) > 0)
-        .select(col("doc_id").as("__id"), col("sh").as("__sh"))
-      val banded = base.select(col("__id"),
-        graft.functions.Dedup.minhashSignature(col("__sh"), 16).as("__sig"))
-        .select(col("__id"), posexplode(array((0 until 4).map(b =>
-          slice(col("__sig"), b * 4 + 1, 4)): _*)).as(Seq("__band", "__bkey")))
-      timed("minhash_cands")(println("  minhash candidate pairs = " +
-        banded.select(col("__band"), col("__bkey"), col("__id").as("id_a"))
-          .join(banded.select(col("__band"), col("__bkey"), col("__id").as("id_b")),
-            Seq("__band", "__bkey"))
-          .filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct().count()))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("ngramprof")) {
-      import graft.functions.TextFunctions
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val spark = session(32)
-      val sf = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val threshold = 0.2
-      def timed[T](l: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"NGRAMPROF $l ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-      }
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-        .select(col("doc_id").as("__id"), TextFunctions.wordShingles(col("text"), 3).as("__sh"))
-        .filter(size(col("__sh")) > 0)
-      timed("docs")(docs.count())
-      val toks = docs.select(col("__id"), size(col("__sh")).as("__m"), explode(col("__sh")).as("__s"))
-      val freq = toks.groupBy(col("__s")).agg(count(lit(1)).as("__f"))
-      timed("freq")(println("  distinct shingles = " + freq.count()))
-      val w = Window.partitionBy(col("__id")).orderBy(col("__f"), col("__s"))
-      val prefix = toks.join(freq, Seq("__s"))
-        .withColumn("__r", row_number().over(w))
-        .filter(col("__r") <= col("__m") - ceil(lit(threshold) * col("__m") - lit(1e-9)) + 1)
-        .select(col("__s"), col("__id"), col("__m"))
-      timed("prefix")(println("  prefix rows = " + prefix.count()))
-      val cands = prefix.select(col("__s"), col("__id").as("id_a"), col("__m").as("__ma"))
-        .join(prefix.select(col("__s"), col("__id").as("id_b"), col("__m").as("__mb")), Seq("__s"))
-        .filter(col("id_a") < col("id_b") &&
-          col("__mb").cast("double") >= lit(threshold) * col("__ma") - 1 &&
-          col("__ma").cast("double") >= lit(threshold) * col("__mb") - 1)
-        .select(col("id_a"), col("id_b"))
-      timed("cand_raw")(println("  candidate rows pre-distinct = " + cands.count()))
-      timed("cand_distinct")(println("  candidate pairs = " + cands.distinct().count()))
-      timed("full_cold")(println("  pairs = " + graft.queries.Queries.dNgramJaccard(spark, sf).count()))
-      timed("full_warm")(println("  pairs = " + graft.queries.Queries.dNgramJaccard(spark, sf).count()))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("simhashscale")) {
-      // SimHash blocking-scheme candidate volume at n synthetic signatures:
-      // Σ C(|bucket|,2) per scheme, computed from bucket SIZES only (the
-      // quadratic scheme's join is never materialized). Evidence that the
-      // multi-block pigeonhole index is near-linear where the fixed 4×15-bit
-      // banding is quadratic.
-      val spark = session(16)
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.Column
-      val n = args.lift(1).map(_.toLong).getOrElse(10000000L)
-      val sigs = spark.range(n)
-        .select(xxhash64(col("id")).bitwiseAND(lit((1L << 60) - 1)).as("__sim"))
-      def cands(keys: Seq[Column]): Long =
-        sigs.select(posexplode(array(keys: _*)).as(Seq("__band", "__bkey")))
-          .groupBy("__band", "__bkey").agg(count(lit(1)).as("c"))
-          .select(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0)).cast("long"))
-          .head().getLong(0)
-      val old4x15 = (0 until 4).map(b =>
-        shiftrightunsigned(col("__sim"), b * 15).bitwiseAND(lit(0x7fffL)))
-      val mask = (1L << 10) - 1
-      val combos = (0 until 6).combinations(3).map { blocks =>
-        blocks.foldLeft(lit(0L)) { (acc, b) =>
-          shiftleft(acc, 10).bitwiseOR(
-            shiftrightunsigned(col("__sim"), b * 10).bitwiseAND(lit(mask)))
-        }
-      }.toSeq
-      println(s"SIMHASHSCALE n=$n old_4x15_candidates=${cands(old4x15)} " +
-        s"multiindex_20x30bit_candidates=${cands(combos)}")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("genscale")) {
-      // raw-threadpool scaling of generate+parse (no Spark): isolates the
-      // per-page compute's thread scaling from Spark machinery
-      import graft.corpus.{CorpusGen, CorpusParams}
-      import graft.engine.{CrawlEngine, FetchResult, ScopeState}
-      val params = CorpusParams(hosts = 16, pagesPerHost = 60000, fanout = 48, textWords = 150)
-      val scope = ScopeState("", "www.site0.com", "https", "", "https://www.site0.com/",
-        Set("*"), fullResources = false)
-      val total = 960000L
-      def work(nThreads: Int): Double = {
-        val t0 = System.nanoTime()
-        val per = total / nThreads
-        val threads = (0 until nThreads).map { t =>
-          new Thread(() => {
-            var i = 0L
-            var acc = 0L
-            while (i < per) {
-              val p = (t * per + i) % (16L * 60000L)
-              val host = (p % 16).toInt
-              val url = CorpusGen.pageUrl(params, host, sub = false, p / 16)
-              val doc = CorpusGen.docFor(params, url)
-              if (doc != null) {
-                val f = FetchResult(url, s"www.site$host.com", 1, i, 0, 0, doc.status, url, doc.spans)
-                val pg = CrawlEngine.parsePage(f, scope, 1L)
-                acc += pg.links.length
-              }
-              i += 1
-            }
-            if (acc == -1) println("x") // keep acc live
-          })
-        }
-        threads.foreach(_.start()); threads.foreach(_.join())
-        total / ((System.nanoTime() - t0) / 1e9)
-      }
-      val lo = args.lift(1).map(_.toInt).getOrElse(8)
-      val hi = args.lift(2).map(_.toInt).getOrElse(32)
-      work(4) // warmup JIT
-      val r8 = work(lo)
-      val r32 = work(hi)
-      val r8b = work(lo)
-      println(f"GENSCALE n$lo=$r8%.0f n$hi=$r32%.0f n${lo}b=$r8b%.0f pages/s eff=${r32 / (hi / lo * math.max(r8, r8b))}%.3f")
-      return
-    }
-    if (args.headOption.contains("throttlecrawl")) {
-      // reproduce the 429-throttle differential engine run in isolation
-      import graft.corpus.CorpusParams
-      import graft.engine.{CorpusRobots, CrawlEngine, GenerativeFetcher}
-      import graft.model.CrawlConfig
-      val spark = session(4)
-      val params = CorpusParams(hosts = 1, pagesPerHost = 18, rateLimitEvery = 7, retryAfterMs = 3000L)
-      val cfg = CrawlConfig(delayMs = 100, tickMs = 1000, retryLimit = 1, maxEpochs = 300)
-      val engine = new CrawlEngine(spark, cfg, new GenerativeFetcher(params),
-        new CorpusRobots(params), expectedUrls = 1000,
-        onEpoch = Some(ep => if (ep % 10 == 0) println(s"THROTTLE epoch=$ep heap=" +
-          (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) / 1048576 + "MB")))
-      val t0 = System.nanoTime()
-      val res = engine.crawl(Seq("https://www.site0.com/"))
-      println(f"THROTTLE done epochs=${res.epochs} pages=${res.pages.count()} in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      res.metrics.grouped(20).zipWithIndex.foreach { case (g, i) =>
-        println(s"THROTTLE window$i avgms=${g.map(_.wall_ms).sum / g.size}")
-      }
-      spark.stop(); return
-    }
-    if (args.headOption.contains("longcrawl")) {
-      // flat-epoch evidence (VERDICT #7): a 200-epoch chain crawl (fanout 1)
-      // must show flat per-epoch wall_ms — state compaction bounds the
-      // seen/bloom/signature scan cost as the crawl ages
-      import graft.corpus.CorpusParams
-      import graft.engine.{CrawlEngine, GenerativeFetcher, NoRobots}
-      import graft.model.CrawlConfig
-      val spark = session(8)
-      val params = CorpusParams(hosts = 1, pagesPerHost = 220, fanout = 1)
-      val cfg = CrawlConfig(maxEpochs = 210, maxPerHostPerEpoch = 1, normalize = true)
-      val engine = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), NoRobots,
-        expectedUrls = 1000)
-      val res = engine.crawl(Seq("https://www.site0.com/"))
-      val ms = res.metrics.map(_.wall_ms)
-      val firstAvg = ms.slice(5, 25).sum / 20.0
-      val lastAvg = ms.takeRight(20).sum / 20.0
-      println(f"LONGCRAWL epochs=${res.epochs} pages=${res.metrics.map(_.fetched).sum} " +
-        f"first20=${firstAvg}%.0fms last20=${lastAvg}%.0fms ratio=${lastAvg / firstAvg}%.2f")
-      res.metrics.grouped(20).zipWithIndex.foreach { case (g, i) =>
-        println(f"LONGCRAWL window$i avg=${g.map(_.wall_ms).sum / g.size}ms")
-      }
-      spark.stop(); return
-    }
-    if (args.headOption.contains("seams")) {
-      // drive the seed_html + ETag seams end-to-end through the engine
-      import graft.corpus.CorpusParams
-      import graft.engine._
-      import graft.model.{CrawlConfig, FrontierEntry, Span}
-      val spark = session(4)
-      import spark.implicits._
-      val params = CorpusParams(hosts = 2, pagesPerHost = 40)
-      val gen = new GenerativeFetcher(params)
-      val seed = "https://www.site0.com/"
-      val seeded = Map(seed -> FetchResult(seed, "www.site0.com", 0, 0L, 0, 0, 200, seed,
-        Array(Span("title", "Seeded", null, 0), Span("link", null, "/p1.html", 1))))
-      val r1 = new CrawlEngine(spark, CrawlConfig(maxEpochs = 10),
-        new SeededFetcher(gen, seeded), new CorpusRobots(params), expectedUrls = 10000)
-        .crawl(Seq(seed))
-      println("SEAMS seeded_pages=" + r1.pages.count() + " seeded_title=" +
-        r1.pages.filter($"url" === seed).select("title").collect().head.getString(0))
-      val base = new CrawlEngine(spark, CrawlConfig(maxEpochs = 20), gen,
-        new CorpusRobots(params), expectedUrls = 10000).crawl(Seq(seed))
-      val urls = base.seen.select("url").collect().map(_.getString(0))
-      val cache = gen.fetch(spark, spark.createDataset(urls.zipWithIndex.map { case (u, i) =>
-        FrontierEntry(u, graft.url.UrlOps.host(u), 0, i.toLong, 0, 0, 0L) }.toIndexedSeq))
-        .collect().map(f => f.url -> f).toMap
-      val nm = new Fetcher {
-        override def fetch(spark: org.apache.spark.sql.SparkSession,
-            admitted: org.apache.spark.sql.Dataset[FrontierEntry]) = {
-          import spark.implicits._
-          admitted.map(e => FetchResult(e.url, e.host, e.depth, e.discovery_seq,
-            e.priority, e.attempt, 304, e.url, Array.empty))
-        }
-      }
-      val r2 = new CrawlEngine(spark, CrawlConfig(maxEpochs = 20),
-        new RevalidatingFetcher(nm, cache), new CorpusRobots(params),
-        expectedUrls = 10000).crawl(Seq(seed))
-      println("SEAMS base_pages=" + base.pages.count() + " reval_pages=" + r2.pages.count() +
-        " equal=" + (base.pages.select("url", "signature").collect().map(_.toSeq).toSet ==
-          r2.pages.select("url", "signature").collect().map(_.toSeq).toSet))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("politecap")) {
-      // wide politeness-on distributed crawl (150 hosts, threshold=0):
-      // drives the bounded tokens_roll collect + EMA cap + salt selection
-      // end-to-end; parity vs the sequential oracle asserted inline
-      import graft.corpus.CorpusParams
-      import graft.engine.{CorpusRobots, CrawlEngine, GenerativeFetcher}
-      import graft.model.CrawlConfig
-      val spark = session(8)
-      val params = CorpusParams(hosts = 150, pagesPerHost = 6)
-      val seeds = (0 until 150).map(i => s"https://www.site$i.com/")
-      val cfg = CrawlConfig(delayMs = 500, tickMs = 1000, maxPerHostPerEpoch = 1,
-        autoThrottle = true, autoThrottleTargetConcurrency = 0.5,
-        autoThrottleMaxDelayMs = 1500L, maxEpochs = 40, smallEpochThreshold = 0)
-      val robots = new CorpusRobots(params)
-      val t0 = System.nanoTime()
-      val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
-        expectedUrls = 100000L).crawl(seeds)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val or = graft.oracle.OracleCrawler.crawl(params, cfg, robots, seeds)
-      val eP = er.pages.select("url", "depth", "discovery_seq", "status").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-      val oP = or.pages.map(p => (p.url, p.depth, p.seq, p.status)).toSet
-      println(f"POLITECAP hosts=150 pages=${eP.size} epochs=${er.epochs} " +
-        f"secs=$secs%.1f parity=${eP == oP} onlyE=${(eP -- oP).take(3)} onlyO=${(oP -- eP).take(3)}")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("warmblocked")) {
-      // drive the blocked side-output table + whole-table warm start
-      // end-to-end on the DISTRIBUTED path (threshold=0)
-      import graft.corpus.CorpusParams
-      import graft.engine._
-      import graft.model.{CrawlConfig, FrontierEntry}
-      val spark = session(8)
-      val params = CorpusParams(hosts = 2, pagesPerHost = 60)
-      val gen = new GenerativeFetcher(params)
-      val robots = new CorpusRobots(params)
-      val cfg = CrawlConfig(respectRobotsTxt = true, maxEpochs = 30,
-        trackBlocked = true, smallEpochThreshold = 0)
-      val base = new CrawlEngine(spark, cfg, gen, robots, expectedUrls = 10000,
-        onShouldCrawl = Some(p => !p.url.contains("/docs/")))
-        .crawl(Seq("https://www.site1.com/"))
-      val byReason = base.blocked.groupBy("reason").count().collect()
-        .map(r => r.getString(0) + "=" + r.getLong(1)).sorted.mkString(",")
-      val inner = new java.util.concurrent.atomic.AtomicLong()
-      val spy = new Fetcher {
-        override def fetch(spark: org.apache.spark.sql.SparkSession,
-            admitted: org.apache.spark.sql.Dataset[FrontierEntry]) = {
-          inner.addAndGet(admitted.count()); gen.fetch(spark, admitted)
-        }
-      }
-      val warm = new CrawlEngine(spark, cfg, new WarmStartFetcher(spy, base.pages),
-        robots, expectedUrls = 10000,
-        onShouldCrawl = Some(p => !p.url.contains("/docs/")))
-        .crawl(Seq("https://www.site1.com/"))
-      val eq = base.pages.select("url", "signature", "status").collect().map(_.toSeq).toSet ==
-        warm.pages.select("url", "signature", "status").collect().map(_.toSeq).toSet
-      println(s"WARMBLOCKED pages=${base.pages.count()} blocked[$byReason] " +
-        s"warm_inner_fetches=${inner.get()} warm_equal=$eq " +
-        s"metrics_robots=${base.metrics.map(_.robots_blocked).sum} " +
-        s"metrics_veto=${base.metrics.map(_.vetoed).sum}")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("sitemapdrive")) {
-      // A6 round-5: custom sitemap path + rel=sitemap auto-discovery, on
-      // the DISTRIBUTED path (threshold=0) with codegen forced
-      import graft.corpus.CorpusParams
-      import graft.engine.{CorpusRobots, CrawlEngine, GenerativeFetcher}
-      import graft.model.CrawlConfig
-      val spark = session()
-      val params = CorpusParams(hosts = 2, pagesPerHost = 90, fanout = 2, orphanEvery = 5,
-        sitemapPath = "/wp-sitemap.xml", advertiseSitemap = true)
-      val robots = new CorpusRobots(params)
-      val er = new CrawlEngine(spark, CrawlConfig(maxEpochs = 60, smallEpochThreshold = 0),
-        new GenerativeFetcher(params), robots, expectedUrls = 100000L)
-        .crawl(Seq("https://www.site0.com/"), sitemapChain = true)
-      val pages = er.pages.select("url").collect().map(_.getString(0))
-      println(s"DRIVE pages=${pages.length} " +
-        s"orphan12=${pages.exists(_.endsWith(graft.corpus.CorpusGen.pagePath(12L)))} " +
-        s"smFetched=${er.seen.collect().map(_.getString(0)).count(_.contains("wp-sitemap"))}")
-      // configured custom path, no advertisement
-      val p2 = params.copy(advertiseSitemap = false, sitemapPath = "/sitemap_index.xml")
-      val er2 = new CrawlEngine(spark,
-        CrawlConfig(maxEpochs = 60, smallEpochThreshold = 0, sitemapUrl = "/sitemap_index.xml"),
-        new GenerativeFetcher(p2), new CorpusRobots(p2), expectedUrls = 100000L)
-        .crawl(Seq("https://www.site0.com/"), sitemapChain = true)
-      val pages2 = er2.pages.select("url").collect().map(_.getString(0))
-      println(s"DRIVE2 pages=${pages2.length} " +
-        s"orphan12=${pages2.exists(_.endsWith(graft.corpus.CorpusGen.pagePath(12L)))}")
-      return
-    }
     if (args.headOption.contains("crawl")) { crawlDemo(); return }
-    if (args.headOption.contains("frontierdiag")) {
-      import graft.corpus.CorpusParams
-      import graft.engine.{CrawlEngine, GenerativeFetcher, NoRobots}
-      import graft.model.CrawlConfig
-      val spark = session(16)
-      val params = CorpusParams(hosts = 2, pagesPerHost = 25000, fanout = 16)
-      val cfg = CrawlConfig(maxEpochs = 1, externalDomains = Set("*"))
-      val engine = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), NoRobots,
-        expectedUrls = params.totalPages * 2)
-      val res = engine.crawl((0 until params.hosts).map(i => s"https://www.site$i.com/"))
-      println("FRONTIER after epoch0 = " + res.frontierRemainder.count())
-      res.frontierRemainder.orderBy("discovery_seq").collect()
-        .foreach(r => println("F " + r))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("pagediag")) {
-      import graft.corpus.{CorpusGen, CorpusParams}
-      import graft.engine.{CrawlEngine, FetchResult, ScopeState}
-      val params = CorpusParams(hosts = 2, pagesPerHost = 25000, fanout = 16)
-      val scope = ScopeState("", "www.site0.com", "https", "", "https://www.site0.com/",
-        Set("*"), fullResources = false)
-      for (p <- Seq(1L, 5L, 17L, 300L)) {
-        val url = CorpusGen.pageUrl(params, 0, sub = false, p)
-        val doc = CorpusGen.docFor(params, url)
-        val fr = FetchResult(url, "www.site0.com", 1, p, 100, 0, doc.status, url, doc.spans)
-        val parsed = CrawlEngine.parsePage(fr, scope, 1L)
-        val linkSpans = doc.spans.count(_.kind == "link")
-        println(s"PAGE p=$p spans=${doc.spans.length} linkSpans=$linkSpans parsedLinks=${parsed.links.length}")
-        doc.spans.filter(_.kind == "link").foreach(s => println(s"  span ${s.media_ref}"))
-        parsed.links.foreach(l => println(s"  link $l"))
-      }
-      return
-    }
-    if (args.headOption.contains("benchdiag")) {
-      import graft.corpus.CorpusParams
-      import graft.engine.{CrawlEngine, GenerativeFetcher, NoRobots}
-      import graft.model.CrawlConfig
-      val spark = session(16)
-      val params = CorpusParams(hosts = 2, pagesPerHost = 25000, fanout = 16)
-      val cfg = CrawlConfig(maxEpochs = 30, externalDomains = Set("*"))
-      val engine = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), NoRobots,
-        expectedUrls = params.totalPages * 2)
-      val res = engine.crawl((0 until params.hosts).map(i => s"https://www.site$i.com/"))
-      println("EXPECTED=" + (params.totalPages + params.hosts * 2500))
-      println("PAGES=" + res.pages.count() + " EPOCHS=" + res.epochs)
-      res.metrics.foreach(m => println(s"M epoch=${m.epoch} cand=${m.candidates} adm=${m.admitted} links=${m.new_links} frontier=${m.frontier_size}"))
-      spark.stop(); return
-    }
     if (args.headOption.contains("q")) {
       // run one SparkEntry query by name: Drive q <name> [sfDir]
       val spark = session(8)

@@ -11,16 +11,6 @@ object GraftSqlBridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Lineage-truncating cheap checkpoint: re-roots `df` as a LogicalRDD over
-    * its own execution RDD WITHOUT running a job. When the plan reads only
-    * cached/persisted parents this gives localCheckpoint's flat-plan benefit
-    * (no quadratic analyzer cost on delta unions) at zero job cost.
-    */
-  def rerootOnRdd(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
-  }
-
   /** `df`'s execution RDD with an InternalRow-level mapPartitions applied,
     * re-rooted as a DataFrame of `schema` — lets engine code thread
     * per-partition imperative logic (sequence stamping, side-effect
@@ -58,6 +48,12 @@ object GraftSqlBridge {
       case _ => None
     }
   }
+
+  /** The RDD a `localCheckpoint`ed DataFrame reads (the checkpoint
+    * persisted it). None for any other plan.
+    */
+  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    Some(df.queryExecution.logical).collect { case l: execution.LogicalRDD => l.rdd }
 
   /** `schema` with every field nullable, as Spark writes files. */
   def asNullable(schema: types.StructType): types.StructType = schema.asNullable

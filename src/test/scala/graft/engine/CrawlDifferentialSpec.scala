@@ -588,4 +588,34 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     assert(inputs.exists(_._1), "no distributed epoch saw case variants across partitions")
     assert(inputs.exists(_._2), "no distributed epoch linked to a page admitted in it")
   }
+
+  test("a distributed crawl leaves persisted only what its result tables read") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // signature dedup on, every epoch distributed, and fewer epochs than the
+    // compaction cadence: the signature deltas and the probe snapshots are
+    // still live when the call returns
+    val params = CorpusParams(hosts = 2, pagesPerHost = 60, dupContentEvery = 3)
+    val cfg = CrawlConfig(maxEpochs = 30, smallEpochThreshold = 0)
+    val seeds = Seq("https://www.site0.com/")
+    val robots = new CorpusRobots(params)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+      expectedUrls = 100000L).crawl(seeds)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(er.epochs > 2 && er.epochs < cfg.stateCompactionEpochs,
+      s"${er.epochs} epochs: not a multi-epoch crawl below the compaction cadence")
+    def lineage(r: org.apache.spark.rdd.RDD[_], acc: scala.collection.mutable.Set[Int]): Unit =
+      if (acc.add(r.id)) r.dependencies.foreach(d => lineage(d.rdd, acc))
+    val read = scala.collection.mutable.Set.empty[Int]
+    Seq(er.pages, er.seen, er.frontierRemainder, er.blocked)
+      .foreach(df => lineage(df.queryExecution.toRdd, read))
+    val stray = left.filterNot { case (id, _) => read.contains(id) }
+    assert(stray.isEmpty, s"${stray.size} persisted RDDs no result table reads: " +
+      stray.values.mkString(", "))
+    val or = OracleCrawler.crawl(params, cfg, robots, seeds)
+    assert(or.pages.map(_.signature).filter(_ != 0L).distinct.size < or.pages.count(_.signature != 0L),
+      "no duplicate content: signature dedup had nothing to do")
+    assertParity(er, or)
+  }
 }
