@@ -141,15 +141,8 @@ class CrawlEngine(
 
   import spark.implicits._
 
-  /** Partition count for the engine's explicit exchanges — follows the
-    * session's `spark.sql.shuffle.partitions` (the knob a cluster operator
-    * already sizes) rather than core count: oversized tasks build
-    * multi-million-key aggregation hash maps whose working set thrashes
-    * the shared cache; more, smaller partitions keep per-task state
-    * cache-resident and let AQE coalesce where they're too fine.
-    */
-  private def P = math.max(spark.sessionState.conf.numShufflePartitions,
-    spark.sparkContext.defaultParallelism)
+  /** Partition count for the engine's explicit exchanges and its stores. */
+  private def P = CrawlEngine.partitions(spark)
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[CrawlEngine])
   private val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
   /** Runs `f` as phase `label` of `epoch`: every Spark job it starts carries
@@ -395,7 +388,7 @@ class CrawlEngine(
 
     // the two co-partitioned stores: one partitioner, so a combine through
     // it feeds either store's probe with no further shuffle
-    private val partitioner = new org.apache.spark.HashPartitioner(math.max(P, 16))
+    private val partitioner = new org.apache.spark.HashPartitioner(P)
     private val sigs = new KeyStore[Long, Boolean](spark, partitioner,
       Checkpointer.schemas("signatures"), kv => Row(kv._1))
     private val seen = new KeyStore[String, String](spark, partitioner,
@@ -476,8 +469,10 @@ class CrawlEngine(
         shutdownRequested || System.nanoTime() > deadline
     }
 
-    /** Nothing ready this tick — advance logical time only. */
-    def idle(): Unit = endEpoch(if (frontierLocal.map(_.isEmpty).getOrElse(frontier.isEmpty)) 0 else 1)
+    /** Nothing ready this tick — advance logical time only (no job: the
+      * histogram sizes a distributed frontier).
+      */
+    def idle(): Unit = endEpoch(frontierLocal.fold(readyHist.values.sum)(_.size.toLong))
 
     /** Resume: restores all loop state from the latest committed snapshot
       * (north rule: resumable from checkpoint with per-partition lineage).
@@ -1275,6 +1270,17 @@ class CrawlEngine(
 }
 
 object CrawlEngine {
+
+  /** Partition count for the engine's explicit exchanges and the stores'
+    * partitioner — follows the session's `spark.sql.shuffle.partitions`
+    * (the knob a cluster operator already sizes), and at least the
+    * cluster's cores: oversized tasks build multi-million-key aggregation
+    * hash maps whose working set thrashes the shared cache; more, smaller
+    * partitions keep per-task state cache-resident and let AQE coalesce
+    * where they're too fine.
+    */
+  private[engine] def partitions(spark: SparkSession): Int =
+    math.max(spark.sessionState.conf.numShufflePartitions, spark.sparkContext.defaultParallelism)
 
   /** Cap on the driver-side seen/signature mirrors of the small-epoch fast
     * path; past it the mirrors drop and the gate falls back to tiny probe

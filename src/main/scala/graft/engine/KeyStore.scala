@@ -13,7 +13,10 @@ import scala.reflect.ClassTag
   * pairs hash-partitioned ONCE, deltas appended through a partitioner-aware
   * union, and probes that shuffle only the candidates to the matching
   * partitions — the store is never re-shuffled and never broadcast. Every k
-  * epochs [[compact]] folds the chain flat.
+  * epochs [[compact]] folds the chain flat. The partitioner is the
+  * engine's: [[CrawlEngine.partitions]] ways (P), like every other engine
+  * exchange, so a store exchange runs P reduce tasks; a restore
+  * re-partitions a snapshot taken at another count.
   *
   * A probe reads a per-partition SORTED key array (a `long[]` for `Long`
   * keys: no boxing), built once per compaction and persisted, plus a hash

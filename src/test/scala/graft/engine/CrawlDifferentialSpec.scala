@@ -537,7 +537,50 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     }
     val end = perEpoch.getOrElse(er.epochs.toString, Nil)
     assert(end.isEmpty, s"the call ran Spark jobs after its last epoch: $end")
+    // the task budget: the stores sit on the engine's P partitions, so each
+    // exchange the links job reads (the signature and link exchanges, the
+    // store deltas behind the probes) has P reduce tasks, its last stage
+    // (the link exchange's reduce and the seen probe) runs P tasks, and no
+    // stage of the epoch runs more than 2P
+    val P = CrawlEngine.partitions(spark)
+    val perStage = jobs.stages()
+    distributed.foreach { m =>
+      val stages = perStage.getOrElse(m.epoch.toString, Nil)
+      val links = stages.filter(_.desc == s"e${m.epoch}/links")
+      assert(links.exists(_.exchangeReads.nonEmpty), s"epoch ${m.epoch}: the links job read no exchange: $links")
+      links.foreach(s => assert(s.exchangeReads.forall(_ == P),
+        s"epoch ${m.epoch}: links stage ${s.name} reads exchanges of ${s.exchangeReads} partitions, P = $P"))
+      assert(links.last.tasks == P, s"epoch ${m.epoch}: the links job's last stage ran ${links.last.tasks} tasks")
+      stages.foreach(s => assert(s.tasks <= 2 * P,
+        s"epoch ${m.epoch}: stage ${s.name} (${s.desc}) ran ${s.tasks} tasks, P = $P"))
+    }
     val or = OracleCrawler.crawl(params, cfg, robots, seeds)
+    assertParity(er, or)
+    assert(frontierKeys(er) == frontierKeys(or.frontierRemainder))
+  }
+
+  test("an epoch with nothing ready runs no job on the distributed path (retry backoff)") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // every epoch distributed; once the pages are fetched only backed-off
+    // retries are left, and the epochs they wait out have nothing ready
+    val params = CorpusParams(hosts = 2, pagesPerHost = 40, errorEvery = 9)
+    val cfg = CrawlConfig(retryLimit = 2, maxEpochs = 100, smallEpochThreshold = 0)
+    val seeds = Seq("https://www.site0.com/")
+    val robots = new CorpusRobots(params)
+    val jobs = new EpochJobs(spark)
+    jobs.window("0")
+    val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+      expectedUrls = 100000L, onEpoch = Some(jobs.hook)).crawl(seeds)
+    val perEpoch = jobs.jobs()
+    val ran = er.metrics.map(_.epoch).toSet
+    val idle = (0L until er.epochs).filterNot(ran.contains)
+    assert(idle.nonEmpty, s"no epoch of ${er.epochs} had nothing ready: ${er.metrics.map(_.candidates)}")
+    idle.foreach { e =>
+      val js = perEpoch.getOrElse(e.toString, Nil)
+      assert(js.isEmpty, s"idle epoch $e ran Spark jobs: $js")
+    }
+    val or = OracleCrawler.crawl(params, cfg, robots, seeds)
+    assert(or.pages.exists(_.status == 500), "no page exhausted its retries")
     assertParity(er, or)
     assert(frontierKeys(er) == frontierKeys(or.frontierRemainder))
   }
@@ -574,7 +617,7 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     // the link dedup sees case variants of one URL from pages in different
     // signature partitions (so different map partitions of the link
     // exchange), and links to pages admitted in the same epoch
-    val sigPart = new org.apache.spark.HashPartitioner(16)
+    val sigPart = new org.apache.spark.HashPartitioner(CrawlEngine.partitions(spark))
     val inputs = distributed.map { m =>
       val fetched = or.pages.filter(p => p.epoch == m.epoch && p.status == 200)
       val byKey = fetched.flatMap(p => p.links.map(l => (graft.url.UrlOps.lowerUtf8(l), (l, p.signature))))

@@ -163,6 +163,46 @@ class ResumeSpec extends AnyFunSuite {
     assert(fullSeen == resSeen)
   }
 
+  test("a distributed snapshot resumes under a different partition count") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // the stores follow the session's partition count: a snapshot taken at
+    // one count restores into stores on another (both ways), with
+    // signature dedup and a frontier still left at maxEpochs
+    val params = CorpusParams(hosts = 3, pagesPerHost = 300, fanout = 3, dupContentEvery = 4)
+    val cfg = CrawlConfig(maxEpochs = 6, smallEpochThreshold = 0)
+    val seeds = Seq("https://www.site0.com/", "https://www.site1.com/")
+    def engine(ck: Option[Checkpointer], maxEpochs: Int = cfg.maxEpochs) =
+      new CrawlEngine(spark, cfg.copy(maxEpochs = maxEpochs), new GenerativeFetcher(params),
+        new CorpusRobots(params), expectedUrls = 10000, checkpoint = ck)
+    def pagesOf(df: DataFrame) =
+      df.select("url", "depth", "discovery_seq", "status", "signature").collect().map(_.toSeq).toSet
+    def seenOf(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    def frontierOf(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val full = engine(None).crawl(seeds)
+    assert(full.frontierRemainder.count() > 0,
+      s"the uninterrupted crawl left no frontier: ${full.metrics.map(_.frontier_size)}")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    for ((at, resumeAt) <- Seq(("8", "4"), ("4", "8"))) {
+      val dir = Files.createTempDirectory("graft_ckpt_parts").toString
+      val ck = new Checkpointer(spark, dir, every = 1)
+      val resumed =
+        try {
+          spark.conf.set(key, at)
+          val p0 = CrawlEngine.partitions(spark)
+          engine(Some(ck), maxEpochs = 3).crawl(seeds)
+          spark.conf.set(key, resumeAt)
+          assert(CrawlEngine.partitions(spark) != p0, s"$at -> $resumeAt keeps the partition count")
+          engine(None).crawl(seeds, resumeFrom = Some(ck))
+        } finally spark.conf.set(key, prev)
+      assert(ck.latestEpoch() == 2)
+      assert(pagesOf(resumed.pages) == pagesOf(full.pages), s"$at -> $resumeAt: pages")
+      assert(seenOf(resumed.seen) == seenOf(full.seen), s"$at -> $resumeAt: seen")
+      assert(frontierOf(resumed.frontierRemainder) == frontierOf(full.frontierRemainder),
+        s"$at -> $resumeAt: frontier")
+    }
+  }
+
   test("manifest chain_sitemaps survives URLs with commas, brackets and quotes") {
     // URLs may legally contain ',' and ']' (and the writer escapes quotes);
     // the parser must walk JSON quoted strings, never split on ','
