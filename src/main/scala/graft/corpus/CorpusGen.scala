@@ -349,19 +349,11 @@ object CorpusGen {
     b.result()
   }
 
-  def allHosts(params: CorpusParams): Seq[String] =
-    (0 until params.hosts).flatMap(i => Seq(hostName(i), subHostName(i)))
-
   /** Materialize the corpus as a DataFrame in input_hint shape (+ sidecars). */
   def docsDF(spark: org.apache.spark.sql.SparkSession, params: CorpusParams): org.apache.spark.sql.Dataset[CorpusDoc] = {
     import spark.implicits._
     val urls = allUrls(params)
     spark.createDataset(urls).repartition(spark.sparkContext.defaultParallelism)
       .map(u => docFor(params, u))
-  }
-
-  def robotsDF(spark: org.apache.spark.sql.SparkSession, params: CorpusParams): org.apache.spark.sql.Dataset[RobotsDoc] = {
-    import spark.implicits._
-    spark.createDataset(allHosts(params)).map(h => robotsFor(params, h))
   }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, GraftSqlBridge, Observation, R
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType}
 import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.Executors
@@ -30,7 +31,11 @@ import scala.jdk.CollectionConverters._
   *
   * Layout: `<dir>/epoch_<e>/` holds one Parquet directory per table
   * (`frontier`, `seen`, `signatures`, `host_tokens`, `pages`) and
-  * `manifest.json`. The manifest records the epoch, its parent snapshot
+  * `manifest.json`. `host_tokens` is the engine's host ledger, one row per
+  * host in LRU order (eldest first): `tokens_milli`, `throttle_ms` (the 429
+  * Retry-After override) and `latency_ema` (null before the host's first
+  * timed fetch); a snapshot written before the last two columns existed
+  * reads them as null. The manifest records the epoch, its parent snapshot
   * (the one this snapshot follows in its chain; -1 at a chain start), the
   * driver ledger (budget/scope/seq/sitemap chain), per-table row + partition
   * counts (lineage) and the per-epoch metrics series.
@@ -225,7 +230,8 @@ object Checkpointer {
       "frontier" -> Encoders.product[FrontierEntry].schema,
       "seen" -> cols("url_lower" -> StringType, "url" -> StringType),
       "signatures" -> cols("sig" -> LongType),
-      "host_tokens" -> cols("host" -> StringType, "tokens_milli" -> LongType),
+      "host_tokens" -> cols("host" -> StringType, "tokens_milli" -> LongType, "throttle_ms" -> LongType,
+        "latency_ema" -> DoubleType),
       "pages" -> Encoders.product[PageRow].schema)
   }
 
@@ -259,6 +265,13 @@ object Checkpointer {
   def lineageRows(manifest: String): Map[String, Long] =
     ("\\{\"table\":" + Str + ",\"rows\":(\\d+)").r.findAllMatchIn(manifest)
       .map(m => unescape(m.group(1)) -> m.group(2).toLong).toMap
+
+  /** Whether snapshot `epoch`'s own metrics entry records a budget stop
+    * (every commit writes the entry of its epoch).
+    */
+  def budgetStopped(manifest: String, epoch: Long): Boolean =
+    ("\\{\"epoch\":" + epoch + ",[^}]*\"budget_stopped\":true").r
+      .findFirstIn(manifest.substring(math.max(0, manifest.indexOf("\"metrics\":")))).isDefined
 
   /** A top-level numeric field of a manifest (`seq_counter`, `parent`, …). */
   def longField(manifest: String, key: String): Option[Long] =
@@ -325,7 +338,8 @@ object Checkpointer {
   }
 
   /** The rows of one Parquet file of a flat table, read on the driver and
-    * projected onto `schema` by column name.
+    * projected onto `schema` by column name; a column the file lacks reads
+    * as null.
     */
   private def readParquetLocal(file: Path, schema: StructType): Vector[Row] = {
     // plain options: a Hadoop configuration would load its XML defaults
@@ -333,7 +347,8 @@ object Checkpointer {
       ParquetReadOptions.builder(new PlainParquetConfiguration).build())
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
-      val cols = schema.fields.map(f => (fileSchema.getFieldIndex(f.name), f.dataType))
+      val cols = schema.fields.map(f =>
+        (if (fileSchema.containsField(f.name)) fileSchema.getFieldIndex(f.name) else -1, f.dataType))
       val io = new ColumnIOFactory().getColumnIO(fileSchema)
       val out = Vector.newBuilder[Row]
       var group = reader.readNextRowGroup()
@@ -343,11 +358,12 @@ object Checkpointer {
         while (i < group.getRowCount) {
           val g = records.read()
           out += Row.fromSeq(cols.toSeq.map { case (k, t) =>
-            if (g.getFieldRepetitionCount(k) == 0) null
+            if (k < 0 || g.getFieldRepetitionCount(k) == 0) null
             else t match {
               case StringType => g.getString(k, 0)
               case LongType => g.getLong(k, 0)
               case IntegerType => g.getInteger(k, 0)
+              case DoubleType => g.getDouble(k, 0)
               case other => throw new IllegalArgumentException(s"readLocal: no reader for $other")
             }
           })

@@ -140,6 +140,9 @@ class CrawlEngine(
   // `this` (which holds the SparkSession) — accidental capture fails fast.
 
   import spark.implicits._
+  import CrawlEngine.{EpochState, Frontier}
+  // releases of the caches one distributed epoch holds
+  private type Caches = scala.collection.mutable.ListBuffer[() => Unit]
 
   /** Partition count for the engine's explicit exchanges and its stores. */
   private def P = CrawlEngine.partitions(spark)
@@ -159,34 +162,6 @@ class CrawlEngine(
       sc.setJobDescription(prev)
       if (trace) println(f"[trace] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
-  }
-
-  // ---------------------------------------------------------------------
-  // Deterministic global sequence: range-partition on the sort key, sort
-  // within partitions, then zipWithIndex (per-partition imperative logic —
-  // the one place an RDD is genuinely needed; a global window would funnel
-  // everything through a single partition).
-  // ---------------------------------------------------------------------
-  private def withGlobalSeq(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      outName: String, offset: Long): DataFrame = {
-    if (df.isEmpty) return df.withColumn(outName, lit(0L))
-    val parts = math.max(1, math.min(P, 200))
-    val sorted = df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
-    val schema = sorted.schema.add(outName, LongType, nullable = false)
-    // InternalRow end-to-end: count + JoinedRow stamp touch zero row bytes,
-    // and the two jobs share the sort shuffle via the stable RDD instance
-    val sortedRdd = org.apache.spark.sql.GraftSqlBridge.internalRdd(sorted)
-    val offsets = CrawlEngine.offsets(sortedRdd, offset)
-    val withSeq = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var k = offsets(i)
-      val cell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      it.map { r =>
-        cell.update(0, k); k += 1
-        joined(r, cell): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark, withSeq, schema)
   }
 
   // ---------------------------------------------------------------------
@@ -309,7 +284,8 @@ class CrawlEngine(
     config.maxPerHostPerEpoch != Int.MaxValue
   private val holdsPossible = politenessPossible || retry.maxAttempts > 0
   private val carryover = holdsPossible || config.wildCardBudgeting || (config.budget - "*").nonEmpty
-  private val canonicalOrder = Seq(col("depth"), col("discovery_seq"), col("host"), col("url"))
+  // range partitions of the global sequences (budget rank, new links)
+  private def seqParts = math.max(1, math.min(P, 200))
 
   /** The path rule, one for a fresh start, every epoch and a restore: the
     * frontier stays on the driver while the threshold is on and the rows at
@@ -329,11 +305,10 @@ class CrawlEngine(
     // set-up shared with the oracle: glob seeds, scope, depth distance,
     // budget, and the seed (or sitemap-only) frontier
     val start = Sequential.start(config, seedUrls0, sitemapOnly)
-    val run = new Run(start, sitemapChain)
     // a fresh crawl starts a new snapshot chain; a restore continues the
     // restored one
     checkpoint.foreach(_.startChain(-1))
-    resumeFrom.foreach(run.restore)
+    val run = new Run(start, sitemapChain, resumeFrom)
 
     var crawling = true
     while (crawling) {
@@ -348,9 +323,11 @@ class CrawlEngine(
         val epochT0 = System.nanoTime()
         val candCount = run.readyCount
         if (candCount == 0) run.idle()
-        else if (run.frontierLocal.isDefined && smallFits(candCount))
-          phase(run.epoch, "epoch_total")(run.smallEpoch(candCount, epochT0))
-        else phase(run.epoch, "epoch_total")(run.distributedEpoch(candCount, epochT0))
+        else run.state.frontier match {
+          case Frontier.Local(v) if smallFits(candCount) =>
+            phase(run.state.epoch, "epoch_total")(run.smallEpoch(v, candCount, epochT0))
+          case _ => phase(run.state.epoch, "epoch_total")(run.distributedEpoch(candCount, epochT0))
+        }
       }
       // --- A6: sitemap CHAINED AFTER the crawl (reference `crawl()` runs
       // `crawl_concurrent` then `sitemap_crawl_chain`, `website.rs:6974-6976`)
@@ -361,10 +338,11 @@ class CrawlEngine(
       // under the ordinary loop with two rule changes keyed off the ledger's
       // `chainSitemaps`: sitemap docs are budget-exempt, and ONLY sitemap
       // docs expand (urlset entries + recursive sitemapindex locs).
-      if (sitemapChain && !run.ledger.chainStarted && !run.ledger.budgetStopped &&
-          !shutdownRequested && System.nanoTime() < run.deadline && run.epoch < config.maxEpochs) {
-        val (sms, chainLedger) = Sequential.startChain(config, start.seedUrls, run.ledger)
-        run.ledger = chainLedger
+      val s = run.state
+      if (sitemapChain && !s.ledger.chainStarted && !s.ledger.budgetStopped &&
+          !shutdownRequested && System.nanoTime() < run.deadline && s.epoch < config.maxEpochs) {
+        val (sms, chainLedger) = Sequential.startChain(config, start.seedUrls, s.ledger)
+        run.state = s.copy(ledger = chainLedger)
         if (sms.nonEmpty) {
           sms.foreach(inbox.add)
           run.done = false
@@ -374,14 +352,13 @@ class CrawlEngine(
     run.result()
   }
 
-  /** One crawl call: its driver state — the ledger, the frontier, the two
-    * stores, the sinks and the per-host ledgers — and the epoch stages that
-    * move it. Holds the SparkSession through the engine: task closures
-    * capture local vals only.
+  /** One crawl call: the loop state it folds over epoch by epoch
+    * ([[CrawlEngine.EpochState]]), what moves with it (the two stores, the
+    * sinks and the host ledger) and the epoch stages. Holds the
+    * SparkSession through the engine: task closures capture local vals only.
     */
-  private final class Run(start: Sequential.Start, sitemapChain: Boolean) {
-    // the driver ledger: seq counter, budget, scope, chain state
-    var ledger: Sequential.Ledger = start.ledger
+  private final class Run(start: Sequential.Start, sitemapChain: Boolean,
+      resumeFrom: Option[Checkpointer]) {
     val deadline: Long =
       if (config.crawlTimeoutMs > 0) System.nanoTime() + config.crawlTimeoutMs * 1000000L
       else Long.MaxValue
@@ -396,108 +373,116 @@ class CrawlEngine(
     private val pages = new PageSink(spark, retry)
     private val blocked = new BlockedSink(spark)
 
-    // per-host token buckets, driver-held in an access-ordered LRU map
-    // capped at 100k hosts — the reference holds its per-domain limiter
-    // buckets exactly this way (`rate_limiter.rs` MAX_ENTRIES); an evicted
-    // host re-creates a fresh full bucket, like an evicted DashMap entry.
-    // The reactive politeness state (429/Retry-After delay overrides,
-    // latency EMAs) is LRU-capped the same way.
-    private val hostTokens = lruMap[Long]()
-    private val throttleOverrideMs = lruMap[Long]()
-    private val latencyEma = lruMap[Double]()
+    // the host ledger: each host's token bucket, 429 Retry-After override
+    // and latency EMA, driver-held in one access-ordered LRU map capped at
+    // 100k hosts — the reference holds its per-domain limiter state exactly
+    // this way (`rate_limiter.rs` / `auto_throttle.rs` MAX_ENTRIES); an
+    // evicted host comes back fresh, like an evicted DashMap entry
+    private val hosts = Sequential.HostState(lruMap[Sequential.Host]())
 
-    var epoch = 0L
     private val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
-    // D4 salt widths for the next epoch's fetch exchange (see withAdmitStats)
-    private var hotHostWidths: Map[String, Int] = Map.empty
-    // caches one distributed epoch holds until its next frontier is taken
-    private var epochCaches = List.empty[() => Unit]
-
-    // Small-epoch fast path: while every epoch stays under
-    // `smallEpochThreshold` candidates, the WHOLE epoch runs as the
-    // Sequential step — the code the differential oracle runs — on the
-    // frontier the driver holds (`frontierLocal`), with the stores' mirrors
-    // for a job-free gate; only the stores, the sinks and a non-local fetch
-    // touch Spark. The first distributed epoch drops the mirrors for the
-    // rest of the call; a resumed call picks its path afresh (`smallFits`).
-    var frontierLocal: Option[Vector[FrontierEntry]] = None
     private val gate = new Sequential.Gate(config, robots)
-    // seeds are gated by is_allowed_default only (lists + robots, no budget)
-    private val seeds = start.frontier.filter(gate.default)
-    private var frontier: DataFrame = frontierFrame(Nil) // unused while local
-    if (smallFits(start.frontier.size)) frontierLocal = Some(seeds)
-    else {
-      seen.dropMirror()
-      frontier = frontierFrame(seeds)
-    }
-    private def frontierDf: DataFrame = frontierLocal.fold(frontier)(frontierFrame)
-    // driver-side not_before histogram of a distributed frontier, refreshed
-    // by the SAME job that counts it: per-epoch readiness then needs NO job
-    // at all — a politeness-paced crawl's empty ticks (hosts banking
-    // fractional tokens) advance logical time for free
-    private var readyHist: Map[Long, Long] =
-      if (frontierLocal.nonEmpty) Map.empty else CrawlEngine.histLocal(seeds)
-    var done: Boolean = frontierLocal.map(_.size.toLong).getOrElse(readyHist.values.sum) == 0
-
     // fetch through the seam: driver-local when the fetcher offers it
     // (identical per-row semantics by the Fetcher contract), else one job
     private val step = new Sequential.Step(config, robots, gate, start.depthDistance, retry, sitemapChain,
       onShouldCrawl, onLinkFind, seen, sigs,
       es => fetcher.fetchLocal(es)
         .getOrElse(fetcher.fetch(spark, spark.createDataset(es)).collect().toSeq),
-      Sequential.HostState(hostTokens, throttleOverrideMs, latencyEma))
+      hosts)
 
-    // a phase of the current epoch
+    /** The loop state at the start of epoch `state.epoch`: a snapshot's, or
+      * a fresh start's seeds (gated by is_allowed_default only: lists and
+      * robots, no budget).
+      *
+      * Small-epoch fast path: while every epoch stays under
+      * `smallEpochThreshold` candidates, the WHOLE epoch runs as the
+      * Sequential step — the code the differential oracle runs — on a
+      * frontier the driver holds (`Frontier.Local`), with the stores'
+      * mirrors for a job-free gate; only the stores, the sinks and a
+      * non-local fetch touch Spark. The first distributed epoch drops the
+      * mirrors for the rest of the call; a resumed call picks its path
+      * afresh (`smallFits`).
+      */
+    var state: EpochState = resumeFrom.flatMap(restore).getOrElse {
+      val seeds = start.frontier.filter(gate.default)
+      EpochState(0L, start.ledger,
+        if (smallFits(start.frontier.size)) Frontier.Local(seeds) else { seen.dropMirror(); distributed(seeds) },
+        Map.empty)
+    }
+    var done: Boolean = exhausted(state)
+
+    // the current epoch, and a phase of it
+    private def epoch: Long = state.epoch
     private def timed[T](label: String)(f: => T): T = phase(epoch, label)(f)
 
     /** Candidates whose politeness/retry holdoff has passed. */
-    def readyCount: Long = frontierLocal match {
-      case Some(v) => if (holdsPossible) v.count(_.not_before <= epoch).toLong else v.size.toLong
-      case None =>
-        if (holdsPossible) readyHist.iterator.filter(_._1 <= epoch).map(_._2).sum
-        else readyHist.values.sum
+    def readyCount: Long = state.frontier.ready(if (holdsPossible) state.epoch else Long.MaxValue)
+
+    /** A driver-held distributed frontier; its histogram needs no job. */
+    private def distributed(v: Vector[FrontierEntry]) =
+      Frontier.Distributed(frontierFrame(v), CrawlEngine.histLocal(v))
+
+    private def tableOf(f: Frontier): DataFrame = f match {
+      case Frontier.Local(v) => frontierFrame(v)
+      case d: Frontier.Distributed => d.table
     }
 
-    private def histOf(df: DataFrame): Map[Long, Long] = timed("frontier_hist")(
+    private def histOf(epoch: Long, df: DataFrame): Map[Long, Long] = phase(epoch, "frontier_hist")(
       df.groupBy(col("not_before")).agg(count(lit(1)).as("n")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap)
 
-    private def endEpoch(frontierCount: => Long): Unit = {
-      epoch += 1
-      onEpoch.foreach(f => f(epoch - 1))
-      done = ledger.budgetStopped || frontierCount == 0 || epoch >= config.maxEpochs ||
-        shutdownRequested || System.nanoTime() > deadline
+    // ends a crawl at any point: a budget stop or an empty frontier
+    private def exhausted(s: EpochState): Boolean = s.ledger.budgetStopped || s.frontier.size == 0
+
+    /** Ends the current epoch: the loop goes on from `next`. */
+    private def endEpoch(next: EpochState): Unit = {
+      state = next
+      onEpoch.foreach(f => f(next.epoch - 1))
+      done = exhausted(next) || next.epoch >= config.maxEpochs || shutdownRequested ||
+        System.nanoTime() > deadline
     }
 
     /** Nothing ready this tick — advance logical time only (no job: the
       * histogram sizes a distributed frontier).
       */
-    def idle(): Unit = endEpoch(frontierLocal.fold(readyHist.values.sum)(_.size.toLong))
+    def idle(): Unit = endEpoch(state.copy(epoch = state.epoch + 1))
 
-    /** Resume: restores all loop state from the latest committed snapshot
-      * (north rule: resumable from checkpoint with per-partition lineage).
-      * The manifest's lineage sizes every table, so choosing the path runs
-      * no job; the snapshot is immutable, so the stores are read lazily, and
-      * the tables kept on the driver are read there.
+    /** Snapshot `s.epoch - 1`, when it is due: loop state `s` (the state
+      * after that epoch), the stores, the host ledger in LRU order and the
+      * pages since the last commit (afterwards the page view reads those
+      * from the committed chain). With [[restore]], the only mapping
+      * between loop state and a snapshot.
       */
-    def restore(ck: Checkpointer): Unit = {
+    private def commitIfDue(s: EpochState): Unit = checkpoint.filter(_.due(s.epoch - 1)).foreach { ck =>
+      val l = s.ledger
+      ck.commit(s.epoch - 1, tableOf(s.frontier), seen.table, sigs.table, CrawlEngine.localFrame(spark,
+          hosts.byHost.iterator.map { case (h, x) =>
+            Row(h, x.tokensMilli, x.throttleMs, x.latencyEma.getOrElse(null)) }.toSeq,
+          Checkpointer.schemas("host_tokens")),
+        pages.delta, l.seqCounter, l.wildcardRemaining, l.pathBudget, l.scope, metrics.toSeq,
+        l.chainStarted, l.chainSitemaps.toSeq.sorted, l.discoveredSitemaps.values.toSeq)
+      pages.committedTo(ck, s.epoch - 1)
+    }
+
+    /** Resume (north rule: resumable from checkpoint with per-partition
+      * lineage): the loop state of the latest committed snapshot, None
+      * without one; the stores, the host ledger and the pages come back
+      * with it. The manifest's lineage sizes every table, so choosing the
+      * path runs no job; the snapshot is immutable, so the stores are read
+      * lazily, and the tables kept on the driver are read there.
+      */
+    private def restore(ck: Checkpointer): Option[EpochState] = {
       val e = ck.latestEpoch()
-      if (e < 0) return
+      if (e < 0) return None
       val m = ck.readManifest(e)
       val rowsOf = Checkpointer.lineageRows(m)
       // same path rule as a fresh start: a small frontier comes back to the
       // driver, and with it the mirrors and the bloom when the seen set fits
       // them
-      if (smallFits(rowsOf("frontier")))
-        frontierLocal = Some(ck.readLocal(e, "frontier").map(r => FrontierEntry(r.getString(0),
-          r.getString(1), r.getInt(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getLong(6))))
-      else {
-        frontierLocal = None
-        frontier = ck.readTable(e, "frontier")
-      }
-      val local = frontierLocal.isDefined && rowsOf("seen") <= CrawlEngine.mirrorCap
+      val local = smallFits(rowsOf("frontier"))
+      val mirrors = local && rowsOf("seen") <= CrawlEngine.mirrorCap
       def restoreStore[K: ClassTag, V: ClassTag](store: KeyStore[K, V], name: String)(f: Row => (K, V)) =
-        store.restore(rowsOf.getOrElse(name, 0L), if (local) Some(ck.readLocal(e, name).map(f)) else None,
+        store.restore(rowsOf.getOrElse(name, 0L), if (mirrors) Some(ck.readLocal(e, name).map(f)) else None,
           ck.readTable(e, name).rdd.map(f))
       restoreStore(seen, "seen")(r => (r.getString(0), r.getString(1)))
       restoreStore(sigs, "signatures")(r => (r.getLong(0), true))
@@ -508,61 +493,54 @@ class CrawlEngine(
         pages.committed = Some((ck, e))
         checkpoint.foreach(_.startChain(e))
       } else pages.carried = Some(ck.readTable(e, "pages"))
-      ck.readLocal(e, "host_tokens").foreach(r => hostTokens(r.getString(0)) = r.getLong(1))
+      ck.readLocal(e, "host_tokens").foreach { r =>
+        hosts.byHost(r.getString(0)) = Sequential.Host(r.getLong(1),
+          if (r.isNullAt(2)) 0L else r.getLong(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)))
+      }
       // chain lineage: a kill during the sitemap chain resumes mid-chain
       // (chain rules re-arm from the manifest's sitemap-doc set; parsed
       // as JSON quoted strings — URLs may contain ',' and ']')
       val (ckChainStarted, ckChainSms) = Checkpointer.chainState(m)
-      ledger = ledger.copy(
-        seqCounter = Checkpointer.longField(m, "seq_counter").getOrElse(ledger.seqCounter),
-        wildcardRemaining =
-          Checkpointer.longField(m, "wildcard_remaining").getOrElse(ledger.wildcardRemaining),
+      val l = start.ledger
+      val ledger = l.copy(
+        seqCounter = Checkpointer.longField(m, "seq_counter").getOrElse(l.seqCounter),
+        wildcardRemaining = Checkpointer.longField(m, "wildcard_remaining").getOrElse(l.wildcardRemaining),
         pathBudget = Checkpointer.pathBudget(m),
+        budgetStopped = Checkpointer.budgetStopped(m, e),
         scope = Checkpointer.strField(m, "redirect_host").filter(_.nonEmpty)
-          .fold(ledger.scope)(rh => ledger.scope.copy(redirectHost = rh)),
-        chainStarted = ledger.chainStarted || ckChainStarted,
-        chainSitemaps = if (ckChainStarted) ledger.chainSitemaps ++ ckChainSms else ledger.chainSitemaps,
+          .fold(l.scope)(rh => l.scope.copy(redirectHost = rh)),
+        chainStarted = l.chainStarted || ckChainStarted,
+        chainSitemaps = if (ckChainStarted) l.chainSitemaps ++ ckChainSms else l.chainSitemaps,
         // pre-chain rel=sitemap discoveries: restore in manifest order
         // (insertion order) so the chain seeds' injection order — and the
         // sitemap docs' discovery_seq — match the unkilled run exactly
         discoveredSitemaps = Checkpointer.discoveredSitemaps(m)
-          .foldLeft(ledger.discoveredSitemaps) { (acc, u) =>
+          .foldLeft(l.discoveredSitemaps) { (acc, u) =>
             val k = UrlOps.lowerUtf8(u)
             if (acc.contains(k)) acc else acc.updated(k, u)
           })
-      epoch = e + 1
       // a distributed frontier read from a snapshot is sized by a histogram job
-      readyHist = if (frontierLocal.nonEmpty) Map.empty else histOf(frontier)
-      done = frontierLocal.map(_.size.toLong).getOrElse(readyHist.values.sum) == 0
+      val frontier =
+        if (local) Frontier.Local(ck.readLocal(e, "frontier").map(r => FrontierEntry(r.getString(0),
+          r.getString(1), r.getInt(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getLong(6))))
+        else { val t = ck.readTable(e, "frontier"); Frontier.Distributed(t, histOf(e + 1, t)) }
+      Some(EpochState(e + 1, ledger, frontier, Map.empty))
     }
 
     /** Injected URLs join the frontier, keeping its unique-by-lower(url)
       * invariant.
       */
     def inject(urls: Vector[String]): Unit = {
-      val (injectedV, injectedLedger) = Sequential.inject(urls, ledger)
-      ledger = injectedLedger
-      if (injectedV.nonEmpty) frontierLocal match {
-        case Some(v) => frontierLocal = Some(CrawlEngine.dedupCanonicalMinLocal(v ++ injectedV))
-        case None =>
-          val prev = frontier
-          frontier = timed("inject")(CrawlEngine.dedupCanonicalMin(
-            frontier.unionByName(frontierFrame(injectedV))).localCheckpoint(true))
-          CrawlEngine.releaseCheckpoint(prev)
-          readyHist = histOf(frontier)
+      val (injected, ledger) = Sequential.inject(urls, state.ledger)
+      val frontier = if (injected.isEmpty) state.frontier else state.frontier match {
+        case Frontier.Local(v) => Frontier.Local(CrawlEngine.dedupCanonicalMinLocal(v ++ injected))
+        case Frontier.Distributed(t, _) =>
+          val merged = timed("inject")(CrawlEngine.dedupCanonicalMin(
+            t.unionByName(frontierFrame(injected))).localCheckpoint(true))
+          CrawlEngine.releaseCheckpoint(t)
+          Frontier.Distributed(merged, histOf(state.epoch, merged))
       }
-    }
-
-    // snapshot commit, only on the epochs it is due. The pages go in as the
-    // delta since the last commit; afterwards the view reads them from the
-    // committed chain, and later sink deltas start a new generation
-    private def commitIfDue(): Unit = checkpoint.filter(_.due(epoch)).foreach { ck =>
-      ck.commit(epoch, frontierDf, seen.table, sigs.table, CrawlEngine.localFrame(spark,
-          hostTokens.map { case (h, t) => Row(h, t) }, Checkpointer.schemas("host_tokens")),
-        pages.delta, ledger.seqCounter, ledger.wildcardRemaining, ledger.pathBudget, ledger.scope,
-        metrics.toSeq, ledger.chainStarted, ledger.chainSitemaps.toSeq.sorted,
-        ledger.discoveredSitemaps.values.toSeq)
-      pages.committedTo(ck, epoch)
+      state = state.copy(ledger = ledger, frontier = frontier)
     }
 
     private def compactStores(): Unit = {
@@ -580,28 +558,18 @@ class CrawlEngine(
       * compaction, metrics and the snapshot. No Spark job with a
       * driver-local fetcher and live mirrors, bar the snapshot commits.
       */
-    def smallEpoch(candCount: Long, epochT0: Long): Unit = {
-      val out = step(frontierLocal.get, epoch, ledger)
-      ledger = out.ledger
+    def smallEpoch(frontier: Vector[FrontierEntry], candCount: Long, epochT0: Long): Unit = {
+      val out = step(frontier, epoch, state.ledger)
       val admittedCount = out.admitted.size.toLong
       // bloom delta — keeps the broadcast group valid for a later
       // distributed epoch (same 1% FPP sizing rule as the fused builder)
       seen.bloomFromLocal(out.admitted.map(e => UrlOps.lowerUtf8(e.url)), candCount)
-      // D4 salt hints for the NEXT epoch — free here, and crucial at the
-      // small->distributed handoff: the first big epoch of a hot-host
-      // crawl would otherwise fetch 50% of its rows through the default
-      // 16-way spread (the distributed stats ride the fetch scan and so
-      // always lag one epoch)
-      hotHostWidths = saltWidths(
-        out.admitted.groupBy(_.host).map { case (h, es) => (h, es.size.toLong) }, admittedCount)
       // A7 page-sink delta, buffered; a commit takes the buffer into its
       // pages delta
       pages.put(out.pages)
       if (config.trackBlocked)
         blocked.put(out.robotsBlocked.map(e => BlockedRow(e.url, "robots", epoch)) ++
           out.vetoed.map(p => BlockedRow(p.url, "veto", epoch)))
-      frontierLocal = Some(out.frontier)
-      val frontierCount = out.frontier.size.toLong
       // store hygiene: with the mirrors gone the per-epoch probe jobs walk
       // the delta chains — compact on the usual cadence. With mirrors live
       // the chains stay lazy, but lineage and bloom generations still grow
@@ -613,26 +581,41 @@ class CrawlEngine(
         else math.max(32, config.stateCompactionEpochs)
       if (seen.appends >= smallCadence) compactStores()
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
-        out.newLinks, frontierCount, seen.count, ledger.budgetStopped,
+        out.newLinks, out.frontier.size.toLong, seen.count, out.ledger.budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, out.robotsBlocked.size.toLong,
         out.vetoed.size.toLong)
+      // D4 salt hints for the NEXT epoch — free here, and crucial at the
+      // small->distributed handoff: the first big epoch of a hot-host
+      // crawl would otherwise fetch 50% of its rows through the default
+      // 16-way spread (the distributed stats ride the fetch scan and so
+      // always lag one epoch)
+      val next = EpochState(epoch + 1, out.ledger, Frontier.Local(out.frontier), saltWidths(
+        out.admitted.groupBy(_.host).map { case (h, es) => (h, es.size.toLong) }, admittedCount))
       // the driver holds the frontier and, while the mirrors live, the seen
       // and signature tables too: the snapshot writes them with no job
-      commitIfDue()
-      endEpoch(frontierCount)
+      commitIfDue(next)
+      endEpoch(next)
     }
 
     /** The distributed epoch: hand-off → gate → politeness → budget → fetch
-      * → seen append → links → roll → compaction and commit.
+      * → seen append → links → roll → compaction and commit. The caches it
+      * holds go once the next frontier has materialized.
       */
     def distributedEpoch(candCount: Long, epochT0: Long): Unit = {
-      if (frontierLocal.isDefined) handOff()
-      val ready = if (holdsPossible) frontier.filter(col("not_before") <= lit(epoch)) else frontier
-      val deferredHold = if (holdsPossible) frontier.filter(col("not_before") > lit(epoch)) else noRows
+      val caches: Caches = scala.collection.mutable.ListBuffer.empty
+      // hand-off: a frontier the driver holds becomes a driver-held table
+      // (no job); the mirrors drop for the rest of the call
+      val frontier = state.frontier match {
+        case Frontier.Local(v) => seen.dropMirror(); distributed(v)
+        case d: Frontier.Distributed => d
+      }
+      val ready = if (holdsPossible) frontier.table.filter(col("not_before") <= lit(epoch)) else frontier.table
+      val deferredHold = if (holdsPossible) frontier.table.filter(col("not_before") > lit(epoch)) else noRows
       val (gated, robotsBlockedCount) = gateStage(ready)
-      val (polAdmitted, deferred) = if (politenessPossible) politeness(gated) else (gated, noRows)
-      val (admitted, budgetLeftover) = budget(polAdmitted)
-      val (admittedDs, parsed, admittedCount) = fetch(admitted, candCount)
+      val (polAdmitted, deferred) = if (politenessPossible) politeness(gated, caches) else (gated, noRows)
+      val (admitted, budgetLeftover, budgetedLedger) = budget(polAdmitted, state.ledger, caches)
+      val (admittedDs, parsed, admittedCount, widths, fetchedLedger) =
+        fetch(admitted, candCount, budgetedLedger, caches)
       // 8. C7 retry ladder (pluggable RetryPolicy; default = the
       //    reference's 5xx/429/408 + capped exponential backoff ladder,
       //    `website.rs:8388-8392`): retryable statuses re-queue with
@@ -643,26 +626,17 @@ class CrawlEngine(
           col("priority"), (col("attempt") + 1).as("attempt"),
           (lit(epoch) + retry.backoffEpochs(col("attempt"))).as("not_before"))
       appendSeen(admittedDs, admittedCount, retryDf)
-      val (expanding, vetoedCount) = expandingPages(parsed)
-      val (newLinkCount, newFrontier, newFrontierHeld) = links(expanding)
-      val frontierCount = roll(deferredHold.unionByName(deferred).unionByName(budgetLeftover)
-        .unionByName(retryDf), newFrontier, newFrontierHeld, newLinkCount)
+      val (expanding, vetoedCount, expandedLedger) = expandingPages(parsed, fetchedLedger)
+      val (newLinkCount, newFrontier, newFrontierHeld, ledger) = links(expanding, expandedLedger, caches)
+      val next = roll(frontier.table, deferredHold.unionByName(deferred).unionByName(budgetLeftover)
+        .unionByName(retryDf), newFrontier, newFrontierHeld, newLinkCount, caches)
       if (seen.appends >= math.max(2, config.stateCompactionEpochs)) compactStores()
       metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
-        newLinkCount, frontierCount, seen.count, ledger.budgetStopped,
+        newLinkCount, next.size, seen.count, ledger.budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
-      timed("commit")(commitIfDue())
-      endEpoch(frontierCount)
-    }
-
-    /** Hand-off: the frontier the driver holds becomes a driver-held table
-      * (no job); the mirrors drop for the rest of the call.
-      */
-    private def handOff(): Unit = {
-      frontier = frontierDf
-      readyHist = CrawlEngine.histLocal(frontierLocal.get)
-      frontierLocal = None
-      seen.dropMirror()
+      val nextState = EpochState(epoch + 1, ledger, next, widths)
+      timed("commit")(commitIfDue(nextState))
+      endEpoch(nextState)
     }
 
     /** Gate: the bloom, the seen probe, lists/robots/depth; returns the
@@ -712,7 +686,7 @@ class CrawlEngine(
       * double-charging deferred candidates.) Returns the admitted and the
       * deferred candidates.
       */
-    private def politeness(gated: DataFrame): (DataFrame, DataFrame) = {
+    private def politeness(gated: DataFrame, caches: Caches): (DataFrame, DataFrame) = {
       // per-host effective delay (all codegen'd, no UDF):
       //   static config delay
       //   ∨ robots Crawl-delay ∨ Request-rate (expression; B9 + missing #4)
@@ -721,16 +695,15 @@ class CrawlEngine(
       val delayCol =
         if (!config.respectRobotsTxt) lit(config.delayMs)
         else greatest(lit(config.delayMs), enginefns.robots_delay_ms(col("host"), robots, config.userAgent))
-      // ONE broadcast row per host carrying ALL driver-ledger politeness
-      // state (reactive delay override ∨ auto-throttle EMA delay, and the
-      // banked token bucket) — a single join instead of two
-      val state = (throttleOverrideMs.keySet ++ latencyEma.keySet ++ hostTokens.keySet).toSeq.map { h =>
-        (h, Sequential.reactiveOverrideMs(config, throttleOverrideMs.getOrElse(h, 0L), latencyEma.get(h)),
-          hostTokens.getOrElse(h, 1000L))
-      }
+      // ONE broadcast row per host of the host ledger carrying ALL its
+      // politeness state (reactive delay override ∨ auto-throttle EMA
+      // delay, and the banked token bucket) — a single join instead of two
+      val hostRows = hosts.byHost.iterator.map { case (h, x) =>
+        Row(h, Sequential.reactiveOverrideMs(config, x.throttleMs, x.latencyEma), x.tokensMilli)
+      }.toSeq
       val tick = config.tickMs
       val withDelay = gated
-        .join(broadcast(spark.createDataset(state).toDF("host", "override_ms", "tokens_milli")),
+        .join(broadcast(CrawlEngine.localFrame(spark, hostRows, CrawlEngine.hostDelaySchema)),
           Seq("host"), "left")
         .withColumn("__delay", greatest(delayCol, coalesce(col("override_ms"), lit(0L))))
         .drop("override_ms")
@@ -751,12 +724,12 @@ class CrawlEngine(
           least(floor(col("__avail") / lit(1000L)), lit(config.maxPerHostPerEpoch.toLong)))
       val hw = Window.partitionBy(col("host"))
         .orderBy(col("priority").desc, col("depth"), col("discovery_seq"), col("url"))
-      // cache the ranked gate+politeness output: hostTokens, admitted,
+      // cache the ranked gate+politeness output: the token roll, admitted,
       // and deferred all derive from it — without the cache the whole
       // gate DAG (bloom + seen joins + windows) recomputes 3-4x/epoch
       val rankedH = avail.withColumn("__hrn", row_number().over(hw))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      epochCaches ::= (() => rankedH.unpersist(false))
+      caches += (() => rankedH.unpersist(false))
       val adm = rankedH.filter(col("__hrn") <= col("__quota"))
       val deferred = rankedH.filter(col("__hrn") > col("__quota"))
         .select(col("url"), col("host"), col("depth"), col("discovery_seq"),
@@ -782,7 +755,7 @@ class CrawlEngine(
           count(lit(1)).as("__n"))
         .orderBy(col("__n").desc, col("host")).limit(CrawlEngine.lruHostCap)
         .collect()
-        .foreach(r => hostTokens(r.getString(0)) = r.getLong(1) - r.getLong(2) * 1000L))
+        .foreach(r => hosts.update(r.getString(0), _.copy(tokensMilli = r.getLong(1) - r.getLong(2) * 1000L))))
       (adm.select(col("url"), col("host"), col("depth"), col("discovery_seq"),
         col("priority"), col("attempt"), col("not_before")), deferred)
     }
@@ -792,9 +765,11 @@ class CrawlEngine(
       * exactly; see SURVEY D6/B7). Returns the admitted candidates and the
       * leftovers a wildcard stop preserves.
       */
-    private def budget(polAdmitted: DataFrame): (DataFrame, DataFrame) = {
+    private def budget(polAdmitted: DataFrame, ledger0: Sequential.Ledger,
+        caches: Caches): (DataFrame, DataFrame, Sequential.Ledger) = {
+      var ledger = ledger0
       var budgetLeftover = noRows
-      if (!config.wildCardBudgeting && ledger.pathBudget.isEmpty) return (polAdmitted, budgetLeftover)
+      if (!config.wildCardBudgeting && ledger.pathBudget.isEmpty) return (polAdmitted, budgetLeftover, ledger)
       // chain phase: the sitemap DOCUMENTS are admitted budgetless
       // (`is_allowed_budgetless`, `website.rs:11716-11722`); their
       // entries consume budget normally
@@ -802,16 +777,25 @@ class CrawlEngine(
       val exemptCond =
         if (smExempt) lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq) else lit(false)
       val budgeted = if (smExempt) polAdmitted.filter(!exemptCond) else polAdmitted
-      val ranked = timed("grank_count")(
-        withGlobalSeq(budgeted, canonicalOrder, "__grank", 0L).localCheckpoint(true))
-      epochCaches ::= (() => CrawlEngine.releaseCheckpoint(ranked))
+      // __grank: the global rank in canonical order (depth, discovery_seq,
+      // host, url); partition i holds the i-th rank range
+      val (ranked, n) = timed("grank_count") {
+        val schema = budgeted.schema
+        val Seq(d, q, h, u) = Seq("depth", "discovery_seq", "host", "url").map(schema.fieldIndex)
+        val (rows, n, release) = CrawlEngine.globalSeq(GraftSqlBridge.internalRdd(budgeted).map(r =>
+            ((r.getInt(d), r.getLong(q), r.getUTF8String(h).toString, r.getUTF8String(u).toString), r.copy())),
+          Sequential.keyOrder, seqParts, 0L)((_, r, k) =>
+            new org.apache.spark.sql.catalyst.expressions.JoinedRow(r,
+              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](k))))
+        caches += release
+        (GraftSqlBridge.internalCreateDataFrame(spark, rows, schema.add("__grank", LongType, nullable = false)), n)
+      }
       var alive = ranked
       if (config.wildCardBudgeting) {
         // wildcard passes links while budget > 1, then EXCEEDS at ==1
         // (`abs_diff(0)==1` check `website.rs:2060-2070`) — exhaustion
         // stops the whole crawl (`website.rs:7904-7907`), leftovers
         // preserved as extra_links.
-        val n = timed("budget")(ranked.count())
         val passCount = math.max(0L, ledger.wildcardRemaining - 1L)
         if (n > passCount) {
           ledger = ledger.copy(budgetStopped = true)
@@ -830,7 +814,7 @@ class CrawlEngine(
         // (it funnels every match through one task): the rem-th match's
         // global cutoff rank is derived from
         // per-partition match counts (partitions are __grank ranges,
-        // courtesy of withGlobalSeq's range partitioning) plus one
+        // courtesy of globalSeq's range partitioning) plus one
         // boundary-partition scan — admission is then a pure filter.
         var pathBudget = ledger.pathBudget
         val keys = pathBudget.keys.toSeq.sortBy(_.length)
@@ -873,14 +857,14 @@ class CrawlEngine(
       val admitted =
         if (smExempt) alive.drop("__grank").unionByName(polAdmitted.filter(exemptCond))
         else alive.drop("__grank")
-      (admitted, budgetLeftover)
+      (admitted, budgetLeftover, ledger)
     }
 
     /** Fetch: the admitted set persisted, fetched and parsed into a page
       * delta; the ride-along admit stats drained; the throttle fed.
       */
-    private def fetch(admitted: DataFrame,
-        candCount: Long): (Dataset[FrontierEntry], Dataset[ParsedPage], Long) = {
+    private def fetch(admitted: DataFrame, candCount: Long, ledger: Sequential.Ledger, caches: Caches)
+        : (Dataset[FrontierEntry], Dataset[ParsedPage], Long, Map[String, Int], Sequential.Ledger) = {
       // 6. mark admitted as seen (insert at admission, `insert_link`
       //    `website.rs:1718-1749`). The persisted admitted set doubles as
       //    the seen-delta backing store; the bloom/count/hot-host stats
@@ -913,8 +897,8 @@ class CrawlEngine(
             admittedDs.withColumn("__rr", row_number().over(rrW))
           } else admittedDs.toDF().withColumn("__rr", lit(0))
         val saltWidth: org.apache.spark.sql.Column =
-          if (hotHostWidths.isEmpty) lit(16L)
-          else hotHostWidths.foldLeft(`when`(lit(false), lit(16L))) {
+          if (state.saltWidths.isEmpty) lit(16L)
+          else state.saltWidths.foldLeft(`when`(lit(false), lit(16L))) {
             case (acc, (h, w)) => acc.when(col("host") === lit(h), lit(w.toLong))
           }.otherwise(lit(16L))
         val (withStats, parts) = withAdmitStats(base, candCount, admitAcc)
@@ -931,12 +915,12 @@ class CrawlEngine(
       // is a COLUMN-PRUNED scan of the delta file.
       val ep = epoch
       val lrw = onLinkFind.orNull
-      val parsedDir = timed("fetch_parse") {
-        val fetched =
-          if (epoch != 0L) fetcher.fetch(spark, fetchReady)
+      val (parsedDir, scope) = timed("fetch_parse") {
+        val (fetched, scope) =
+          if (ep != 0L) (fetcher.fetch(spark, fetchReady), ledger.scope)
           else {
             val seedPages = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
-            epochCaches ::= (() => CrawlEngine.releaseCheckpoint(seedPages.toDF()))
+            caches += (() => CrawlEngine.releaseCheckpoint(seedPages.toDF()))
             val ph = ledger.scope.parentHost
             // canonical-min winner — identical on the distributed path, the
             // fast path, and the oracle (partition order would not be)
@@ -944,22 +928,20 @@ class CrawlEngine(
               .filter(f => f.f_status == 200 && UrlOps.host(f.f_final_url) != ph)
               .orderBy(col("depth"), col("discovery_seq"), col("host"), col("url"))
               .map(_.f_final_url).take(1)
-            if (redirHosts.nonEmpty)
-              ledger = ledger.copy(scope = ledger.scope.copy(redirectHost = UrlOps.host(redirHosts.head)))
-            seedPages
+            (seedPages, redirHosts.headOption
+              .fold(ledger.scope)(u => ledger.scope.copy(redirectHost = UrlOps.host(u))))
           }
-        val scope = ledger.scope
-        pages.write(fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, scope, ep, lrw)))
-          .toDF(), s"epoch=$epoch")
+        (pages.write(fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, scope, ep, lrw)))
+          .toDF(), s"epoch=$ep"), scope)
       }
       val parsed: Dataset[ParsedPage] = timed("parsed_read")(
         spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedDir).as[ParsedPage])
       // the fetch job has materialized — collect the ride-along stats
       // (delta count, bloom shards, next epoch's hot-host salt widths)
-      val admittedCount =
+      val (admittedCount, saltWidths) =
         timed("admit_drain")(drainAdmitStats(admitAcc, statsParts, admittedDs, candCount))
       if (politenessPossible) timed("throttle")(throttle(parsed))
-      (admittedDs, parsed, admittedCount)
+      (admittedDs, parsed, admittedCount, saltWidths, ledger.copy(scope = scope))
     }
 
     // Fused admit statistics: the fetch exchange's OWN map-side scan feeds
@@ -988,7 +970,7 @@ class CrawlEngine(
     }
 
     private def drainAdmitStats(acc: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat],
-        statsParts: Int, admittedDs: Dataset[FrontierEntry], expectedUpper: Long): Long = {
+        statsParts: Int, admittedDs: Dataset[FrontierEntry], expectedUpper: Long): (Long, Map[String, Int]) = {
       import scala.jdk.CollectionConverters._
       def uniq(a: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat]) = {
         val pids = new java.util.HashSet[Int]()
@@ -1012,9 +994,8 @@ class CrawlEngine(
       }
       seen.addBloom(uniqParts.iterator.map(_._3).filter(_ != null).toVector)
       val total = uniqParts.iterator.map(_._2).sum
-      hotHostWidths = saltWidths(uniqParts.iterator.flatMap(_._4).toSeq.groupBy(_._1)
-        .map { case (h, cs) => (h, cs.map(_._2).sum) }, total)
-      total
+      (total, saltWidths(uniqParts.iterator.flatMap(_._4).toSeq.groupBy(_._1)
+        .map { case (h, cs) => (h, cs.map(_._2).sum) }, total))
     }
 
     /** Reactive throttling (B9): 429 Retry-After reduces the host's rate
@@ -1047,15 +1028,15 @@ class CrawlEngine(
       val haveEma = emaRows.iterator.map(_.getString(0)).toSet
       val signals = emaRows ++ sigAgg(throttled).collect()
         .filterNot(r => haveEma.contains(r.getString(0)))
-      signals.filter(_.getLong(1) > 0).foreach { r =>
-        throttleOverrideMs(r.getString(0)) = r.getLong(1)
-        hostTokens(r.getString(0)) = 0L // bucket drained
-      }
+      // the bucket drains
+      signals.filter(_.getLong(1) > 0)
+        .foreach(r => hosts.update(r.getString(0), _.copy(throttleMs = r.getLong(1), tokensMilli = 0L)))
       if (config.autoThrottle) {
         val alpha = config.autoThrottleAlpha
         emaRows.filter(!_.isNullAt(2)).foreach { r =>
-          val h = r.getString(0); val l = r.getDouble(2)
-          latencyEma(h) = latencyEma.get(h).fold(l)(prev => prev + alpha * (l - prev))
+          val l = r.getDouble(2)
+          hosts.update(r.getString(0),
+            x => x.copy(latencyEma = Some(x.latencyEma.fold(l)(prev => prev + alpha * (l - prev)))))
         }
       }
     }
@@ -1095,7 +1076,9 @@ class CrawlEngine(
       * the canonical-first page per NEW signature (`website.rs:8671-8683`,
       * in [[links]]) and every page without a signature.
       */
-    private def expandingPages(parsed: Dataset[ParsedPage]): (DataFrame, Long) = {
+    private def expandingPages(parsed: Dataset[ParsedPage],
+        ledger0: Sequential.Ledger): (DataFrame, Long, Sequential.Ledger) = {
+      var ledger = ledger0
       var expanding = onShouldCrawl.fold(parsed)(veto => parsed.filter(veto)).toDF() // B11
       val vetoedCount =
         if (config.trackBlocked && onShouldCrawl.isDefined) timed("blocked") {
@@ -1138,7 +1121,7 @@ class CrawlEngine(
           .withColumn("links", concat(col("links"), col("sitemap_links")))
         ledger = ledger.copy(chainSitemaps = ledger.chainSitemaps ++ nested.map(UrlOps.lowerUtf8))
       }
-      (expanding, vetoedCount)
+      (expanding, vetoedCount, ledger)
     }
 
     /** 11. The epoch's new links, in ONE job over two exchanges, each on the
@@ -1159,7 +1142,8 @@ class CrawlEngine(
       * (a driver-held frontier table) when they fit the threshold, else
       * range-sorted.
       */
-    private def links(expanding: DataFrame): (Long, DataFrame, Boolean) = {
+    private def links(expanding: DataFrame, ledger: Sequential.Ledger,
+        caches: Caches): (Long, DataFrame, Boolean, Sequential.Ledger) = {
       val dedupSigs = !ledger.chainStarted && config.normalize
       // (signature or 0, depth, discovery_seq, host, url, links) of every
       // fetched page that may expand. A scan of the page delta, no job
@@ -1182,7 +1166,7 @@ class CrawlEngine(
       val survivors = seen.probe(expandingRows.flatMap(CrawlEngine.linkRefs)
         .reduceByKey(partitioner, CrawlEngine.minLink _), keepPresent = false).values
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      epochCaches ::= (() => survivors.unpersist(false))
+      caches += (() => survivors.unpersist(false))
       val newLinkCount = timed("links") {
         val counts = sigDelta.fold(survivors.mapPartitions(it => Iterator.single(it.size.toLong))) {
           // both sides have the store's partition count
@@ -1200,30 +1184,15 @@ class CrawlEngine(
             FrontierEntry(u, UrlOps.host(u), pd + 1, ledger.seqCounter + i,
               UrlOps.scoreUrl(u, pd + 1), 0, 0L)
           }.toSeq), true)
-        } else (timed("links_seq")(rangeSeq(survivors, ledger.seqCounter)), false)
-      ledger = ledger.copy(seqCounter = ledger.seqCounter + newLinkCount)
-      (newLinkCount, newFrontier, held)
-    }
-
-    // discovery_seq for new links past the threshold: range-partitioned in
-    // link order (the partitioner's sample job), each range counted over the
-    // sorted ranges, persisted (one job), and the offsets stamped in place;
-    // the frontier's checkpoint reads the ranges back
-    private def rangeSeq(links: org.apache.spark.rdd.RDD[CrawlEngine.LinkRef], offset: Long): DataFrame = {
-      val keyed = links.map(t => (t, ()))
-      val ord = Sequential.linkOrder
-      val sorted = new org.apache.spark.rdd.ShuffledRDD[CrawlEngine.LinkRef, Unit, Unit](keyed,
-          new org.apache.spark.RangePartitioner(math.max(1, math.min(P, 200)), keyed)(ord,
-            implicitly[scala.reflect.ClassTag[CrawlEngine.LinkRef]]))
-        .setKeyOrdering(ord).keys
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      epochCaches ::= (() => sorted.unpersist(false))
-      val offsets = CrawlEngine.offsets(sorted, offset)
-      GraftSqlBridge.internalCreateDataFrame(spark,
-        sorted.mapPartitionsWithIndex { (i, it) =>
-          var k = offsets(i) - 1
-          it.map { case (pd, _, _, u) => k += 1; CrawlEngine.frontierRow(u, pd + 1, k) }
-        }, Checkpointer.schemas("frontier"))
+        } else timed("links_seq") {
+          // past the threshold: range-sorted in link order, and the ranges'
+          // offsets stamped in place; the frontier's checkpoint reads them
+          val (rows, _, release) = CrawlEngine.globalSeq(survivors.map(t => (t, ())), Sequential.linkOrder,
+            seqParts, ledger.seqCounter) { case ((pd, _, _, u), _, k) => CrawlEngine.frontierRow(u, pd + 1, k) }
+          caches += release
+          (GraftSqlBridge.internalCreateDataFrame(spark, rows, Checkpointer.schemas("frontier")), false)
+        }
+      (newLinkCount, newFrontier, held, ledger.copy(seqCounter = ledger.seqCounter + newLinkCount))
     }
 
     /** 12. Roll: next frontier = politeness-deferred ∪ retries ∪ new links,
@@ -1237,10 +1206,9 @@ class CrawlEngine(
       * unique): no dedup, no count job, and no job at all when the driver
       * holds it. Returns the frontier's size.
       */
-    private def roll(carried: DataFrame, newFrontier: DataFrame, newFrontierHeld: Boolean,
-        newLinkCount: Long): Long = {
-      val prev = frontier
-      frontier =
+    private def roll(prev: DataFrame, carried: DataFrame, newFrontier: DataFrame, newFrontierHeld: Boolean,
+        newLinkCount: Long, caches: Caches): Frontier.Distributed = {
+      val next =
         if (carryover)
           timed("frontier_ckpt")(CrawlEngine.dedupCanonicalMin(carried.unionByName(newFrontier))
             .localCheckpoint(true))
@@ -1248,10 +1216,8 @@ class CrawlEngine(
         else timed("frontier_ckpt")(newFrontier.localCheckpoint(true))
       // the frontier has materialized: nothing reads this epoch's caches
       CrawlEngine.releaseCheckpoint(prev)
-      epochCaches.foreach(_())
-      epochCaches = Nil
-      readyHist = if (carryover) histOf(frontier) else Map(0L -> newLinkCount)
-      readyHist.values.sum
+      caches.foreach(_())
+      Frontier.Distributed(next, if (carryover) histOf(epoch, next) else Map(0L -> newLinkCount))
     }
 
     /** The call's result. The seen table reads the store's chain lazily,
@@ -1261,10 +1227,10 @@ class CrawlEngine(
       sigs.release(all = true)
       seen.release(all = false)
       val all = pages.pages
+      val sms = state.ledger.chainSitemaps
       val finalPages = // the sitemap XML itself is parsed, never emitted as a page
-        if (ledger.chainSitemaps.isEmpty) all
-        else all.filter(!lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq))
-      CrawlResult(finalPages, seen.rows, frontierDf, metrics.toSeq, epoch, blocked.table)
+        if (sms.isEmpty) all else all.filter(!lower(col("url")).isInCollection(sms.toSeq))
+      CrawlResult(finalPages, seen.rows, tableOf(state.frontier), metrics.toSeq, epoch, blocked.table)
     }
   }
 }
@@ -1281,6 +1247,36 @@ object CrawlEngine {
     */
   private[engine] def partitions(spark: SparkSession): Int =
     math.max(spark.sessionState.conf.numShufflePartitions, spark.sparkContext.defaultParallelism)
+
+  /** A crawl's frontier: entries the driver holds (the small path), or a
+    * table with its `not_before` histogram (the distributed path), which
+    * answers size and readiness with no job.
+    */
+  private[engine] sealed trait Frontier {
+    def size: Long
+    /** Entries whose hold has passed at `epoch`. */
+    def ready(epoch: Long): Long
+  }
+
+  private[engine] object Frontier {
+    final case class Local(entries: Vector[FrontierEntry]) extends Frontier {
+      def size: Long = entries.size.toLong
+      def ready(epoch: Long): Long = entries.count(_.not_before <= epoch).toLong
+    }
+    final case class Distributed(table: DataFrame, hist: Map[Long, Long]) extends Frontier {
+      def size: Long = hist.values.sum
+      def ready(epoch: Long): Long = hist.iterator.collect { case (nb, n) if nb <= epoch => n }.sum
+    }
+  }
+
+  /** The loop state of a crawl call at the start of epoch `epoch`: the
+    * ledger, the frontier, and the hot-host salt widths of the next fetch
+    * exchange. Each epoch maps it to the next one; a snapshot writes it
+    * (with the stores, the host ledger and the pages) and a restore returns
+    * it, without salt widths.
+    */
+  private[engine] final case class EpochState(epoch: Long, ledger: Sequential.Ledger,
+      frontier: Frontier, saltWidths: Map[String, Int])
 
   /** Cap on the driver-side seen/signature mirrors of the small-epoch fast
     * path; past it the mirrors drop and the gate falls back to tiny probe
@@ -1299,9 +1295,9 @@ object CrawlEngine {
     */
   private[engine] val bloomMaxGenerations = 32
 
-  /** Capacity of every driver-side per-host ledger (token buckets, 429
-    * overrides, latency EMAs) AND the cap on each ledger's per-epoch
-    * feeding collect: rows beyond it (ranked by per-epoch traffic) would
+  /** Capacity of the driver-side host ledger (token bucket, 429 override
+    * and latency EMA per host) AND the cap on each of its per-epoch
+    * feeding collects: rows beyond it (ranked by per-epoch traffic) would
     * be evicted on insert anyway, so capping the collect bounds driver
     * traffic at any host cardinality without changing ledger contents.
     * A var so the cap + eviction path is testable at toy scale.
@@ -1405,11 +1401,26 @@ object CrawlEngine {
     spark.createDataFrame(rows.toSeq.asJava, schema)
   }
 
-  /** Each partition's first sequence number, counting from `start` (one
-    * job).
+  /** One global sequence: `rdd` range-partitioned on its key in `ord`
+    * (the partitioner's sample job), each range sorted, persisted and
+    * counted (one job), and every element stamped in key order with its
+    * dense number from `start`. Partition i of the result holds the i-th
+    * key range, so a pass over the partitions in order walks the sequence
+    * in order. Returns the stamped rows, their count, and the release of
+    * the persisted ranges.
     */
-  private[engine] def offsets(rdd: org.apache.spark.rdd.RDD[_], start: Long): Array[Long] =
-    rdd.mapPartitions(it => Iterator.single(it.size.toLong)).collect().scanLeft(start)(_ + _)
+  private[engine] def globalSeq[K: ClassTag, V: ClassTag](rdd: org.apache.spark.rdd.RDD[(K, V)],
+      ord: Ordering[K], parts: Int, start: Long)(stamp: (K, V, Long) => InternalRow)
+      : (org.apache.spark.rdd.RDD[InternalRow], Long, () => Unit) = {
+    val sorted = new org.apache.spark.rdd.ShuffledRDD[K, V, V](rdd,
+        new org.apache.spark.RangePartitioner(parts, rdd)(ord, implicitly[ClassTag[K]]))
+      .setKeyOrdering(ord).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val offsets = sorted.mapPartitions(it => Iterator.single(it.size.toLong)).collect().scanLeft(start)(_ + _)
+    (sorted.mapPartitionsWithIndex { (i, it) =>
+      var k = offsets(i) - 1
+      it.map { case (key, v) => k += 1; stamp(key, v, k) }
+    }, offsets.last - start, () => sorted.unpersist(false))
+  }
 
   private[engine] def histLocal(v: Vector[FrontierEntry]): Map[Long, Long] =
     v.groupBy(_.not_before).map { case (nb, es) => (nb, es.size.toLong) }
@@ -1477,6 +1488,13 @@ object CrawlEngine {
       } catch { case _: Throwable => }
     }))
     dir.toString
+  }
+
+  /** Schema of the politeness stage's per-host state join. */
+  private val hostDelaySchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("host", StringType), StructField("override_ms", LongType),
+      StructField("tokens_milli", LongType)))
   }
 
   /** Schema of the blocked side-output table (B11 parity). */

@@ -121,27 +121,24 @@ object Sequential {
     *
     * @param delayOf    effective per-host delay ms (config ∨ robots
     *                   Crawl-delay ∨ reactive override ∨ auto-throttle EMA)
-    * @param getTokens  current banked milli-tokens (None = fresh bucket)
-    * @param putTokens  write-back of the rolled-forward bucket
+    * @param hosts      the banked buckets, rolled forward here
     */
   private def politenessAdmit(
       gated: Vector[FrontierEntry], config: CrawlConfig, epoch: Long,
       delayOf: String => Long,
-      getTokens: String => Option[Long],
-      putTokens: (String, Long) => Unit): (Vector[FrontierEntry], Vector[FrontierEntry]) = {
+      hosts: HostState): (Vector[FrontierEntry], Vector[FrontierEntry]) = {
     val adm = Vector.newBuilder[FrontierEntry]
     val deferred = Vector.newBuilder[FrontierEntry]
     gated.groupBy(_.host).foreach { case (host, es) =>
       val delay = delayOf(host)
       val permits = if (delay == 0) Long.MaxValue / 4 else config.tickMs * 1000L / delay
-      val avail = math.min(getTokens(host).getOrElse(1000L) + permits,
-        math.max(2000L, permits * 2))
+      val avail = math.min(hosts(host).tokensMilli + permits, math.max(2000L, permits * 2))
       val quota = math.min(avail / 1000L, config.maxPerHostPerEpoch.toLong)
       val sorted = es.sorted(hostOrder)
       val (a, d) = sorted.splitAt(math.min(quota, Int.MaxValue.toLong).toInt)
       adm ++= a
       deferred ++= d.map(_.copy(not_before = epoch + 1))
-      putTokens(host, avail - a.size * 1000L)
+      hosts.update(host, _.copy(tokensMilli = avail - a.size * 1000L))
     }
     (adm.result(), deferred.result())
   }
@@ -246,13 +243,20 @@ object Sequential {
     def add(entries: Seq[(K, V)]): Unit = entries.foreach(kv => set += kv._1)
   }
 
-  /** Per-host politeness state: banked milli-tokens, the 429 Retry-After
-    * delay override, and the latency EMA.
+  /** One host's politeness state: banked milli-tokens (a fresh bucket
+    * holds 1000), the 429 Retry-After delay override (0: none) and the
+    * latency EMA (None until the host's first timed fetch).
     */
-  final case class HostState(
-      tokens: mutable.Map[String, Long] = mutable.Map.empty,
-      throttleMs: mutable.Map[String, Long] = mutable.Map.empty,
-      latencyEma: mutable.Map[String, Double] = mutable.Map.empty)
+  final case class Host(tokensMilli: Long = 1000L, throttleMs: Long = 0L,
+      latencyEma: Option[Double] = None)
+
+  /** Per-host politeness state, one entry per host: the engine hands an
+    * LRU-capped map, the oracle a plain one.
+    */
+  final case class HostState(byHost: mutable.Map[String, Host] = mutable.Map.empty[String, Host]) {
+    def apply(host: String): Host = byHost.getOrElse(host, Host())
+    def update(host: String, f: Host => Host): Unit = byHost(host) = f(apply(host))
+  }
 
   /** `is_allowed_default` (lists + robots), with regex lists compiled once
     * per crawl. Non-regex lists match the EXACT URL (`lib.rs:433-449`);
@@ -407,8 +411,8 @@ object Sequential {
     // reactive override (429 throttle ∨ auto-throttle EMA)
     private def delayOf(host: String): Long = {
       val rd = if (config.respectRobotsTxt) robots.politenessDelayMs(host, config.userAgent) else 0L
-      math.max(math.max(config.delayMs, rd), reactiveOverrideMs(config,
-        hosts.throttleMs.getOrElse(host, 0L), hosts.latencyEma.get(host)))
+      val h = hosts(host)
+      math.max(math.max(config.delayMs, rd), reactiveOverrideMs(config, h.throttleMs, h.latencyEma))
     }
 
     def apply(frontier: Vector[FrontierEntry], epoch: Long, ledger0: Ledger): EpochOut = {
@@ -431,8 +435,7 @@ object Sequential {
       // sitemap docs are budget-exempt (`is_allowed_budgetless`)
       val (polAdmitted, deferred) =
         if (!politenessOn) (gated, Vector.empty[FrontierEntry])
-        else politenessAdmit(gated, config, epoch, delayOf, hosts.tokens.get,
-          (h, t) => hosts.tokens(h) = t)
+        else politenessAdmit(gated, config, epoch, delayOf, hosts)
       val (smExempt, budgetable) =
         if (ledger.chainStarted && ledger.chainSitemaps.nonEmpty)
           polAdmitted.partition(e => ledger.chainSitemaps.contains(UrlOps.lowerUtf8(e.url)))
@@ -465,16 +468,13 @@ object Sequential {
       if (politenessOn) {
         fetched.filter(f => f.f_status == 429 && f.f_retry_after_ms > 0)
           .groupBy(_.host).foreach { case (h, fs) =>
-            hosts.throttleMs(h) = fs.map(_.f_retry_after_ms).max
-            hosts.tokens(h) = 0L
+            hosts.update(h, _.copy(throttleMs = fs.map(_.f_retry_after_ms).max, tokensMilli = 0L))
           }
         if (config.autoThrottle) {
           fetched.filter(_.f_latency_ms > 0).groupBy(_.host).foreach { case (h, fs) =>
             val avg = fs.map(_.f_latency_ms.toDouble).sum / fs.size
-            hosts.latencyEma(h) = hosts.latencyEma.get(h) match {
-              case Some(prev) => prev + config.autoThrottleAlpha * (avg - prev)
-              case None => avg
-            }
+            hosts.update(h, s => s.copy(latencyEma =
+              Some(s.latencyEma.fold(avg)(prev => prev + config.autoThrottleAlpha * (avg - prev)))))
           }
         }
       }

@@ -23,7 +23,7 @@ class CrawlPinSpec extends AnyFunSuite {
     val live = res.pages.map(p =>
       s"(${esc(p.url)},${p.depth},${p.status},CAST(${p.signature} AS BIGINT))")
     assert(live == SparkEntry.crawlBasicRows,
-      "regenerate with: runMain graft.tools.Drive oracledump")
+      "regenerate with: Test/runMain graft.tools.Drive oracledump")
   }
 
   test("crawl_budget pins match a live OracleCrawler run") {
@@ -33,7 +33,7 @@ class CrawlPinSpec extends AnyFunSuite {
       new CorpusRobots(params), Seq("https://www.site0.com/"))
     val live = res.pages.map(p => s"(${esc(p.url)},${p.depth},${p.status})")
     assert(live == SparkEntry.crawlBudgetRows,
-      "regenerate with: runMain graft.tools.Drive oracledump")
+      "regenerate with: Test/runMain graft.tools.Drive oracledump")
   }
 
   test("crawl_throttle pins match a live OracleCrawler run (epoch = pacing)") {
@@ -42,7 +42,7 @@ class CrawlPinSpec extends AnyFunSuite {
     val live = res.pages.map(p =>
       s"(${esc(p.url)},${p.depth},${p.status},CAST(${p.epoch} AS BIGINT))")
     assert(live == SparkEntry.crawlThrottleRows,
-      "regenerate with: runMain graft.tools.Drive oracledump")
+      "regenerate with: Test/runMain graft.tools.Drive oracledump")
   }
 
   test("crawl_sitemap pins match a live OracleCrawler run (A6 chain + recursion)") {
@@ -51,7 +51,7 @@ class CrawlPinSpec extends AnyFunSuite {
       s.seeds, sitemapChain = true)
     val live = res.pages.map(p => s"(${esc(p.url)},${p.depth},${p.status})")
     assert(live == SparkEntry.crawlSitemapRows,
-      "regenerate with: runMain graft.tools.Drive oracledump")
+      "regenerate with: Test/runMain graft.tools.Drive oracledump")
     // the pins must contain sitemap-only pages from BOTH chain levels
     assert(live.exists(_.contains("p12.html")), "first-level sitemap orphan missing")
     assert(live.exists(_.contains("p22.html")), "nested-sitemap orphan missing")
@@ -64,7 +64,7 @@ class CrawlPinSpec extends AnyFunSuite {
     val live = res.blocked.map { case (u, r, e) =>
       s"(${esc(u)},${esc(r)},CAST($e AS BIGINT))" }
     assert(live == SparkEntry.crawlBlockedRows,
-      "regenerate with: runMain graft.tools.Drive oracledump")
+      "regenerate with: Test/runMain graft.tools.Drive oracledump")
     assert(res.blocked.exists(_._2 == "robots") && res.blocked.exists(_._2 == "veto"),
       "scenario must produce both blocked reasons")
   }
@@ -75,7 +75,7 @@ class CrawlPinSpec extends AnyFunSuite {
       s.seeds, sitemapOnly = true)
     val live = res.pages.map(p => s"(${esc(p.url)},${p.depth},${p.status})")
     assert(live == SparkEntry.crawlSitemapOnlyRows,
-      "regenerate with: runMain graft.tools.Drive oracledump")
+      "regenerate with: Test/runMain graft.tools.Drive oracledump")
     // no link expansion: both chain levels present, nothing deeper
     assert(live.exists(_.contains("p22.html")), "nested-sitemap entry missing")
     assert(res.pages.forall(_.depth <= 2), "sitemap-only must never expand links")

@@ -375,13 +375,6 @@ class ResumeSpec extends AnyFunSuite {
     def engine(cfg: CrawlConfig, ck: Option[Checkpointer]) =
       new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
         expectedUrls = 10000, checkpoint = ck)
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      val s = Files.walk(from)
-      try s.iterator().asScala.foreach { p =>
-        val t = to.resolve(from.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
-      } finally s.close()
-    }
     for (threshold <- Seq(4096, 0)) {
       val cfg = base.copy(smallEpochThreshold = threshold)
       val full = engine(cfg, None).crawl(seeds)
@@ -411,17 +404,8 @@ class ResumeSpec extends AnyFunSuite {
       }
       // resume from each snapshot: a copy of the directory cut back to it;
       // snapshots of the distributed path also resume on the small path
-      def cutAt(e: Long): java.nio.file.Path = {
-        val cut = Files.createTempDirectory("graft_ckpt10")
-        copyTree(dir, cut)
-        snaps.filter(_ > e).foreach { k =>
-          val s = Files.walk(cut.resolve(s"epoch_$k"))
-          try s.iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p)) finally s.close()
-        }
-        cut
-      }
       for (e <- snaps; resumeThreshold <- Seq(threshold, 4096).distinct) {
-        val cut = cutAt(e)
+        val cut = upTo(dir, e)
         val ckCut = new Checkpointer(spark, cut.toString, every = every)
         assert(ckCut.latestEpoch() == e)
         val label = s"threshold $threshold, resumed at $resumeThreshold from epoch $e"
@@ -443,7 +427,7 @@ class ResumeSpec extends AnyFunSuite {
         every = every)
       new CrawlEngine(spark, cfg.copy(maxEpochs = (snaps(1) + every + 1).toInt),
         new GenerativeFetcher(params), robots, expectedUrls = 10000, checkpoint = Some(other))
-        .crawl(seeds, resumeFrom = Some(new Checkpointer(spark, cutAt(snaps(1)).toString, every = every)))
+        .crawl(seeds, resumeFrom = Some(new Checkpointer(spark, upTo(dir, snaps(1)).toString, every = every)))
       val otherLast = other.latestEpoch()
       assert(otherLast == snaps(1) + every, s"threshold $threshold: other directory's snapshot")
       assert(Checkpointer.longField(other.readManifest(otherLast), "parent").contains(-1L))
@@ -489,6 +473,166 @@ class ResumeSpec extends AnyFunSuite {
     assert(ck.readTable(0, "frontier").as[graft.model.FrontierEntry].collect().toSet ==
       frontier.as[graft.model.FrontierEntry].collect().toSet)
     assert(Files.exists(Paths.get(dir, "epoch_0", "frontier", "part-00000.parquet")))
+  }
+
+  /** A copy of checkpoint directory `dir` without its snapshots past
+    * `epoch`: a resume from it restores snapshot `epoch`.
+    */
+  private def upTo(dir: java.nio.file.Path, epoch: Long): java.nio.file.Path = {
+    val cut = Files.createTempDirectory("graft_ckpt_cut")
+    val snapshot = "epoch_(\\d+)".r
+    val s = Files.walk(dir)
+    try s.iterator().asScala.foreach { p =>
+      val rel = dir.relativize(p)
+      val past = rel.getName(0).toString match {
+        case snapshot(k) => k.toLong > epoch
+        case _ => false
+      }
+      if (!past) {
+        val t = cut.resolve(rel.toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      }
+    } finally s.close()
+    cut
+  }
+
+  /** A resume source: snapshot `epoch` of checkpoint directory `dir`. */
+  private def snapshotAt(dir: java.nio.file.Path, epoch: Long): Checkpointer =
+    new Checkpointer(spark, upTo(dir, epoch).toString, every = 1)
+
+  private def snapshots(dir: java.nio.file.Path, last: Long): Seq[Long] =
+    (0L to last).filter(e => Files.exists(dir.resolve(s"epoch_$e").resolve("manifest.json")))
+
+  test("a resume from the budget-stop snapshot stops where the uninterrupted crawl stopped") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // a wildcard budget stops the crawl with a frontier left; the restored
+    // stop must hold: no further epoch and no further snapshot
+    val params = CorpusParams(hosts = 2, pagesPerHost = 40)
+    val seeds = Seq("https://www.site0.com/")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    def pagesOf(df: DataFrame) =
+      rows(df.select("url", "depth", "discovery_seq", "status", "signature", "epoch"))
+    for (threshold <- Seq(4096, 0)) {
+      val cfg = CrawlConfig(budget = Map("*" -> 12), maxEpochs = 20, smallEpochThreshold = threshold)
+      def engine(ck: Option[Checkpointer]) = new CrawlEngine(spark, cfg, new GenerativeFetcher(params),
+        new CorpusRobots(params), expectedUrls = 10000, checkpoint = ck)
+      val label = s"threshold $threshold"
+      val full = engine(None).crawl(seeds)
+      assert(full.metrics.last.budget_stopped && full.frontierRemainder.count() > 0,
+        s"$label: the budget did not stop the crawl with a frontier left")
+      val ck = new Checkpointer(spark, Files.createTempDirectory("graft_ckpt_budget").toString, every = 1)
+      engine(Some(ck)).crawl(seeds)
+      val last = ck.latestEpoch()
+      assert(last == full.epochs - 1, s"$label: last snapshot $last of ${full.epochs} epochs")
+      val resumed = engine(Some(ck)).crawl(seeds, resumeFrom = Some(ck))
+      assert(resumed.epochs == full.epochs, s"$label: ${resumed.epochs} epochs against ${full.epochs}")
+      assert(ck.latestEpoch() == last, s"$label: the resume wrote epoch_${ck.latestEpoch()}")
+      assert(rows(resumed.frontierRemainder) == rows(full.frontierRemainder), s"$label: frontier")
+      assert(pagesOf(resumed.pages) == pagesOf(full.pages), s"$label: pages")
+    }
+  }
+
+  test("a resume keeps the reactive politeness state: 429 Retry-After and latency EMA") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // the uninterrupted crawl (snapshotting every epoch), the oracle and a
+    // resume after 3, 6 and 10 epochs (6 and 10 on the distributed path)
+    // must pace alike: the same epochs, every page in the same epoch
+    val shapes = Seq(
+      ("429", CorpusParams(hosts = 1, pagesPerHost = 10, rateLimitEvery = 4, retryAfterMs = 2000L),
+        CrawlConfig(delayMs = 100, tickMs = 1000, retryLimit = 1, maxEpochs = 120)),
+      ("EMA", CorpusParams(hosts = 3, pagesPerHost = 60, fanout = 2),
+        CrawlConfig(delayMs = 1, tickMs = 1000, maxEpochs = 120, autoThrottle = true,
+          autoThrottleTargetConcurrency = 0.1, autoThrottleMaxDelayMs = 1000L)))
+    def pagesOf(df: DataFrame) = df.select("url", "depth", "discovery_seq", "status", "epoch").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3), r.getLong(4))).toSet
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    for ((name, params, base) <- shapes) {
+      val seeds = (0 until params.hosts).map(i => s"https://www.site$i.com/")
+      val robots = new CorpusRobots(params)
+      val oracle = OracleCrawler.crawl(params, base, robots, seeds)
+      val oraclePages = oracle.pages.map(p => (p.url, p.depth, p.seq, p.status, p.epoch)).toSet
+      for (threshold <- Seq(4096, 0)) {
+        val cfg = base.copy(smallEpochThreshold = threshold)
+        def engine(ck: Checkpointer) = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+          expectedUrls = 10000, checkpoint = Some(ck))
+        val dir = Files.createTempDirectory("graft_ckpt_react")
+        val ck = new Checkpointer(spark, dir.toString, every = 1)
+        val full = engine(ck).crawl(seeds)
+        val fullPages = pagesOf(full.pages)
+        assert(full.epochs == oracle.epochs && fullPages == oraclePages,
+          s"$name, threshold $threshold: uninterrupted crawl != oracle")
+        // killed after `stop` epochs: resumed from the snapshots up to then
+        for (stop <- if (threshold > 0) Seq(3, 6, 10) else Seq(6, 10)) {
+          val cut = snapshotAt(dir, stop - 1)
+          val snap = cut.latestEpoch()
+          val resumed = engine(cut).crawl(seeds, resumeFrom = Some(cut))
+          val resumedPages = pagesOf(resumed.pages)
+          val differ = ((fullPages -- resumedPages) ++ (resumedPages -- fullPages)).size
+          if (resumed.epochs != full.epochs || differ != 0)
+            failures += s"$name, threshold $threshold, resumed after $stop epochs (snapshot $snap): " +
+              s"${resumed.epochs} epochs against ${full.epochs}, $differ page rows differ"
+        }
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("each snapshot's state round-trips: a one-epoch resume writes the next snapshot exactly") {
+    spark.sparkContext.setLogLevel("ERROR")
+    val t0 = System.nanoTime()
+    // 429s, the latency-EMA auto-throttle and a wildcard budget that stops
+    // the crawl: every piece of loop state moves between snapshots
+    val params = CorpusParams(hosts = 2, pagesPerHost = 20, rateLimitEvery = 5, retryAfterMs = 2000L)
+    val seeds = Seq("https://www.site0.com/", "https://www.site1.com/")
+    val base = CrawlConfig(delayMs = 100, tickMs = 1000, retryLimit = 1, autoThrottle = true,
+      autoThrottleTargetConcurrency = 0.1, autoThrottleMaxDelayMs = 1000L, budget = Map("*" -> 24),
+      maxEpochs = 120)
+    val robots = new CorpusRobots(params)
+    val tableNames = Seq("frontier", "seen", "signatures", "host_tokens", "pages")
+    def tables(ck: Checkpointer, e: Long) =
+      tableNames.map(t => t -> ck.readTable(e, t).collect().map(_.toSeq).toSet).toMap
+    // the manifest's ledger fields, snapshot e's own metrics entry and the
+    // lineage row counts
+    def ledger(m: String, e: Long) = (
+      Seq("seq_counter", "wildcard_remaining").map(Checkpointer.longField(m, _)),
+      Checkpointer.pathBudget(m),
+      Seq("sub_matcher", "parent_host", "parent_scheme", "redirect_host", "crawl_base")
+        .map(Checkpointer.strField(m, _)),
+      Checkpointer.chainState(m), Checkpointer.discoveredSitemaps(m),
+      ("\\{\"epoch\":" + e + ",[^}]*\\}").r.findFirstIn(m.substring(m.indexOf("\"metrics\""))),
+      Checkpointer.lineageRows(m))
+    for (threshold <- Seq(4096, 0)) {
+      val cfg = base.copy(smallEpochThreshold = threshold)
+      def engine(c: CrawlConfig, ck: Checkpointer) = new CrawlEngine(spark, c,
+        new GenerativeFetcher(params), robots, expectedUrls = 10000, checkpoint = Some(ck))
+      val dirA = Files.createTempDirectory("graft_ckpt_a")
+      val ckA = new Checkpointer(spark, dirA.toString, every = 1)
+      val full = engine(cfg, ckA).crawl(seeds)
+      assert(full.metrics.last.budget_stopped, s"threshold $threshold: the budget did not stop the crawl")
+      assert(full.pages.filter("status = 429").count() > 0, s"threshold $threshold: no 429 page")
+      val snaps = snapshots(dirA, ckA.latestEpoch())
+      assert(snaps.last == full.epochs - 1, s"threshold $threshold: snapshots $snaps")
+      val checked =
+        if (threshold > 0) snaps
+        else snaps.zipWithIndex.collect { case (e, i) if i % 3 == 0 || e == snaps.last => e }
+      for (e <- checked) {
+        val label = s"threshold $threshold, resumed from epoch $e"
+        val dirB = Files.createTempDirectory("graft_ckpt_b")
+        val ckB = new Checkpointer(spark, dirB.toString, every = 1)
+        engine(cfg.copy(maxEpochs = (e + 2).toInt), ckB)
+          .crawl(seeds, resumeFrom = Some(snapshotAt(dirA, e)))
+        if (!snaps.contains(e + 1))
+          assert(ckB.latestEpoch() == -1, s"$label: wrote epoch_${ckB.latestEpoch()}")
+        else {
+          assert(ckB.latestEpoch() == e + 1, s"$label: latest snapshot ${ckB.latestEpoch()}")
+          val (ta, tb) = (tables(ckA, e + 1), tables(ckB, e + 1))
+          tableNames.foreach(t => assert(tb(t) == ta(t), s"$label: table $t"))
+          assert(ledger(ckB.readManifest(e + 1), e + 1) == ledger(ckA.readManifest(e + 1), e + 1),
+            s"$label: manifest")
+        }
+      }
+    }
+    info(f"round trips took ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 
   test("the small-path page buffer flushes by span bytes before its row cap") {

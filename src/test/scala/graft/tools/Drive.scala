@@ -3,9 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Manual driving harness: exercises the library through its public surface
-  * (a real SparkSession) with codegen forced on, so `sbt "runMain
+  * (a real SparkSession) with codegen forced on, so `sbt "Test/runMain
   * graft.tools.Drive"` observes the expressions executing inside
-  * whole-stage codegen. Used by /verify; not part of the engine.
+  * whole-stage codegen. A test-source tool, not part of the engine.
   */
 object Drive {
   def session(cores: Int = 4): SparkSession = {
