@@ -17,7 +17,7 @@ object SparkEntry {
   // ------------------------------------------------------------------ //
   // Pinned crawl oracles: the sequential OracleCrawler's page rows on the
   // crawl_basic / crawl_budget (corpus, config, seeds), regenerated with
-  // `runMain graft.tools.Drive oracledump` and re-asserted against a live
+  // `Test/runMain graft.tools.Drive oracledump` and re-asserted against a live
   // OracleCrawler run by CrawlPinSpec.
   // ------------------------------------------------------------------ //
   private[graft] val crawlBasicRows: Seq[String] = Seq(

@@ -266,6 +266,21 @@ object Checkpointer {
     ("\\{\"table\":" + Str + ",\"rows\":(\\d+)").r.findAllMatchIn(manifest)
       .map(m => unescape(m.group(1)) -> m.group(2).toLong).toMap
 
+  /** The per-epoch metrics series a snapshot holds, in order; a snapshot
+    * keeps no wall times, so each `wall_ms` reads 0.
+    */
+  def metrics(manifest: String): Seq[EpochMetrics] = {
+    val n = "(-?\\d+)"
+    (s"""\\{"epoch":$n,"candidates":$n,"admitted":$n,"fetched":$n,"new_links":$n,"frontier":$n,""" +
+      s""""seen":$n,"budget_stopped":(true|false),"robots_blocked":$n,"vetoed":$n\\}""").r
+      .findAllMatchIn(manifest.substring(math.max(0, manifest.indexOf("\"metrics\":"))))
+      .map { m =>
+        def l(i: Int) = m.group(i).toLong
+        EpochMetrics(l(1), l(2), l(3), l(4), l(5), l(6), l(7), m.group(8).toBoolean,
+          robots_blocked = l(9), vetoed = l(10))
+      }.toSeq
+  }
+
   /** Whether snapshot `epoch`'s own metrics entry records a budget stop
     * (every commit writes the entry of its epoch).
     */

@@ -2,11 +2,17 @@ package graft.engine
 
 import graft.model._
 import graft.url.UrlOps
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftSqlBridge, Observation, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 import scala.reflect.ClassTag
@@ -139,8 +145,7 @@ class CrawlEngine(
   // deliberately NOT Serializable: closures must capture locals, never
   // `this` (which holds the SparkSession) — accidental capture fails fast.
 
-  import spark.implicits._
-  import CrawlEngine.{EpochState, Frontier}
+  import CrawlEngine.{EpochState, Frontier, frontierSchema}
   // releases of the caches one distributed epoch holds
   private type Caches = scala.collection.mutable.ListBuffer[() => Unit]
 
@@ -162,46 +167,6 @@ class CrawlEngine(
       sc.setJobDescription(prev)
       if (trace) println(f"[trace] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
-  }
-
-  // ---------------------------------------------------------------------
-  // Gate terms (SURVEY §2.B)
-  // ---------------------------------------------------------------------
-
-  /** B2/B3 — whitelist/blacklist as codegen'd column predicates. Non-regex semantics:
-    * EXACT string match (`lib.rs:433-449` — `Vec<CompactString>::contains`);
-    * `listsAreRegex` switches to the reference's `regex` feature build
-    * (RegexSet::is_match — unanchored search, `lib.rs:433-440`).
-    */
-  private def listsGate(df: Dataset[FrontierEntry]): Dataset[FrontierEntry] = {
-    val wl = config.whitelist
-    val bl = config.blacklist
-    if (wl.isEmpty && bl.isEmpty) return df
-    def matches(patterns: Seq[String]): org.apache.spark.sql.Column =
-      if (config.listsAreRegex) patterns.map(p => col("url").rlike(p)).reduce(_ || _)
-      else col("url").isInCollection(patterns)
-    var cond: org.apache.spark.sql.Column = lit(true)
-    if (wl.nonEmpty) cond = cond && matches(wl)
-    if (bl.nonEmpty) cond = cond && !matches(bl)
-    df.filter(cond)
-  }
-
-  /** B4 — robots gate as a codegen expression
-    * (`is_allowed_robots` `website.rs:1992-2006`).
-    */
-  private def robotsGate(df: Dataset[FrontierEntry]): Dataset[FrontierEntry] = {
-    if (!config.respectRobotsTxt) return df
-    df.filter(enginefns.robots_can_fetch(col("host"), col("url"), robots, config.userAgent))
-  }
-
-  /** B6 — depth gate: URL path depth vs depth_distance
-    * (`is_over_depth` `website.rs:2124-2126`; distance derivation
-    * `determine_limits` `website.rs:14076-14089`: max(depth, seed segments)).
-    */
-  private def depthGate(df: Dataset[FrontierEntry], depthDistance: Int): Dataset[FrontierEntry] = {
-    if (config.depth <= 0) return df
-    import graft.url.urlfns._
-    df.filter(path_depth(col("url")) <= lit(depthDistance)).as[FrontierEntry]
   }
 
   // ---------------------------------------------------------------------
@@ -248,7 +213,7 @@ class CrawlEngine(
 
   /** A8 — `scrape()` = crawl + materialized pages (`website.rs:7326-7378`). */
   def scrape(seedUrls: Seq[String]): Array[graft.model.PageRow] =
-    crawl(seedUrls).pages.as[graft.model.PageRow].collect()
+    crawl(seedUrls).pages.as(Encoders.product[graft.model.PageRow]).collect()
 
   /** A6 — crawl with the sitemap CHAINED AFTER it (reference `crawl()` =
     * `crawl_concurrent` then `sitemap_crawl_chain`, `website.rs:6974-6976`;
@@ -294,11 +259,11 @@ class CrawlEngine(
   private def smallFits(rows: Long): Boolean =
     config.smallEpochThreshold > 0 && rows <= config.smallEpochThreshold
 
-  private def noRows: DataFrame = spark.emptyDataset[FrontierEntry].toDF()
+  private def noRows: DataFrame = CrawlEngine.localFrame(spark, Nil, frontierSchema)
 
   private def frontierFrame(v: Seq[FrontierEntry]): DataFrame =
     CrawlEngine.localFrame(spark, v.map(e => Row(e.url, e.host, e.depth, e.discovery_seq,
-      e.priority, e.attempt, e.not_before)), Checkpointer.schemas("frontier"))
+      e.priority, e.attempt, e.not_before)), frontierSchema)
 
   def crawl(seedUrls0: Seq[String], resumeFrom: Option[Checkpointer] = None,
       sitemapChain: Boolean = false, sitemapOnly: Boolean = false): CrawlResult = {
@@ -381,13 +346,16 @@ class CrawlEngine(
     private val hosts = Sequential.HostState(lruMap[Sequential.Host]())
 
     private val metrics = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
+    // the series of the snapshot this call resumed from: its commits write
+    // it ahead of this call's own
+    private var restoredMetrics = Seq.empty[EpochMetrics]
     private val gate = new Sequential.Gate(config, robots)
     // fetch through the seam: driver-local when the fetcher offers it
     // (identical per-row semantics by the Fetcher contract), else one job
     private val step = new Sequential.Step(config, robots, gate, start.depthDistance, retry, sitemapChain,
       onShouldCrawl, onLinkFind, seen, sigs,
       es => fetcher.fetchLocal(es)
-        .getOrElse(fetcher.fetch(spark, spark.createDataset(es)).collect().toSeq),
+        .getOrElse(fetcher.fetch(spark, spark.createDataset(es)(CrawlEngine.frontierEncoder)).collect().toSeq),
       hosts)
 
     /** The loop state at the start of epoch `state.epoch`: a snapshot's, or
@@ -459,7 +427,7 @@ class CrawlEngine(
           hosts.byHost.iterator.map { case (h, x) =>
             Row(h, x.tokensMilli, x.throttleMs, x.latencyEma.getOrElse(null)) }.toSeq,
           Checkpointer.schemas("host_tokens")),
-        pages.delta, l.seqCounter, l.wildcardRemaining, l.pathBudget, l.scope, metrics.toSeq,
+        pages.delta, l.seqCounter, l.wildcardRemaining, l.pathBudget, l.scope, restoredMetrics ++ metrics,
         l.chainStarted, l.chainSitemaps.toSeq.sorted, l.discoveredSitemaps.values.toSeq)
       pages.committedTo(ck, s.epoch - 1)
     }
@@ -476,6 +444,7 @@ class CrawlEngine(
       if (e < 0) return None
       val m = ck.readManifest(e)
       val rowsOf = Checkpointer.lineageRows(m)
+      restoredMetrics = Checkpointer.metrics(m)
       // same path rule as a fresh start: a small frontier comes back to the
       // driver, and with it the mirrors and the bloom when the seen set fits
       // them
@@ -603,80 +572,104 @@ class CrawlEngine(
       */
     def distributedEpoch(candCount: Long, epochT0: Long): Unit = {
       val caches: Caches = scala.collection.mutable.ListBuffer.empty
-      // hand-off: a frontier the driver holds becomes a driver-held table
-      // (no job); the mirrors drop for the rest of the call
-      val frontier = state.frontier match {
-        case Frontier.Local(v) => seen.dropMirror(); distributed(v)
-        case d: Frontier.Distributed => d
-      }
-      val ready = if (holdsPossible) frontier.table.filter(col("not_before") <= lit(epoch)) else frontier.table
-      val deferredHold = if (holdsPossible) frontier.table.filter(col("not_before") > lit(epoch)) else noRows
-      val (gated, robotsBlockedCount) = gateStage(ready)
-      val (polAdmitted, deferred) = if (politenessPossible) politeness(gated, caches) else (gated, noRows)
-      val (admitted, budgetLeftover, budgetedLedger) = budget(polAdmitted, state.ledger, caches)
-      val (admittedDs, parsed, admittedCount, widths, fetchedLedger) =
-        fetch(admitted, candCount, budgetedLedger, caches)
+      val prev = state.frontier
+      // hand-off: the mirrors drop for the rest of the call
+      if (prev.isInstanceOf[Frontier.Local]) seen.dropMirror()
+      val deferredHold = if (holdsPossible) tableOf(prev).filter(col("not_before") > lit(epoch)) else noRows
+      val (gated, robotsBlockedCount) = gateStage(prev)
+      // politeness and the budget rank a view of the gated rows
+      val gatedView = GraftSqlBridge.internalCreateDataFrame(spark, gated, frontierSchema)
+      val (polAdmitted, deferred) = if (politenessPossible) politeness(gatedView, caches) else (gatedView, noRows)
+      val (admittedDf, budgetLeftover, budgetedLedger) = budget(polAdmitted, state.ledger, caches)
+      // the admitted set, persisted: the fetch exchange and the seen delta
+      // read it
+      val admitted = (if (admittedDf eq gatedView) gated
+        else GraftSqlBridge.internalRdd(admittedDf).map(_.copy())).persist(StorageLevel.MEMORY_AND_DISK)
+      val f = fetch(admitted, candCount, budgetedLedger)
       // 8. C7 retry ladder (pluggable RetryPolicy; default = the
       //    reference's 5xx/429/408 + capped exponential backoff ladder,
       //    `website.rs:8388-8392`): retryable statuses re-queue with
       //    backoff and are REMOVED from seen (`website.rs:8663-8666`)
       val isRetried = retry.isRetryable(col("status")) && col("attempt") < retry.maxAttempts
-      val retryDf = parsed.toDF().filter(isRetried)
+      val retryDf = f.parsed.toDF().filter(isRetried)
         .select(col("url"), col("host"), col("depth"), col("discovery_seq"),
           col("priority"), (col("attempt") + 1).as("attempt"),
           (lit(epoch) + retry.backoffEpochs(col("attempt"))).as("not_before"))
-      appendSeen(admittedDs, admittedCount, retryDf)
-      val (expanding, vetoedCount, expandedLedger) = expandingPages(parsed, fetchedLedger)
-      val (newLinkCount, newFrontier, newFrontierHeld, ledger) = links(expanding, expandedLedger, caches)
-      val next = roll(frontier.table, deferredHold.unionByName(deferred).unionByName(budgetLeftover)
+      appendSeen(admitted, f.admittedCount, retryDf)
+      val (expanding, vetoedCount, expandedLedger) = expandingPages(f.parsed, f.ledger)
+      val (newLinkCount, newFrontier, newFrontierHeld, ledger) =
+        links(expanding, f.unsignedPages, expandedLedger, caches)
+      val next = roll(prev, deferredHold.unionByName(deferred).unionByName(budgetLeftover)
         .unionByName(retryDf), newFrontier, newFrontierHeld, newLinkCount, caches)
       if (seen.appends >= math.max(2, config.stateCompactionEpochs)) compactStores()
-      metrics += EpochMetrics(epoch, candCount, admittedCount, admittedCount,
+      metrics += EpochMetrics(epoch, candCount, f.admittedCount, f.admittedCount,
         newLinkCount, next.size, seen.count, ledger.budgetStopped,
         (System.nanoTime() - epochT0) / 1000000L, robotsBlockedCount, vetoedCount)
-      val nextState = EpochState(epoch + 1, ledger, next, widths)
+      val nextState = EpochState(epoch + 1, ledger, next, f.saltWidths)
       timed("commit")(commitIfDue(nextState))
       endEpoch(nextState)
     }
 
-    /** Gate: the bloom, the seen probe, lists/robots/depth; returns the
-      * gated candidates and the robots-blocked count.
+    /** The frontier's rows, as UnsafeRows. A frontier the driver holds
+      * goes out as P slices of rows, not as a LocalRelation, so Catalyst
+      * evaluates nothing of the gate on the driver.
       */
-    private def gateStage(ready: DataFrame): (DataFrame, Long) = {
-      // 1. B1 visited: bloom fast-negative (codegen expression over the
-      //    broadcast filter group — no UDF on the hot path); the
-      //    maybe-seen residue shuffles to the seen store's partitions
-      //    where a per-partition exact set answers membership. The seen
-      //    side is scanned in place — never re-shuffled, never broadcast.
-      val withLower = ready.withColumn("url_lower", lower(col("url")))
-      val bloomGroup = timed("bloom_bcast")(new BloomGroup(spark.sparkContext.broadcast(seen.blooms)))
-      val mightContain = enginefns.bloom_might_contain(col("url_lower"), bloomGroup)
-      val lowerIdx = withLower.schema.fieldIndex("url_lower")
-      // co-partitioned exact probe, InternalRow through the shuffle:
-      // UnsafeRow.copy ships compact row bytes
-      val unseenMaybe = GraftSqlBridge.internalCreateDataFrame(spark,
-        seen.probe(GraftSqlBridge.internalRdd(withLower.filter(mightContain))
-          .map(r => (r.getUTF8String(lowerIdx).toString, r.copy())), keepPresent = false).values,
-        withLower.schema)
-      val unseen = withLower.filter(!mightContain).unionByName(unseenMaybe)
+    private def frontierRows(f: Frontier): RDD[InternalRow] = f match {
+      case Frontier.Local(v) => spark.sparkContext.parallelize(v, P).mapPartitions(CrawlEngine.entryRows)
+      case Frontier.Distributed(t, _) => GraftSqlBridge.internalRdd(t).map(_.copy())
+    }
+
+    /** Gate: the bloom and the seen probe, then lists, robots and depth as
+      * row predicates (`Sequential.Gate`, `UrlOps.pathDepth`), all inside
+      * tasks; returns the gated rows and the robots-blocked count.
+      */
+    private def gateStage(frontier: Frontier): (RDD[InternalRow], Long) = {
+      val ep = epoch
+      val rows = frontierRows(frontier)
+      val ready = if (holdsPossible) rows.filter(_.getLong(6) <= ep) else rows
+      // 1. B1 visited: bloom fast-negative over the broadcast filter
+      //    group; only its positives shuffle to the seen store's
+      //    partitions, where a per-partition exact set answers membership,
+      //    and the survivors come back partition-wise beside the
+      //    negatives. The seen side is scanned in place — never
+      //    re-shuffled, never broadcast.
+      val blooms = timed("bloom_bcast")(new BloomGroup(spark.sparkContext.broadcast(seen.blooms)))
+      val maybeSeen = seen.probe(ready.flatMap { r =>
+        val k = r.getUTF8String(0).toLowerCase
+        if (BloomGate.mightContain(blooms, k)) Iterator.single((k.toString, r)) else Iterator.empty
+      }, keepPresent = false).values
+      val unseen = CrawlEngine.zipAligned(
+        ready.filter(r => !BloomGate.mightContain(blooms, r.getUTF8String(0).toLowerCase)), maybeSeen)
       // 2. B8 batch dedup (case-insensitive keep canonical-min, the
       //    frontier HashSet semantics `website.rs:7810`) is STRUCTURAL:
       //    the frontier is unique by lower(url) by construction (seeds
       //    ci-deduped, link agg keyed by lower(url), carryover union
       //    window), so no per-epoch dedup window runs here.
-      // 3. stateless gates: lists, robots, depth. The robots-blocked side
-      // output (reference on_robots_blocked) is opt-in here: the blocked
-      // complement re-executes the lazy gate prefix once more, writing
-      // its rows as a parquet delta (never a driver collect — blocked
-      // URLs are data-scale on a robots-heavy crawl), counted on the write
-      val listsPass = listsGate(unseen.drop("url_lower").as[FrontierEntry])
+      // 3. stateless gates: lists, robots, depth, the predicates the
+      //    sequential step runs. The robots-blocked side output (reference
+      //    on_robots_blocked) is opt-in here: the blocked complement
+      //    re-executes the lazy gate prefix once more, writing its rows as
+      //    a parquet delta (never a driver collect — blocked URLs are
+      //    data-scale on a robots-heavy crawl), counted on the write
+      val g = gate
+      val listsPass =
+        if (config.whitelist.isEmpty && config.blacklist.isEmpty) unseen
+        else unseen.filter(r => g.lists(r.getUTF8String(0).toString))
+      val robotsOn = config.respectRobotsTxt
+      val allowed: InternalRow => Boolean =
+        r => g.robotsAllow(r.getUTF8String(1).toString, r.getUTF8String(0).toString)
       val robotsBlockedCount =
-        if (config.trackBlocked && config.respectRobotsTxt)
-          blocked.writeCounted(listsPass
-            .filter(!enginefns.robots_can_fetch(col("host"), col("url"), robots, config.userAgent))
-            .select(col("url"), lit("robots").as("reason"), lit(epoch).as("epoch")), "robots")
-        else 0L
-      (depthGate(robotsGate(listsPass), start.depthDistance).toDF(), robotsBlockedCount)
+        if (config.trackBlocked && robotsOn) {
+          val reason = UTF8String.fromString("robots")
+          blocked.writeCounted(GraftSqlBridge.internalCreateDataFrame(spark, listsPass.filter(r => !allowed(r))
+            .map(r => new GenericInternalRow(Array[Any](r.getUTF8String(0), reason, ep))),
+            CrawlEngine.blockedSchema), "robots")
+        } else 0L
+      val depthOn = config.depth > 0
+      val dd = start.depthDistance
+      (if (!robotsOn && !depthOn) listsPass
+       else listsPass.filter(r => (!robotsOn || allowed(r)) &&
+         (!depthOn || UrlOps.pathDepth(r.getUTF8String(0).toString) <= dd)), robotsBlockedCount)
     }
 
     /** 4. B9 politeness FIRST: per-host token-bucket quota, highest
@@ -860,136 +853,124 @@ class CrawlEngine(
       (admitted, budgetLeftover, ledger)
     }
 
-    /** Fetch: the admitted set persisted, fetched and parsed into a page
-      * delta; the ride-along admit stats drained; the throttle fed.
+    /** Fetch: the admitted rows through the fetch exchange, fetched and
+      * parsed into a page delta in ONE job; the ride-along admit stats
+      * drained; the throttle fed.
       */
-    private def fetch(admitted: DataFrame, candCount: Long, ledger: Sequential.Ledger, caches: Caches)
-        : (Dataset[FrontierEntry], Dataset[ParsedPage], Long, Map[String, Int], Sequential.Ledger) = {
+    private def fetch(admitted: RDD[InternalRow], candCount: Long,
+        ledger: Sequential.Ledger): CrawlEngine.Fetched = {
       // 6. mark admitted as seen (insert at admission, `insert_link`
-      //    `website.rs:1718-1749`). The persisted admitted set doubles as
-      //    the seen-delta backing store; the bloom/count/hot-host stats
-      //    ride the fetch job's own scan (withAdmitStats) — no dedicated
-      //    job at all.
-      val admittedDs = admitted.as[FrontierEntry]
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      //    `website.rs:1718-1749`): the bloom/count/hot-host stats ride the
+      //    fetch exchange's map side (admitStats) — no dedicated job at
+      //    all. Bloom sizing uses the candidate-count upper bound so shards
+      //    stay merge-compatible without a pre-count.
       val admitAcc = spark.sparkContext.collectionAccumulator[CrawlEngine.AdmitStat]("graft.admitStats")
-      // 7+9. fetch + parse — priority-queue emission (repartition by host,
-      //    secondary sort desc priority/depth/seq/url, north rule D5) then
-      //    one-pass span parse, PIPELINED in a single stage and
-      //    materialized once. (Epoch 0 splits the stage because the C6
+      val bloomSize = math.max(1024L, candCount)
+      val withStats = admitted.mapPartitions(it => CrawlEngine.admitStats(it, bloomSize, admitAcc))
+      // 7+9. fetch + parse — priority-queue emission (north rule D5): an
+      //    RDD exchange on the (host, salt) partitioner, each reduce task
+      //    sorted by (__rr, priority desc, depth, discovery_seq, url), then
+      //    the one-pass span parse, PIPELINED in the reduce task and
+      //    written once. The plan the Fetcher gets has no exchange, so the
+      //    page-delta write is one job. (Epoch 0 splits it because the C6
       //    scope re-anchor must read the seed fetch result before link
       //    extraction — `modify_selectors` `page.rs:4736-4747`.)
-      // host-hash partitioning WITH salt (north rule D4): a hot host that
-      // dominates the frontier would otherwise pin one task; the salt
-      // width scales with the host's admitted share (see withAdmitStats) —
-      // cold hosts keep a 16-way spread (affinity), hot hosts fan out
-      // toward 4P.
+      // The salt (north rule D4): a hot host that dominates the frontier
+      // would otherwise pin one task; the salt width scales with the host's
+      // admitted share (see admitStats) — cold hosts keep a 16-way spread
+      // (affinity), hot hosts fan out toward 4P.
       // Politeness quotas were already enforced upstream, so fetch order
-      // within a salt shard is pure priority emission — unless
-      // `roundRobin` (D5, reference `UrlFrontier::pop` frontier.rs:78-121):
-      // then hosts interleave (every host's k-th URL precedes any host's
-      // (k+1)-th within a shard).
-      val (fetchReady, statsParts) = timed("fetch_plan") {
-        val base =
-          if (config.roundRobin) {
+      // within a partition is pure priority emission — unless `roundRobin`
+      // (D5, reference `UrlFrontier::pop` frontier.rs:78-121): then hosts
+      // interleave (every host's k-th URL precedes any host's (k+1)-th
+      // within a partition), by a per-host rank `__rr`.
+      val toFetch = timed("fetch_plan") {
+        val (keys, rrIdx) =
+          if (!config.roundRobin) (withStats, -1)
+          else {
             val rrW = Window.partitionBy(col("host"))
               .orderBy(col("priority").desc, col("depth"), col("discovery_seq"), col("url"))
-            admittedDs.withColumn("__rr", row_number().over(rrW))
-          } else admittedDs.toDF().withColumn("__rr", lit(0))
-        val saltWidth: org.apache.spark.sql.Column =
-          if (state.saltWidths.isEmpty) lit(16L)
-          else state.saltWidths.foldLeft(`when`(lit(false), lit(16L))) {
-            case (acc, (h, w)) => acc.when(col("host") === lit(h), lit(w.toLong))
-          }.otherwise(lit(16L))
-        val (withStats, parts) = withAdmitStats(base, candCount, admitAcc)
-        (withStats
-          .repartition(math.max(1, P), col("host"), pmod(xxhash64(col("url")), saltWidth))
-          .sortWithinPartitions(col("__rr"), col("priority").desc, col("depth"),
-            col("discovery_seq"), col("url"))
-          .drop("__rr")
-          .as[FrontierEntry], parts)
+            (GraftSqlBridge.internalRdd(GraftSqlBridge.internalCreateDataFrame(spark, withStats, frontierSchema)
+              .withColumn("__rr", row_number().over(rrW))).map(_.copy()), frontierSchema.size)
+          }
+        val sorted = new ShuffledRDD[InternalRow, Null, Null](keys.map(r => (r, null)),
+            new CrawlEngine.HostSaltPartitioner(P, state.saltWidths))
+          .setKeyOrdering(new CrawlEngine.FetchOrder(rrIdx)).keys
+        GraftSqlBridge.internalCreateDataFrame(spark,
+          if (rrIdx < 0) sorted else sorted.mapPartitions(CrawlEngine.unsafeRows), frontierSchema)
+          .as(CrawlEngine.frontierEncoder)
       }
       // Pages SINK to parquet per epoch (A7, north rule: parsed documents
       // land in tables, never in executor memory): every downstream
       // consumer (retry filter, signature dedup, link explode, pages view)
-      // is a COLUMN-PRUNED scan of the delta file.
+      // is a COLUMN-PRUNED scan of the delta file. The write counts the
+      // status-200 pages without a signature on the side.
       val ep = epoch
       val lrw = onLinkFind.orNull
+      val unsigned = Observation("unsigned_pages")
       val (parsedDir, scope) = timed("fetch_parse") {
         val (fetched, scope) =
-          if (ep != 0L) (fetcher.fetch(spark, fetchReady), ledger.scope)
+          if (ep != 0L) (fetcher.fetch(spark, toFetch), ledger.scope)
           else {
-            val seedPages = fetcher.fetch(spark, fetchReady).localCheckpoint(true) // seeds: tiny
-            caches += (() => CrawlEngine.releaseCheckpoint(seedPages.toDF()))
+            val seedPages = fetcher.fetch(spark, toFetch).localCheckpoint(true) // seeds: tiny
             val ph = ledger.scope.parentHost
             // canonical-min winner — identical on the distributed path, the
             // fast path, and the oracle (partition order would not be)
             val redirHosts = seedPages
               .filter(f => f.f_status == 200 && UrlOps.host(f.f_final_url) != ph)
               .orderBy(col("depth"), col("discovery_seq"), col("host"), col("url"))
-              .map(_.f_final_url).take(1)
+              .map(_.f_final_url)(Encoders.STRING).take(1)
             (seedPages, redirHosts.headOption
               .fold(ledger.scope)(u => ledger.scope.copy(redirectHost = UrlOps.host(u))))
           }
-        (pages.write(fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, scope, ep, lrw)))
-          .toDF(), s"epoch=$ep"), scope)
+        val parsed = fetched.mapPartitions(it => it.map(f => CrawlEngine.parsePage(f, scope, ep, lrw)))(
+          CrawlEngine.parsedEncoder)
+        val dir = pages.write(parsed.toDF().observe(unsigned,
+          count(when(col("status") === 200 && col("signature") === 0L, 1)).as("n")), s"epoch=$ep")
+        if (ep == 0L) CrawlEngine.releaseCheckpoint(fetched.toDF())
+        (dir, scope)
       }
-      val parsed: Dataset[ParsedPage] = timed("parsed_read")(
-        spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedDir).as[ParsedPage])
+      val parsed = timed("parsed_read")(
+        spark.read.schema(CrawlEngine.parsedSchema).parquet(parsedDir).as(CrawlEngine.parsedEncoder))
       // the fetch job has materialized — collect the ride-along stats
       // (delta count, bloom shards, next epoch's hot-host salt widths)
-      val (admittedCount, saltWidths) =
-        timed("admit_drain")(drainAdmitStats(admitAcc, statsParts, admittedDs, candCount))
+      val (admittedCount, saltWidths) = timed("admit_drain")(drainAdmitStats(admitAcc, admitted, bloomSize))
       if (politenessPossible) timed("throttle")(throttle(parsed))
-      (admittedDs, parsed, admittedCount, saltWidths, ledger.copy(scope = scope))
+      CrawlEngine.Fetched(parsed, admittedCount, saltWidths, unsigned.get("n").asInstanceOf[Long],
+        ledger.copy(scope = scope))
     }
 
-    // Fused admit statistics: the fetch exchange's OWN map-side scan feeds
-    // a per-task (count, bloom shard, locally-hot hosts) accumulator entry
-    // — no dedicated scan of the admitted set. Tasks may re-execute
-    // (speculation, AQE): entries carry their partition id and the driver
-    // keeps ONE per partition. Bloom sizing uses the candidate-count upper
-    // bound so shards stay merge-compatible without a pre-count; keys are
-    // UTF8String lowercase — bit-identical to the probe side's `lower()`.
+    // The admit stats ride the fetch exchange's map side: each map task
+    // adds one (count, bloom shard, locally-hot hosts) accumulator entry.
+    // Tasks may re-execute (speculation, retries): entries carry their
+    // partition id and the driver keeps ONE per partition; fewer partitions
+    // than the admitted set has DETECTS a Fetcher that broke the
+    // full-consumption contract (Fetcher trait doc). Keys are the
+    // UTF8String lowercase — bit-identical to the gate's probe key.
     // D4 skew: a host holding share s of the epoch's admitted rows gets a
     // salt width ~4sP for the NEXT epoch (min 16 keeps cold-host affinity);
     // hosts are reported only when locally hot (>= 1/8 of the partition),
-    // so the map stays tiny at any host cardinality. Also returns the
-    // stage's partition count, against which drainAdmitStats DETECTS a
-    // Fetcher that broke the full-consumption contract (Fetcher trait doc).
-    private def withAdmitStats(df: DataFrame, expectedUpper: Long,
-        acc: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat]): (DataFrame, Int) = {
-      val size = math.max(1024L, expectedUpper)
-      val urlIdx = df.schema.fieldIndex("url")
-      val hostIdx = df.schema.fieldIndex("host")
-      // same lazy toRdd the mapInternal below wraps — no extra planning
-      val parts = GraftSqlBridge.internalRdd(df).getNumPartitions
-      (GraftSqlBridge.mapInternal(df, df.schema) { (_, it) =>
-        CrawlEngine.admitStats(it, size, urlIdx, hostIdx, acc)
-      }, parts)
-    }
-
+    // so the map stays tiny at any host cardinality.
     private def drainAdmitStats(acc: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat],
-        statsParts: Int, admittedDs: Dataset[FrontierEntry], expectedUpper: Long): (Long, Map[String, Int]) = {
+        admitted: RDD[InternalRow], bloomSize: Long): (Long, Map[String, Int]) = {
       import scala.jdk.CollectionConverters._
       def uniq(a: org.apache.spark.util.CollectionAccumulator[CrawlEngine.AdmitStat]) = {
         val pids = new java.util.HashSet[Int]()
         a.value.asScala.filter(e => pids.add(e._1)).toVector
       }
       var uniqParts = uniq(acc)
-      if (uniqParts.size < statsParts) {
-        // Fetcher contract violation (the fetch never fully executed the
-        // admitted scan — sampled, limited, or served from a detached
-        // plan): the ride-along stats are incomplete, and a missing bloom
-        // shard would silently re-admit already-seen URLs next epoch.
-        // Self-heal with a dedicated scan of the PERSISTED admitted set
-        // (one extra job, only on violating epochs) and use its
-        // shards/counts exclusively.
-        log.warn(s"epoch $epoch: admit stats incomplete (${uniqParts.size}/$statsParts partitions " +
-          "reported) — the Fetcher did not fully consume the admitted set; rebuilding " +
+      if (uniqParts.size < admitted.getNumPartitions) {
+        // Fetcher contract violation (the fetch never ran the exchange's
+        // map side — served from a detached plan): the ride-along stats
+        // are incomplete, and a missing bloom shard would silently
+        // re-admit already-seen URLs next epoch. Self-heal with a
+        // dedicated scan of the PERSISTED admitted set (one extra job, only
+        // on violating epochs) and use its shards/counts exclusively.
+        log.warn(s"epoch $epoch: admit stats incomplete (${uniqParts.size}/${admitted.getNumPartitions} " +
+          "partitions reported) — the Fetcher did not fully consume the admitted set; rebuilding " +
           "bloom/count/salt stats with a dedicated scan")
         val rebuilt = spark.sparkContext.collectionAccumulator[CrawlEngine.AdmitStat]("graft.admitStats")
-        GraftSqlBridge.internalRdd(withAdmitStats(admittedDs.toDF(), expectedUpper, rebuilt)._1).count()
+        admitted.mapPartitions(it => CrawlEngine.admitStats(it, bloomSize, rebuilt)).count()
         uniqParts = uniq(rebuilt)
       }
       seen.addBloom(uniqParts.iterator.map(_._3).filter(_ != null).toVector)
@@ -1048,27 +1029,26 @@ class CrawlEngine(
       * once (shuffle files reused by every later probe), union is
       * partitioner-aware (no data movement of the base).
       */
-    private def appendSeen(admittedDs: Dataset[FrontierEntry], admittedCount: Long,
-        retryDf: DataFrame): Unit = {
-      val newSeen = admittedDs.select(lower(col("url")).as("url_lower"), col("url"))
-      val (delta, release) = (
-        if (retry.maxAttempts > 0) {
-          val seenDeltaCk = timed("seen_ckpt")(newSeen.join(
-            retryDf.select(lower(col("url")).as("url_lower")), Seq("url_lower"), "left_anti")
-            .localCheckpoint(true))
-          seen.count += timed("seen_ckpt")(seenDeltaCk.count())
-          // every consumer of the admitted cache (bloom, fetch, seen delta)
-          // has materialized — release it NOW (leaving one cached plan per
-          // epoch alive OOMs the driver on multi-hundred-epoch crawls)
-          admittedDs.unpersist(false)
-          (seenDeltaCk.rdd, () => CrawlEngine.releaseCheckpoint(seenDeltaCk))
-        } else {
-          // with retries disabled, nothing is ever removed from seen: a
-          // lazy delta over the persisted admitted set — zero extra jobs
-          seen.count += admittedCount
-          (timed("seen_reroot")(newSeen.rdd), () => admittedDs.unpersist(false))
-        }): (org.apache.spark.rdd.RDD[Row], () => Unit)
-      seen.append(delta.map(r => (r.getString(0), r.getString(1))), Some(release))
+    private def appendSeen(admitted: RDD[InternalRow], admittedCount: Long, retryDf: DataFrame): Unit = {
+      val newSeen = admitted.map { r => val u = r.getUTF8String(0); (u.toLowerCase.toString, u.toString) }
+      if (retry.maxAttempts > 0) {
+        // the retried URLs leave the delta: on the store's partitioner,
+        // checkpointed and counted in one job
+        val retried = GraftSqlBridge.internalRdd(retryDf.select(col("url")))
+          .map(r => (r.getUTF8String(0).toLowerCase.toString, ()))
+        val delta = newSeen.subtractByKey(retried, partitioner).localCheckpoint()
+        seen.count += timed("seen_ckpt")(delta.count())
+        // every consumer of the admitted set (fetch exchange, seen delta)
+        // has materialized — release it NOW (leaving one cached set per
+        // epoch alive OOMs the driver on multi-hundred-epoch crawls)
+        admitted.unpersist(false)
+        seen.append(delta, Some(() => delta.unpersist(false)))
+      } else {
+        // with retries disabled, nothing is ever removed from seen: a
+        // lazy delta over the persisted admitted set — zero extra jobs
+        seen.count += admittedCount
+        seen.append(newSeen, Some(() => admitted.unpersist(false)))
+      }
     }
 
     /** 10. Which pages expand their links: vetoed pages never (B11); in the
@@ -1101,7 +1081,7 @@ class CrawlEngine(
           .select(explode(col("sitemap_links")).as("__u"))
           .groupBy(lower(col("__u")).as("__k")).agg(min(col("__u")).as("__u"))
           .orderBy(col("__u")).limit(CrawlEngine.maxDiscoveredSitemaps)
-          .select(col("__u")).as[String].collect()
+          .select(col("__u")).collect().map(_.getString(0))
         ledger = ledger.copy(discoveredSitemaps = CrawlEngine.accumulateDiscoveredSitemaps(
           ledger.discoveredSitemaps, ads.toSeq))
       }
@@ -1116,7 +1096,7 @@ class CrawlEngine(
         // not the veto-filtered stream — mirroring the oracle.
         val isSm = lower(col("url")).isInCollection(ledger.chainSitemaps.toSeq)
         val nested = parsed.toDF().filter(isSm)
-          .select(explode(col("sitemap_links")).as("u")).as[String].collect()
+          .select(explode(col("sitemap_links")).as("u")).collect().map(_.getString(0))
         expanding = parsed.toDF().filter(isSm)
           .withColumn("links", concat(col("links"), col("sitemap_links")))
         ledger = ledger.copy(chainSitemaps = ledger.chainSitemaps ++ nested.map(UrlOps.lowerUtf8))
@@ -1142,7 +1122,7 @@ class CrawlEngine(
       * (a driver-held frontier table) when they fit the threshold, else
       * range-sorted.
       */
-    private def links(expanding: DataFrame, ledger: Sequential.Ledger,
+    private def links(expanding: DataFrame, unsignedPages: Long, ledger: Sequential.Ledger,
         caches: Caches): (Long, DataFrame, Boolean, Sequential.Ledger) = {
       val dedupSigs = !ledger.chainStarted && config.normalize
       // (signature or 0, depth, discovery_seq, host, url, links) of every
@@ -1161,7 +1141,11 @@ class CrawlEngine(
         val delta = winners.mapPartitions(_.map(kv => (kv._1, true)), preservesPartitioning = true)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         sigs.append(delta, Some(() => delta.unpersist(false)))
-        (pageRows.filter(_.getLong(0) == 0L).union(winners.values), Some(delta))
+        // pages without a signature expand too: a second scan of the page
+        // delta, skipped when its write counted none; the union is read in
+        // P tasks
+        (if (unsignedPages == 0) winners.values
+         else pageRows.filter(_.getLong(0) == 0L).union(winners.values).coalesce(P), Some(delta))
       }
       val survivors = seen.probe(expandingRows.flatMap(CrawlEngine.linkRefs)
         .reduceByKey(partitioner, CrawlEngine.minLink _), keepPresent = false).values
@@ -1206,7 +1190,7 @@ class CrawlEngine(
       * unique): no dedup, no count job, and no job at all when the driver
       * holds it. Returns the frontier's size.
       */
-    private def roll(prev: DataFrame, carried: DataFrame, newFrontier: DataFrame, newFrontierHeld: Boolean,
+    private def roll(prev: Frontier, carried: DataFrame, newFrontier: DataFrame, newFrontierHeld: Boolean,
         newLinkCount: Long, caches: Caches): Frontier.Distributed = {
       val next =
         if (carryover)
@@ -1215,7 +1199,10 @@ class CrawlEngine(
         else if (newFrontierHeld) newFrontier
         else timed("frontier_ckpt")(newFrontier.localCheckpoint(true))
       // the frontier has materialized: nothing reads this epoch's caches
-      CrawlEngine.releaseCheckpoint(prev)
+      prev match {
+        case Frontier.Distributed(t, _) => CrawlEngine.releaseCheckpoint(t)
+        case _: Frontier.Local =>
+      }
       caches.foreach(_())
       Frontier.Distributed(next, if (carryover) histOf(epoch, next) else Map(0L -> newLinkCount))
     }
@@ -1277,6 +1264,13 @@ object CrawlEngine {
     */
   private[engine] final case class EpochState(epoch: Long, ledger: Sequential.Ledger,
       frontier: Frontier, saltWidths: Map[String, Int])
+
+  /** What a distributed epoch's fetch stage hands on: the parsed page
+    * delta, the admitted count, the next epoch's hot-host salt widths, the
+    * count of written status-200 pages without a signature, and the ledger.
+    */
+  private[engine] final case class Fetched(parsed: Dataset[ParsedPage], admittedCount: Long,
+      saltWidths: Map[String, Int], unsignedPages: Long, ledger: Sequential.Ledger)
 
   /** Cap on the driver-side seen/signature mirrors of the small-epoch fast
     * path; past it the mirrors drop and the gate falls back to tiny probe
@@ -1386,11 +1380,76 @@ object CrawlEngine {
       UTF8String.fromString(url), UTF8String.fromString(UrlOps.host(url)), depth, seq,
       UrlOps.scoreUrl(url, depth), 0, 0L))
 
+  /** The encoders of the distributed epoch's typed frames, built once per
+    * JVM, on first use: deriving one walks the case class by reflection.
+    */
+  private[engine] lazy val frontierEncoder: Encoder[FrontierEntry] = Encoders.product[FrontierEntry]
+  private[engine] lazy val fetchResultEncoder: Encoder[FetchResult] = Encoders.product[FetchResult]
+  private[engine] val parsedEncoder: Encoder[ParsedPage] = Encoders.product[ParsedPage]
+
+  /** The frontier table's columns, in [[FrontierEntry]] order. */
+  private[engine] val frontierSchema: StructType = Checkpointer.schemas("frontier")
+
   /** Static ParsedPage schema — handed to every delta read so no per-epoch
     * footer-inference job runs.
     */
-  val parsedSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[ParsedPage].schema
+  val parsedSchema: StructType = parsedEncoder.schema
+
+  /** Frontier entries as frontier-table UnsafeRows, one copy each. */
+  private[engine] def entryRows(it: Iterator[FrontierEntry]): Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(frontierSchema)
+    it.map(e => proj(new GenericInternalRow(Array[Any](UTF8String.fromString(e.url),
+      UTF8String.fromString(e.host), e.depth, e.discovery_seq, e.priority, e.attempt, e.not_before))).copy())
+  }
+
+  /** Rows whose leading columns are the frontier table's, as frontier
+    * UnsafeRows (the round-robin rank dropped), one copy each.
+    */
+  private[engine] def unsafeRows(it: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(frontierSchema)
+    it.map(r => proj(r).copy())
+  }
+
+  /** `a`'s and `b`'s partitions side by side, partition i of the result
+    * holding both partition i's; the one with more partitions is first
+    * coalesced (narrow) to the other's count.
+    */
+  private[engine] def zipAligned(a: RDD[InternalRow], b: RDD[InternalRow]): RDD[InternalRow] = {
+    val n = math.min(a.getNumPartitions, b.getNumPartitions)
+    def to(r: RDD[InternalRow]) = if (r.getNumPartitions > n) r.coalesce(n) else r
+    to(a).zipPartitions(to(b))(_ ++ _)
+  }
+
+  /** The fetch exchange's partitioner over frontier rows: by host and a
+    * salt, the url's hash modulo the host's salt width (16 for a host
+    * without a hot-host width).
+    */
+  private[engine] final class HostSaltPartitioner(parts: Int, widths: Map[String, Int]) extends Partitioner {
+    def numPartitions: Int = parts
+    def getPartition(key: Any): Int = {
+      val r = key.asInstanceOf[InternalRow]
+      val host = r.getUTF8String(1)
+      val width = if (widths.isEmpty) 16 else widths.getOrElse(host.toString, 16)
+      val salt = Math.floorMod(r.getUTF8String(0).hashCode, width)
+      Math.floorMod(Murmur3_x86_32.hashInt(salt, host.hashCode), parts)
+    }
+  }
+
+  /** Fetch emission order of frontier rows within a fetch partition:
+    * (`__rr` at `rrIdx` when it is not -1, priority desc, depth,
+    * discovery_seq, url in UTF-8 byte order).
+    */
+  private[engine] final class FetchOrder(rrIdx: Int) extends Ordering[InternalRow] {
+    def compare(a: InternalRow, b: InternalRow): Int = {
+      var c = if (rrIdx < 0) 0 else Integer.compare(a.getInt(rrIdx), b.getInt(rrIdx))
+      if (c == 0) c = Integer.compare(b.getInt(4), a.getInt(4))
+      if (c == 0) c = Integer.compare(a.getInt(2), b.getInt(2))
+      if (c == 0) c = java.lang.Long.compare(a.getLong(3), b.getLong(3))
+      if (c == 0) c = a.getUTF8String(0).compareTo(b.getUTF8String(0))
+      c
+    }
+  }
+
 
   /** A driver-held table: its plan is a LocalRelation, which a snapshot
     * commit writes on the driver with no Spark job.
@@ -1440,10 +1499,10 @@ object CrawlEngine {
     hostCounts.asScala.filter { case (_, c) => c * 8 >= n && c >= 32 }.toArray
   }
 
-  /** The fetch scan's ride-along admit stats over InternalRows: rows pass
-    * through, and an exhausted partition adds its [[AdmitStat]] to `acc`.
+  /** The admit stats of frontier rows: rows pass through, and an exhausted
+    * partition adds its [[AdmitStat]] to `acc`.
     */
-  private[engine] def admitStats(it: Iterator[InternalRow], bloomSize: Long, urlIdx: Int, hostIdx: Int,
+  private[engine] def admitStats(it: Iterator[InternalRow], bloomSize: Long,
       acc: org.apache.spark.util.CollectionAccumulator[AdmitStat]): Iterator[InternalRow] = {
     val pid = org.apache.spark.TaskContext.getPartitionId()
     new Iterator[InternalRow] {
@@ -1467,8 +1526,8 @@ object CrawlEngine {
       override def next(): InternalRow = {
         val r = it.next()
         if (bloom == null) bloom = BloomFilter.create(bloomSize, 0.01)
-        bloom.putBinary(r.getUTF8String(urlIdx).toLowerCase.getBytes)
-        hostCounts.merge(r.getUTF8String(hostIdx).toString, 1L, (x, y) => x + y)
+        bloom.putBinary(r.getUTF8String(0).toLowerCase.getBytes)
+        hostCounts.merge(r.getUTF8String(1).toString, 1L, (x, y) => x + y)
         n += 1
         r
       }

@@ -72,10 +72,9 @@ trait Fetcher extends Serializable {
   */
 final class GenerativeFetcher(params: CorpusParams, redirectLimit: Int = 7) extends Fetcher {
   override def fetch(spark: SparkSession, admitted: Dataset[FrontierEntry]): Dataset[FetchResult] = {
-    import spark.implicits._
     val p = params
     val rl = redirectLimit
-    admitted.mapPartitions { it => it.map(GenerativeFetcher.fetchOne(p, rl, _)) }
+    admitted.mapPartitions(it => it.map(GenerativeFetcher.fetchOne(p, rl, _)))(CrawlEngine.fetchResultEncoder)
   }
 
   /** Same pure per-entry function, evaluated on the driver (small epochs). */

@@ -260,9 +260,10 @@ object Sequential {
 
   /** `is_allowed_default` (lists + robots), with regex lists compiled once
     * per crawl. Non-regex lists match the EXACT URL (`lib.rs:433-449`);
-    * `listsAreRegex` is an unanchored search (RegexSet::is_match).
+    * `listsAreRegex` is an unanchored search (RegexSet::is_match). The
+    * distributed gate runs the same predicates in its tasks.
     */
-  final class Gate(config: CrawlConfig, robots: RobotsProvider) {
+  final class Gate(config: CrawlConfig, robots: RobotsProvider) extends Serializable {
     private def matcher(patterns: Seq[String]): String => Boolean =
       if (config.listsAreRegex) {
         val rs = patterns.map(_.r)
@@ -272,8 +273,9 @@ object Sequential {
     private val black = matcher(config.blacklist)
     def lists(url: String): Boolean =
       (config.whitelist.isEmpty || white(url)) && (config.blacklist.isEmpty || !black(url))
-    def robotsAllow(e: FrontierEntry): Boolean =
-      !config.respectRobotsTxt || robots.policyFor(e.host).canFetch(config.userAgent, e.url)
+    def robotsAllow(host: String, url: String): Boolean =
+      !config.respectRobotsTxt || robots.policyFor(host).canFetch(config.userAgent, url)
+    def robotsAllow(e: FrontierEntry): Boolean = robotsAllow(e.host, e.url)
     def default(e: FrontierEntry): Boolean = lists(e.url) && robotsAllow(e)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -31,48 +31,12 @@ object BloomGate {
   }
 }
 
-/** `bloom_might_contain(url_lower)` — codegen'd fast-negative check against
-  * the broadcast epoch-bloom group (replaces the round-1 Scala UDF that
-  * broke whole-stage codegen on the B1 hot path).
-  */
-case class BloomMightContain(child: Expression, group: BloomGroup) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(s: Any): Any =
-    BloomGate.mightContain(group, s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomGroup", group, classOf[BloomGroup].getName)
-    defineCodeGen(ctx, ev, c => s"graft.engine.BloomGate.mightContain($ref, $c)")
-  }
-  override protected def withNewChildInternal(c: Expression): BloomMightContain = copy(child = c)
-}
-
 /** Executor-side robots helpers (the provider memoizes parsed policies per
   * JVM — see RobotsProvider.policyFor).
   */
 object RobotsOps {
-  def canFetch(prov: RobotsProvider, ua: String, host: UTF8String, url: UTF8String): Boolean =
-    prov.policyFor(host.toString).canFetch(ua, url.toString)
   def delayMs(prov: RobotsProvider, ua: String, host: UTF8String): Long =
     prov.politenessDelayMs(host.toString, ua)
-}
-
-/** `robots_can_fetch(host, url)` — B4 gate as a codegen expression
-  * (round 1 used a typed Dataset filter that deserialized every row).
-  */
-case class RobotsCanFetch(left: Expression, right: Expression,
-    prov: RobotsProvider, ua: String)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(host: Any, url: Any): Any =
-    RobotsOps.canFetch(prov, ua, host.asInstanceOf[UTF8String], url.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("robotsProv", prov, classOf[RobotsProvider].getName)
-    val u = ctx.addReferenceObj("robotsUa", ua, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, (h, l) => s"${ev.value} = graft.engine.RobotsOps.canFetch($p, $u, $h, $l);")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsCanFetch =
-    copy(left = l, right = r)
 }
 
 /** `robots_delay_ms(host)` — max(Crawl-delay, Request-rate) in ms for the
@@ -93,10 +57,6 @@ case class RobotsDelayMs(child: Expression, prov: RobotsProvider, ua: String)
 
 object enginefns {
   import GraftSqlBridge.{toColumn => column}
-  def bloom_might_contain(urlLower: Column, group: BloomGroup): Column =
-    column(BloomMightContain(GraftSqlBridge.toExpression(urlLower), group))
-  def robots_can_fetch(host: Column, url: Column, prov: RobotsProvider, ua: String): Column =
-    column(RobotsCanFetch(GraftSqlBridge.toExpression(host), GraftSqlBridge.toExpression(url), prov, ua))
   def robots_delay_ms(host: Column, prov: RobotsProvider, ua: String): Column =
     column(RobotsDelayMs(GraftSqlBridge.toExpression(host), prov, ua))
 }

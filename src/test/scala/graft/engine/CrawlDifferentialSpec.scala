@@ -528,9 +528,16 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     val distributed = er.metrics.dropWhile(_.candidates <= cfg.smallEpochThreshold)
     assert(distributed.nonEmpty && distributed.last.epoch == er.epochs - 1,
       s"the last epoch ran on the small path: ${er.metrics.map(_.candidates)}")
+    // an epoch whose links are all seen runs two jobs: the fetch (gate,
+    // fetch exchange and page-delta write) and the links; new links past
+    // the threshold add the range sort's two and the frontier checkpoint
+    assert(distributed.exists(_.new_links == 0), s"no distributed epoch without new links: $distributed")
     distributed.foreach { m =>
       val ran = perEpoch.getOrElse(m.epoch.toString, Nil)
-      assert(ran.size <= 6, s"distributed epoch ${m.epoch} ran ${ran.size} jobs: $ran")
+      val budget = if (m.new_links == 0) 2 else 5
+      assert(ran.size <= budget, s"distributed epoch ${m.epoch} ran ${ran.size} jobs: $ran")
+      assert(ran.count(_._2 == s"e${m.epoch}/fetch_parse") == 1,
+        s"distributed epoch ${m.epoch} ran other than one fetch_parse job: $ran")
       ran.foreach { case (site, desc) =>
         assert(desc.startsWith(s"e${m.epoch}/"), s"epoch ${m.epoch}: job at $site is labelled '$desc'")
       }
@@ -541,7 +548,9 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     // exchange the links job reads (the signature and link exchanges, the
     // store deltas behind the probes) has P reduce tasks, its last stage
     // (the link exchange's reduce and the seen probe) runs P tasks, and no
-    // stage of the epoch runs more than 2P
+    // stage of the epoch runs more than P: the gate's probe survivors zip
+    // back beside the bloom negatives, and the link exchange's map side
+    // reads the signature winners alone when no page lacks a signature
     val P = CrawlEngine.partitions(spark)
     val perStage = jobs.stages()
     distributed.foreach { m =>
@@ -551,7 +560,7 @@ class CrawlDifferentialSpec extends AnyFunSuite {
       links.foreach(s => assert(s.exchangeReads.forall(_ == P),
         s"epoch ${m.epoch}: links stage ${s.name} reads exchanges of ${s.exchangeReads} partitions, P = $P"))
       assert(links.last.tasks == P, s"epoch ${m.epoch}: the links job's last stage ran ${links.last.tasks} tasks")
-      stages.foreach(s => assert(s.tasks <= 2 * P,
+      stages.foreach(s => assert(s.tasks <= P,
         s"epoch ${m.epoch}: stage ${s.name} (${s.desc}) ran ${s.tasks} tasks, P = $P"))
     }
     val or = OracleCrawler.crawl(params, cfg, robots, seeds)
@@ -636,29 +645,80 @@ class CrawlDifferentialSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("ERROR")
     // signature dedup on, every epoch distributed, and fewer epochs than the
     // compaction cadence: the signature deltas and the probe snapshots are
-    // still live when the call returns
-    val params = CorpusParams(hosts = 2, pagesPerHost = 60, dupContentEvery = 3)
-    val cfg = CrawlConfig(maxEpochs = 30, smallEpochThreshold = 0)
-    val seeds = Seq("https://www.site0.com/")
-    val robots = new CorpusRobots(params)
+    // still live when the call returns. Then the same on the retry shape
+    // (the seen delta's checkpoint) and the politeness shape (the
+    // politeness rank): the admitted set each epoch persists has an owner
+    // on every shape
+    val dup = CorpusParams(hosts = 2, pagesPerHost = 60, dupContentEvery = 3)
+    val shapes = Seq(
+      ("signature dedup", dup, CrawlConfig(maxEpochs = 30, smallEpochThreshold = 0)),
+      ("retries", CorpusParams(hosts = 2, pagesPerHost = 40, errorEvery = 9),
+        CrawlConfig(retryLimit = 2, maxEpochs = 30, smallEpochThreshold = 0)),
+      ("politeness", CorpusParams(hosts = 3, pagesPerHost = 30),
+        CrawlConfig(respectRobotsTxt = true, maxPerHostPerEpoch = 4, maxEpochs = 30, smallEpochThreshold = 0)))
+    val seeds = Seq("https://www.site0.com/", "https://www.site1.com/")
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+    for ((shape, params, cfg) <- shapes) withClue(s"$shape: ") {
+      val robots = new CorpusRobots(params)
+      val before = sc.getPersistentRDDs.keySet
+      val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
+        expectedUrls = 100000L).crawl(seeds)
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(er.epochs > 2 && er.epochs < cfg.stateCompactionEpochs,
+        s"${er.epochs} epochs: not a multi-epoch crawl below the compaction cadence")
+      def lineage(r: org.apache.spark.rdd.RDD[_], acc: scala.collection.mutable.Set[Int]): Unit =
+        if (acc.add(r.id)) r.dependencies.foreach(d => lineage(d.rdd, acc))
+      val read = scala.collection.mutable.Set.empty[Int]
+      Seq(er.pages, er.seen, er.frontierRemainder, er.blocked)
+        .foreach(df => lineage(df.queryExecution.toRdd, read))
+      val stray = left.filterNot { case (id, _) => read.contains(id) }
+      assert(stray.isEmpty, s"${stray.size} persisted RDDs no result table reads: " +
+        stray.values.mkString(", "))
+      val or = OracleCrawler.crawl(params, cfg, robots, seeds)
+      assertParity(er, or)
+      assert(frontierKeys(er) == frontierKeys(or.frontierRemainder))
+      shape match {
+        case "signature dedup" =>
+          assert(or.pages.map(_.signature).filter(_ != 0L).distinct.size < or.pages.count(_.signature != 0L),
+            "no duplicate content: signature dedup had nothing to do")
+        case "retries" => assert(or.pages.exists(_.status == 500), "no page exhausted its retries")
+        case _ =>
+          val unpaced = OracleCrawler.crawl(params,
+            cfg.copy(respectRobotsTxt = false, maxPerHostPerEpoch = Int.MaxValue), robots, seeds)
+          assert(or.epochs > unpaced.epochs, "politeness deferred nothing")
+      }
+    }
+  }
+
+  test("the distributed gate equals the oracle: regex lists, robots with blocked rows, depth, round-robin") {
+    spark.sparkContext.setLogLevel("ERROR")
+    // every epoch distributed: the gate's row predicates (lists, robots,
+    // depth) run in its tasks, robots-blocked rows are written from them,
+    // and the fetch exchange interleaves hosts. Within the depth limit of
+    // two path segments, host 1's robots disallow /legal/ and host 2's
+    // carry a Crawl-delay; the whitelist leaves out /docs/, the blacklist
+    // the root pages whose number ends in 5
+    val params = CorpusParams(hosts = 3, pagesPerHost = 60)
+    val cfg = CrawlConfig(whitelist = Seq("\\.com/(p[0-9]+\\.html)?$", "/(en|legal)/"),
+      blacklist = Seq("/p[0-9]*5\\.html$"),
+      listsAreRegex = true, respectRobotsTxt = true, trackBlocked = true, depth = 2,
+      roundRobin = true, externalDomains = Set("*"), maxEpochs = 60, smallEpochThreshold = 0)
+    val seeds = (0 until 3).map(i => s"https://www.site$i.com/")
+    val robots = new CorpusRobots(params)
     val er = new CrawlEngine(spark, cfg, new GenerativeFetcher(params), robots,
       expectedUrls = 100000L).crawl(seeds)
-    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
-    assert(er.epochs > 2 && er.epochs < cfg.stateCompactionEpochs,
-      s"${er.epochs} epochs: not a multi-epoch crawl below the compaction cadence")
-    def lineage(r: org.apache.spark.rdd.RDD[_], acc: scala.collection.mutable.Set[Int]): Unit =
-      if (acc.add(r.id)) r.dependencies.foreach(d => lineage(d.rdd, acc))
-    val read = scala.collection.mutable.Set.empty[Int]
-    Seq(er.pages, er.seen, er.frontierRemainder, er.blocked)
-      .foreach(df => lineage(df.queryExecution.toRdd, read))
-    val stray = left.filterNot { case (id, _) => read.contains(id) }
-    assert(stray.isEmpty, s"${stray.size} persisted RDDs no result table reads: " +
-      stray.values.mkString(", "))
     val or = OracleCrawler.crawl(params, cfg, robots, seeds)
-    assert(or.pages.map(_.signature).filter(_ != 0L).distinct.size < or.pages.count(_.signature != 0L),
-      "no duplicate content: signature dedup had nothing to do")
     assertParity(er, or)
+    assert(frontierKeys(er) == frontierKeys(or.frontierRemainder))
+    val blockedRows = er.blocked.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(blockedRows == or.blocked.toSet, s"blocked rows differ: engine-only " +
+      s"${(blockedRows -- or.blocked).take(3)}, oracle-only ${(or.blocked.toSet -- blockedRows).take(3)}")
+    assert(or.blocked.nonEmpty, "robots blocked nothing")
+    // each gate refuses something here: without it the oracle fetches more
+    def without(c: CrawlConfig) = OracleCrawler.crawl(params, c, robots, seeds).pages.size
+    Seq("whitelist" -> cfg.copy(whitelist = Nil), "blacklist" -> cfg.copy(blacklist = Nil),
+      "depth" -> cfg.copy(depth = 0)).foreach { case (gate, c) =>
+      assert(without(c) > or.pages.size, s"the $gate gate refused nothing")
+    }
   }
 }

@@ -591,8 +591,9 @@ class ResumeSpec extends AnyFunSuite {
     val tableNames = Seq("frontier", "seen", "signatures", "host_tokens", "pages")
     def tables(ck: Checkpointer, e: Long) =
       tableNames.map(t => t -> ck.readTable(e, t).collect().map(_.toSeq).toSet).toMap
-    // the manifest's ledger fields, snapshot e's own metrics entry and the
-    // lineage row counts
+    // the manifest's ledger fields, snapshot e's own metrics entry, the
+    // whole metrics series (a resumed call writes the restored entries
+    // ahead of its own; no wall times) and the lineage row counts
     def ledger(m: String, e: Long) = (
       Seq("seq_counter", "wildcard_remaining").map(Checkpointer.longField(m, _)),
       Checkpointer.pathBudget(m),
@@ -600,6 +601,7 @@ class ResumeSpec extends AnyFunSuite {
         .map(Checkpointer.strField(m, _)),
       Checkpointer.chainState(m), Checkpointer.discoveredSitemaps(m),
       ("\\{\"epoch\":" + e + ",[^}]*\\}").r.findFirstIn(m.substring(m.indexOf("\"metrics\""))),
+      Checkpointer.metrics(m).map(_.copy(wall_ms = 0L)),
       Checkpointer.lineageRows(m))
     for (threshold <- Seq(4096, 0)) {
       val cfg = base.copy(smallEpochThreshold = threshold)
@@ -629,6 +631,8 @@ class ResumeSpec extends AnyFunSuite {
           tableNames.foreach(t => assert(tb(t) == ta(t), s"$label: table $t"))
           assert(ledger(ckB.readManifest(e + 1), e + 1) == ledger(ckA.readManifest(e + 1), e + 1),
             s"$label: manifest")
+          val series = Checkpointer.metrics(ckB.readManifest(e + 1)).map(_.epoch)
+          assert(series.size > 1 && series.last == e + 1, s"$label: metrics series $series")
         }
       }
     }
